@@ -772,3 +772,45 @@ def test_log_events_sql_form_matches_column_reference(spark):
     assert pa.sameResult(pb), (
         pa.toString()[:2000] + "\n=====\n" + pb.toString()[:2000]
     )
+
+
+def test_classifier_sql_literals_are_escaped(spark, monkeypatch):
+    """Classifier keywords and bot names holding a quote and a backslash
+    render as escaped literals in both SQL twins: Spark's and DuckDB's
+    matches equal Python's ``in`` / equality on the same rows."""
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from wikitrender_spark.functions import classify
+    from wikitrender_spark.plans import sqlgen
+
+    monkeypatch.setattr(classify, "REVERT_KEYWORDS", ("it's", "a\\b", "wp:"))
+    monkeypatch.setattr(classify, "KNOWN_BOTS", ("O'Bot \\1",))
+    rows = pd.DataFrame({
+        "i": range(7),
+        "comment": ["It's here", "its here", "x A\\B y", "a\\\\b", "ab",
+                    "see WP:NPOV", "x'y\\z"],
+        "user": ["O'Bot \\1", "OBot \\1", "O'Bot 1", "o'bot \\1", "x", "", "'"],
+    })
+    exp_revert = [any(k in c.lower() for k in classify.REVERT_KEYWORDS)
+                  for c in rows["comment"]]
+    exp_bot = [u in classify.KNOWN_BOTS for u in rows["user"]]
+    assert any(exp_revert) and not all(exp_revert) and any(exp_bot)
+
+    df = spark.createDataFrame(rows).withColumn("bot", F.lit(None).cast("boolean"))
+    got = df.orderBy("i").selectExpr(
+        f"{classify.is_revert_sql('comment')} AS r",
+        f"{classify.is_bot_edit_sql('bot', 'user')} AS b",
+    ).collect()
+    assert [r["r"] for r in got] == exp_revert
+    assert [r["b"] for r in got] == exp_bot
+
+    con = duckdb.connect()
+    con.register("t", rows)
+    duck = con.sql(
+        f"SELECT {sqlgen.is_revert_sql()} AS r, "
+        f"{sqlgen.is_bot_sql('CAST(NULL AS BOOLEAN)')} AS b FROM t ORDER BY i"
+    ).fetchall()
+    assert [r for r, _ in duck] == exp_revert
+    assert [b for _, b in duck] == exp_bot

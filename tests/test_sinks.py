@@ -23,8 +23,11 @@ def _group():
 def test_snapshot_sink_converges_to_batch_state(spark, tmp_path):
     """After the chunked stream drains, the maintained parquet snapshot
     must equal the batch replay's final state (S4 parity: the snapshot is
-    the engine's queryable 'whole state' export)."""
+    the engine's queryable 'whole state' export). The S7 edit callback
+    rides the same query: every changed page fires with its current row,
+    and no tombstone fires."""
     reports: list[tuple[str, int]] = []
+    edits: list = []
 
     cl = processor.page_state_changelog(
         chunked_event_stream(spark, SF_DIR, str(tmp_path / "src"), n_chunks=3),
@@ -34,13 +37,13 @@ def test_snapshot_sink_converges_to_batch_state(spark, tmp_path):
     q = sinks.state_snapshot_sink(
         cl, snap, str(tmp_path / "ckpt"),
         report=lambda name, rows: reports.append((name, len(rows))),
+        edit_callback=edits.append,
     )
     q.processAllAvailable()
     q.stop()
 
-    got = sorted(
-        map(tuple, sinks.read_snapshot(snap, spark).drop("safe").collect())
-    )
+    snapshot = sinks.read_snapshot(snap, spark)
+    got = sorted(map(tuple, snapshot.drop("safe").collect()))
     exp = sorted(
         map(tuple,
             lifecycle.replay_lifecycle(rc_events(spark, SF_DIR), _group()).collect())
@@ -51,19 +54,14 @@ def test_snapshot_sink_converges_to_batch_state(spark, tmp_path):
     assert names == {"Most edited", "Biggest movers", "Most vibrant"}
     assert all(k <= 5 for _, k in reports)
 
-
-def test_foreach_edit_callback(spark, tmp_path):
-    seen: list[str] = []
-    cl = processor.page_state_changelog(
-        chunked_event_stream(spark, SF_DIR, str(tmp_path / "src"), n_chunks=2),
-        _group(),
-    )
-    q = sinks.foreach_edit(cl, lambda row: seen.append(row["id"]),
-                           str(tmp_path / "ckpt"))
-    q.processAllAvailable()
-    q.stop()
-    assert len(seen) > 400  # every changed page per batch fires once
-    assert "Page_1" in seen
+    # S7: no tombstone fires, yet pages seen live were later removed
+    assert edits and not any(r["_deleted"] for r in edits)
+    last = {r["id"]: r for r in edits}
+    live = {r["id"]: r for r in snapshot.collect()}
+    assert set(last) - set(live)
+    # every live page fired, and its latest delivery is its snapshot row
+    for pid, row in live.items():
+        assert tuple(last[pid][c] for c in snapshot.columns) == tuple(row)
 
 
 def test_snapshot_promote_keeps_previous_version(spark, tmp_path):
@@ -84,37 +82,3 @@ def test_snapshot_promote_keeps_previous_version(spark, tmp_path):
     sinks._promote_snapshot(base, v3, v2)
     assert not os.path.isdir(v1)                   # reaped after grace
     assert os.path.isdir(v2)
-
-
-def test_foreach_edit_distributed_executor_side(spark, tmp_path):
-    """The distributed S7 variant must deliver the same per-batch changed
-    pages as the driver-side path, with the callback running in executor
-    workers (no driver funnel). Delivery is observed through the
-    filesystem — one file per delivered row — because the callback
-    cannot mutate driver state by design."""
-    import glob
-    import os
-    import uuid
-
-    out = tmp_path / "delivered"
-    out.mkdir()
-    out_dir = str(out)
-
-    def deliver(row):
-        # executor-side: self-contained, picklable, no driver state
-        fn = f"{row['id'].replace('/', '_').replace('#', '_')}-{uuid.uuid4().hex}"
-        with open(os.path.join(out_dir, fn), "w", encoding="utf-8") as f:
-            f.write(str(row["edits"]))
-
-    cl = processor.page_state_changelog(
-        chunked_event_stream(spark, SF_DIR, str(tmp_path / "src"), n_chunks=2),
-        _group(),
-    )
-    q = sinks.foreach_edit_distributed(cl, deliver, str(tmp_path / "ckpt"))
-    q.processAllAvailable()
-    q.stop()
-
-    files = glob.glob(os.path.join(out_dir, "*"))
-    assert len(files) > 400  # every changed page per batch fires once
-    assert any(os.path.basename(f).startswith("enwiki_") or "Page" in f
-               for f in files)

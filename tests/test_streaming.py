@@ -105,14 +105,14 @@ def test_stream_purge_matches_inprocess_fold(spark):
     step = (len(raw) + n_chunks - 1) // n_chunks
     chunk_of = {eid: i // step for i, eid in enumerate(raw["event_id"])}
 
-    rc = rc_events(spark, SF_DIR).withColumn("_grp", _group())
+    rc = lifecycle.fold_events(rc_events(spark, SF_DIR), _group())
     pdf = rc.toPandas().sort_values(["ts", "seq"]).reset_index(drop=True)
     state_by_grp: dict[str, dict] = {}
     for i in range(n_chunks):
         chunk = pdf[pdf["seq"].map(chunk_of) == i]
         for grp, gpdf in chunk.groupby("_grp"):
             titles = state_by_grp.setdefault(grp, {})
-            fold.fold_pdf(titles, gpdf.drop(columns=["_grp"]))
+            fold.fold_pdf(titles, gpdf)
             fold.purge_titles(titles, gpdf["ts"].max(), params)
     exp_rows = []
     for titles in state_by_grp.values():
@@ -131,26 +131,17 @@ def test_control_stream_marksafe(spark):
     from max_lifespan (/root/reference/index.js:93-100,409-411)."""
     t0 = dt.datetime(2024, 1, 1)
     rows = []
-    for page in ("Keep", "Lose"):
-        rows.append(dict(title=page, ts=t0, type="new"))
-        rows.append(dict(title=page, ts=t0 + dt.timedelta(minutes=1), user="B"))
-    # control event: markSafe Keep
+    for i, page in enumerate(("Keep", "Lose")):
+        rows.append(dict(seq=2 * i, title=page, ts=t0, type="new"))
+        rows.append(dict(seq=2 * i + 1, title=page,
+                         ts=t0 + dt.timedelta(minutes=1), user="B"))
     titles: dict = {}
-    pdf = pd.DataFrame([
-        dict(seq=i, ts=r["ts"], title=r["title"], wiki="enwiki",
-             user=r.get("user", "Jon"), bot=False, type=r.get("type", "edit"),
-             comment="yo", length_new=2, length_old=1, log_type=None,
-             log_action=None, log_target=None, log_action_comment=None)
-        for i, r in enumerate(rows)
-    ])
-    fold.fold_pdf(titles, pdf)
-    ctrl = pd.DataFrame([
-        dict(seq=99, ts=t0 + dt.timedelta(minutes=2), title="Keep",
-             wiki="enwiki", user="ops", bot=False, type="edit", comment="",
-             length_new=None, length_old=None, log_type="control",
-             log_action="markSafe", log_target=None, log_action_comment=None)
-    ])
-    fold.fold_pdf(titles, ctrl)
+    fold.fold_pdf(titles, _classified(spark, rows))
+    # control event: markSafe Keep
+    ctrl = dict(seq=99, ts=t0 + dt.timedelta(minutes=2), title="Keep",
+                user="ops", length_new=None, length_old=None,
+                log_type="control", log_action="markSafe")
+    fold.fold_pdf(titles, _classified(spark, [ctrl]))
     assert titles["Keep"]["safe"] and not titles["Lose"]["safe"]
 
     # speed purge at +30min: Lose evicted (0.066 epm < 3), Keep survives
@@ -429,7 +420,7 @@ def test_tws_purge_branch_inprocess_parity(spark):
     step = (len(raw) + n_chunks - 1) // n_chunks
     chunk_of = {eid: i // step for i, eid in enumerate(raw["event_id"])}
 
-    rc = rc_events(spark, SF_DIR).withColumn("_grp", _group())
+    rc = lifecycle.fold_events(rc_events(spark, SF_DIR), _group())
     pdf = rc.toPandas().sort_values(["ts", "seq"]).reset_index(drop=True)
 
     # drive the TWS processor per (chunk, group) exactly as the engine
@@ -459,7 +450,7 @@ def test_tws_purge_branch_inprocess_parity(spark):
         chunk = pdf[pdf["seq"].map(chunk_of) == i]
         for grp, gpdf in chunk.groupby("_grp"):
             titles = state_by_grp.setdefault(grp, {})
-            fold.fold_pdf(titles, gpdf.drop(columns=["_grp"]))
+            fold.fold_pdf(titles, gpdf)
             fold.purge_titles(titles, gpdf["ts"].max(), params)
     exp = []
     for titles in state_by_grp.values():
@@ -520,7 +511,7 @@ def test_tws_wall_clock_cleaner_inprocess(spark):
         max_lifespan=40000.0, max_inactivity=6000.0,
         min_speed=0.00015, min_purge_time=5.0,
     )
-    rc = rc_events(spark, SF_DIR).withColumn("_grp", _group())
+    rc = lifecycle.fold_events(rc_events(spark, SF_DIR), _group())
     pdf = rc.toPandas().sort_values(["ts", "seq"]).reset_index(drop=True)
 
     total_tombstones = 0
@@ -535,7 +526,7 @@ def test_tws_wall_clock_cleaner_inprocess(spark):
         # lifecycle evictions (A4/A5 deletes/moves) — none from P2
         exp_titles: dict = {}
         exp_lifecycle_removed: set = set()
-        fold.fold_pdf(exp_titles, gpdf.drop(columns=["_grp"]),
+        fold.fold_pdf(exp_titles, gpdf,
                       set(), exp_lifecycle_removed)
         got_batch_tombs = set()
         for o in out:
@@ -657,6 +648,12 @@ def _flat_rows(spark, rows):
         log_target=None, log_action_comment=None,
     )
     return spark.createDataFrame([{**base, **r} for r in rows], RC_FLAT_SCHEMA)
+
+
+def _classified(spark, rows):
+    """Synthetic flat rc events as the fold reads them: the classified
+    projection (lifecycle.fold_events), one group."""
+    return lifecycle.fold_events(_flat_rows(spark, rows), F.lit("g")).toPandas()
 
 
 def _write_chunk(spark, chunk_dir, idx, rows):
@@ -969,7 +966,7 @@ def test_tws_timer_sweeps_compose_with_moves_inprocess(spark):
     step = (len(raw) + n_chunks - 1) // n_chunks
     chunk_of = {eid: i // step for i, eid in enumerate(raw["event_id"])}
 
-    rc = rc_events(spark, SF_DIR).withColumn("_grp", _group())
+    rc = lifecycle.fold_events(rc_events(spark, SF_DIR), _group())
     pdf = rc.toPandas().sort_values(["ts", "seq"]).reset_index(drop=True)
 
     handles: dict[str, tuple] = {}
@@ -1026,11 +1023,11 @@ def test_tws_timer_sweeps_compose_with_moves_inprocess(spark):
         if any_eviction_yet and len(moves):
             n_moves_after_evicting_sweep += len(moves)
         for _, mrow in moves.iterrows():
-            if fold.page_id(mrow["wiki"], mrow["title"]) in evicted_so_far:
+            if mrow["id"] in evicted_so_far:
                 n_moves_of_swept_source += 1
         for grp, gpdf in chunk.groupby("_grp"):
             titles = state_by_grp.setdefault(grp, {})
-            fold.fold_pdf(titles, gpdf.drop(columns=["_grp"]))
+            fold.fold_pdf(titles, gpdf)
             ev = gpdf[gpdf["log_type"] != "control"]
             if len(ev):
                 clock_by_grp[grp] = max(

@@ -1,8 +1,8 @@
 """Round-17 scale-adaptive state-partition sizing (streaming/sizing.py):
-the derivation math, the env overrides, the conf scoping, and — the
-load-bearing claim — that a started streaming query actually runs its
-stateful operator at the scoped partition count while the outer session
-conf is restored."""
+the derivation math, the WTR_STATE_PARTITIONS override, the conf
+scoping, and — the load-bearing claim — that a started streaming query
+actually runs its stateful operator at the scoped partition count while
+the outer session conf is restored."""
 
 from __future__ import annotations
 
@@ -17,9 +17,7 @@ from wikitrender_spark.streaming import sizing
 
 def test_derivation_clamps_both_ways(monkeypatch):
     monkeypatch.delenv(sizing.STATE_PARTITIONS_ENV, raising=False)
-    monkeypatch.delenv(sizing.STATE_TARGET_BYTES_ENV, raising=False)
-    monkeypatch.delenv(sizing.STATE_PARTITIONS_MAX_ENV, raising=False)
-    t = sizing.STATE_TARGET_BYTES_DEFAULT
+    t = sizing.STATE_TARGET_BYTES
     assert sizing.adaptive_state_partitions(0) == 1
     assert sizing.adaptive_state_partitions(1) == 1
     assert sizing.adaptive_state_partitions(t) == 1
@@ -28,13 +26,12 @@ def test_derivation_clamps_both_ways(monkeypatch):
     # a 100 TB replay derives the cap, not a local-core-shaped number
     assert (
         sizing.adaptive_state_partitions(100 << 40)
-        == sizing.STATE_PARTITIONS_MAX_DEFAULT
+        == sizing.STATE_PARTITIONS_MAX
     )
 
 
 def test_python_heavy_target_is_smaller(monkeypatch):
     monkeypatch.delenv(sizing.STATE_PARTITIONS_ENV, raising=False)
-    monkeypatch.delenv(sizing.PY_STATE_TARGET_BYTES_ENV, raising=False)
     two_mb = 2 << 20
     assert sizing.adaptive_state_partitions(two_mb) == 1
     assert sizing.adaptive_state_partitions(two_mb, python_heavy=True) == 16
@@ -44,9 +41,6 @@ def test_env_overrides(monkeypatch):
     monkeypatch.setenv(sizing.STATE_PARTITIONS_ENV, "7")
     assert sizing.adaptive_state_partitions(1 << 40) == 7
     assert sizing.adaptive_state_partitions(0, python_heavy=True) == 7
-    monkeypatch.delenv(sizing.STATE_PARTITIONS_ENV)
-    monkeypatch.setenv(sizing.STATE_TARGET_BYTES_ENV, str(1 << 10))
-    assert sizing.adaptive_state_partitions(10 << 10) == 10
 
 
 def test_dir_bytes_counts_tree(tmp_path):
@@ -56,6 +50,16 @@ def test_dir_bytes_counts_tree(tmp_path):
     (sub / "b").write_bytes(b"y" * 5)
     assert sizing.dir_bytes(str(tmp_path)) == 15
     assert sizing.dir_bytes(str(tmp_path / "a")) == 10
+
+
+@pytest.mark.parametrize(
+    "uri", ["hdfs://namenode:8020/replay/chunks", "s3a://bucket/replay"]
+)
+def test_dir_bytes_refuses_non_local_uri(uri):
+    """A non-local URI used to walk nothing and size the drain as empty
+    (one state partition); it must fail and name the override."""
+    with pytest.raises(ValueError, match=sizing.STATE_PARTITIONS_ENV):
+        sizing.dir_bytes(uri)
 
 
 def test_conf_scoped_and_restored(spark):
@@ -124,8 +128,7 @@ def test_started_query_uses_scoped_count(spark):
     spark.catalog.dropTempView("sizing_probe_2")
 
 
-def test_replay_scan_split_derivation(spark, monkeypatch):
-    monkeypatch.delenv(sizing.REPLAY_SPLIT_BYTES_ENV, raising=False)
+def test_replay_scan_split_derivation(spark):
     par = max(1, spark.sparkContext.defaultParallelism)
     # tiny replay input clamps to the 1 MiB floor (local behavior
     # unchanged: single-digit tasks per chunk)
@@ -135,8 +138,6 @@ def test_replay_scan_split_derivation(spark, monkeypatch):
     # mid-range derives input/(2*parallelism)
     mid = (4 << 20) * 2 * par
     assert sizing.replay_scan_split(spark, mid) == 4 << 20
-    monkeypatch.setenv(sizing.REPLAY_SPLIT_BYTES_ENV, str(8 << 20))
-    assert sizing.replay_scan_split(spark, 0) == 8 << 20
 
 
 def test_conf_scopes_scan_split_too(spark):

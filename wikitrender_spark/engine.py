@@ -35,6 +35,7 @@ keyed state store holds the authoritative fold state.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import time
 from typing import Callable
@@ -42,6 +43,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions import classify
 from .sources import sinks
 from .sources.replay import rc_event_stream
 from .streaming import fold, processor
@@ -63,10 +65,13 @@ def default_group() -> F.Column:
     return move_closed_group()
 
 
+_IP_RE = re.compile(classify.IP_REGEX)
+
+
 def is_ip(user: str) -> bool:
     """F9 classifier, exported like the reference's `isIP`
     (/root/reference/index.js:460)."""
-    return bool(fold._IP_RE.search(user or ""))
+    return bool(_IP_RE.search(user or ""))
 
 
 class WikiTrenderCollection:
@@ -181,7 +186,7 @@ class WikiTrenderCollection:
         """Resolve a page id back to (wiki, title) for control routing.
 
         Ids are ambiguous by construction ('AC/DC' on enwiki vs wiki 'AC',
-        title 'DC' — fold.page_id), so live pages are resolved from the
+        title 'DC' — classify.page_id), so live pages are resolved from the
         snapshot (authoritative, and markSafe only applies to live pages
         anyway, /root/reference/index.js:409-411); only unknown ids fall
         back to the prefix heuristic."""

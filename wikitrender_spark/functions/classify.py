@@ -113,7 +113,7 @@ def delete_target(log_action_comment: Column) -> Column:
 
 def _contains_any_sql(lower_col: str, keywords: tuple[str, ...]) -> str:
     return "(" + " OR ".join(
-        f"contains({lower_col}, '{kw}')" for kw in keywords
+        f"contains({lower_col}, {_sql_str_lit(kw)})" for kw in keywords
     ) + ")"
 
 
@@ -128,7 +128,7 @@ def is_ip_sql(user: str) -> str:
 
 
 def is_bot_edit_sql(bot: str, user: str) -> str:
-    bots = ", ".join(f"'{b}'" for b in KNOWN_BOTS)
+    bots = ", ".join(_sql_str_lit(b) for b in KNOWN_BOTS)
     return f"(coalesce({bot}, false) OR {user} IN ({bots}))"
 
 

@@ -352,11 +352,12 @@ def coedit_triangles(
 def triangles_from_pairs(pairs: DataFrame, k: int = TRIANGLE_TOPK) -> DataFrame:
     """Degree-ordered triangle enumeration over an UNDIRECTED weighted
     pair relation (page_a < page_b, n_coeditors) — the closure stage of
-    coedit_triangles, exposed separately so the node-scaled graph probe
-    (tools/graph_scale_probe.py) can drive it on synthetic graphs whose
-    node/edge count actually grows (the sf1 event replication holds the
-    page keyspace fixed — BASELINE.md r08 caveat). Same plan, same
-    checkpoints; coedit_triangles delegates here."""
+    coedit_triangles, exposed separately so it can run on synthetic
+    graphs whose node/edge count actually grows (the sf1 event
+    replication holds the page keyspace fixed — BASELINE.md r08 caveat;
+    the node-scaled measurement is recorded in BASELINE.md "Node-scaled
+    graph probe"). Same plan, same checkpoints; coedit_triangles
+    delegates here."""
     pairs = corpus_barrier(pairs, eager=False)  # pair-set-sized
     # deg and oriented each fan out to two consumers but are NOT
     # checkpointed (round 16, measured): under AQE every checkpoint —

@@ -34,8 +34,6 @@ Two implementations:
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,7 +41,11 @@ from pyspark.sql import functions as F
 from ..barrier import corpus_barrier
 from ..functions import classify
 from ..streaming import fold
-from .page_state import aggregate_classified, classified_edit_events
+from .page_state import (
+    _CLASSIFIED_SELECT_SQL,
+    aggregate_classified,
+    classified_edit_events,
+)
 
 _NEG_INF = -1  # sentinel: "no cut" (seq are non-negative)
 
@@ -76,13 +78,19 @@ def log_events_columns(rc: DataFrame) -> DataFrame:
 #: log-branch router rendered once as SQL strings (round 17 — the
 #: classified_edit_events precedent; generated from the same classify
 #: constants, optimized-plan sameResult pinned in tests/test_plans.py).
-_LOG_SELECT_SQL: tuple[str, ...] = (
-    f"{classify.page_id_sql('wiki', 'title')} AS id",
+_MOVE_DST_SQL = (
     "CASE WHEN log_action = 'move' THEN "
-    f"{classify.page_id_sql('wiki', 'log_target')} END AS move_dst",
+    f"{classify.page_id_sql('wiki', 'log_target')} END AS move_dst"
+)
+_DELETE_ID_SQL = (
     "CASE WHEN log_action = 'delete' THEN "
     + classify.page_id_sql('wiki', f"({classify.delete_target_sql('log_action_comment')})")
-    + " END AS delete_id",
+    + " END AS delete_id"
+)
+_LOG_SELECT_SQL: tuple[str, ...] = (
+    f"{classify.page_id_sql('wiki', 'title')} AS id",
+    _MOVE_DST_SQL,
+    _DELETE_ID_SQL,
     "log_action",
     "log_target",
     "wiki",
@@ -304,14 +312,32 @@ def page_state_lifecycle(rc: DataFrame, with_collections: bool = False) -> DataF
 _REPLAY_SCHEMA = fold.STATE_SCHEMA
 
 
+#: the fold's input projection: every rc row (edits, log events, control
+#: commands) classified once in the plan, from the SAME strings the batch
+#: plans evaluate — the edit flags / id / normalized wiki of
+#: _CLASSIFIED_SELECT_SQL and the move/delete target ids of
+#: _LOG_SELECT_SQL. The Python fold only routes and accumulates.
+_FOLD_SELECT_SQL: tuple[str, ...] = (
+    "_grp", "log_type", "log_action", "log_target",
+    *_CLASSIFIED_SELECT_SQL, _MOVE_DST_SQL, _DELETE_ID_SQL,
+)
+
+
+def fold_events(rc: DataFrame, group_col) -> DataFrame:
+    """rc rows -> the classified rows every stateful fold reads
+    (streaming/fold.py), keyed by ``_grp``. The group key is taken from
+    the RAW wiki/title before the projection normalizes them."""
+    return rc.withColumn("_grp", group_col).selectExpr(*_FOLD_SELECT_SQL)
+
+
 def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """Fold one closed page group in (ts, seq) order — the pandas twin of
-    the reference's event loop (updateFromRCStream + log routing). The
-    fold itself lives in streaming/fold.py, shared verbatim with the
-    streaming stateful processor (batch-stream equivalence by
-    construction, SURVEY.md §5.2-5)."""
+    the reference's event loop (updateFromRCStream + log routing), run
+    through the same micro-batch step as the streaming processors
+    (batch-stream equivalence by construction, SURVEY.md §5.2-5), with
+    no purge."""
     titles: dict[str, dict] = {}
-    fold.fold_pdf(titles, pdf)
+    fold.fold(titles, [pdf])
     return fold.titles_to_pdf(titles)
 
 
@@ -324,8 +350,8 @@ def replay_lifecycle(rc: DataFrame, group_col) -> DataFrame:
     each group in one Arrow batch — no driver collect, scales with the
     number of groups.
     """
-    return rc.withColumn("_grp", group_col).groupBy("_grp").applyInPandas(
-        lambda pdf: _replay_group(pdf.drop(columns=["_grp"])), _REPLAY_SCHEMA
+    return fold_events(rc, group_col).groupBy("_grp").applyInPandas(
+        _replay_group, _REPLAY_SCHEMA
     )
 
 

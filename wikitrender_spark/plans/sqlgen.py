@@ -18,8 +18,19 @@ from ..operators.derive import duckdb_rc_cte
 GRACE_MINUTES = 60  # snapshot clock: now = max(rc.ts) + grace
 
 
+def duck_str_lit(s: str) -> str:
+    """Escape a Python string into a DuckDB single-quoted literal: quotes
+    doubled, backslashes literal (DuckDB string literals process no
+    escapes)."""
+    return "'" + s.replace("'", "''") + "'"
+
+
 def contains_any_sql(col: str, keywords: tuple[str, ...]) -> str:
-    parts = " OR ".join(f"lower({col}) LIKE '%{kw}%'" for kw in keywords)
+    """Substring match per keyword via LIKE '%kw%' — equal to Python's
+    ``in`` only while no keyword holds a LIKE wildcard (``%``, ``_``)."""
+    parts = " OR ".join(
+        f"lower({col}) LIKE {duck_str_lit('%' + kw + '%')}" for kw in keywords
+    )
     return f"({parts})"
 
 
@@ -28,12 +39,12 @@ def is_revert_sql(col: str = "comment") -> str:
 
 
 def is_bot_sql(bot: str = "bot", user: str = '"user"') -> str:
-    bots = ", ".join(f"'{b}'" for b in classify.KNOWN_BOTS)
+    bots = ", ".join(duck_str_lit(b) for b in classify.KNOWN_BOTS)
     return f"(coalesce({bot}, false) OR {user} IN ({bots}))"
 
 
 def is_ip_sql(user: str = '"user"') -> str:
-    return f"regexp_matches({user}, '{classify.IP_REGEX}')"
+    return f"regexp_matches({user}, {duck_str_lit(classify.IP_REGEX)})"
 
 
 def classified_events_cte() -> str:
@@ -305,11 +316,12 @@ GROUP BY is_revert, is_bot, is_anon"""
 
 def delete_targets_oracle() -> str:
     """F11 regexp extraction over delete log events."""
+    rx = duck_str_lit(classify.DELETE_TARGET_REGEX)
     return f"""WITH rc AS ({duckdb_rc_cte()})
 SELECT seq,
-  CASE WHEN regexp_extract(log_action_comment, '{classify.DELETE_TARGET_REGEX}', 1) <> ''
-       THEN regexp_extract(log_action_comment, '{classify.DELETE_TARGET_REGEX}', 1)
-       ELSE regexp_extract(log_action_comment, '{classify.DELETE_TARGET_REGEX}', 2)
+  CASE WHEN regexp_extract(log_action_comment, {rx}, 1) <> ''
+       THEN regexp_extract(log_action_comment, {rx}, 1)
+       ELSE regexp_extract(log_action_comment, {rx}, 2)
   END AS target
 FROM rc
 WHERE log_type = 'log' AND log_action = 'delete'"""
@@ -378,7 +390,7 @@ def lifecycle_oracle() -> str:
     source) and protects, in replay order. Mirrors the DataFrame
     formulation CTE-for-CTE; same no-rename-chain restriction (guaranteed
     by the derivation: move targets live in a disjoint title namespace)."""
-    delete_re = classify.DELETE_TARGET_REGEX
+    delete_re = duck_str_lit(classify.DELETE_TARGET_REGEX)
     return f"""WITH {classified_events_cte()},
 logs AS (
   SELECT
@@ -392,13 +404,13 @@ logs AS (
     END AS move_dst,
     CASE WHEN log_action = 'delete' THEN
       CASE WHEN (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) = ''
-           THEN CASE WHEN regexp_extract(log_action_comment, '{delete_re}', 1) <> ''
-                     THEN regexp_extract(log_action_comment, '{delete_re}', 1)
-                     ELSE regexp_extract(log_action_comment, '{delete_re}', 2) END
+           THEN CASE WHEN regexp_extract(log_action_comment, {delete_re}, 1) <> ''
+                     THEN regexp_extract(log_action_comment, {delete_re}, 1)
+                     ELSE regexp_extract(log_action_comment, {delete_re}, 2) END
            ELSE (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) || '/' ||
-                CASE WHEN regexp_extract(log_action_comment, '{delete_re}', 1) <> ''
-                     THEN regexp_extract(log_action_comment, '{delete_re}', 1)
-                     ELSE regexp_extract(log_action_comment, '{delete_re}', 2) END
+                CASE WHEN regexp_extract(log_action_comment, {delete_re}, 1) <> ''
+                     THEN regexp_extract(log_action_comment, {delete_re}, 1)
+                     ELSE regexp_extract(log_action_comment, {delete_re}, 2) END
       END
     END AS delete_id,
     log_action, log_target, wiki, ts, seq

@@ -5,8 +5,6 @@ The reference's consumer surface is a callback per applied edit
 subscribe API index.js:146-148) and a periodic top-5 console report over
 the full live state (examples/index.js:19-71). Mapping:
 
-- ``foreach_edit``        — S7: callback per changed page row per
-  micro-batch (tombstones excluded; the reference only emits on edits).
 - ``state_snapshot_sink`` — S4 analogue + the state surface for S8:
   per micro-batch, merge the batch's upserts/tombstones into a queryable
   parquet snapshot of the CURRENT live state (the foreachBatch MERGE
@@ -14,7 +12,9 @@ the full live state (examples/index.js:19-71). Mapping:
   transactional table format). Optionally renders the reference's three
   top-5 reports from the merged state after each batch (S8,
   /root/reference/examples/index.js:19-71) — the report reads the FULL
-  state, not just the batch's changed rows.
+  state, not just the batch's changed rows. Its ``edit_callback`` is S7:
+  one call per changed page row per micro-batch, tombstones excluded
+  (the reference only emits on edits).
 """
 
 from __future__ import annotations
@@ -27,55 +27,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions import metrics
 from ..operators import topk
-
-
-def foreach_edit(changelog: DataFrame, callback: Callable, checkpoint: str,
-                 available_now: bool = False) -> StreamingQuery:
-    """S7, driver-side delivery: ``callback(row)`` per changed page per
-    micro-batch, in one process, closures allowed (the reference's
-    single-process ``on('edit')`` semantics — /root/reference/
-    index.js:146-148). Rows arrive already aggregated (one per page per
-    batch), so callback volume is bounded by LIVE PAGES, not raw event
-    rate — the wikitrender state is human-scale (thousands of hot pages),
-    which is why ``toLocalIterator`` through the driver is acceptable
-    HERE and only here: the driver pulls one partition at a time (never
-    the whole batch at once), but throughput is still one process. For a
-    changelog whose per-batch row count is executor-scale rather than
-    page-scale, use ``foreach_edit_distributed``."""
-
-    def handle(batch: DataFrame, _batch_id: int) -> None:
-        for row in batch.filter(~F.col("_deleted")).toLocalIterator():
-            callback(row)
-
-    writer = (changelog.writeStream.outputMode("update")
-              .option("checkpointLocation", checkpoint)
-              .foreachBatch(handle))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def foreach_edit_distributed(changelog: DataFrame, callback: Callable,
-                             checkpoint: str,
-                             available_now: bool = False) -> StreamingQuery:
-    """S7 at scale: ``callback(row)`` runs EXECUTOR-side via the
-    streaming ``foreach`` sink — per-partition fan-out with no driver
-    funnel, so delivery throughput scales with the cluster instead of
-    one process. The contract changes accordingly: ``callback`` must be
-    picklable and self-contained (construct connections inside it or in
-    a broadcast factory — e.g. a webhook POST, a queue producer); it
-    cannot mutate driver state, and delivery is at-least-once per row
-    per batch (a failed task replays its partition — same guarantee
-    foreachBatch gives, stated rather than hidden). Tombstones are
-    filtered declaratively before the sink so the filter stays in
-    whole-stage codegen."""
-    writer = (changelog.filter(~F.col("_deleted"))
-              .writeStream.outputMode("update")
-              .option("checkpointLocation", checkpoint)
-              .foreach(callback))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def with_report_metrics(state: DataFrame, now) -> DataFrame:

@@ -1,36 +1,40 @@
-"""Incremental event fold — the single source of truth for event-at-a-time
-semantics (reference: updateFromRCStream + log routing,
-/root/reference/index.js:174-273,320-342).
+"""Incremental event fold — the stateful half of the reference's event
+loop (updateFromRCStream + log routing, reference index.js:174-273,
+320-342).
 
-Both the batch replay (operators/lifecycle.replay_lifecycle) and the
-streaming stateful processor (streaming/processor.py) fold events through
-THIS module, so batch-stream equivalence is by construction: the streaming
-run differs only in that the fold is split across micro-batches with the
-titles map carried in the state store between them.
+Classification is not done here. Every rc row reaches the fold already
+classified by one plan projection (operators/lifecycle.fold_events): page
+ids, the normalized wiki, the F5-F10 edit flags and the move/delete target
+ids are the SAME SQL strings the batch plans evaluate
+(page_state._CLASSIFIED_SELECT_SQL, lifecycle._LOG_SELECT_SQL). This
+module owns what needs state: routing each classified row to its page,
+accumulating, and the P2 purge.
+
+One micro-batch step, ``fold``, serves all three stateful callers: the
+exact batch replay (lifecycle.replay_lifecycle — one call per closed page
+group, no purge) and both streaming processors (processor.py,
+processor_tws.py — one call per group per micro-batch, the titles map
+carried in the state store between calls). Batch-stream equivalence thus
+holds by construction: the streaming run only splits the same fold
+across micro-batches.
 
 State model: ``titles`` — dict id -> page dict, the Spark-side twin of
 WikiSocketCollection.titles (/root/reference/index.js:115). Page dicts hold
 sets/dicts for contributor tracking; (de)serialization to a JSON state-store
 blob is in serialize_titles/deserialize_titles.
 
-Also implements the purge policy P2 (cleaner, /root/reference/index.js:
-362-398) against an injected ``now`` — one logical clock per micro-batch
-(semantic pin, SURVEY.md §2.9-1).
+The purge policy P2 (cleaner, reference index.js:362-398) runs
+against an injected ``now`` — one logical clock per micro-batch (semantic
+pin, SURVEY.md §2.9-1).
 """
 
 from __future__ import annotations
 
 import json
-import re
 from dataclasses import dataclass
 from typing import Iterable
 
 import pandas as pd
-
-from ..functions import classify
-
-_IP_RE = re.compile(classify.IP_REGEX)
-_DEL_RE = re.compile(classify.DELETE_TARGET_REGEX)
 
 #: page-state row columns emitted by the fold (scalar form).
 STATE_COLUMNS = [
@@ -49,22 +53,11 @@ STATE_SCHEMA = (
 )
 
 
-def norm_wiki(wiki: str) -> str:
-    """'enwiki' -> '' (/root/reference/index.js:438-440)."""
-    return "" if wiki == "enwiki" else wiki
-
-
-def page_id(wiki: str, title: str) -> str:
-    """A1 key derivation (/root/reference/index.js:436-446), normalized-id
-    pin for protect (SURVEY.md §2.9)."""
-    w = norm_wiki(wiki)
-    return f"{w}/{title}" if w else title
-
-
 def fresh_page(pid: str, wiki: str, title: str, now) -> dict:
-    """Empty WikiPage (/root/reference/index.js:16-35)."""
+    """Empty WikiPage (reference index.js:16-35); ``wiki`` is the
+    normalized wiki the projection emits."""
     return dict(
-        id=pid, wiki=norm_wiki(wiki), title=title, edits=0, anonEdits=0,
+        id=pid, wiki=wiki, title=title, edits=0, anonEdits=0,
         isNew=False, notabilityFlags=0, volatileFlags=0, reverts=0,
         start=now, updated=now, distribution={}, anon_set=set(),
         contrib_set=set(), bytesChanged=0, isProtected=False, safe=False,
@@ -73,24 +66,25 @@ def fresh_page(pid: str, wiki: str, title: str, now) -> dict:
 
 def fold_pdf(titles: dict, pdf: pd.DataFrame,
              changed: set | None = None, removed: set | None = None) -> None:
-    """Fold one (ts, seq)-sorted slice of rc events into ``titles`` in
-    place, recording ids touched (``changed``) and ids whose state row was
-    dropped or re-keyed away (``removed``).
+    """Fold one slice of classified rows (lifecycle.fold_events) into
+    ``titles`` in (ts, seq) order, in place, recording ids touched
+    (``changed``) and ids whose state row was dropped or re-keyed away
+    (``removed``).
 
     Row routing mirrors /root/reference/index.js:320-342:
     - log_type == 'log'      -> move / protect / delete  (A4-A6)
     - log_type == 'control'  -> markSafe / markUnsafe    (A7, control
       stream unioned into the keyed processor per SURVEY.md §2.3-A7;
       applies only to live pages, /root/reference/index.js:409-411)
-    - otherwise              -> edit accumulation        (A2-A3)
+    - otherwise              -> edit accumulation        (A2-A3, the
+      same flag arithmetic as page_state.aggregate_classified)
     """
     if changed is None:
         changed = set()
     if removed is None:
         removed = set()
 
-    def get_page(wiki, title, now):
-        pid = page_id(wiki, title)
+    def get_page(pid, wiki, title, now):
         if pid not in titles:
             titles[pid] = fresh_page(pid, wiki, title, now)
         return titles[pid]
@@ -99,22 +93,20 @@ def fold_pdf(titles: dict, pdf: pd.DataFrame,
         now = row.ts
         if row.log_type is not None and not pd.isna(row.log_type):
             if row.log_type == "control":
-                pid = page_id(row.wiki, row.title)
                 if row.log_action == "drop":
                     # drop() removes by id (/root/reference/index.js:427-430)
-                    if pid in titles:
-                        del titles[pid]
-                        removed.add(pid)
-                elif pid in titles:
-                    titles[pid]["safe"] = row.log_action == "markSafe"
-                    changed.add(pid)
+                    if titles.pop(row.id, None) is not None:
+                        removed.add(row.id)
+                elif row.id in titles:
+                    titles[row.id]["safe"] = row.log_action == "markSafe"
+                    changed.add(row.id)
             elif row.log_action == "move":
                 # renamePage (/root/reference/index.js:154-167): the source
                 # page adopts the target id/title, OVERWRITING any fresh
                 # state at the target (old+new are not merged).
-                src_existed = page_id(row.wiki, row.title) in titles
-                page = get_page(row.wiki, row.title, now)
-                new_page = get_page(row.wiki, row.log_target, now)
+                src_existed = row.id in titles
+                page = get_page(row.id, row.wiki, row.title, now)
+                new_page = get_page(row.move_dst, row.wiki, row.log_target, now)
                 del titles[page["id"]]
                 if src_existed:
                     # a never-live source must not emit a tombstone for an
@@ -127,40 +119,29 @@ def fold_pdf(titles: dict, pdf: pd.DataFrame,
                 changed.add(page["id"])
             elif row.log_action == "protect":
                 # protectPage (/root/reference/index.js:417-422), id pin.
-                pid = page_id(row.wiki, row.title)
-                if pid in titles:
-                    titles[pid]["isProtected"] = True
-                    changed.add(pid)
+                if row.id in titles:
+                    titles[row.id]["isProtected"] = True
+                    changed.add(row.id)
             elif row.log_action == "delete":
-                # F11 + drop (/root/reference/index.js:328-337,427-430).
-                m = _DEL_RE.search(row.log_action_comment or "")
-                target = (m.group(1) or m.group(2)) if m else None
-                if target:
-                    pid = page_id(row.wiki, target)
-                    if titles.pop(pid, None) is not None:
-                        removed.add(pid)
+                # drop of the F11 target (reference index.js:328-337,
+                # 427-430)
+                if titles.pop(row.delete_id, None) is not None:
+                    removed.add(row.delete_id)
             continue
 
         # edit branch: updateFromRCStream (/root/reference/index.js:174-273)
-        page = get_page(row.wiki, row.title, now)
-        comment = (row.comment or "").lower()
-        is_bot = bool(row.bot) or row.user in classify.KNOWN_BOTS
-        is_revert = any(k in comment for k in classify.REVERT_KEYWORDS)
-        delta = int(row.length_new - row.length_old)
-        if row.type == "new":
+        page = get_page(row.id, row.wiki, row.title, now)
+        if row.is_new:
             page["isNew"] = True
-        if is_revert:
+        if row.is_revert:
             page["reverts"] += 1
-            page["bytesChanged"] += delta
-        elif not is_bot:
+        if row.is_revert or not row.is_bot:
+            page["bytesChanged"] += int(row.delta)
+        page["notabilityFlags"] += int(row.notability_hit)
+        page["volatileFlags"] += int(row.volatile_hit)
+        if row.eligible:
             page["edits"] += 1
-            page["bytesChanged"] += delta
-        if any(k in comment for k in classify.NOTABILITY_KEYWORDS):
-            page["notabilityFlags"] += 1
-        if any(k in comment for k in classify.VOLATILE_KEYWORDS):
-            page["volatileFlags"] += 1
-        if not is_bot and not is_revert:
-            if _IP_RE.search(row.user):
+            if row.is_anon:
                 page["anonEdits"] += 1
                 page["anon_set"].add(row.user)
             else:
@@ -170,6 +151,37 @@ def fold_pdf(titles: dict, pdf: pd.DataFrame,
             )
         page["updated"] = now
         changed.add(page["id"])
+
+
+def fold(titles: dict, chunks: Iterable[pd.DataFrame], clock: int = 0,
+         purge: PurgeParams | None = None) -> tuple[set, set, int]:
+    """One micro-batch of one group: fold every chunk of classified rows
+    into ``titles``, advance the event-time ``clock`` (unix micros) and,
+    given ``purge``, run P2 at the batch's max event time. Returns
+    (changed ids, removed ids, clock).
+
+    A group larger than one Arrow batch arrives as several chunks in
+    arbitrary fetch order, so the chunks are concatenated before the one
+    (ts, seq)-ordered fold — chunk-at-a-time folding would apply later
+    events first. Control rows never move the clock: they carry the
+    submitter's wall clock (engine inbox), which would age the group
+    against real time and mass-purge replayed history."""
+    changed: set = set()
+    removed: set = set()
+    frames = [pdf for pdf in chunks if len(pdf)]
+    if not frames:
+        return changed, removed, clock
+    whole = frames[0] if len(frames) == 1 else pd.concat(
+        frames, ignore_index=True
+    )
+    fold_pdf(titles, whole, changed, removed)
+    event_ts = whole.loc[whole["log_type"] != "control", "ts"]
+    if len(event_ts):
+        batch_max_ts = event_ts.max()
+        clock = max(clock, _ts_us(batch_max_ts))
+        if purge is not None:
+            removed |= purge_titles(titles, batch_max_ts, purge)
+    return changed, removed, clock
 
 
 # ---------------------------------------------------------------------------

@@ -7,11 +7,20 @@ markSafe (A7), and the periodic cleaner P2 (index.js:362-398) — expressed
 as ``groupBy(group).applyInPandasWithState`` over micro-batches, with the
 titles map carried in the state store between batches.
 
-Semantics are shared with the batch replay through streaming/fold.py, so
-batch–stream equivalence (SURVEY.md §5.2-5) holds by construction and is
-asserted in tests/test_streaming.py — the prefix-consistency argument of
-the Structured Streaming paper (SIGMOD'18, PAPERS.md): every micro-batch
-run folds a prefix of the same event order the batch run folds.
+Two layers, each with one owner:
+- classification is a plan projection (operators/lifecycle.fold_events):
+  ids, normalized wiki, edit flags and move/delete targets are rendered
+  from the same SQL strings the batch plans evaluate, and run in the JVM
+  before rows reach Python;
+- the fold owns routing, accumulation and the batch-boundary purge: each
+  group's micro-batch is one call to streaming/fold.fold, the same step
+  the exact batch replay and the transformWithState processor run.
+
+So batch–stream equivalence (SURVEY.md §5.2-5) holds by construction and
+is asserted in tests/test_streaming.py — the prefix-consistency argument
+of the Structured Streaming paper (SIGMOD'18, PAPERS.md): every
+micro-batch run folds a prefix of the same classified event order the
+batch run folds.
 
 Design notes (100 TB shape):
 - State is partitioned by a *group key* that closes over move events (the
@@ -43,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.lifecycle import fold_events
 from . import fold
 
 #: changelog row = page-state row + safe flag + (clock, version) + tombstone
@@ -97,31 +107,7 @@ def _make_processor(purge: fold.PurgeParams | None,
             return
 
         ver += 1
-        changed: set = set()
-        removed: set = set()
-        batch_max_ts = None
-        # a group larger than one Arrow batch arrives as MULTIPLE chunks in
-        # arbitrary fetch order; fold_pdf sorts only within its input, so
-        # the whole micro-batch must be concatenated before the single
-        # (ts, seq)-ordered fold — chunk-at-a-time folding would apply
-        # later events first and break batch-stream equivalence
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            whole = chunks[0] if len(chunks) == 1 else pd.concat(
-                chunks, ignore_index=True
-            )
-            fold.fold_pdf(titles, whole, changed, removed)
-            # the purge clock advances on EVENT time only: control commands
-            # are stamped with the submitter's wall clock (engine inbox),
-            # and letting that drive the group clock would age the whole
-            # group against real time and mass-purge it on replayed history
-            ev = whole[whole["log_type"] != "control"]
-            if len(ev):
-                batch_max_ts = ev["ts"].max()
-                clock = max(clock, fold._ts_us(batch_max_ts))
-
-        if purge is not None and batch_max_ts is not None:
-            removed |= fold.purge_titles(titles, batch_max_ts, purge)
+        changed, removed, clock = fold.fold(titles, pdfs, clock, purge)
 
         # ver must stay monotone while the state row lives: a page
         # recreated after a delete would otherwise version below its own
@@ -182,7 +168,7 @@ def page_state_changelog(rc: DataFrame, group_col: Column,
             rc = rc.withWatermark("ts", watermark_delay)
         timeout = GroupStateTimeout.EventTimeTimeout
     return (
-        rc.withColumn("_grp", group_col)
+        fold_events(rc, group_col)
         .groupBy("_grp")
         .applyInPandasWithState(
             _make_processor(purge, dead_group_ttl_min),

@@ -1,8 +1,9 @@
 """transformWithStateInPandas variant of the keyed stateful processor
 (the Spark-4 arbitrary-state API, SURVEY.md §1.1/§2.3 'preferred' form).
 
-Same event fold, same changelog contract, same state blob as
-processor.py (applyInPandasWithState) — the two implementations are
+Same classified input (lifecycle.fold_events), same micro-batch step
+(fold.fold), same changelog contract and state blob as processor.py
+(applyInPandasWithState) — the two implementations are
 equivalence-tested in tests/test_streaming.py, so the engine can run on
 either API. This is the migration target because transformWithState
 adds, beyond what the fold uses today: multiple named state variables,
@@ -25,12 +26,12 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
 )
 
+from ..operators.lifecycle import fold_events
 from . import fold
 from .processor import _STATE_SCHEMA, CHANGELOG_SCHEMA, _changelog_rows
 
@@ -77,31 +78,15 @@ class PageStateProcessor(StatefulProcessor):
         clock = existing[1] if existing else 0
         ver = (existing[2] if existing else 0) + 1
 
-        changed: set = set()
-        removed: set = set()
-        batch_max_ts = None
-        # concatenate ALL Arrow chunks before the single ordered fold —
-        # see processor.py for why chunk-at-a-time folding is wrong
-        chunks = [pdf.drop(columns=["_grp"]) for pdf in rows if len(pdf)]
-        if chunks:
-            whole = chunks[0] if len(chunks) == 1 else pd.concat(
-                chunks, ignore_index=True
-            )
-            fold.fold_pdf(titles, whole, changed, removed)
-            # event-time purge clock only (see processor.py)
-            ev = whole[whole["log_type"] != "control"]
-            if len(ev):
-                batch_max_ts = ev["ts"].max()
-                clock = max(clock, fold._ts_us(batch_max_ts))
-
-        if self._interval is None:
-            # deterministic mode: P2 at the batch boundary
-            if self._purge is not None and batch_max_ts is not None:
-                removed |= fold.purge_titles(titles, batch_max_ts, self._purge)
-        elif self._purge is not None:
-            # wall-clock mode: defer the sweep to the timer. Arm ONLY
-            # when no timer is pending — re-arming on every batch would
-            # turn the fixed-period setInterval into an idle-debounce
+        # deterministic mode purges at the batch boundary; wall-clock
+        # mode defers P2 to the timer sweep
+        changed, removed, clock = fold.fold(
+            titles, rows, clock,
+            self._purge if self._interval is None else None,
+        )
+        if self._interval is not None and self._purge is not None:
+            # Arm ONLY when no timer is pending — re-arming on every batch
+            # would turn the fixed-period setInterval into an idle-debounce
             # that a steadily-fed key postpones forever (r07 review
             # finding). listTimers() is materialized before any mutation
             # (it is a lazy JVM-backed iterator).
@@ -167,7 +152,7 @@ def page_state_changelog_tws(
     (timeMode ProcessingTime, one timer per key — see
     PageStateProcessor)."""
     return (
-        rc.withColumn("_grp", group_col)
+        fold_events(rc, group_col)
         .groupBy("_grp")
         .transformWithStateInPandas(
             statefulProcessor=PageStateProcessor(purge, cleaner_interval_ms),

@@ -20,12 +20,12 @@ size partitions to the data, bounded both ways:
 
     state_partitions = clamp(ceil(input_bytes / target), 1, max_cap)
 
-with ``target`` = WTR_STATE_TARGET_BYTES (default 64 MiB of replay
-input per state partition — the advisory-partition-size ballpark of
-guide §9; state for these operators is a bounded summary of the input,
-so input bytes are the honest upper proxy) and ``max_cap`` =
-WTR_STATE_PARTITIONS_MAX (default 4096 — plenty for thousands of cores;
-at 100 TB the derivation hits this cap and the operator runs at full
+with ``target`` = STATE_TARGET_BYTES (64 MiB of replay input per
+state partition — the advisory-partition-size ballpark of guide §9;
+state for these operators is a bounded summary of the input, so input
+bytes are the honest upper proxy) and ``max_cap`` =
+STATE_PARTITIONS_MAX (4096 — plenty for thousands of cores; at 100 TB
+the derivation hits this cap and the operator runs at full
 cluster parallelism). WTR_STATE_PARTITIONS overrides the derivation
 outright for deployments that size state explicitly. The driver's bench
 contract is untouched: nothing here reads SPARK_GRAFT_CPUS, so the
@@ -39,10 +39,10 @@ from __future__ import annotations
 import math
 import os
 from contextlib import contextmanager
+from urllib.parse import urlparse
 
-#: target replay-input bytes per state partition (env-tunable).
-STATE_TARGET_BYTES_ENV = "WTR_STATE_TARGET_BYTES"
-STATE_TARGET_BYTES_DEFAULT = 64 << 20
+#: target replay-input bytes per state partition.
+STATE_TARGET_BYTES = 64 << 20
 #: target for COMPUTE-HEAVY Python stateful folds
 #: (applyInPandasWithState whose per-row work dominates — the
 #: page-state fold): advisory bytes per partition should scale as
@@ -56,11 +56,9 @@ STATE_TARGET_BYTES_DEFAULT = 64 << 20
 #: dominated. A LIGHT fold (wt_stream_heavy_hitters' counter updates:
 #: 2.67 s at 1 partition vs 3.57 at 16, same interleaved session) stays
 #: on the default target — the call site picks per its fold cost.
-PY_STATE_TARGET_BYTES_ENV = "WTR_PY_STATE_TARGET_BYTES"
-PY_STATE_TARGET_BYTES_DEFAULT = 128 << 10
-#: hard cap on the derived count (env-tunable).
-STATE_PARTITIONS_MAX_ENV = "WTR_STATE_PARTITIONS_MAX"
-STATE_PARTITIONS_MAX_DEFAULT = 4096
+PY_STATE_TARGET_BYTES = 128 << 10
+#: hard cap on the derived count.
+STATE_PARTITIONS_MAX = 4096
 #: explicit override: a deployment that has sized its state store
 #: directly sets this and the derivation is skipped.
 STATE_PARTITIONS_ENV = "WTR_STATE_PARTITIONS"
@@ -69,7 +67,14 @@ STATE_PARTITIONS_ENV = "WTR_STATE_PARTITIONS"
 def dir_bytes(path: str) -> int:
     """Total bytes under ``path`` (a file or a directory tree) — the
     replay-input size the derivation keys on. Metadata only (os.walk +
-    getsize), never reads data."""
+    getsize), never reads data. Local paths only: a non-local URI
+    (hdfs://, s3a://, ...) raises rather than sizing the drain as empty."""
+    if urlparse(path).scheme:
+        raise ValueError(
+            f"dir_bytes measures local paths only, not {path!r}: stage the "
+            f"replay input locally, or size non-local state explicitly with "
+            f"{STATE_PARTITIONS_ENV} instead of deriving it from bytes"
+        )
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
@@ -87,31 +92,13 @@ def adaptive_state_partitions(
 ) -> int:
     """The clamp rule in the module docstring, with the env override.
     ``python_heavy=True`` selects the compute-heavy-fold target (see
-    PY_STATE_TARGET_BYTES_DEFAULT) — call sites whose stateful operator
+    PY_STATE_TARGET_BYTES) — call sites whose stateful operator
     is a pandas fold with measured per-row cost pass it."""
     explicit = os.environ.get(STATE_PARTITIONS_ENV)
     if explicit:
         return max(1, int(explicit))
-    if python_heavy:
-        target = int(
-            os.environ.get(
-                PY_STATE_TARGET_BYTES_ENV, PY_STATE_TARGET_BYTES_DEFAULT
-            )
-        )
-    else:
-        target = int(
-            os.environ.get(STATE_TARGET_BYTES_ENV, STATE_TARGET_BYTES_DEFAULT)
-        )
-    cap = int(
-        os.environ.get(
-            STATE_PARTITIONS_MAX_ENV, STATE_PARTITIONS_MAX_DEFAULT
-        )
-    )
-    return min(max(1, math.ceil(input_bytes / max(target, 1))), cap)
-
-
-#: explicit override for the replay scan-split size (bytes).
-REPLAY_SPLIT_BYTES_ENV = "WTR_REPLAY_SPLIT_BYTES"
+    target = PY_STATE_TARGET_BYTES if python_heavy else STATE_TARGET_BYTES
+    return min(max(1, math.ceil(input_bytes / target)), STATE_PARTITIONS_MAX)
 
 
 def replay_scan_split(spark, input_bytes: int) -> int:
@@ -126,9 +113,6 @@ def replay_scan_split(spark, input_bytes: int) -> int:
     parallelism), clamped to [1 MiB, 128 MiB] — at sf0.1 the clamp
     floor leaves the current single-task behavior untouched; at
     cluster scale the cap restores the normal default."""
-    explicit = os.environ.get(REPLAY_SPLIT_BYTES_ENV)
-    if explicit:
-        return max(1 << 20, int(explicit))
     par = max(1, spark.sparkContext.defaultParallelism)
     return min(max(input_bytes // (2 * par), 1 << 20), 128 << 20)
 
