@@ -74,3 +74,10 @@ def test_reliable_mode_same_results_on_real_operator(spark, monkeypatch):
         for f in fs
     ]
     assert files, "reliable mode wrote no checkpoint files"
+
+
+def test_session_reclaims_reliable_checkpoints(spark):
+    """session.get_spark sets the cleaner flag that deletes reliable-mode
+    checkpoint files once their DataFrame is released."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"

@@ -814,3 +814,27 @@ def test_classifier_sql_literals_are_escaped(spark, monkeypatch):
     ).fetchall()
     assert [r for r, _ in duck] == exp_revert
     assert [b for _, b in duck] == exp_bot
+
+
+def test_classifier_projections_refuse_escaped_string_literals(spark):
+    """Under spark.sql.parser.escapedStringLiterals=true the classifier
+    SQL literals would keep their doubled backslashes, so every plan that
+    renders them fails loudly instead of matching the wrong regex."""
+    from pyspark.sql import functions as F
+
+    from wikitrender_spark.engine import RC_FLAT_SCHEMA
+    from wikitrender_spark.operators.lifecycle import fold_events, log_events
+    from wikitrender_spark.operators.page_state import classified_edit_events
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    rc = spark.createDataFrame([], RC_FLAT_SCHEMA)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        for build in (classified_edit_events, log_events,
+                      lambda df: fold_events(df, F.lit("g"))):
+            with pytest.raises(ValueError, match=key):
+                build(rc)
+    finally:
+        spark.conf.set(key, prev)
+    classified_edit_events(rc)  # the default parser builds the plan

@@ -27,9 +27,10 @@ relations, with a deployment switch:
   ``WTR_CHECKPOINT_DIR`` (a distributed filesystem path) — same plan
   cut, same single materialization, but blocks live on reliable
   storage, spill is the filesystem's problem, and executor loss only
-  re-reads. This is the cluster default; pair it with
-  ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so
-  checkpoint files are reclaimed when their DataFrame is released.
+  re-reads. This is the cluster default;
+  ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (set by
+  session.get_spark) reclaims checkpoint files when their DataFrame is
+  released.
 
 Both modes cut lineage identically, so the nested-lambda protection
 and every downstream plan shape are mode-independent; results cannot

@@ -126,11 +126,7 @@ class WikiTrenderCollection:
     def mark_safe(self, page_id: str, unsafe: bool = False) -> None:
         """A7 (/root/reference/index.js:409-411): exempt a page from the
         speed/inactivity purge (not from max-lifespan)."""
-        wiki, title = self._split_id(page_id)
-        self._write_control(
-            wiki, title, log_type="control",
-            log_action="markUnsafe" if unsafe else "markSafe",
-        )
+        self.mark_safe_many([page_id], unsafe)
 
     def drop(self, title: str, wiki: str = "enwiki") -> None:
         """drop() (/root/reference/index.js:427-430): remove a page's
@@ -138,20 +134,23 @@ class WikiTrenderCollection:
         delete-log event): control rows carry the submitter's wall clock,
         and only log_type='control' is excluded from the purge clock —
         a wall-clock 'log' row would age the whole group to now."""
-        self._write_control(wiki, title, log_type="control", log_action="drop")
+        self._write_control(
+            self.spark.createDataFrame(
+                [(wiki, title)], "wiki string, title string"
+            ),
+            "drop",
+        )
 
     def mark_safe_many(self, page_ids: list[str], unsafe: bool = False) -> None:
         """Bulk A7: one snapshot join resolves every id, one control file
-        carries every command — the programmatic path (the per-command
-        mark_safe does a driver-side lookup per id, fine at human rate
-        only)."""
-        self._write_control_many(
-            page_ids, "markUnsafe" if unsafe else "markSafe"
+        carries every command."""
+        self._write_control(
+            self._resolve_ids(page_ids), "markUnsafe" if unsafe else "markSafe"
         )
 
     def drop_many(self, page_ids: list[str]) -> None:
         """Bulk drop by id (same one-join resolution as mark_safe_many)."""
-        self._write_control_many(page_ids, "drop")
+        self._write_control(self._resolve_ids(page_ids), "drop")
 
     def pages(self) -> DataFrame:
         """getPages() (/root/reference/index.js:454-456): the live page
@@ -182,47 +181,18 @@ class WikiTrenderCollection:
         q.awaitTermination()
 
     # --- internals --------------------------------------------------------
-    def _split_id(self, page_id: str) -> tuple[str, str]:
-        """Resolve a page id back to (wiki, title) for control routing.
+    def _resolve_ids(self, page_ids: list[str]) -> DataFrame:
+        """Resolve page ids -> (wiki, title) for control routing with ONE
+        snapshot join.
 
         Ids are ambiguous by construction ('AC/DC' on enwiki vs wiki 'AC',
         title 'DC' — classify.page_id), so live pages are resolved from the
         snapshot (authoritative, and markSafe only applies to live pages
-        anyway, /root/reference/index.js:409-411); only unknown ids fall
-        back to the prefix heuristic."""
-        hit = (
-            self.pages()
-            .filter(F.col("id") == page_id)
-            .select("wiki", "title")
-            .take(1)
-        )
-        if hit:
-            return (hit[0]["wiki"] or "enwiki"), hit[0]["title"]
-        if "/" in page_id:
-            wiki, title = page_id.split("/", 1)
-            return wiki, title
-        return "enwiki", page_id
-
-    def _write_control(self, wiki: str, title: str, **kw) -> None:
-        now_us = time.time_ns() // 1000
-        row = dict(
-            seq=now_us, ts=None, title=title, wiki=wiki,
-            server_name=f"{wiki}.example", namespace=0, user="control",
-            bot=False, type="external", comment="", length_new=None,
-            length_old=None, log_type=None, log_action=None,
-            log_target=None, log_action_comment=None,
-        )
-        row.update(kw)
-        df = self.spark.createDataFrame([row], RC_FLAT_SCHEMA).withColumn(
-            "ts", F.timestamp_micros(F.lit(now_us))
-        )
-        df.coalesce(1).write.mode("append").parquet(self._control_dir)
-
-    def _write_control_many(self, page_ids: list[str], action: str) -> None:
-        """Resolve N ids -> (wiki, title) with ONE snapshot join (live
-        pages authoritative; unknown ids fall back to the same prefix
-        heuristic as _split_id) and append ONE control parquet file."""
-        now_us = time.time_ns() // 1000
+        anyway, reference index.js:409-411); only ids with no
+        snapshot row fall back to the prefix heuristic. A live page with
+        NULL/'' wiki resolves to enwiki — the _hit marker distinguishes
+        "live with NULL wiki" from "join miss", which a bare coalesce on
+        _w cannot."""
         ids = self.spark.createDataFrame(
             [(p,) for p in page_ids], "id string"
         )
@@ -239,13 +209,7 @@ class WikiTrenderCollection:
             F.col("id").contains("/"),
             F.expr("substring(id, instr(id, '/') + 1)"),
         ).otherwise(F.col("id"))
-        # Snapshot rows are authoritative exactly like the single-command
-        # path (_split_id: `hit[0]['wiki'] or 'enwiki'`): a LIVE page with
-        # NULL/'' wiki resolves to enwiki, and only ids with no snapshot
-        # row at all fall back to the prefix heuristic — the _hit marker
-        # distinguishes "live with NULL wiki" from "join miss", which a
-        # bare coalesce on _w cannot.
-        resolved = ids.join(F.broadcast(snap), "id", "left").select(
+        return ids.join(F.broadcast(snap), "id", "left").select(
             F.when(
                 F.col("_hit").isNotNull(),
                 F.when(
@@ -256,7 +220,12 @@ class WikiTrenderCollection:
             .alias("wiki"),
             F.coalesce(F.col("_t"), fallback_title).alias("title"),
         )
-        rows = resolved.select(
+
+    def _write_control(self, targets: DataFrame, action: str) -> None:
+        """Append ONE control parquet file: one ``action`` command per
+        (wiki, title) row of ``targets``, in the flat rc-event shape."""
+        now_us = time.time_ns() // 1000
+        rows = targets.select(
             "title",
             F.lit("").alias("comment"),
             F.lit(0).alias("namespace"),

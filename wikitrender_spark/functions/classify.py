@@ -123,6 +123,23 @@ def _sql_str_lit(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+_ESCAPED_LITERALS_CONF = "spark.sql.parser.escapedStringLiterals"
+
+
+def check_sql_literal_parser(spark) -> None:
+    """Refuse to build a classifier SQL projection under a parser that
+    keeps backslash escapes verbatim: _sql_str_lit escapes for the
+    default parser, so with the conf set every backslash in IP_REGEX and
+    DELETE_TARGET_REGEX would silently double and the regexes match
+    something else."""
+    if spark.conf.get(_ESCAPED_LITERALS_CONF, "false").lower() == "true":
+        raise ValueError(
+            f"{_ESCAPED_LITERALS_CONF}=true is not supported: the "
+            "classifier SQL literals are escaped for the default parser; "
+            "unset it or set it to false"
+        )
+
+
 def is_ip_sql(user: str) -> str:
     return f"{user} RLIKE {_sql_str_lit(IP_REGEX)}"
 

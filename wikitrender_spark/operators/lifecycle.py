@@ -102,6 +102,7 @@ _LOG_SELECT_SQL: tuple[str, ...] = (
 def log_events(rc: DataFrame) -> DataFrame:
     """The routed log branch (F4) with normalized ids (SQL-text
     rendering; log_events_columns is the pinned Column reference)."""
+    classify.check_sql_literal_parser(rc.sparkSession)
     return rc.filter(F.col("log_type").isNotNull()).selectExpr(
         *_LOG_SELECT_SQL
     )
@@ -327,13 +328,14 @@ def fold_events(rc: DataFrame, group_col) -> DataFrame:
     """rc rows -> the classified rows every stateful fold reads
     (streaming/fold.py), keyed by ``_grp``. The group key is taken from
     the RAW wiki/title before the projection normalizes them."""
+    classify.check_sql_literal_parser(rc.sparkSession)
     return rc.withColumn("_grp", group_col).selectExpr(*_FOLD_SELECT_SQL)
 
 
 def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """Fold one closed page group in (ts, seq) order — the pandas twin of
     the reference's event loop (updateFromRCStream + log routing), run
-    through the same micro-batch step as the streaming processors
+    through the same micro-batch step as the streaming processor
     (batch-stream equivalence by construction, SURVEY.md §5.2-5), with
     no purge."""
     titles: dict[str, dict] = {}

@@ -99,6 +99,7 @@ def classified_edit_events(rc: DataFrame) -> DataFrame:
     the F4 router plus F5-F10 classifiers as one narrow projection
     (SQL-text rendering; classified_edit_events_columns is the pinned
     Column reference)."""
+    classify.check_sql_literal_parser(rc.sparkSession)
     return rc.filter(F.col("log_type").isNull()).selectExpr(
         *_CLASSIFIED_SELECT_SQL
     )

@@ -38,5 +38,8 @@ def get_spark(app_name: str = "wikitrender-spark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # reclaim WTR_BARRIER_MODE=reliable checkpoint files once their
+        # DataFrame is released (barrier.py); core conf, build time only
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     return builder.getOrCreate()

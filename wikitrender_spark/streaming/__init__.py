@@ -2,5 +2,6 @@
 
 SURVEY.md §7 step 5 — the incremental form of the engine. Modules:
 - fold: event-at-a-time semantics shared with the batch replay;
-- processor: applyInPandasWithState changelog pipeline + purge P2.
+- processor: the one stateful changelog pipeline
+  (applyInPandasWithState) + purge P2.
 """

@@ -10,18 +10,18 @@ ids are the SAME SQL strings the batch plans evaluate
 module owns what needs state: routing each classified row to its page,
 accumulating, and the P2 purge.
 
-One micro-batch step, ``fold``, serves all three stateful callers: the
-exact batch replay (lifecycle.replay_lifecycle — one call per closed page
-group, no purge) and both streaming processors (processor.py,
-processor_tws.py — one call per group per micro-batch, the titles map
-carried in the state store between calls). Batch-stream equivalence thus
-holds by construction: the streaming run only splits the same fold
-across micro-batches.
+One micro-batch step, ``fold``, serves both stateful callers: the exact
+batch replay (lifecycle.replay_lifecycle — one call per closed page
+group, no purge) and the streaming processor (processor.py — one call
+per group per micro-batch, the titles map carried in the state store
+between calls). Batch-stream equivalence thus holds by construction:
+the streaming run only splits the same fold across micro-batches.
 
 State model: ``titles`` — dict id -> page dict, the Spark-side twin of
 WikiSocketCollection.titles (/root/reference/index.js:115). Page dicts hold
-sets/dicts for contributor tracking; (de)serialization to a JSON state-store
-blob is in serialize_titles/deserialize_titles.
+the per-user edit ``distribution`` plus anon/contributor counters;
+(de)serialization to a JSON state-store blob is in
+serialize_titles/deserialize_titles.
 
 The purge policy P2 (cleaner, reference index.js:362-398) runs
 against an injected ``now`` — one logical clock per micro-batch (semantic
@@ -59,8 +59,8 @@ def fresh_page(pid: str, wiki: str, title: str, now) -> dict:
     return dict(
         id=pid, wiki=wiki, title=title, edits=0, anonEdits=0,
         isNew=False, notabilityFlags=0, volatileFlags=0, reverts=0,
-        start=now, updated=now, distribution={}, anon_set=set(),
-        contrib_set=set(), bytesChanged=0, isProtected=False, safe=False,
+        start=now, updated=now, distribution={}, n_anons=0,
+        n_contributors=0, bytesChanged=0, isProtected=False, safe=False,
     )
 
 
@@ -143,12 +143,12 @@ def fold_pdf(titles: dict, pdf: pd.DataFrame,
             page["edits"] += 1
             if row.is_anon:
                 page["anonEdits"] += 1
-                page["anon_set"].add(row.user)
-            else:
-                page["contrib_set"].add(row.user)
-            page["distribution"][row.user] = (
-                page["distribution"].get(row.user, 0) + 1
-            )
+            # is_anon is a function of the user alone, so counting each
+            # user once, on first entry, splits distribution's keys
+            dist = page["distribution"]
+            if row.user not in dist:
+                page["n_anons" if row.is_anon else "n_contributors"] += 1
+            dist[row.user] = dist.get(row.user, 0) + 1
         page["updated"] = now
         changed.add(page["id"])
 
@@ -245,9 +245,10 @@ def page_record(p: dict) -> dict:
         volatileFlags=p["volatileFlags"], reverts=p["reverts"],
         start=p["start"], updated=p["updated"],
         bytesChanged=p["bytesChanged"],
-        n_contributors=len(p["contrib_set"]), n_anons=len(p["anon_set"]),
+        n_contributors=p["n_contributors"], n_anons=p["n_anons"],
         max_user_edits=max(dist.values()) if dist else None,
-        total_user_edits=sum(dist.values()) if dist else None,
+        # every eligible edit lands in distribution, so its sum is edits
+        total_user_edits=p["edits"] or None,
         isProtected=p["isProtected"],
     )
 
@@ -263,8 +264,8 @@ def _ts_us(ts) -> int:
 
 
 def serialize_titles(titles: dict) -> str:
-    """titles map -> JSON state blob (sets -> lists, timestamps -> unix
-    micros). The state store persists this per group key — the incremental,
+    """titles map -> JSON state blob (timestamps -> unix micros). The
+    state store persists this per group key — the incremental,
     fault-tolerant analogue of the reference's whole-map LevelDB blob
     (/root/reference/index.js:395-397)."""
     out = {}
@@ -272,8 +273,6 @@ def serialize_titles(titles: dict) -> str:
         q = dict(p)
         q["start"] = _ts_us(p["start"])
         q["updated"] = _ts_us(p["updated"])
-        q["anon_set"] = sorted(p["anon_set"])
-        q["contrib_set"] = sorted(p["contrib_set"])
         out[pid] = q
     return json.dumps(out)
 
@@ -287,7 +286,5 @@ def deserialize_titles(blob: str | None) -> dict:
     for pid, q in json.loads(blob).items():
         q["start"] = pd.to_datetime(q["start"], unit="us")
         q["updated"] = pd.to_datetime(q["updated"], unit="us")
-        q["anon_set"] = set(q["anon_set"])
-        q["contrib_set"] = set(q["contrib_set"])
         titles[pid] = q
     return titles

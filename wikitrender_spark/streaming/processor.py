@@ -14,7 +14,7 @@ Two layers, each with one owner:
   before rows reach Python;
 - the fold owns routing, accumulation and the batch-boundary purge: each
   group's micro-batch is one call to streaming/fold.fold, the same step
-  the exact batch replay and the transformWithState processor run.
+  the exact batch replay runs.
 
 So batch–stream equivalence (SURVEY.md §5.2-5) holds by construction and
 is asserted in tests/test_streaming.py — the prefix-consistency argument

@@ -168,252 +168,6 @@ TRENDING_TOPK = 3
 TRENDING_SENTINEL_DAYS = 30
 
 
-def trending_counts_stream(
-    rc_stream: DataFrame, watermark_delay: str = "2 hours"
-) -> DataFrame:
-    """CONTINUOUS (production) form of the trending aggregation — the
-    update-mode sibling of the replay+sentinel gate harness
-    (trending_replay_to_memory): watermarked per-(hour window, page)
-    event counts that emit a row whenever a count CHANGES, instead of
-    once at finalization. Pair with run_trending_update + a
-    TrendingReport to get the reference's periodic trending render
-    (examples/index.js:19-71) as an event-time push — the S8
-    console/report sink's successor: the reference re-renders its whole
-    cache every 10 wall-clock seconds whether or not anything changed;
-    this pushes exactly the changed (window, page) rows.
-
-    State is bounded per (window, page) and evicted once the watermark
-    passes window end + delay — the same bound the append form carries;
-    correctness for a window requires its late data to arrive within
-    the watermark (the standard streaming contract; the batch
-    equivalence test replays in order, where equality is exact)."""
-    from ..operators.page_state import classified_edit_events
-
-    e = classified_edit_events(rc_stream).withWatermark(
-        "ts", watermark_delay
-    )
-    return (
-        e.groupBy(F.window("ts", WINDOW_DURATION), "id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "id",
-            "n_events",
-        )
-    )
-
-
-class TrendingReport:
-    """Driver-side upsert store + per-window top-k view — what the
-    reference's setInterval render loop keeps in its page cache
-    (examples/index.js:19-71), maintained by update-mode pushes instead
-    of wall-clock polling. `horizon_us` bounds memory: windows older
-    than (newest window start - horizon) are evicted, mirroring the
-    upstream watermark eviction — the store holds only live windows.
-
-    Production note: this in-driver dict stands in for the KV/report
-    store a deployment would upsert (the reference also renders from
-    in-process memory); the foreachBatch feed is bounded per batch by
-    the number of CHANGED (window, page) pairs, not by stream volume."""
-
-    def __init__(
-        self, topk: int = TRENDING_TOPK, horizon_us: int | None = None
-    ) -> None:
-        self.topk = topk
-        self.horizon_us = horizon_us
-        self.windows: dict[int, dict[str, int]] = {}
-        self.max_start = None
-
-    def update(self, rows) -> None:
-        for r in rows:
-            ws = r["window_start_us"]
-            # drop updates for windows already past the horizon instead
-            # of re-inserting them (ADVICE r9): a late row would
-            # resurrect the evicted window holding ONLY the changed
-            # pages, so top() would silently serve an incomplete top-k
-            # for it — horizon_us is not tied to the stream's watermark
-            # delay, making that reachable in a live deployment
-            if (
-                self.horizon_us is not None
-                and self.max_start is not None
-                and ws < self.max_start - self.horizon_us
-            ):
-                continue
-            self.windows.setdefault(ws, {})[r["id"]] = r["n_events"]
-            if self.max_start is None or ws > self.max_start:
-                self.max_start = ws
-        if self.horizon_us is not None and self.max_start is not None:
-            cut = self.max_start - self.horizon_us
-            for ws in [w for w in self.windows if w < cut]:
-                del self.windows[ws]
-
-    def top(self) -> dict[int, list[tuple[str, int]]]:
-        return {
-            ws: sorted(d.items(), key=lambda kv: (-kv[1], kv[0]))[
-                : self.topk
-            ]
-            for ws, d in self.windows.items()
-        }
-
-
-class ParquetTrendingStore:
-    """Parquet-backed sibling of TrendingReport (VERDICT r9 ask #6):
-    the same upsert-store + per-window top-k contract, persisted to a
-    window-partitioned parquet directory instead of driver memory — the
-    report survives driver restarts and is readable by any consumer
-    with the path, completing the S8 production story (the reference
-    renders from in-process memory; examples/index.js:19-71).
-
-    Upsert = per-batch DYNAMIC PARTITION OVERWRITE: only the window
-    partitions touched by the batch's changed (window, page) rows are
-    rewritten — current rows for those windows are kept via one
-    anti-join, so write volume is bounded by the batch's affected
-    windows, never the store. Horizon eviction drops whole window
-    partitions past (newest window start - horizon_us), and late rows
-    already past the horizon are dropped on arrival (same rule as
-    TrendingReport — an evicted window must not resurrect holding only
-    its changed pages). At cluster scale the same shape is a Delta/
-    Iceberg MERGE with replaceWhere + retention; the filesystem
-    partition listing/removal here is the local-path stand-in.
-
-    Equivalence with TrendingReport is pytest-pinned on a replay
-    (tests/test_streaming.py)."""
-
-    def __init__(
-        self,
-        path: str,
-        topk: int = TRENDING_TOPK,
-        horizon_us: int | None = None,
-    ) -> None:
-        self.path = path
-        self.topk = topk
-        self.horizon_us = horizon_us
-
-    def _window_dirs(self) -> dict[int, str]:
-        import os
-
-        out = {}
-        if os.path.isdir(self.path):
-            for d in os.listdir(self.path):
-                if d.startswith("window_start_us="):
-                    out[int(d.split("=", 1)[1])] = os.path.join(
-                        self.path, d
-                    )
-        return out
-
-    def update_batch(self, batch_df: DataFrame) -> None:
-        import os
-
-        spark = batch_df.sparkSession
-        # eager checkpoint: the merge below reads self.path while the
-        # write overwrites it — materialize first so the plan never
-        # scans the directory it is replacing
-        changed = batch_df.select(
-            "window_start_us", "id", "n_events"
-        ).localCheckpoint(eager=True)
-        wins = [
-            r[0]
-            for r in changed.select("window_start_us").distinct().collect()
-        ]
-        if not wins:
-            return
-        dirs = self._window_dirs()
-        mx = max(wins + list(dirs))
-        cut = (
-            mx - self.horizon_us if self.horizon_us is not None else None
-        )
-        if cut is not None:
-            wins = [w for w in wins if w >= cut]
-            if not wins:
-                return
-            changed = changed.filter(F.col("window_start_us") >= cut)
-        live = [w for w in wins if w in dirs]
-        if live:
-            # read ONLY the affected window dirs (basePath keeps the
-            # partition column): reading the store root would re-list
-            # every window partition each batch — O(store age) listing
-            # per micro-batch on an unbounded-horizon store (self-review
-            # r10). The anti-join preserves unchanged pages there.
-            keep = (
-                spark.read.option("basePath", self.path)
-                .parquet(*[dirs[w] for w in live])
-                .join(
-                    changed.select("window_start_us", "id"),
-                    ["window_start_us", "id"],
-                    "left_anti",
-                )
-            )
-            merged = keep.select(
-                "window_start_us", "id", "n_events"
-            ).unionByName(changed)
-        else:
-            merged = changed
-        merged = merged.localCheckpoint(eager=True)
-        (
-            merged.repartition("window_start_us")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("window_start_us")
-            .parquet(self.path)
-        )
-        if cut is not None:
-            import shutil
-
-            for w, d in self._window_dirs().items():
-                if w < cut:
-                    shutil.rmtree(d, ignore_errors=True)
-
-    def top(self, spark) -> dict[int, list[tuple[str, int]]]:
-        import os
-
-        from pyspark.sql import Window as W
-
-        if not os.path.isdir(self.path) or not self._window_dirs():
-            return {}
-        w = W.partitionBy("window_start_us").orderBy(
-            F.desc("n_events"), F.asc("id")
-        )
-        rows = (
-            spark.read.parquet(self.path)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= self.topk)
-            .collect()
-        )
-        out: dict[int, list[tuple[str, int]]] = {}
-        for r in sorted(rows, key=lambda r: (r["window_start_us"], r["rn"])):
-            out.setdefault(int(r["window_start_us"]), []).append(
-                (r["id"], r["n_events"])
-            )
-        return out
-
-
-def run_trending_update(
-    windowed: DataFrame, report, ckpt: str
-) -> None:
-    """Drive the update-mode trending stream into a TrendingReport (or
-    ParquetTrendingStore) via foreachBatch (availableNow drains
-    whatever the source holds; swap the trigger for a processing-time
-    one in a live deployment). For the in-driver report the per-batch
-    collect() is the feed — bounded by changed pairs per batch (see
-    TrendingReport); the parquet store consumes the batch DataFrame
-    directly and collects only its distinct window starts."""
-
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        if hasattr(report, "update_batch"):
-            report.update_batch(batch_df)
-        else:
-            report.update(batch_df.collect())
-
-    q = (
-        windowed.writeStream.outputMode("update")
-        .foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 #: process-lifetime cache of the trending replay's ordered chunk dirs,
 #: keyed by (sf_dir, n_chunks) -> (chunk_dir, sentinel_cut_us). The
 #: chunk relation is a PURE function of the input table, so rebuilding
