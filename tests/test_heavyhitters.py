@@ -8,10 +8,13 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from wikitrender_spark.sources.replay import read_ordered_chunks
 from wikitrender_spark.streaming import heavyhitters as hh
+from wikitrender_spark.streaming.sizing import STATE_PARTITIONS_ENV, drain
 
 ITEM_SCHEMA = "key string, item string, ord long"
 
@@ -32,21 +35,30 @@ def _chunked_items(spark, work_dir, rows, n_chunks=3):
             for f in files:
                 os.utime(os.path.join(root, f), (ts, ts))
     return (
-        spark.readStream.schema(ITEM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
+        read_ordered_chunks(spark, ITEM_SCHEMA, chunk_dir)
         .select("key", "item")
     )
 
 
-def _run(spark, tmp_path, rows, capacity, name):
+@pytest.fixture(autouse=True)
+def _session_state_partitions(monkeypatch):
+    """Drains here run their state at the session's 4 shuffle
+    partitions (conftest), not the count derived from a few KB of
+    chunks, so multi-partition state stays exercised."""
+    monkeypatch.setenv(STATE_PARTITIONS_ENV, "4")
+
+
+def _drain(spark, tmp_path, rows, capacity):
+    """The emissions table of the chunked replay."""
     stream = _chunked_items(spark, str(tmp_path), rows)
-    emissions = hh.run_to_memory(
+    return drain(
         hh.heavy_hitter_stream(stream, capacity),
-        name,
-        str(tmp_path / f"{name}_ckpt"),
+        str(tmp_path / "hh_chunks"),
+        "update",
     )
+
+
+def _latest(emissions):
     latest = emissions.withColumn(
         "_mx", F.max("n_updates").over(Window.partitionBy("key"))
     ).filter(F.col("n_updates") == F.col("_mx"))
@@ -56,13 +68,17 @@ def _run(spark, tmp_path, rows, capacity, name):
     }
 
 
+def _run(spark, tmp_path, rows, capacity):
+    return _latest(_drain(spark, tmp_path, rows, capacity))
+
+
 def test_exact_when_capacity_ample_across_triggers(spark, tmp_path):
     rows = []
     for i in range(300):
         rows.append(("a", f"x{i % 7}"))
         if i % 3 == 0:
             rows.append(("b", f"y{i % 5}"))
-    got = _run(spark, tmp_path, rows, capacity=64, name="hh_exact")
+    got = _run(spark, tmp_path, rows, capacity=64)
     true = {}
     for k, it in rows:
         true[(k, it)] = true.get((k, it), 0) + 1
@@ -90,7 +106,8 @@ def test_bounded_capacity_invariants(spark, tmp_path):
             rows.append(("k", "hot3"))  # 160
     rows += [("k", f"tail{i}") for i in range(30)]
     cap = 5
-    got = _run(spark, tmp_path, rows, capacity=cap, name="hh_bounded")
+    emissions = _drain(spark, tmp_path, rows, capacity=cap)
+    got = _latest(emissions)
     true = {}
     for k, it in rows:
         true[(k, it)] = true.get((k, it), 0) + 1
@@ -106,15 +123,15 @@ def test_bounded_capacity_invariants(spark, tmp_path):
             assert key in got, (key, t, n / cap)
     # the heavies rank first in the collapsed top-k
     top = {(r["key"], r["item"]) for r in hh.final_topk(
-        spark.table("hh_bounded"), 3
+        emissions, 3
     ).collect()}
     assert top == {("k", "hot1"), ("k", "hot2"), ("k", "hot3")}
 
 
 def test_replay_determinism(spark, tmp_path):
     rows = [("k", f"i{(j * 7) % 11}") for j in range(150)]
-    a = _run(spark, tmp_path / "a", rows, capacity=4, name="hh_det_a")
-    b = _run(spark, tmp_path / "b", rows, capacity=4, name="hh_det_b")
+    a = _run(spark, tmp_path / "a", rows, capacity=4)
+    b = _run(spark, tmp_path / "b", rows, capacity=4)
     assert a == b
 
 

@@ -13,8 +13,12 @@ from pyspark.sql import functions as F
 
 from wikitrender_spark.operators import lifecycle
 from wikitrender_spark.operators.derive import rc_events
-from wikitrender_spark.sources.replay import chunked_event_stream, rc_event_stream
-from wikitrender_spark.streaming import fold, processor
+from wikitrender_spark.sources.replay import (
+    chunked_event_stream,
+    rc_event_stream,
+    read_ordered_chunks,
+)
+from wikitrender_spark.streaming import fold, processor, sizing
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -25,8 +29,16 @@ def _group():
     )
 
 
-def _run(cl, name, ckpt):
-    return processor.run_changelog_to_memory(cl, name, ckpt)
+@pytest.fixture(autouse=True)
+def _session_state_partitions(monkeypatch):
+    """Drains here run their state at the session's 4 shuffle
+    partitions (conftest), not the count derived from sf0.001's few KB,
+    so multi-partition state stays exercised."""
+    monkeypatch.setenv(sizing.STATE_PARTITIONS_ENV, "4")
+
+
+def _run(cl, input_path):
+    return sizing.drain(cl, input_path, "update", python_heavy=True)
 
 
 @pytest.fixture(scope="module")
@@ -37,11 +49,36 @@ def batch_state(spark):
 
 
 def test_stream_equals_batch_single_batch(spark, batch_state):
-    with tempfile.TemporaryDirectory() as d:
-        cl = processor.page_state_changelog(rc_event_stream(spark, SF_DIR), _group())
-        t = _run(cl, "t_eq_1", d + "/ckpt")
-        got = sorted(map(tuple, processor.final_state(t).collect()))
+    cl = processor.page_state_changelog(rc_event_stream(spark, SF_DIR), _group())
+    t = _run(cl, f"{SF_DIR}/events.parquet")
+    got = sorted(map(tuple, processor.final_state(t).collect()))
     assert got == batch_state
+
+
+def test_replay_rows_leave_no_view_or_checkpoint(spark, tmp_path,
+                                                  monkeypatch):
+    """wt_stream_replay and wt_stream_heavy_hitters each used to leave
+    a memory-sink temp view (its rows pinned in session memory) and a
+    checkpoint dir behind per call. After both run, the catalog holds
+    no new temp view and the temp root no new directory."""
+    from wikitrender_spark.plans.wikitrender_queries import (
+        q_stream_heavy_hitters,
+        q_stream_replay,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    v0 = views()
+    q_stream_replay(spark, SF_DIR).count()
+    q_stream_heavy_hitters(spark, SF_DIR).count()
+    # rc_event_stream's derivation view has one fixed name and is
+    # replaced in place on every call; a per-run sink view is new each
+    # call
+    assert views() - v0 <= {"wtr_events_stream"}
+    assert [p.name for p in tmp_path.iterdir() if p.is_dir()] == []
 
 
 def test_stream_equals_batch_chunked(spark, batch_state):
@@ -51,7 +88,7 @@ def test_stream_equals_batch_chunked(spark, batch_state):
         cl = processor.page_state_changelog(
             chunked_event_stream(spark, SF_DIR, d, n_chunks=5), _group()
         )
-        t = _run(cl, "t_eq_5", d + "/ckpt")
+        t = _run(cl, d + "/chunks")
         assert t.agg(F.max("_ver")).first()[0] > 1  # really incremental
         got = sorted(map(tuple, processor.final_state(t).collect()))
     assert got == batch_state
@@ -70,7 +107,7 @@ def test_stream_purge_matches_inprocess_fold(spark):
             chunked_event_stream(spark, SF_DIR, d, n_chunks=n_chunks),
             _group(), purge=params,
         )
-        t = _run(cl, "t_purge", d + "/ckpt")
+        t = _run(cl, d + "/chunks")
         got = sorted(map(tuple, processor.final_state(t).collect()))
         tombstones = t.filter(F.col("_deleted")).count()
 
@@ -175,9 +212,7 @@ def test_windowed_stream_append_equals_batch(spark):
             chunked_event_stream(spark, SF_DIR, d, n_chunks=4),
             watermark_delay="2 hours",
         )
-        t = windows.run_windowed_to_memory(
-            win, "t_win_append", d + "/ckpt", mode="append"
-        )
+        t = sizing.drain(win, d + "/chunks", "append")
         got = {r[0]: tuple(r) for r in t.collect()}
     assert got  # something finalized
     for start_us, row in got.items():
@@ -208,9 +243,7 @@ def test_session_stream_append_equals_batch(spark):
             chunked_event_stream(spark, SF_DIR, d, n_chunks=4),
             watermark_delay="2 hours",
         )
-        t = windows.run_windowed_to_memory(
-            sess, "t_sess_append", d + "/ckpt", mode="append"
-        )
+        t = sizing.drain(sess, d + "/chunks", "append")
         got = {(r["id"], r["session_start_us"]): tuple(r) for r in t.collect()}
     assert got
     for key, row in got.items():
@@ -296,12 +329,11 @@ def test_multi_chunk_groups_fold_in_order(spark, batch_state):
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
-        with tempfile.TemporaryDirectory() as d:
-            cl = processor.page_state_changelog(
-                rc_event_stream(spark, SF_DIR), _group()
-            )
-            t = _run(cl, "t_chunked_arrow", d + "/ckpt")
-            got = sorted(map(tuple, processor.final_state(t).collect()))
+        cl = processor.page_state_changelog(
+            rc_event_stream(spark, SF_DIR), _group()
+        )
+        t = _run(cl, f"{SF_DIR}/events.parquet")
+        got = sorted(map(tuple, processor.final_state(t).collect()))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     assert got == batch_state
@@ -342,12 +374,7 @@ def _write_chunk(spark, chunk_dir, idx, rows):
 def _flat_stream(spark, chunk_dir):
     from wikitrender_spark.engine import RC_FLAT_SCHEMA
 
-    return (
-        spark.readStream.schema(RC_FLAT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    return read_ordered_chunks(spark, RC_FLAT_SCHEMA, chunk_dir)
 
 
 def _run_resumable(spark, cl, out_dir, ckpt):
@@ -519,7 +546,7 @@ def test_telemetry_listener_captures_batches(spark):
             cl = processor.page_state_changelog(
                 chunked_event_stream(spark, SF_DIR, d, n_chunks=3), _group()
             )
-            t = _run(cl, "t_telemetry", d + "/ckpt")
+            t = _run(cl, d + "/chunks")
             counts = {r["_ver"]: (r["n_live_rows"], r["n_tombstones"])
                       for r in telemetry.purge_counts(t).collect()}
         # listener delivery is asynchronous — wait for it to catch up
@@ -614,14 +641,9 @@ def test_corpus_admission_stream_equals_batch_and_drops_dupes(spark, tmp_path):
     )
     chunk_dir = str(tmp_path / "doc_chunks")
     write_ordered_chunks((src, redo, pii_variant), chunk_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
-    admitted = corpus.corpus_admission_replay_to_memory(
-        stream, "corpus_admit_t", str(tmp_path / "ckpt")
+    stream = read_ordered_chunks(spark, schema, chunk_dir)
+    admitted = sizing.drain(
+        corpus.corpus_admission_stream(stream), chunk_dir, "append"
     )
     got_ids = {r["doc_id"] for r in admitted.select("doc_id").collect()}
 
@@ -682,15 +704,14 @@ def test_corpus_admission_cards_first_dedups_card_variants(spark, tmp_path):
     )
     chunk_dir = str(tmp_path / "card_chunks")
     write_ordered_chunks((src, card_variant), chunk_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
-    admitted = corpus.corpus_admission_replay_to_memory(
-        stream, "corpus_cards_t", str(tmp_path / "ckpt"),
-        scrub_cards_first=True,
+    stream = read_ordered_chunks(spark, schema, chunk_dir)
+    admitted = sizing.drain(
+        corpus.corpus_admission_stream(
+            stream,
+            scrub_cards_first=True,
+        ),
+        chunk_dir,
+        "append",
     )
     got_ids = {r["doc_id"] for r in admitted.select("doc_id").collect()}
     assert got_ids, "admission gate rejected everything — degenerate test"
@@ -777,15 +798,14 @@ def test_corpus_admission_nll_gate(spark, tmp_path):
 
     chunk_dir = str(tmp_path / "nll_chunks")
     write_ordered_chunks((both,), chunk_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
-    admitted = corpus.corpus_admission_replay_to_memory(
-        stream, "corpus_nll_t", str(tmp_path / "ckpt"),
-        nll_model=model, max_unit_nll=ceiling,
+    stream = read_ordered_chunks(spark, schema, chunk_dir)
+    admitted = sizing.drain(
+        corpus.corpus_admission_stream(
+            stream,
+            nll_model=model, max_unit_nll=ceiling,
+        ),
+        chunk_dir,
+        "append",
     )
     got_ids = {r["doc_id"] for r in admitted.select("doc_id").collect()}
     want_ids = {
@@ -960,12 +980,7 @@ def test_nll_join_gate_streaming_watermark_replay(spark, tmp_path):
           t0 + dt.timedelta(seconds=700))], sch)
     chunk_dir = str(tmp_path / "nll_join_chunks")
     write_ordered_chunks((withts, dup, flush), chunk_dir)
-    stream = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    stream = read_ordered_chunks(spark, sch, chunk_dir)
     out = corpus.corpus_admission_stream_within_watermark(
         stream, horizon="10 minutes",
         nll_model=model, max_unit_nll=50.0, nll_gate="join",
@@ -1110,12 +1125,7 @@ def test_corpus_admission_neardup_chain(spark, tmp_path):
         ),
         chunk_dir,
     )
-    stream = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    stream = read_ordered_chunks(spark, sch, chunk_dir)
     out = corpus.corpus_admission_stream_within_watermark(
         stream, horizon="10 minutes", neardup=True
     )
@@ -1217,19 +1227,18 @@ def test_corpus_admission_all_options_compose(spark, tmp_path):
     assert planted.count() == planted.select("text").distinct().count()
     chunk_dir = str(tmp_path / "combo_chunks")
     write_ordered_chunks((planted, variant), chunk_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    stream = read_ordered_chunks(spark, schema, chunk_dir)
     # generous NLL ceiling: the plantings add unseen transitions to
     # every doc, so the gate must not reject the whole corpus — but it
     # must stay attached (schema + lineage)
-    admitted = corpus.corpus_admission_replay_to_memory(
-        stream, "corpus_combo_t", str(tmp_path / "ckpt"),
-        patterns=T.PII_PATTERNS_EXTENDED, scrub_cards_first=True,
-        nll_model=model, max_unit_nll=8.0,
+    admitted = sizing.drain(
+        corpus.corpus_admission_stream(
+            stream,
+            patterns=T.PII_PATTERNS_EXTENDED, scrub_cards_first=True,
+            nll_model=model, max_unit_nll=8.0,
+        ),
+        chunk_dir,
+        "append",
     )
     got_ids = {r["doc_id"] for r in admitted.select("doc_id").collect()}
     assert got_ids, "combined gates rejected everything — degenerate"
@@ -1364,14 +1373,11 @@ def test_corpus_admission_watermark_readmits_expired_drops_live(spark, tmp_path)
         ),
         chunk_dir,
     )
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long, ingest_ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
+    stream = read_ordered_chunks(
+        spark,
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long, ingest_ts timestamp",
+        chunk_dir,
     )
     # the lang of real corpus texts may not be 'en' — bypass nothing:
     # re-label each row with its PREDICTED lang so the gate passes on
@@ -1530,12 +1536,7 @@ def test_corpus_admission_full_option_chain(spark, tmp_path):
         ),
         chunk_dir,
     )
-    stream = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    stream = read_ordered_chunks(spark, sch, chunk_dir)
     out = corpus.corpus_admission_stream_within_watermark(
         stream,
         horizon="10 minutes",
@@ -1717,14 +1718,11 @@ def test_corpus_admission_restart_from_checkpoint_equals_uninterrupted(
     )
 
     def drain(chunk_dir, ckpt, out_dir):
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, source string, "
-                "n_chars long, ingest_ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(chunk_dir)
+        stream = read_ordered_chunks(
+            spark,
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long, ingest_ts timestamp",
+            chunk_dir,
         )
         stream = stream.withColumn("lang", T.predict_lang(F.col("text")))
         q = (
@@ -1826,14 +1824,11 @@ def test_neardup_chain_restart_equals_uninterrupted(spark, tmp_path):
     )
 
     def drain(chunk_dir, ckpt, out_dir):
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, source string, "
-                "n_chars long, ingest_ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(chunk_dir)
+        stream = read_ordered_chunks(
+            spark,
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long, ingest_ts timestamp",
+            chunk_dir,
         )
         stream = stream.withColumn("lang", T.predict_lang(F.col("text")))
         q = (
@@ -1959,14 +1954,11 @@ def test_soak_restart_state_curve_equals_uninterrupted(spark, tmp_path):
     )
 
     def drain(chunk_dir, ckpt, out_dir):
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, source string, "
-                "n_chars long, ingest_ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(chunk_dir)
+        stream = read_ordered_chunks(
+            spark,
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long, ingest_ts timestamp",
+            chunk_dir,
         )
         stream = stream.withColumn("lang", T.predict_lang(F.col("text")))
         q = (

@@ -16,7 +16,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from wikitrender_spark.schemas import load_table
+from wikitrender_spark.sources.replay import read_ordered_chunks
 from wikitrender_spark.streaming import dedup as sdedup
+from wikitrender_spark.streaming.sizing import STATE_PARTITIONS_ENV, drain
 
 SF_DIR = "/root/testdata/sf0.001"
 DOCS_SCHEMA = (
@@ -38,7 +40,7 @@ def _docs_with_planted_dups(spark):
 
 def _chunked_docs_stream(spark, work_dir, n_chunks=4):
     """Split the planted-dup documents into n_chunks doc_id-ordered
-    parquet files with increasing mtimes; maxFilesPerTrigger=1 then
+    parquet files with increasing mtimes; read_ordered_chunks then
     replays them as ordered micro-batches (same recipe as
     sources/replay.chunked_event_stream)."""
     docs = _docs_with_planted_dups(spark)
@@ -58,12 +60,7 @@ def _chunked_docs_stream(spark, work_dir, n_chunks=4):
         for root, _dirs, files in os.walk(path):
             for f in files:
                 os.utime(os.path.join(root, f), (ts, ts))
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    return read_ordered_chunks(spark, DOCS_SCHEMA, chunk_dir)
 
 
 @pytest.fixture(scope="module")
@@ -135,17 +132,13 @@ def test_ingest_dedup_replay_collapses_injected_dupes(spark, tmp_path):
     must collapse to exactly one survivor per source event — and the
     injection itself must be non-degenerate (batch 2 is non-empty), so
     the dedup state is provably exercised ACROSS micro-batches."""
-    import uuid
-
     src = spark.read.parquet(f"{SF_DIR}/events.parquet")
     n_src = src.count()
     n_dupes = src.filter(F.col("event_id") % sdedup.INGEST_DUP_MOD == 0).count()
     assert n_dupes > 0, "degenerate injection: no event_id divisible"
 
     work = str(tmp_path / "work")
-    ckpt = str(tmp_path / "ckpt")
-    name = "ingest_dedup_test_" + uuid.uuid4().hex[:8]
-    survivors = sdedup.ingest_dedup_to_memory(spark, SF_DIR, work, name, ckpt)
+    survivors = sdedup.ingest_dedup_to_memory(spark, SF_DIR, work)
     assert survivors.count() == n_src
     assert survivors.select("event_id").distinct().count() == n_src
 
@@ -164,8 +157,6 @@ def test_watermark_dedup_readmits_exactly_the_expired_dupes(spark, tmp_path):
     max_ts - 2H (their state expired before the sentinel batch's
     eviction sweep) — and drops every other re-emission. Both tails must
     be non-empty on the sf corpus or the check is degenerate."""
-    import uuid
-
     from wikitrender_spark.operators.derive import read_events_raw
 
     src = read_events_raw(spark, SF_DIR).select("event_id", "ts")
@@ -189,9 +180,7 @@ def test_watermark_dedup_readmits_exactly_the_expired_dupes(spark, tmp_path):
     assert expected_survive and expected_dropped, "degenerate split"
 
     work = str(tmp_path / "work")
-    ckpt = str(tmp_path / "ckpt")
-    name = "ingest_wm_test_" + uuid.uuid4().hex[:8]
-    out = sdedup.ingest_dedup_watermark_to_memory(spark, SF_DIR, work, name, ckpt)
+    out = sdedup.ingest_dedup_watermark_to_memory(spark, SF_DIR, work)
     from collections import Counter
 
     counts = Counter(r.event_id for r in out.select("event_id").collect())
@@ -204,7 +193,8 @@ def test_watermark_dedup_readmits_exactly_the_expired_dupes(spark, tmp_path):
     assert expected_dropped <= {k for k, c in counts.items() if c == 1}
 
 
-def test_admission_dedup_composes_with_keyed_pipeline(spark, tmp_path):
+def test_admission_dedup_composes_with_keyed_pipeline(spark, tmp_path,
+                                                    monkeypatch):
     """Full ingest chain in ONE streaming query (VERDICT r8 ask #7),
     composing both state stores: watermark-bounded admission dedup
     (dropDuplicatesWithinWatermark on seq) feeding the keyed page-state
@@ -280,18 +270,13 @@ def test_admission_dedup_composes_with_keyed_pipeline(spark, tmp_path):
 
     chunk_dir = str(tmp_path / "admit_chunks")
     write_ordered_chunks((raw, boundary, dup17, late23), chunk_dir)
-    stream_raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    stream_raw = read_ordered_chunks(spark, EVENTS_SCHEMA, chunk_dir)
     rc_stream = _derive(spark, stream_raw, "t_admit_stream")
     deduped = dedup_events_stream(rc_stream, watermark_delay=f"{h_s} seconds")
     cl = processor.page_state_changelog(deduped, grp)
-    t = processor.run_changelog_to_memory(
-        cl, "t_admit_chain", str(tmp_path / "ckpt")
-    )
+    # state at the session's 4 partitions, as for every fold test
+    monkeypatch.setenv(STATE_PARTITIONS_ENV, "4")
+    t = drain(cl, chunk_dir, "update", python_heavy=True)
     got = sorted(map(tuple, processor.final_state(t).collect()))
     assert got == want
 
@@ -341,13 +326,8 @@ def test_neardup_admission_within_watermark(spark, tmp_path):
         ),
         chunk_dir,
     )
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, ingest_ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
+    stream = read_ordered_chunks(
+        spark, "doc_id long, text string, ingest_ts timestamp", chunk_dir
     )
     out = sdedup.neardup_admission_within_watermark(
         stream, horizon="10 minutes"
@@ -419,13 +399,8 @@ def test_neardup_admission_same_batch_at_most_one_admits(spark, tmp_path):
         ),
         chunk_dir,
     )
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, ingest_ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
+    stream = read_ordered_chunks(
+        spark, "doc_id long, text string, ingest_ts timestamp", chunk_dir
     )
     out = sdedup.neardup_admission_within_watermark(
         stream, horizon="10 minutes"
@@ -544,13 +519,8 @@ def test_neardup_admission_readmits_expired_blocks_live(spark, tmp_path):
         ),
         chunk_dir,
     )
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, ingest_ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
+    stream = read_ordered_chunks(
+        spark, "doc_id long, text string, ingest_ts timestamp", chunk_dir
     )
     out = sdedup.neardup_admission_within_watermark(
         stream, horizon="60 seconds"
@@ -570,7 +540,7 @@ def test_neardup_admission_readmits_expired_blocks_live(spark, tmp_path):
 
 
 def test_stream_band_buckets_oracle_agrees_on_sentinel_corpus(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """The dd_stream_band_buckets gate on a CONSTRUCTED corpus that
     exercises the SENTINEL leg the digit-free driver corpus never
@@ -589,10 +559,7 @@ def test_stream_band_buckets_oracle_agrees_on_sentinel_corpus(
         STREAM_BAND_BUCKETS_SQL,
     )
     from wikitrender_spark.sources.replay import write_ordered_chunks
-    from wikitrender_spark.streaming.dedup import (
-        drain_to_memory,
-        fresh_band_buckets,
-    )
+    from wikitrender_spark.streaming.dedup import fresh_band_buckets
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog again and again"),
@@ -614,14 +581,12 @@ def test_stream_band_buckets_oracle_agrees_on_sentinel_corpus(
     )
     chunk_dir = str(tmp_path / "chunks")
     write_ordered_chunks(chunks, chunk_dir)
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ingest_ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
+    stream = read_ordered_chunks(
+        spark, "doc_id long, text string, ingest_ts timestamp", chunk_dir
     )
     fresh = fresh_band_buckets(stream, ts_col="ingest_ts", horizon="1 hour")
-    out = drain_to_memory(fresh, "band_sentinel_test", str(tmp_path / "ck"))
+    monkeypatch.setenv(STATE_PARTITIONS_ENV, "4")
+    out = drain(fresh, chunk_dir, "append")
     got = sorted(
         (
             int(r["band_idx"]),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from wikitrender_spark.operators.derive import read_events_raw
 from wikitrender_spark.plans import relational_queries as R
+from wikitrender_spark.sources.replay import read_ordered_chunks
 from wikitrender_spark.streaming import ewma as sewma
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -49,12 +50,7 @@ def _chunked_events_stream(spark, work_dir, n_chunks=4):
         for root, _dirs, files in os.walk(path):
             for f in files:
                 os.utime(os.path.join(root, f), (ts, ts))
-    return (
-        spark.readStream.schema(EV_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    return read_ordered_chunks(spark, EV_SCHEMA, chunk_dir)
 
 
 def test_streaming_ewma_equals_batch_on_finalizable_hours(spark, tmp_path):
@@ -141,12 +137,7 @@ def test_flush_quiet_keys_finalizes_on_global_watermark(spark, tmp_path):
         for root, _dirs, files in os.walk(path):
             for f in files:
                 os.utime(os.path.join(root, f), (ts, ts))
-    stream = (
-        spark.readStream.schema(EV_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    stream = read_ordered_chunks(spark, EV_SCHEMA, chunk_dir)
     q = (
         sewma.streaming_hourly_ewma(stream, flush_quiet_keys=True)
         .writeStream.format("memory")

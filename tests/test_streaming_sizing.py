@@ -1,8 +1,9 @@
-"""Round-17 scale-adaptive state-partition sizing (streaming/sizing.py):
-the derivation math, the WTR_STATE_PARTITIONS override, the conf
-scoping, and — the load-bearing claim — that a started streaming query
-actually runs its stateful operator at the scoped partition count while
-the outer session conf is restored."""
+"""Round-17 scale-adaptive state-partition sizing and the replay drain
+(streaming/sizing.py): the derivation math, the WTR_STATE_PARTITIONS
+override, the drain's conf scoping and cleanup, and — the load-bearing
+claim — that a drained streaming query actually runs its stateful
+operator at the scoped partition count while the outer session conf is
+restored."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import os
 import tempfile
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from wikitrender_spark.streaming import sizing
@@ -62,70 +64,142 @@ def test_dir_bytes_refuses_non_local_uri(uri):
         sizing.dir_bytes(uri)
 
 
-def test_conf_scoped_and_restored(spark):
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    with sizing.state_partition_conf(spark, 3):
-        assert spark.conf.get(key) == "3"
-    assert spark.conf.get(key) == before
-    with pytest.raises(RuntimeError):
-        with sizing.state_partition_conf(spark, 3):
-            raise RuntimeError("boom")
-    assert spark.conf.get(key) == before  # restored on error too
-    with sizing.state_partition_conf(spark, None):
-        assert spark.conf.get(key) == before  # None is a no-op
+_SIZED_KEYS = ("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
 
 
-def test_started_query_uses_scoped_count(spark):
-    """A drain started under the scoped conf runs its stateful operator
-    at that partition count (the engine reports it per progress under
-    stateOperators[].numShufflePartitions), and the result matches the
-    session-default run row-for-row — partition count must never change
-    WHAT is computed."""
-    from wikitrender_spark.streaming.dedup import drain_to_memory
+def _spy_conf_sets(monkeypatch):
+    """Record every shuffle-partition / scan-split conf write."""
+    from pyspark.sql.conf import RuntimeConfig
 
-    src_dir = tempfile.mkdtemp(prefix="sizing_src_")
-    spark.range(100).select(
-        (F.col("id") % 40).alias("k"), F.col("id").alias("v")
-    ).coalesce(1).write.mode("overwrite").parquet(src_dir)
+    sets = []
+    real = RuntimeConfig.set
 
-    def run(n):
-        ckpt = tempfile.mkdtemp(prefix="sizing_ckpt_")
-        stream = (
-            spark.readStream.schema("k long, v long").parquet(src_dir)
-        ).dropDuplicates(["k"])
-        out = drain_to_memory(
-            stream, f"sizing_probe_{n or 'def'}", ckpt, state_partitions=n
-        )
-        # the drain's query has terminated; read its last progress off
-        # the most recently finished query is no longer reachable — so
-        # assert via the conf-independent result and the scoped-count
-        # run below, which inspects the running query's progress.
-        return {r["k"] for r in out.select("k").collect()}
+    def spy(self, key, value):
+        if key in _SIZED_KEYS:
+            sets.append((key, value))
+        return real(self, key, value)
 
-    assert run(2) == run(None) == set(range(40))
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    return sets
 
-    # inspect a live query's reported state partition count
-    ckpt = tempfile.mkdtemp(prefix="sizing_ckpt_live_")
-    stream = (
+
+def _dedup_stream(spark, src_dir):
+    return (
         spark.readStream.schema("k long, v long").parquet(src_dir)
     ).dropDuplicates(["k"])
-    with sizing.state_partition_conf(spark, 2):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("sizing_probe_live")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    ops = [p for p in (q.lastProgress or {}).get("stateOperators", [])]
-    assert ops, "no state operator progress reported"
-    assert ops[0]["numShufflePartitions"] == 2
-    spark.catalog.dropTempView("sizing_probe_live")
-    spark.catalog.dropTempView("sizing_probe_def")
-    spark.catalog.dropTempView("sizing_probe_2")
+
+
+@pytest.fixture
+def src_dir(spark, tmp_path):
+    d = str(tmp_path / "src")
+    spark.range(100).select(
+        (F.col("id") % 40).alias("k"), F.col("id").alias("v")
+    ).coalesce(1).write.mode("overwrite").parquet(d)
+    return d
+
+
+def test_conf_scoped_and_restored(spark, src_dir, monkeypatch):
+    """The drain scopes the derived state-partition count around the
+    query's start and restores the outer session afterwards — on success
+    and when the query fails to start."""
+    monkeypatch.delenv(sizing.STATE_PARTITIONS_ENV, raising=False)
+    before = {k: spark.conf.get(k) for k in _SIZED_KEYS}
+    nb = sizing.dir_bytes(src_dir)
+    sets = _spy_conf_sets(monkeypatch)
+    sizing.drain(_dedup_stream(spark, src_dir), src_dir, "append")
+    assert sets[0] == (
+        "spark.sql.shuffle.partitions",
+        str(sizing.adaptive_state_partitions(nb)),
+    )
+    assert {k: spark.conf.get(k) for k in _SIZED_KEYS} == before
+
+    # python_heavy picks the pandas-fold target for the same input
+    del sets[:]
+    sizing.drain(
+        _dedup_stream(spark, src_dir), src_dir, "append", python_heavy=True
+    )
+    assert sets[0] == (
+        "spark.sql.shuffle.partitions",
+        str(sizing.adaptive_state_partitions(nb, python_heavy=True)),
+    )
+    assert {k: spark.conf.get(k) for k in _SIZED_KEYS} == before
+
+    # an invalid output mode fails at start(), inside the scope
+    del sets[:]
+    with pytest.raises(AnalysisException, match="(?i)complete"):
+        sizing.drain(_dedup_stream(spark, src_dir), src_dir, "complete")
+    assert sets, "the failing drain never scoped the conf"
+    assert {k: spark.conf.get(k) for k in _SIZED_KEYS} == before
+
+
+def test_drain_releases_view_and_checkpoint(spark, src_dir, tmp_path,
+                                             monkeypatch):
+    """A drain leaves no temp view in the session catalog and no
+    checkpoint dir on disk, whether the query succeeds or fails."""
+    ckpt_root = tmp_path / "tmp"
+    ckpt_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(ckpt_root))
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    v0 = views()
+    out = sizing.drain(_dedup_stream(spark, src_dir), src_dir, "append")
+    with pytest.raises(AnalysisException):
+        sizing.drain(_dedup_stream(spark, src_dir), src_dir, "complete")
+    assert views() == v0
+    assert os.listdir(ckpt_root) == []
+    # the result was materialized off the sink before the view dropped
+    assert out.count() == 40
+
+
+def test_started_query_uses_scoped_count(spark, src_dir, monkeypatch):
+    """A drain runs its stateful operator at the partition count
+    WTR_STATE_PARTITIONS sets (the engine reports it per progress under
+    stateOperators[].numShufflePartitions), and the result matches the
+    derived-count run row-for-row — partition count must never change
+    WHAT is computed."""
+    import time
+
+    from pyspark.sql.streaming.listener import StreamingQueryListener
+
+    class Parts(StreamingQueryListener):
+        def __init__(self):
+            self.seen = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.seen.extend(
+                s.numShufflePartitions for s in event.progress.stateOperators
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    def run():
+        out = sizing.drain(_dedup_stream(spark, src_dir), src_dir, "append")
+        return {r["k"] for r in out.select("k").collect()}
+
+    monkeypatch.delenv(sizing.STATE_PARTITIONS_ENV, raising=False)
+    derived = run()
+    parts = Parts()
+    spark.streams.addListener(parts)
+    try:
+        monkeypatch.setenv(sizing.STATE_PARTITIONS_ENV, "2")
+        assert run() == derived == set(range(40))
+        # listener delivery is asynchronous — wait for it to catch up
+        deadline = time.monotonic() + 30
+        while not parts.seen and time.monotonic() < deadline:
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(parts)
+    assert parts.seen, "no state operator progress reported"
+    assert set(parts.seen) == {2}
 
 
 def test_replay_scan_split_derivation(spark):
@@ -140,10 +214,17 @@ def test_replay_scan_split_derivation(spark):
     assert sizing.replay_scan_split(spark, mid) == 4 << 20
 
 
-def test_conf_scopes_scan_split_too(spark):
-    key = "spark.sql.files.maxPartitionBytes"
-    before = spark.conf.get(key)
-    with sizing.state_partition_conf(spark, 2, 4 << 20):
-        assert spark.conf.get(key) == str(4 << 20)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-    assert spark.conf.get(key) == before
+def test_conf_scopes_scan_split_too(spark, src_dir, monkeypatch):
+    """The drain scopes the derived scan split next to the count, and
+    WTR_STATE_PARTITIONS replaces only the count."""
+    monkeypatch.setenv(sizing.STATE_PARTITIONS_ENV, "3")
+    before = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    nb = sizing.dir_bytes(src_dir)
+    sets = _spy_conf_sets(monkeypatch)
+    sizing.drain(_dedup_stream(spark, src_dir), src_dir, "append")
+    assert sets[:2] == [
+        ("spark.sql.shuffle.partitions", "3"),
+        ("spark.sql.files.maxPartitionBytes",
+         str(sizing.replay_scan_split(spark, nb))),
+    ]
+    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == before

@@ -1,5 +1,5 @@
 """Similarity / sketching Column library: cosine over embedding arrays,
-MinHash signatures, SimHash, LSH banding and hyperplane bucketing.
+MinHash signatures, LSH banding and hyperplane bucketing.
 
 All sketches use the portable integer arithmetic from functions.text
 (31-polynomial hashes mod 1000003) and all float reductions are
@@ -78,19 +78,6 @@ def lsh_bands(signature: Column, bands: int, rows: int) -> Column:
                 F.slice(signature, b * rows + 1, rows), lambda v: v.cast("string")
             ),
         ),
-    )
-
-
-# --- SimHash --------------------------------------------------------------------
-# (bulk SimHash lives in operators/dedup.simhash_fingerprints — 16 vote-sum
-# aggregates over token rows)
-def hamming16(a: Column, b: Column) -> Column:
-    """Hamming distance between two 16-bit simhashes (portable bit math)."""
-    x = a.bitwiseXOR(b)
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(15)),
-        F.lit(0),
-        lambda acc, j: acc + ((x / F.pow(F.lit(2.0), j.cast("double"))).cast("long")) % 2,
     )
 
 

@@ -79,11 +79,6 @@ def edit_transitions(edit_events: DataFrame) -> DataFrame:
     )
 
 
-def out_weights(trans: DataFrame) -> DataFrame:
-    """(src, out_w): total outgoing transition weight per source page."""
-    return trans.groupBy("src").agg(F.sum("w").alias("out_w"))
-
-
 def markov_top_transitions(trans: DataFrame, k: int = 25) -> DataFrame:
     """Top-k transitions by count with their Markov row context: the
     empirical transition probability src->dst is the RATIONAL pair

@@ -1518,10 +1518,10 @@ def q_stream_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
     import tempfile
-    import uuid
 
-    from ..sources.replay import write_ordered_chunks
-    from ..streaming.dedup import drain_to_memory, fresh_band_buckets
+    from ..sources.replay import read_ordered_chunks, write_ordered_chunks
+    from ..streaming.dedup import fresh_band_buckets
+    from ..streaming.sizing import drain
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     chunks = tuple(
@@ -1531,40 +1531,19 @@ def q_stream_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for par in (0, 1)
     )
-    name = "dd_stream_band_buckets_" + uuid.uuid4().hex[:8]
     work = tempfile.mkdtemp(prefix="dd_band_buckets_")
-    ckpt = tempfile.mkdtemp(prefix="dd_band_buckets_ckpt_")
     try:
         chunk_dir = os.path.join(work, "chunks")
         write_ordered_chunks(chunks, chunk_dir)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, ingest_ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(chunk_dir)
+        stream = read_ordered_chunks(
+            spark, "doc_id long, text string, ingest_ts timestamp", chunk_dir
         )
         fresh = fresh_band_buckets(stream, ts_col="ingest_ts", horizon="1 hour")
-        from ..streaming.sizing import (
-            adaptive_state_partitions,
-            dir_bytes,
-            replay_scan_split,
-        )
-
-        nb = dir_bytes(chunk_dir)
-        out = drain_to_memory(
-            fresh, name, ckpt,
-            # scale-adaptive state partitions + scan split from the
-            # replay chunk bytes (round 17; streaming/sizing.py) — the
-            # scan split parallelizes the Arrow sketch front, which is
-            # otherwise ONE task per single-file chunk (sf1-measured)
-            state_partitions=adaptive_state_partitions(nb),
-            scan_split_bytes=replay_scan_split(spark, nb),
-        )
+        # the drain's scan split parallelizes the Arrow sketch front,
+        # which is otherwise ONE task per single-file chunk (sf1-measured)
+        out = drain(fresh, chunk_dir, "append")
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return out.select(
         F.col("band_idx").cast("int").alias("band_idx"),
         "band_key",

@@ -269,28 +269,21 @@ def q_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     both batch lifecycle formulations — a four-way agreement (declarative
     batch, exact batch replay, streaming, DuckDB)."""
     import os
-    import tempfile
-    import uuid
 
     from ..operators.derive import move_closed_group
     from ..sources.replay import rc_event_stream
     from ..streaming import processor
-    from ..streaming.sizing import adaptive_state_partitions, replay_scan_split
+    from ..streaming.sizing import drain
 
     cl = processor.page_state_changelog(
         rc_event_stream(spark, sf_dir), move_closed_group()
     )
-    name = "wt_stream_replay_" + uuid.uuid4().hex[:8]
-    ckpt = tempfile.mkdtemp(prefix="wt_stream_ckpt_")
-    nb = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    changelog = processor.run_changelog_to_memory(
-        cl, name, ckpt,
-        # scale-adaptive state partitions + scan split from the replay
-        # input size (round 17; streaming/sizing.py). python_heavy: the
-        # page-state fold's per-row pandas cost dominates (A/B in
-        # sizing.py).
-        state_partitions=adaptive_state_partitions(nb, python_heavy=True),
-        scan_split_bytes=replay_scan_split(spark, nb),
+    # sized from the events FILE (not sf_dir, which holds every table).
+    # python_heavy: the page-state fold's per-row pandas cost dominates
+    # (A/B in streaming/sizing.py).
+    changelog = drain(
+        cl, os.path.join(sf_dir, "events.parquet"), "update",
+        python_heavy=True,
     )
     return _lifecycle_select(processor.final_state(changelog))
 
@@ -313,27 +306,20 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number would — the wt_stream_replay agreement pattern for the
     frequency family."""
     import os
-    import tempfile
-    import uuid
 
     from ..sources.replay import rc_event_stream
     from ..streaming import heavyhitters as hh
-    from ..streaming.sizing import adaptive_state_partitions, replay_scan_split
+    from ..streaming.sizing import drain
 
     stream = rc_event_stream(spark, sf_dir).select(
         F.col("wiki").alias("key"), F.col("title").alias("item")
     )
-    name = "wt_stream_hh_" + uuid.uuid4().hex[:8]
-    ckpt = tempfile.mkdtemp(prefix="wt_stream_hh_ckpt_")
-    nb = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    emissions = hh.run_to_memory(
-        hh.heavy_hitter_stream(stream, HH_CAPACITY), name, ckpt,
-        # scale-adaptive state partitions + scan split (round 17;
-        # streaming/sizing.py). Default target, NOT python_heavy: the
-        # SpaceSaving counter fold is light per row (interleaved A/B in
-        # sizing.py: 2.67 s at the derived count vs 3.57 at 16).
-        state_partitions=adaptive_state_partitions(nb),
-        scan_split_bytes=replay_scan_split(spark, nb),
+    # Default target, NOT python_heavy: the SpaceSaving counter fold is
+    # light per row (interleaved A/B in streaming/sizing.py: 2.67 s at
+    # the derived count vs 3.57 at 16).
+    emissions = drain(
+        hh.heavy_hitter_stream(stream, HH_CAPACITY),
+        os.path.join(sf_dir, "events.parquet"), "update",
     )
     return hh.final_topk(emissions, HH_TOPK).select(
         F.col("key").alias("wiki"),
@@ -355,22 +341,17 @@ def q_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive after batch 1's state is committed)."""
     import shutil
     import tempfile
-    import uuid
 
     from ..streaming.dedup import ingest_dedup_to_memory
 
-    name = "wt_ingest_dedup_" + uuid.uuid4().hex[:8]
     work = tempfile.mkdtemp(prefix="wt_ingest_dedup_")
-    ckpt = tempfile.mkdtemp(prefix="wt_ingest_dedup_ckpt_")
     try:
-        survivors = ingest_dedup_to_memory(spark, sf_dir, work, name, ckpt)
+        survivors = ingest_dedup_to_memory(spark, sf_dir, work)
     finally:
-        # survivors are materialized off the memory sink (eager local
-        # checkpoint inside ingest_dedup_to_memory); the replay chunks
-        # and stream checkpoint on disk are dead weight — reclaim them
-        # even on failure
+        # survivors are materialized off the memory sink (sizing.drain);
+        # the replay chunks on disk are dead weight — reclaim them even
+        # on failure
         shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
         survivors.groupBy("event_type")
         .agg(
@@ -396,20 +377,14 @@ def q_ingest_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail-duplicate loss of bounded state."""
     import shutil
     import tempfile
-    import uuid
 
     from ..streaming.dedup import ingest_dedup_watermark_to_memory
 
-    name = "wt_ingest_wm_" + uuid.uuid4().hex[:8]
     work = tempfile.mkdtemp(prefix="wt_ingest_wm_")
-    ckpt = tempfile.mkdtemp(prefix="wt_ingest_wm_ckpt_")
     try:
-        survivors = ingest_dedup_watermark_to_memory(
-            spark, sf_dir, work, name, ckpt
-        )
+        survivors = ingest_dedup_watermark_to_memory(spark, sf_dir, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
         survivors.filter(F.col("event_id") >= 0)  # drop the sentinel
         .groupBy("event_type")
@@ -553,22 +528,11 @@ def q_stream_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream instead of a wall-clock poll — and unlike the equivalence
     tests' slack-bounded assertions, the sentinel construction makes
     the emitted set EXACTLY the batch relation, so it driver-gates."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
     from ..streaming.windows import TRENDING_TOPK, trending_replay_to_memory
 
-    name = "wt_stream_trending_" + uuid.uuid4().hex[:8]
-    ckpt = tempfile.mkdtemp(prefix="wt_trend_ckpt_")
-    try:
-        survivors, cut_us = trending_replay_to_memory(
-            spark, sf_dir, name, ckpt
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    survivors, cut_us = trending_replay_to_memory(spark, sf_dir)
     real = survivors.filter(F.col("window_start_us") < cut_us)
     w = Window.partitionBy("window_start_us").orderBy(
         F.desc("n_events"), F.asc("id")

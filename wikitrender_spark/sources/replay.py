@@ -66,8 +66,8 @@ def rc_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def write_ordered_chunks(parts, chunk_dir: str) -> None:
     """Write each DataFrame in ``parts`` as one single-file parquet chunk
-    under ``chunk_dir`` with strictly increasing mtimes, so a file stream
-    with ``maxFilesPerTrigger=1`` replays them as ordered micro-batches.
+    under ``chunk_dir`` with strictly increasing mtimes, so
+    read_ordered_chunks replays them as ordered micro-batches.
     The ONE home of the fragile mtime-ordering recipe — and of the
     stale-chunk guard: a previous run's leftover chunk_NNNN dirs would
     replay as extra (duplicate) micro-batches, so the dir starts clean."""
@@ -84,13 +84,24 @@ def write_ordered_chunks(parts, chunk_dir: str) -> None:
                 os.utime(os.path.join(root, f), (ts, ts))
 
 
+def read_ordered_chunks(spark: SparkSession, schema: str,
+                        chunk_dir: str) -> DataFrame:
+    """The read half of write_ordered_chunks: a file stream over
+    ``chunk_dir`` that takes one chunk per trigger, so Trigger.AvailableNow
+    replays the chunks as ordered micro-batches."""
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(chunk_dir))
+
+
 def chunked_event_stream(spark: SparkSession, sf_dir: str, work_dir: str,
                          n_chunks: int = 4) -> DataFrame:
     """Split the events table into ``n_chunks`` seq-ranged parquet files
     under ``work_dir`` and stream them one file per trigger, in order.
 
     File-source ordering is by modification time, so each chunk's mtime is
-    stamped increasing; maxFilesPerTrigger=1 then yields one ordered
+    stamped increasing; read_ordered_chunks then yields one ordered
     micro-batch per chunk.
     """
     # chunk boundaries follow the authoritative replay order (ts, seq) —
@@ -112,8 +123,5 @@ def chunked_event_stream(spark: SparkSession, sf_dir: str, work_dir: str,
         ),
         chunk_dir,
     )
-    raw = (spark.readStream.schema(EVENTS_SCHEMA)
-           .option("maxFilesPerTrigger", 1)
-           .option("recursiveFileLookup", "true")
-           .parquet(chunk_dir))
+    raw = read_ordered_chunks(spark, EVENTS_SCHEMA, chunk_dir)
     return _derive(spark, raw, "wtr_events_stream_chunked")

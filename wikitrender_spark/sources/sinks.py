@@ -25,22 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions import metrics
 from ..operators import topk
+from ..operators.page_state import with_metrics
 
 
 def with_report_metrics(state: DataFrame, now) -> DataFrame:
-    """D1-D4 metric columns at one logical ``now`` (clock pin §2.9-1)."""
-    return (
-        state.withColumn("age_min", metrics.age_minutes(F.lit(now), F.col("start")))
-        .withColumn("last_updated_min",
-                    metrics.last_updated_minutes(F.lit(now), F.col("updated")))
-        .withColumn("edits_per_minute", metrics.edits_per_minute(
-            F.col("edits"), F.col("reverts"), F.col("anonEdits"),
-            F.col("age_min")))
-        .withColumn("bias", metrics.bias_from_counts(
-            F.col("max_user_edits"), F.col("total_user_edits")))
-    )
+    """D1-D4 metric columns at one logical ``now`` (clock pin §2.9-1):
+    page_state.with_metrics at a literal clock."""
+    return with_metrics(state, F.lit(now))
 
 
 def render_top5(state: DataFrame, now,

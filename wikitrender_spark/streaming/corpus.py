@@ -6,7 +6,9 @@ digest), so the curated corpus grows append-only and re-processing a
 feed can never re-admit content already accepted.
 
 This is the document-side sibling of the event ingest chain
-(streaming/dedup.py + fold.py): same file-replay test harness, same
+(streaming/dedup.py + fold.py): same file-replay test harness (a
+replay runs ``sizing.drain(corpus_admission_stream(...), chunk_dir,
+"append")``; each admitted document emits once, at first arrival), same
 dropDuplicates state shape (one row per distinct digest — the
 watermark-bounded variant in dedup.dedup_stream_within_watermark is
 the unbounded-firehose form), and the same batch-equivalence testing
@@ -570,21 +572,4 @@ def corpus_admission_stream_within_watermark(
     return (
         s.dropDuplicatesWithinWatermark(["digest"])
         .drop("digest")
-    )
-
-
-def corpus_admission_replay_to_memory(
-    stream: DataFrame, name: str, ckpt: str, **admission_kwargs
-) -> DataFrame:
-    """Drain a documents file-replay through corpus_admission_stream
-    into a memory sink (append mode — each admitted document is emitted
-    exactly once, at first arrival) and return the admitted relation
-    (dedup.drain_to_memory owns the sink-hygiene discipline). ALL
-    corpus_admission_stream options pass through as keyword arguments
-    (patterns, scrub_cards_first, nll_model, max_unit_nll, nll_gate —
-    ADVICE r12 low #4: the earlier doc understated this surface)."""
-    from .dedup import drain_to_memory
-
-    return drain_to_memory(
-        corpus_admission_stream(stream, **admission_kwargs), name, ckpt
     )

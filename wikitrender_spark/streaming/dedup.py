@@ -63,7 +63,7 @@ def replay_events_with_dupes(
     sources/replay.chunked_event_stream's mtime-ordered chunk layout so
     Trigger.AvailableNow processes the batches in order and the dedup
     state is exercised ACROSS micro-batches, not within one."""
-    from ..sources.replay import write_ordered_chunks
+    from ..sources.replay import read_ordered_chunks, write_ordered_chunks
 
     src = (
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -73,55 +73,11 @@ def replay_events_with_dupes(
     write_ordered_chunks(
         (src, src.filter(F.col("event_id") % dup_mod == 0)), chunk_dir
     )
-    return (
-        spark.readStream.schema(_INGEST_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
-
-
-def drain_to_memory(
-    deduped: DataFrame, name: str, ckpt: str,
-    state_partitions: int | None = None,
-    scan_split_bytes: int | None = None,
-) -> DataFrame:
-    """The ONE home of the append-mode memory-sink drain discipline
-    (previously copy-pasted per call site — self-review r10): run the
-    streaming relation to exhaustion under Trigger.AvailableNow, then
-    materialize the result OFF the memory-sink view (eager local
-    checkpoint) and drop the view immediately — the returned relation
-    stays valid for the caller's lifetime with no per-run temp view
-    accumulating in the session catalog, and no trap where a later
-    invocation's cleanup invalidates an earlier invocation's result.
-
-    ``state_partitions`` scopes the query's state-store partition count
-    (round 17, streaming/sizing.py: stateful operators freeze
-    spark.sql.shuffle.partitions into the checkpoint and cannot
-    AQE-coalesce; callers derive a scale-adaptive count from their
-    replay input size). None keeps the session default."""
-    from .sizing import state_partition_conf
-
-    with state_partition_conf(
-        deduped.sparkSession, state_partitions, scan_split_bytes
-    ):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    spark = deduped.sparkSession
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+    return read_ordered_chunks(spark, _INGEST_SCHEMA, chunk_dir)
 
 
 def ingest_dedup_to_memory(
-    spark: SparkSession, sf_dir: str, work_dir: str, name: str, ckpt: str
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Run the injected-dupe replay through streaming ``dropDuplicates``
     on the event identity key into a memory sink (append mode — dedup
@@ -130,21 +86,12 @@ def ingest_dedup_to_memory(
     native streaming-dedup state, checkpoint-recoverable; production
     ingest with an unbounded firehose uses the watermark-bounded variant
     (dedup_stream_within_watermark) instead."""
-    from .sizing import adaptive_state_partitions, dir_bytes
+    from .sizing import drain
 
     deduped = replay_events_with_dupes(spark, sf_dir, work_dir).dropDuplicates(
         ["event_id"]
     )
-    # scale-adaptive state partitions + scan split, derived from the
-    # replay chunk bytes just written (round 17; streaming/sizing.py)
-    from .sizing import replay_scan_split
-
-    nb = dir_bytes(os.path.join(work_dir, "ingest_chunks"))
-    return drain_to_memory(
-        deduped, name, ckpt,
-        state_partitions=adaptive_state_partitions(nb),
-        scan_split_bytes=replay_scan_split(spark, nb),
-    )
+    return drain(deduped, os.path.join(work_dir, "ingest_chunks"), "append")
 
 
 def replay_events_with_late_dupes(
@@ -175,7 +122,7 @@ def replay_events_with_late_dupes(
     Returns (stream, horizon_string). The min/max scan is replay
     CONSTRUCTION (one 2-value first()), not operator work."""
     from ..operators.derive import read_events_raw
-    from ..sources.replay import write_ordered_chunks
+    from ..sources.replay import read_ordered_chunks, write_ordered_chunks
 
     src = read_events_raw(spark, sf_dir).select("event_id", "event_type", "ts")
     lo, hi = src.agg(
@@ -200,17 +147,14 @@ def replay_events_with_late_dupes(
     ).select("event_id", "event_type", max_ts.alias("ts"))
     chunk_dir = os.path.join(work_dir, "ingest_wm_chunks")
     write_ordered_chunks((src, sentinel, late_dupes), chunk_dir)
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
+    stream = read_ordered_chunks(
+        spark, "event_id long, event_type string, ts timestamp", chunk_dir
     )
     return stream, f"{h_s} seconds"
 
 
 def ingest_dedup_watermark_to_memory(
-    spark: SparkSession, sf_dir: str, work_dir: str, name: str, ckpt: str
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Run the late-dupe replay through ``dropDuplicatesWithinWatermark``
     on the event identity key into a memory sink; returns the survivor
@@ -220,19 +164,13 @@ def ingest_dedup_watermark_to_memory(
     at the declared cost that a duplicate arriving after its original's
     horizon expires is re-admitted — which the replay pins as exact,
     deterministic survivors."""
-    from .sizing import adaptive_state_partitions, dir_bytes, replay_scan_split
+    from .sizing import drain
 
     stream, horizon = replay_events_with_late_dupes(spark, sf_dir, work_dir)
     deduped = stream.withWatermark("ts", horizon).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    # scale-adaptive state partitions + scan split (streaming/sizing.py)
-    nb = dir_bytes(os.path.join(work_dir, "ingest_wm_chunks"))
-    return drain_to_memory(
-        deduped, name, ckpt,
-        state_partitions=adaptive_state_partitions(nb),
-        scan_split_bytes=replay_scan_split(spark, nb),
-    )
+    return drain(deduped, os.path.join(work_dir, "ingest_wm_chunks"), "append")
 
 
 def with_digest(docs: DataFrame) -> DataFrame:

@@ -157,17 +157,3 @@ def final_topk(emissions: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rnk") <= k)
         .select("key", "item", "est", "err", F.col("rnk").cast("int"))
     )
-
-
-def run_to_memory(summaries: DataFrame, name: str, ckpt: str,
-                  state_partitions: int | None = None,
-                  scan_split_bytes: int | None = None) -> DataFrame:
-    """Drive the summary stream to a memory sink (availableNow) and
-    return the emissions table — the shared update-mode driver in
-    streaming/processor.py (one implementation to maintain)."""
-    from .processor import run_changelog_to_memory
-
-    return run_changelog_to_memory(
-        summaries, name, ckpt, state_partitions=state_partitions,
-        scan_split_bytes=scan_split_bytes,
-    )

@@ -195,29 +195,3 @@ def final_state(changelog: DataFrame) -> DataFrame:
         .filter(~F.col("_deleted"))
         .drop("_ts", "_ver", "_deleted", "safe")
     )
-
-
-def run_changelog_to_memory(changelog: DataFrame, name: str,
-                            checkpoint_dir: str,
-                            state_partitions: int | None = None,
-                            scan_split_bytes: int | None = None) -> DataFrame:
-    """Execute a changelog stream to completion over all available input
-    (Trigger.AvailableNow — multiple micro-batches when the source is
-    chunked) into an in-memory table; returns the accumulated changelog.
-    ``state_partitions`` scopes the query's state-store partition count
-    (round 17; streaming/sizing.py)."""
-    from .sizing import state_partition_conf
-
-    with state_partition_conf(
-        changelog.sparkSession, state_partitions, scan_split_bytes
-    ):
-        q = (
-            changelog.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return changelog.sparkSession.table(name)

@@ -1,6 +1,12 @@
-"""Scale-adaptive state-partition sizing for the replay drains
+"""The replay drain and its scale-adaptive state-partition sizing
 (round 17, VERDICT r16 next-round #1; guide §2.2 "fewer, larger reduce
 partitions" applied to the one operator class AQE cannot touch).
+
+``drain(stream, input_path, mode)`` is the one way a replay query runs
+to a result: every streaming replay row hands it the stream and the
+path of its replay input, and the drain derives the state-partition
+count and scan split from that input itself — callers no longer size
+anything.
 
 Stateful streaming operators (streaming aggregation, dropDuplicates*,
 applyInPandasWithState, session windows) take their partition count
@@ -38,8 +44,13 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
+import tempfile
+import uuid
 from contextlib import contextmanager
 from urllib.parse import urlparse
+
+from pyspark.sql import DataFrame
 
 #: target replay-input bytes per state partition.
 STATE_TARGET_BYTES = 64 << 20
@@ -118,24 +129,17 @@ def replay_scan_split(spark, input_bytes: int) -> int:
 
 
 @contextmanager
-def state_partition_conf(spark, n: int | None,
-                         scan_split_bytes: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` = n (and optionally the
-    replay scan-split size, see replay_scan_split) around a streaming
-    query's start: StreamExecution clones the session (and its conf) at
+def _state_partition_conf(spark, n: int, scan_split_bytes: int):
+    """Scope ``spark.sql.shuffle.partitions`` = n and the replay
+    scan-split size (see replay_scan_split) around a streaming query's
+    start: StreamExecution clones the session (and its conf) at
     ``.start()``, so the scoped values become the query's state-store
     partition count / scan split while the outer session is restored
-    immediately after — batch plans elsewhere never see them.
-    ``n=None`` is a no-op for its key (callers that did not derive a
-    count keep the session default)."""
-    keys = {}
-    if n is not None:
-        keys["spark.sql.shuffle.partitions"] = str(n)
-    if scan_split_bytes is not None:
-        keys["spark.sql.files.maxPartitionBytes"] = str(scan_split_bytes)
-    if not keys:
-        yield
-        return
+    afterwards — batch plans elsewhere never see them."""
+    keys = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.files.maxPartitionBytes": str(scan_split_bytes),
+    }
     old = {k: spark.conf.get(k) for k in keys}
     for k, v in keys.items():
         spark.conf.set(k, v)
@@ -144,3 +148,42 @@ def state_partition_conf(spark, n: int | None,
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+def drain(
+    stream: DataFrame, input_path: str, mode: str, python_heavy: bool = False
+) -> DataFrame:
+    """Run ``stream`` to exhaustion under Trigger.AvailableNow into a
+    memory sink and return its rows — the one replay drain. It sizes the
+    query from ``dir_bytes(input_path)`` (state partitions and scan
+    split, module docstring; ``python_heavy`` picks the pandas-fold
+    target), scopes both around the start, runs in ``mode``
+    (``append`` or ``update``) under its own unique query name and temp
+    checkpoint dir, and materializes the result off the sink with an
+    eager local checkpoint. The sink's temp view and the checkpoint dir
+    are released in a ``finally``, so a drain leaves nothing in the
+    session catalog or on disk, and the returned relation stays valid
+    for the caller's lifetime."""
+    spark = stream.sparkSession
+    nb = dir_bytes(input_path)
+    name = "wtr_drain_" + uuid.uuid4().hex
+    ckpt = tempfile.mkdtemp(prefix="wtr_drain_ckpt_")
+    try:
+        with _state_partition_conf(
+            spark,
+            adaptive_state_partitions(nb, python_heavy=python_heavy),
+            replay_scan_split(spark, nb),
+        ):
+            q = (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return spark.table(name).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)

@@ -133,34 +133,6 @@ def dedup_events_stream(
     )
 
 
-def run_windowed_to_memory(
-    windowed: DataFrame, name: str, checkpoint: str, mode: str = "append",
-    state_partitions: int | None = None,
-    scan_split_bytes: int | None = None,
-) -> DataFrame:
-    """Run the windowed stream to a memory sink with AvailableNow and
-    return the sink table. `append` emits only watermark-finalized
-    windows — required for a multi-stateful chain, and the
-    late-data-safe output. ``state_partitions`` scopes the query's
-    state-store partition count (round 17; streaming/sizing.py — the
-    scale-adaptive replacement for inheriting the local core count)."""
-    from .sizing import state_partition_conf
-
-    with state_partition_conf(
-        windowed.sparkSession, state_partitions, scan_split_bytes
-    ):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return windowed.sparkSession.table(name)
-
-
 #: per-window trending cut for the streaming trending query.
 TRENDING_TOPK = 3
 #: far-future shift for the finalization sentinels (must exceed every
@@ -196,18 +168,15 @@ def _purge_chunk_cache() -> None:
 atexit.register(_purge_chunk_cache)
 
 
-def trending_replay_to_memory(
-    spark, sf_dir: str, name: str, ckpt: str,
-    n_chunks: int = 2,
-):
+def trending_replay_to_memory(spark, sf_dir: str, n_chunks: int = 2):
     """Replay the events table as ordered micro-batches through the
-    WATERMARKED per-(hour-window, page) streaming aggregation, with TWO
-    far-future sentinel batches appended so the watermark finalizes
-    EVERY real window (append mode emits a window only once the
-    watermark passes it, and state eviction lags the watermark by one
-    batch — the measured semantics the ingest-dedup replay pinned; the
-    second sentinel batch is the boundary at which the jumped watermark
-    actually sweeps). Returns (survivors DataFrame, sentinel_cut_us):
+    WATERMARKED per-(hour-window, page) streaming aggregation
+    (sizing.drain, append mode), with TWO far-future sentinel batches
+    appended so the watermark finalizes EVERY real window (append mode
+    emits a window only once the watermark passes it, and state
+    eviction lags the watermark by one batch — the measured semantics
+    the ingest-dedup replay pinned; the second sentinel batch is the
+    boundary at which the jumped watermark actually sweeps). Returns (survivors DataFrame, sentinel_cut_us):
     survivors hold every REAL window exactly once; rows at or beyond
     sentinel_cut_us are the sentinels' own (never-finalized or
     irrelevant) windows and must be filtered by the caller."""
@@ -218,7 +187,13 @@ def trending_replay_to_memory(
 
     from ..operators.derive import read_events_raw
     from ..operators.page_state import classified_edit_events
-    from ..sources.replay import EVENTS_SCHEMA, _derive, write_ordered_chunks
+    from ..sources.replay import (
+        EVENTS_SCHEMA,
+        _derive,
+        read_ordered_chunks,
+        write_ordered_chunks,
+    )
+    from .sizing import drain
 
     cached = _CHUNK_CACHE.get((sf_dir, n_chunks))
     if cached is not None and os.path.isdir(cached[0]) and os.listdir(
@@ -284,12 +259,7 @@ def trending_replay_to_memory(
         ]
         write_ordered_chunks((*parts, sentinel, sentinel), chunk_dir)
         _CHUNK_CACHE[(sf_dir, n_chunks)] = (chunk_dir, cut_us)
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    raw = read_ordered_chunks(spark, EVENTS_SCHEMA, chunk_dir)
     rc = _derive(spark, raw, "wtr_trending_stream")
     e = classified_edit_events(rc).withWatermark("ts", "2 hours")
     counts = (
@@ -301,20 +271,4 @@ def trending_replay_to_memory(
             "n_events",
         )
     )
-    from .sizing import (
-        adaptive_state_partitions,
-        dir_bytes,
-        replay_scan_split,
-    )
-
-    nb = dir_bytes(chunk_dir)
-    out = run_windowed_to_memory(
-        counts, name, ckpt, mode="append",
-        # scale-adaptive state partitions + scan split, derived from
-        # the replay chunk bytes (round 17; streaming/sizing.py)
-        state_partitions=adaptive_state_partitions(nb),
-        scan_split_bytes=replay_scan_split(spark, nb),
-    )
-    survivors = out.localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return survivors, cut_us
+    return drain(counts, chunk_dir, "append"), cut_us
