@@ -1,33 +1,17 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints a
-FINAL COMPACT JSON line: {"metric": ..., "value": total_sec, "unit":
-"sec", "queries": {name: median_sec}, "sf": ...} where "queries" holds
-the 26 HEADLINE medians only; the extended and sweep suites appear on
-that line as totals. Their per-query dicts are printed as their own
-EARLIER stdout lines (record: extended_queries / sweep_queries) and
-written to bench_samples.json beside this script along with every raw
-per-pass sample. The final line self-checks < 1900 bytes: the driver
-captures only the last 2000 chars of stdout, and both r04 and r09 lost
-the round's bench record when a fat final line got truncated there.
+"""Headline benchmark: times the 26 HEADLINE queries at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata dir) on the session
+`get_spark` builds ($SPARK_GRAFT_CPUS) and prints ONE compact JSON line:
+{"metric", "value": total_sec, "unit", "methodology", "queries":
+{name: median_sec}, "sf"}. It writes no file.
+
+perfbench/ (BENCHMARK.json) is the repo's benchmark, with CPU-time
+gates and per-layer metrics; this script is the one-line wall-clock
+headline over the full 26-query suite.
 
 Queries are materialized via the noop sink (full computation, no driver
 collect). The headline set spans every engine subsystem: keyed stateful
 aggregation + metrics + top-k (wikitrender core), exact lifecycle replay,
 relational joins/aggs, dedup sketching, ANN, text analysis.
-
-Two suites (r07 ask #2): HEADLINE is frozen for cross-round
-comparability (metric/value on the stdout line stay headline-only);
-EXTENDED is rule-driven since round 11 — the newest two rounds'
-additions plus a pinned movers watchlist (see the composition rule
-comment at the EXTENDED definition; VERDICT r10 ask #8). A default run
-times both, emits the extended results under the
-"extended" key of the same JSON line, then records ONE sample for every
-remaining registry row under "sweep" (r08 ask #4 — no query is
-timing-blind). Flags select phases explicitly (`--headline`,
-`--extended`, `--sweep`, combinable); unknown flags error out (ADVICE
-r8). Every run also times a pinned synthetic CALIBRATION plan and
-reports the headline/calibration ratio — the drift-normalized trend
-(r08 ask #2; see BASELINE.md "Host drift").
 """
 
 from __future__ import annotations
@@ -73,567 +57,62 @@ HEADLINE = [
     "mm_frame_sample",
 ]
 
-# --- Extended-suite composition rule (VERDICT r10 ask #8) -------------
-# The extended suite grew append-only for four rounds (28 -> 37 -> 40 ->
-# 43 rows; a full default run passed 30 min solo and grew every round).
-# From round 11 the composition is RULE-DRIVEN:
-#
-#     EXTENDED = EXTENDED_RECENT + EXTENDED_MOVERS
-#
-#   * EXTENDED_RECENT holds every gated query ADDED (or promoted from
-#     the sweep per the promotion rule) in the newest TWO rounds — new
-#     plans get banded median-of-3 scrutiny while they settle. After
-#     two rounds a row DEMOTES to the sweep (one recorded sample per
-#     run — never timing-blind) unless it earns a MOVERS seat.
-#   * EXTENDED_MOVERS is a pinned watchlist of rows whose history shows
-#     a single sweep sample is not enough — the heaviest plans and the
-#     past drifters, each entry carrying its reason. Seating or
-#     retiring a mover is a deliberate commented change, never silent.
-#
-# Promotion stays as before: a sweep row whose sample exceeds the
-# extended suite's per-query max (or that a round's work touches) is
-# promoted into EXTENDED_RECENT for its landing round. Demotion is the
-# rule's default fate — every demoted row keeps its committed floor in
-# tools/bench_floors.json, and each round's sweep sample is compared
-# against it via tools/floor_check.py. BASELINE.md keys extended totals
-# by (composition, host), so recomposition never breaks the trend table.
-EXTENDED_RECENT = [
-    # round-14 additions
-    "tx_bpe_encode",
-    "dd_stream_band_buckets",
-    # round-15: the approx bucketer's deterministic class projection
-    # (new), and tx_ngram_ppl_buckets PROMOTED for its re-landing
-    # round — the declared r14 opener (scored-relation localCheckpoint)
-    # changed its plan, so it re-earns the banded seat the promotion
-    # clause exists for
-    "tx_ngram_ppl_approx_classes",
-    "tx_ngram_ppl_buckets",
-]
-# Demoted to the sweep in round 13 under the two-round rule (floors
-# stay pinned; floor_check compares every sweep sample): the r10
-# additions rel_recursive_months / mm_image_neardup / tx_pii_scrub and
-# the r11 additions tx_dsir_weights / tx_dsir_log / mm_audio_neardup —
-# all multi-round stable at demotion. Demoted in round 14, same rule:
-# the r12 additions tx_ngram_nll / mm_image_neardup_content (both
-# banded through r12-r14's first session). tx_ngram_nll's demotion is
-# RULE-driven, not variance management — its calm-session tail-phase
-# history (NOTES r14) rides with it into the sweep, where floor_check's
-# 2.5x envelope + solo advisory still watch it. Demoted in round 15,
-# same rule: the r13 addition mm_video_neardup (banded r13-r14,
-# stable both rounds).
-
-EXTENDED_MOVERS = [
-    # the replay-drain harness row — heaviest extended entry, two
-    # rounds of harness fixes (chunk cache, sentinel); medians guard
-    # against the drain regressing silently
-    "wt_stream_trending",
-    # heaviest pure-batch plan (degree-ordered wedge join)
-    "wt_coedit_triangles",
-    # heaviest ANN row; construction-time sensitive (the rp_project
-    # py4j lesson landed here twice)
-    "ann_ivf_rp_topk",
-    # the two r9 extended drifters — floors re-pinned twice, kept
-    # under medians so host-state swings stay attributable
-    "dd_cross_source_dups",
-    "tx_leakage_split",
-    # two-layer subexpression-inlining regression history (r9); its
-    # floor is the canary for the HOF-inlining bug class
-    "tx_winnowing",
-]
-
-EXTENDED = EXTENDED_RECENT + EXTENDED_MOVERS
-assert len(EXTENDED) == len(set(EXTENDED)), "extended composition overlap"
-assert not set(EXTENDED) & set(HEADLINE), "extended row shadows headline"
-
-# Rows demoted from the append-only ext43 composition to the sweep in
-# round 11 under the rule above — r6-r9 additions, all multi-round
-# stable when demoted; their floors stay pinned in
-# tools/bench_floors.json and floor_check.py compares each round's
-# sweep samples against them:
-#   rel_sessionize, wt_coedit_pairs, tx_stratified_sample, wt_pagerank,
-#   wt_markov_transitions, rel_hourly_autocorr, wt_ingest_dedup,
-#   wt_ingest_dedup_watermark, tx_bm25_topk, tx_collocations,
-#   tx_novelty, ann_rp_topk, dd_lsh_tuning, wt_graph_degrees,
-#   tx_source_divergence, rel_weekday_profile, mm_video_motion,
-#   wt_edit_wars, rel_retention_cohorts, rel_copurchase_pairs,
-#   mm_audio_energy, ann_filtered_topk, wt_revert_chains,
-#   ann_filtered_expand, mm_video_keyframes, mm_audio_vad,
-#   dd_cdc_chunks, dd_simhash_pairs, rel_hourly_mad,
-#   rel_scd2_intervals, rel_audience_overlap
-# (31 rows; the other 12 ext43 rows kept their seats via RECENT or
-# MOVERS). dd_simhash_tuning stays sweep-covered as before: ~9 s warm
-# at sf0.1 x 4 extended passes for a tuning report is not worth the
-# band.
-
-
-_SWEEP_METH = (
-    "construction+execution, single sample, post-suite "
-    "(recorded, not banded)"
+#: timed passes per query; the reported number is their median
+N_SAMPLES = 5
+METHODOLOGY = (
+    f"construction+execution, median-of-{N_SAMPLES}, warm pass excluded"
 )
-
-#: Sweep scale overrides (VERDICT r11 ask #8): the sweep's two
-#: heaviest single-sample rows are tuning/ground-truth reports
-#: (dd_simhash_tuning: a 3-config candidate sweep; dd_embedding_
-#: neardup_exact: the deliberate all-pairs oracle ground truth) whose
-#: cost is inherent to their role, not to any plan defect — and a
-#: tuning/ground-truth row does not need headline scale to do its job.
-#: They sample at sf0.01 inside the sweep to keep the full-registry
-#: pass bounded as the registry grows. LEGAL because sweep rows are
-#: recorded, not banded (the bench contract); HONEST because the
-#: override is stamped per-row on the sweep record line
-#: (sweep_sf_overrides) and the committed floors for these rows are
-#: re-seated at the override scale via the documented hand-edit path.
-#: Correctness coverage is unaffected: both rows keep their oracle
-#: twins in the local gate at every SF.
-SWEEP_SF_OVERRIDES = {
-    "dd_simhash_tuning": "sf0.01",
-    "dd_embedding_neardup_exact": "sf0.01",
-}
-
-
-def _composition_id(names: list[str]) -> str:
-    """Stable 10-hex id over a suite's MEMBERSHIP (sorted names, so
-    reordering within the suite doesn't change the id — only adding,
-    dropping, or swapping rows does). Stamped on the extended record
-    line, the final line's extended block, and the samples side file
-    (VERDICT r15 next-round #5): two rounds' extended totals are
-    comparable iff their ids match; a changed id says 'recompose
-    before you trend'. Pure; pinned in tests/test_floor_check.py."""
-    import hashlib
-
-    return hashlib.sha256(
-        "\n".join(sorted(names)).encode()
-    ).hexdigest()[:10]
-
-
-def sweep_dir_for(name: str, sf_dir: str) -> tuple[str, str | None]:
-    """Resolve the sweep input dir for one row under
-    SWEEP_SF_OVERRIDES. Returns (dir_to_use, record_tag): tag is None
-    for non-override rows, the override name when applied, and
-    'SKIPPED:<sf>' when the override dir is missing — the loud
-    fallback (the row's committed floor lives at the override scale,
-    so a silent fallback would read as a 5-9x anomaly in floor_check;
-    review r12). Pure so tests can pin all three branches."""
-    ov = SWEEP_SF_OVERRIDES.get(name)
-    if not ov:
-        return sf_dir, None
-    cand = os.path.join(
-        os.path.dirname(os.path.abspath(sf_dir.rstrip("/"))), ov
-    )
-    if os.path.isdir(cand):
-        return cand, ov
-    print(
-        f"bench.py: sweep override {name} -> {ov} SKIPPED "
-        f"({cand} missing); sampling at {sf_dir} against an "
-        "override-scale floor",
-        file=sys.stderr,
-    )
-    return sf_dir, f"SKIPPED:{ov}"
-
-
-def _meth(n: int) -> str:
-    # the methodology stamp must describe what actually ran, including
-    # env-var sample overrides (r08 review finding)
-    return f"construction+execution, median-of-{n}, warm pass excluded"
-
-
-def _suites() -> list[str]:
-    # strict flag parsing (ADVICE r8): a typo'd flag must error, not
-    # silently run the full double suite; --headline --extended is the
-    # explicit both-suites run
-    known = {"--headline", "--extended", "--sweep"}
-    flags = sys.argv[1:]
-    unknown = [f for f in flags if f not in known]
-    if unknown:
-        raise SystemExit(
-            f"bench.py: unknown flag(s) {unknown}; known: {sorted(known)}"
-        )
-    picked = [s for s in ("headline", "extended", "sweep")
-              if f"--{s}" in flags]
-    return picked or ["headline", "extended", "sweep"]
-
-
-#: Fixed calibration probe (VERDICT r8 ask #2, REBUILT per VERDICT r9
-#: ask #2): a pinned synthetic plan — 6.5B seeded in-memory rows, 32
-#: input partitions, one hash-agg over 9973 keys through a 32-way
-#: exchange — timed with every suite run so host drift is MEASURABLE
-#: instead of argued. The plan touches no input files and no repo
-#: operators, so its wall time moves only with the environment.
-#:
-#: Why this shape (r9 driver postmortem): the r8 probe was a ~0.5 s
-#: burst; on the driver host its 4 samples spread 1.007-4.265 s (4.2x
-#: within one run) while the 38 s suite itself moved only 1.03x — a
-#: sub-second burst measures scheduler-level contention the suite
-#: amortizes away, so the normalized ratio read 21.9 vs the declared
-#: [50, 105] band. The rebuilt probe is (a) ~5 s on the builder host —
-#: the same scale as the numbers it normalizes — and (b) reported as
-#: the MIN of 5 timed passes (warm pass excluded): min is the
-#: contention-free floor estimator; contention only ever ADDS time.
-#: The run self-checks the within-run spread (max/min of the timed
-#: passes) and stamps it on the JSON line so a noisy calibration is
-#: visible instead of silently poisoning the denominator.
-def _calibration(spark, n: int = 5) -> tuple[float, float, list[float]]:
-    times = []
-    for _ in range(n + 1):  # pass 0 excluded, same as the suites
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 6_500_000_000, 1, 32)
-            .selectExpr("id % 9973 AS k", "id % 31 AS v")
-            .groupBy("k")
-            .sum("v")
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-        times.append(round(time.perf_counter() - t0, 3))
-    timed = times[1:]
-    spread = round(max(timed) / min(timed), 2)
-    return round(min(timed), 3), spread, times
-
-
-def write_samples(payload: dict) -> list[str]:
-    """Persist a run's raw samples TWICE (VERDICT r14 next-round #4):
-    bench_samples.json stays the latest-run view every existing reader
-    knows, and bench_runs/samples-<UTCstamp>-<pid>.json is the
-    per-session ARCHIVE a later repin or adjudication can always read —
-    round 14 lost a calm session's samples when a second same-code run
-    overwrote the single file mid-round and the repin had to be
-    recovered from stdout record lines. The archive name sorts
-    lexicographically == chronologically (UTC %Y%m%dT%H%M%S), with the
-    pid disambiguating same-second runs; both files carry an identical
-    payload plus the session key. Returns the written paths
-    (latest-first)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    session = time.strftime("%Y%m%dT%H%M%S", time.gmtime()) + f"-{os.getpid()}"
-    payload = dict(payload, session=session)
-    latest = os.path.join(here, "bench_samples.json")
-    runs_dir = os.path.join(here, "bench_runs")
-    os.makedirs(runs_dir, exist_ok=True)
-    archive = os.path.join(runs_dir, f"samples-{session}.json")
-    # ARCHIVE FIRST, and each file via temp + os.rename (ADVICE r15):
-    # a crash mid-write used to leave a truncated latest view and no
-    # archive at all — floor_check would then fail to parse the only
-    # record of the session. rename is atomic on the same filesystem,
-    # so readers see either the old payload or the complete new one,
-    # and the per-session archive exists before the latest view is
-    # ever touched.
-    for path in (archive, latest):
-        tmp = path + f".tmp-{os.getpid()}"
-        try:
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            os.rename(tmp, path)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
-    return [latest, archive]
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    suites = _suites()  # flag errors must fire before the JVM spins up
-    spark = get_spark("wikitrender-bench", cpus=cpus)
+    spark = get_spark("wikitrender-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
     queries = registry.all_queries()
-    names = (HEADLINE if "headline" in suites else []) + (
-        EXTENDED if "extended" in suites else []
-    )
-    # JVM warmup: executor spin-up, codegen. Per-query warmup happens
-    # inside each phase (see below) so the extended suite's state never
-    # precedes a headline measurement.
+
+    def run(name: str) -> float:
+        # time CONSTRUCTION + EXECUTION together: several queries do
+        # eager work at construction (barrier materializations, the
+        # connected-components loop), and timing only the final save
+        # would silently exclude it
+        t0 = time.perf_counter()
+        queries[name](spark, sf_dir).write.mode("overwrite").format(
+            "noop"
+        ).save()
+        return round(time.perf_counter() - t0, 3)
+
+    # untimed warm-up (executor spin-up, codegen, parquet footers), then
+    # one timed pass that is excluded (the JVM is not settled after the
+    # warm-up alone), then N_SAMPLES passes round-robin over the suite,
+    # so one transient host stall cannot poison every sample of a query
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # calibration runs FIRST (right after warmup), before any suite can
-    # pin executor state — its number must depend on the host alone
-    calib, calib_spread, calib_samples = _calibration(spark)
+    for name in HEADLINE:
+        run(name)
+    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    for pass_i in range(N_SAMPLES + 1):
+        for name in HEADLINE:
+            dt = run(name)
+            if pass_i > 0:
+                samples[name].append(dt)
 
-    # 5 timed passes, round-robin over the suite (not 5x back-to-back per
-    # query) so one transient system stall cannot poison every sample of a
-    # query; report the per-query MEDIAN and keep the raw samples in the
-    # JSON so a noisy pass is visible instead of silently rewriting the
-    # headline number (the r02 bench recorded a 30% phantom regression
-    # from a single noisy sample). One EXTRA leading pass is timed but
-    # excluded from the medians (recorded as warm_pass): the untimed
-    # warmup above doesn't fully settle the JVM — r03 still saw a 1.7x
-    # hot first sample on the iterative dedup query — so steady-state
-    # medians must not include pass 0.
-    # 5 samples (up from 3 in r03): round-4 local runs observed bimodal
-    # per-query samples (1.1s vs 3.0s for the same plan, idle JVM) from
-    # host-level contention outside Spark; median-of-5 keeps one or two
-    # co-tenant stalls from moving the reported number.
-    # The extended suite gets median-of-3 (its own stamp below): at
-    # ~80 s/pass at sf0.1 a fifth sample buys little while pushing the
-    # combined run toward any harness timeout; the headline trend keeps
-    # its established 5. The suites run as SEPARATE PHASES — headline
-    # passes complete before any extended query runs — so the headline
-    # number is measured under exactly the r01-r07 process state and
-    # can never depend on what the extended replays/checkpoints pin in
-    # executor memory. (An r08 A/B of interleaved vs phased measured
-    # the SAME headline both ways — that day's inflation was host
-    # drift — but the isolation stays: it removes a whole class of
-    # future cross-suite contamination from the trend.)
-    n_samples = int(os.environ.get("SPARK_GRAFT_BENCH_SAMPLES", "5"))
-    n_ext = int(os.environ.get("SPARK_GRAFT_BENCH_SAMPLES_EXT", "3"))
-    samples: dict[str, list[float]] = {name: [] for name in names}
-    warm_pass: dict[str, float] = {}
-    phases = []
-    if "headline" in suites:
-        phases.append((HEADLINE, n_samples))
-    if "extended" in suites:
-        phases.append((EXTENDED, n_ext))
-    for phase_names, phase_n in phases:
-        # per-phase untimed warmup (parquet footers, codegen), then the
-        # timed-but-excluded warm pass (pass 0), then the samples —
-        # exactly the r01-r07 recipe per suite
-        for name in phase_names:
-            queries[name](spark, sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-        for pass_i in range(phase_n + 1):
-            for name in phase_names:
-                # time CONSTRUCTION + EXECUTION together: several queries
-                # do eager work at construction (localCheckpoint
-                # materializations, the connected-components driver loop),
-                # and timing only the final save would silently exclude it
-                # — the round-5 LSH checkpoint change made that hole
-                # visible (dd_lsh_candidates "dropped" 1.4s -> 0.35s while
-                # its real cost merely moved before t0)
-                t0 = time.perf_counter()
-                df = queries[name](spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                dt = round(time.perf_counter() - t0, 3)
-                if pass_i == 0:
-                    warm_pass[name] = dt
-                else:
-                    samples[name].append(dt)
-
-    # full-registry sweep (VERDICT r8 ask #4): ONE recorded construction+
-    # execution sample for every registry row outside the banded suites,
-    # so no query is ever timing-blind. Runs AFTER the suites (their
-    # medians stay measured under the r01-r08 process state); single
-    # samples, recorded not banded — compare against the extended
-    # suite's per-query max to flag candidates for promotion.
-    sweep: dict[str, float] = {}
-    sweep_overrides_applied: dict[str, str] = {}
-    if "sweep" in suites:
-        covered = set(HEADLINE) | set(EXTENDED)
-        for name in queries:
-            if name in covered:
-                continue
-            sdir, tag = sweep_dir_for(name, sf_dir)
-            if tag is not None:
-                sweep_overrides_applied[name] = tag
-            t0 = time.perf_counter()
-            queries[name](spark, sdir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            sweep[name] = round(time.perf_counter() - t0, 3)
-
-    timings = {
-        name: round(statistics.median(vals), 3) for name, vals in samples.items()
-    }
-    head = {n: timings[n] for n in HEADLINE if n in timings}
-    ext = {n: timings[n] for n in EXTENDED if n in timings}
-    total = round(sum(head.values()), 3)
-
-    # Flag auto-adjudication (round 13, VERDICT r12 ask #5; widened
-    # round 14): every SUITE row the floor rule would flag gets an
-    # immediate solo re-measure (median-of-3, warm pass excluded) in
-    # this same process — in ANY session, calm or drifted, after round
-    # 14 measured a calm-session flag class (extended-phase JVM state
-    # inflating the three heaviest MOVERS 1.63-1.69x while their solo
-    # reads were 1.09-1.38x on byte-identical code; a real plan
-    # regression reproduces solo, so the solo read adjudicates).
-    # Sweep-envelope breaches are candidates in ANY session since
-    # round 16 (VERDICT r15 next-round #6): the sweep runs POST-suite,
-    # where the drift median cannot see its contention — mm_audio_vad's
-    # 12.73 s single sample (9.2x floor; solo 1.37 s vs floor 1.38)
-    # sat unexplained in the archive because the session classifier
-    # read borderline. floor_check downgrades a
-    # flag only if the solo read is clean. Capped at 6 rows — more
-    # than that flagged in one session IS the uniform-drift signature,
-    # not six independent regressions.
-    solo_remeasure: dict[str, dict] = {}
-    floors_doc = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "tools", "bench_floors.json"
-    )
-    if os.path.exists(floors_doc) and (timings or sweep):
-        import importlib.util as _ilu
-
-        _spec = _ilu.spec_from_file_location(
-            "floor_check",
-            os.path.join(os.path.dirname(floors_doc), "floor_check.py"),
-        )
-        _fc = _ilu.module_from_spec(_spec)
-        _spec.loader.exec_module(_fc)
-        floors = json.load(open(floors_doc))["floors"]
-        flagged = _fc.solo_candidates(floors, timings, sweep, calib_spread)
-        # solo_candidates lists suite VIOLATIONS first, then
-        # sweep-envelope advisories: re-measure violations always (they
-        # are the gate — and the LOO rule has already filtered uniform
-        # drift out of them), and let sweep advisories fill the
-        # remaining budget. Only a mass of suite violations — which the
-        # LOO rule makes near-impossible for mere host drift — skips
-        # everything.
-        # structured rows, not a second check() pass (review r14:
-        # the count and the candidate list must share one source)
-        n_viol = len(_fc.suite_violation_rows(floors, timings))
-        if n_viol > 6:
-            print(
-                f"bench.py: {n_viol} suite violations in one session — "
-                "shared-regression signature, solo re-measures would "
-                "mislead; investigate the code change instead",
-                file=sys.stderr,
-            )
-            flagged = []
-        elif len(flagged) > 6:
-            dropped = flagged[6:]
-            flagged = flagged[:6]
-            print(
-                f"bench.py: solo budget 6; deferring sweep advisories "
-                f"{dropped} to a hand re-measure",
-                file=sys.stderr,
-            )
-        for name in flagged:
-            sdir, _tag = sweep_dir_for(name, sf_dir)
-            solo_samples = []
-            for pass_i in range(4):  # pass 0 warm, excluded
-                t0 = time.perf_counter()
-                queries[name](spark, sdir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                if pass_i > 0:
-                    solo_samples.append(round(time.perf_counter() - t0, 3))
-            solo_remeasure[name] = {
-                "flagged": timings.get(name, sweep.get(name)),
-                "solo_samples": solo_samples,
-                "solo_median": round(statistics.median(solo_samples), 3),
-            }
-    # Per-query dicts for every suite go to the side file AND to their
-    # own EARLIER stdout lines; the FINAL stdout line carries only the
-    # compact stamp (headline dict + suite totals). The driver captures
-    # the last 2000 chars of stdout: the r04 incident truncated a fat
-    # final line and recorded "parsed": null, and round 9 repeated it
-    # when the extended+sweep dicts grew the line to 4.2 KB (VERDICT r9
-    # ask #1) — the per-query data now lives where truncation cannot
-    # reach the headline.
-    payload = {
-        "samples": samples,
-        "warm_pass": warm_pass,
-        "extended_queries": ext,
-        # membership stamp (VERDICT r15 next-round #5): the extended
-        # total is only comparable across rounds at the SAME
-        # composition (r14->r15 read as a 23% "regression" that was
-        # membership rotation), so the record carries the row list and
-        # a compact composition id the final line repeats
-        "extended_composition": {
-            "recent": EXTENDED_RECENT,
-            "movers": EXTENDED_MOVERS,
-            "id": _composition_id(EXTENDED),
+    head = {n: round(statistics.median(v), 3) for n, v in samples.items()}
+    line = json.dumps(
+        {
+            "metric": "headline_suite_wall_seconds",
+            "value": round(sum(head.values()), 3),
+            "unit": "sec",
+            "methodology": METHODOLOGY,
+            "queries": head,
+            "sf": sf,
         },
-        "sweep_queries": sweep,
-        "sweep_sf_overrides": sweep_overrides_applied,
-        "solo_remeasure": solo_remeasure,
-        "calibration_samples": calib_samples,
-        "sf": sf,
-    }
-    write_samples(payload)
-    if ext:
-        print(json.dumps(
-            {"record": "extended_queries", "methodology": _meth(n_ext),
-             "queries": ext,
-             "composition": {
-                 "recent": EXTENDED_RECENT,
-                 "movers": EXTENDED_MOVERS,
-                 "id": _composition_id(EXTENDED),
-             }},
-            separators=(",", ":"),
-        ))
-    if sweep:
-        print(json.dumps(
-            {"record": "sweep_queries", "methodology": _SWEEP_METH,
-             "queries": sweep,
-             "sf_overrides": sweep_overrides_applied},
-            separators=(",", ":"),
-        ))
-    if solo_remeasure:
-        print(json.dumps(
-            {"record": "solo_remeasure",
-             "methodology": "flag adjudication (any session; suite "
-             "violations + sweep-envelope breaches), median-of-3 "
-             "solo, warm pass excluded",
-             "rows": solo_remeasure},
-            separators=(",", ":"),
-        ))
-    out = {
-        # metric/value stay HEADLINE-ONLY even when both suites run, so
-        # the cross-round trend never mixes suite compositions
-        "metric": "headline_suite_wall_seconds" if head
-        else ("extended_suite_wall_seconds" if ext
-              else "sweep_wall_seconds"),
-        "value": total if head
-        else round(sum((ext or sweep).values()), 3),
-        "unit": "sec",
-        # self-describing timing basis (r05 ask #2): each query's
-        # number covers plan CONSTRUCTION + EXECUTION, sampled
-        # median-of-5 after an excluded warm pass. Compare against
-        # the BASELINE.md band, not any single prior value — r05
-        # vs r06 showed identical code drifting 30.0 -> 36.8s
-        # under host contention alone. A sweep-only run must carry the
-        # SWEEP stamp — the stamp describes what actually ran (the r08
-        # review rule), and sweep samples are single-shot, no warm pass.
-        "methodology": _meth(n_samples if head else n_ext)
-        if (head or ext)
-        else _SWEEP_METH,
-        "queries": head if head else (ext or sweep),
-        "sf": sf,
-        # drift normalization (r08 ask #2, probe rebuilt r10): suite
-        # seconds per calibration second — compare THIS across rounds;
-        # the raw band only catches gross regressions. calibration =
-        # MIN-of-5 of the pinned ~5 s synthetic plan above, measured on
-        # this host this run; calibration_spread = max/min of those 5
-        # samples (>1.3 means the calibration itself ran under
-        # contention — trust the raw band over the ratio that run).
-        "calibration": calib,
-        "calibration_spread": calib_spread,
-    }
-    if head:
-        out["headline_per_calib"] = round(total / calib, 2)
-    if head and ext:
-        out["extended"] = {
-            "value": round(sum(ext.values()), 3),
-            "methodology": _meth(n_ext),
-            "n_queries": len(ext),
-            # same id as the extended_queries record line and the side
-            # file: two rounds' extended totals are comparable iff the
-            # ids match (VERDICT r15 next-round #5 — membership
-            # rotation must be attributable from the artifact alone)
-            "composition_id": _composition_id(EXTENDED),
-        }
-    if sweep and (head or ext):
-        out["sweep"] = {
-            "methodology": _SWEEP_METH,
-            "value": round(sum(sweep.values()), 3),
-            "n_queries": len(sweep),
-        }
-    line = json.dumps(out, separators=(",", ":"))
-    if len(line) >= 1900 and not head:
-        # ext-/sweep-only runs: their per-query dict is already on an
-        # earlier record line + the side file; drop it rather than fail
-        out["queries"] = {}
-        out["queries_in"] = "stdout record line + bench_samples.json"
-        line = json.dumps(out, separators=(",", ":"))
-    # the driver keeps the LAST 2000 chars of stdout; the final line
-    # must never outgrow that capture (VERDICT r9 ask #1's self-check)
-    assert len(line) < 1900, (
-        f"final bench line is {len(line)} bytes; >=1900 risks driver "
-        "truncation — move per-query data to bench_samples.json"
+        separators=(",", ":"),
     )
+    # a caller that keeps only the last 2000 chars of stdout must still
+    # get the whole line
+    assert len(line) < 1900, f"final bench line is {len(line)} bytes"
     print(line)
 
 

@@ -59,11 +59,14 @@ def test_replay_rows_leave_no_view_or_checkpoint(spark, tmp_path,
                                                   monkeypatch):
     """wt_stream_replay and wt_stream_heavy_hitters each used to leave
     a memory-sink temp view (its rows pinned in session memory) and a
-    checkpoint dir behind per call. After both run, the catalog holds
-    no new temp view and the temp root no new directory."""
+    checkpoint dir behind per call; the rc derivations left fixed-name
+    views and wt_stream_trending kept its ordered chunk dir for the
+    process lifetime. After the three rows run, the catalog holds no
+    new temp view and the temp root no new directory."""
     from wikitrender_spark.plans.wikitrender_queries import (
         q_stream_heavy_hitters,
         q_stream_replay,
+        q_stream_trending,
     )
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -74,10 +77,8 @@ def test_replay_rows_leave_no_view_or_checkpoint(spark, tmp_path,
     v0 = views()
     q_stream_replay(spark, SF_DIR).count()
     q_stream_heavy_hitters(spark, SF_DIR).count()
-    # rc_event_stream's derivation view has one fixed name and is
-    # replaced in place on every call; a per-run sink view is new each
-    # call
-    assert views() - v0 <= {"wtr_events_stream"}
+    q_stream_trending(spark, SF_DIR).count()
+    assert views() - v0 == set()
     assert [p.name for p in tmp_path.iterdir() if p.is_dir()] == []
 
 

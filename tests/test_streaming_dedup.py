@@ -257,7 +257,7 @@ def test_admission_dedup_composes_with_keyed_pipeline(spark, tmp_path,
     readmit_raw = raw.filter(
         (F.col("event_id") % 17 == 0) & (us <= cutoff - guard)
     ).withColumn("ts", shifted_ts)
-    readmits = _derive(spark, readmit_raw, "t_admit_expected")
+    readmits = _derive(spark, readmit_raw)
     assert readmits.count() > 0, "degenerate: no expired dupes re-admitted"
     assert (
         dup17.count() > readmit_raw.count()
@@ -271,7 +271,7 @@ def test_admission_dedup_composes_with_keyed_pipeline(spark, tmp_path,
     chunk_dir = str(tmp_path / "admit_chunks")
     write_ordered_chunks((raw, boundary, dup17, late23), chunk_dir)
     stream_raw = read_ordered_chunks(spark, EVENTS_SCHEMA, chunk_dir)
-    rc_stream = _derive(spark, stream_raw, "t_admit_stream")
+    rc_stream = _derive(spark, stream_raw)
     deduped = dedup_events_stream(rc_stream, watermark_delay=f"{h_s} seconds")
     cl = processor.page_state_changelog(deduped, grp)
     # state at the session's 4 partitions, as for every fold test

@@ -2,15 +2,10 @@
 __spark_entry__.queries() entry on Spark and its oracle_sql() in DuckDB
 over the same sf dir; compare row count, column names/types, and values
 (column-name-sorted, row-sorted, exact for ints/strings/bools, bit-exact
-then 1e-9-relative fallback reporting for doubles).
+then 1e-9-relative fallback reporting for doubles). Every registered
+query is checked unless names are given.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
-       python tools/check_oracle.py [sf_dir] --non-gated
-
---non-gated runs exactly the registry rows OUTSIDE registry.GATE_WINDOW
-(the driver attests only the first 50, so this is the round ritual's
-complement sweep — record its pass count in NOTES.md each round, r07
-ask #6).
 """
 
 from __future__ import annotations
@@ -93,24 +88,8 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 
 def main() -> int:
     args = sys.argv[1:]
-    non_gated = "--non-gated" in args
-    args = [a for a in args if a != "--non-gated"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    if non_gated:
-        from wikitrender_spark.plans import registry
-
-        complement = set(registry.all_queries()) - set(registry.GATE_WINDOW)
-        # explicit names narrow the complement; a name outside it (gated
-        # or typo'd) is an error, not something to silently drop — and
-        # an empty intersection must not fall through to a full sweep
-        if only:
-            bad = only - complement
-            if bad:
-                sys.exit(f"--non-gated: not in the non-gated set: {sorted(bad)}")
-            only = only & complement
-        else:
-            only = complement
 
     con = duckdb.connect()
     for t in TESTDATA_TABLES:

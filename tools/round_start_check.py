@@ -5,9 +5,8 @@ BEFORE building on stale assumptions.
    snapshot (tools/testdata_schemas.json). Drift is printed loudly and
    the snapshot can be refreshed with --update once the drift is
    understood (then re-verify every query that reads the changed table).
-2. Run the full local oracle gate (tools/check_oracle.py) at the given
-   SF so every registered query — including rows rotated out of the
-   driver's 50-query window — is re-verified on CURRENT testdata.
+2. Run the local oracle gate (tools/check_oracle.py) at the given SF,
+   which re-verifies every registered query on CURRENT testdata.
 
 Usage: python tools/round_start_check.py [sf_dir] [--update] [--skip-gate]
 """

@@ -225,8 +225,8 @@ def main() -> None:
         "total_sf0.1": round(sum(t01.values()), 2),
         "total_sf1": round(sum(t1.values()), 2),
     }
-    # archive beside the bench sample archives so a later round can
-    # always re-read the scaling evidence (the write_samples rationale)
+    # archive under bench_runs/ so a later run can always re-read the
+    # scaling evidence
     runs_dir = os.path.join(REPO, "bench_runs")
     os.makedirs(runs_dir, exist_ok=True)
     session = time.strftime("%Y%m%dT%H%M%S", time.gmtime()) + f"-{os.getpid()}"

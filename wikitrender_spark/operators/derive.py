@@ -185,16 +185,17 @@ def rc_events(spark: SparkSession, sf_dir: str, filtered: bool = True,
     """The derived rc_event stream as a DataFrame (flat schema,
     RC_EVENT_FLAT_SCHEMA minus nested structs).
 
-    Built by running the shared SQL over a temp view — the projection and
-    filter sit directly above the parquet scan, so Catalyst prunes the scan
-    to the referenced columns and pushes the namespace filter down.
+    Built by running the shared SQL over the raw read (bound as a
+    DataFrame argument, so no temp view outlives the call) — the
+    projection and filter sit directly above the parquet scan, so
+    Catalyst prunes the scan to the referenced columns and pushes the
+    namespace filter down.
 
     spread=False skips the local core-spreading repartition (see
     read_events_raw) — for consumers that reduce straight to a scalar,
     where the exchange is pure overhead.
     """
-    view = "wtr_events_raw" if spread else "wtr_events_raw_unspread"
-    read_events_raw(spark, sf_dir, spread=spread).createOrReplaceTempView(view)
+    sql = rc_filtered_sql if filtered else rc_derive_sql
     return spark.sql(
-        rc_filtered_sql("spark", view) if filtered else rc_derive_sql("spark", view)
+        sql("spark", "{raw}"), raw=read_events_raw(spark, sf_dir, spread=spread)
     )

@@ -5220,12 +5220,6 @@ FROM lw"""
 DSIR_LOG_SQL = _dsir_log_sql()
 
 
-#: Dict order is load-bearing (driver gates the first 50 registered
-#: queries; see registry._load). tx_fingerprint and tx_langid —
-#: hash-green in r01+r02 — are rotated out via QUERIES_ROTATED
-#: (registered last) to keep this module at 21 gated rows with
-#: tx_repetition/tx_pack/tx_vocab/tx_split/dd_decontaminate added in
-#: round 3 (one twice-green row rotated out per addition).
 QUERIES = {
     "tx_token_stats": q_token_stats,
     "tx_repetition": q_repetition,
@@ -5306,6 +5300,14 @@ QUERIES = {
     "tx_dsir_weights": q_dsir_weights,
     "tx_dsir_log": q_dsir_log,
     "tx_ngram_nll": q_ngram_nll,
+    "dd_exact_groups": q_exact_dedup,
+    "tx_quality": q_quality,
+    "tx_fingerprint": q_fingerprint,
+    "tx_winnowing": q_winnowing,
+    "dd_cdc_chunks": q_cdc_chunks,
+    "tx_langid": q_langid,
+    "dd_simhash": q_simhash,
+    "dd_simhash_pairs": q_simhash_pairs,
 }
 
 ORACLES = {
@@ -5388,22 +5390,6 @@ ORACLES = {
     "tx_dsir_weights": DSIR_SQL,
     "tx_dsir_log": DSIR_LOG_SQL,
     "tx_ngram_nll": NGRAM_NLL_SQL,
-}
-
-#: rotated out of the driver's 50-row gate (hash-green r01 + r02);
-#: registered after all gated modules — see registry._load.
-QUERIES_ROTATED = {
-    "dd_exact_groups": q_exact_dedup,
-    "tx_quality": q_quality,
-    "tx_fingerprint": q_fingerprint,
-    "tx_winnowing": q_winnowing,
-    "dd_cdc_chunks": q_cdc_chunks,
-    "tx_langid": q_langid,
-    "dd_simhash": q_simhash,
-    "dd_simhash_pairs": q_simhash_pairs,
-}
-
-ORACLES_ROTATED = {
     "dd_exact_groups": EXACT_DEDUP_SQL,
     "tx_quality": QUALITY_SQL,
     "tx_fingerprint": FINGERPRINT_SQL,

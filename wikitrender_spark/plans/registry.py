@@ -1,7 +1,8 @@
 """Central registry: query name -> (spark callable, optional DuckDB oracle).
 
 __spark_entry__.queries()/oracle_sql() are thin views over this. Modules
-contribute (QUERIES, ORACLES) dict pairs; names must be unique.
+contribute (QUERIES, ORACLES) dict pairs; names must be unique, and
+queries are listed in registration (module, then dict) order.
 """
 
 from __future__ import annotations
@@ -36,164 +37,6 @@ def all_oracles() -> dict[str, str]:
 
 _loaded = False
 
-#: The driver's correctness gate checks only the FIRST 50 registered
-#: queries, so window membership is load-bearing evidence. This list IS
-#: the window, explicitly: _load() reorders registration so these 50
-#: names come first, in this order; everything else follows in module
-#: order. tests/test_registry_gate.py pins the composition — editing a
-#: QUERIES dict can no longer silently change what the driver attests.
-#:
-#: STEADY-STATE STALENESS CONTRACT (round 13, closing VERDICT r12 ask
-#: #1 — the invariant stated once instead of re-apologized every
-#: round): with N registered queries and a fixed GATE_SIZE-row driver
-#: window, the registry has structurally outgrown single-round
-#: re-attestation, so rotation is PERMANENT and bounded, not a debt
-#: that ever clears. The standing rules, enforced by
-#: tests/test_registry_gate.py every round:
-#:   1. New queries are never deferred — a round's additions always
-#:      seat in that round's window.
-#:   2. Every row whose evidence would otherwise go more than two
-#:      rounds stale is PROMISED the next window; when promised rows +
-#:      additions exceed GATE_SIZE, the overflow is displaced to the
-#:      following round with a per-row rationale (fresh family
-#:      evidence + implementation files untouched since its own
-#:      attestation), and displaced rows seat FIRST next round.
-#:   3. Under rules 1-2 the maximum evidence age of any row is
-#:      bounded: ceil(N / GATE_SIZE) + 1 rounds (with N = 156,
-#:      ceil(156/50) + 1 = 5; the observed worst case so far is 4 —
-#:      the r08-evidence rows seated in r12 and the r09-evidence rows
-#:      seated in r13). A row older than that bound is a composition
-#:      BUG, not scheduling pressure.
-#:   4. Stale-by-code-change overrides age: any attested row whose
-#:      code path changed after its evidence re-attests in the next
-#:      window regardless of cohort position.
-#:
-#: Round-17 composition (the r16 window went 50/50 green; round 17 is
-#: the second optimization round, so rule 4 — stale-by-code-change
-#: overrides age — does the seating this time. The owed set: the TEN
-#: r16-displaced rows (r13 evidence, the registry's oldest) + the
-#: 49-row r14-evidence cohort + the rule-4 rows of BOTH optimization
-#: rounds. That is far more than 50, so the spill is large and
-#: documented):
-#: (a) the TEN r16-displaced rows seat FIRST (rule 2's "displacements
-#: seated first" clause): ann_bruteforce_topk, dd_lsh_tuning,
-#: dd_simhash_tuning, dd_semantic_dedup, mm_image_neardup,
-#: mm_video_neardup, rel_percentiles, tx_bpe_merges,
-#: rel_hourly_autocorr, wt_coedit_pairs;
-#: (b) rule 4, round-16 rewrites whose driver evidence predates the
-#: rewrite (VERDICT r16 next-round #3 names them; builder-side
-#: evidence so far is the full-registry oracle sweeps): wt_state_diff,
-#: dd_bloom_decontaminate, dd_decontaminate, wt_purge_safe_list,
-#: tx_clean_corpus, dd_near_duplicates, dd_lsh_candidates,
-#: dd_minhash_signatures, wt_coedit_triangles, wt_graph_degrees,
-#: tx_ngram_ppl_buckets, tx_ngram_ppl_approx_classes, ann_pq_topk,
-#: ann_ivfpq_topk, tx_bpe_encode;
-#: (c) rule 4, round-17 behavior-touching changes: the six streaming
-#: replay rows (scale-adaptive state partitions — wt_stream_replay,
-#: wt_stream_heavy_hitters, wt_ingest_dedup, wt_ingest_dedup_watermark,
-#: wt_stream_trending, dd_stream_band_buckets; trending and
-#: ingest_dedup were r16-attested but their drains changed THIS round,
-#: so rule 4 re-seats them);
-#: (d) 19 rows of the r14-evidence cohort, rule-4-overlap first (the
-#: r16 metrics-clock change #2, the r16 lazy-barrier change #12, the
-#: r16 simhash file, the round-17 corpus_barrier conversions):
-#: wt_page_state_lifecycle, wt_page_state, wt_most_edited,
-#: wt_most_vibrant, wt_purge_survivors, wt_epm_variants, dd_simhash,
-#: tx_source_divergence, rel_copurchase_pairs, dd_exact_groups,
-#: dd_substring_runs, ann_kmeans_refine, ann_range_search,
-#: mm_audio_neardup, mm_video_motion, mm_audio_energy,
-#: wt_classify_counts, wt_windowed_activity, wt_session_activity.
-#:
-#: DISPLACED to r18 (the remaining 23 r14-cohort rows, each with
-#: fresh family evidence and NO behavior-affecting code change in
-#: rounds 16-17): the twelve rel_* rows (rel_acctbal_band_pairs,
-#: rel_customers_without_orders, rel_event_funnel, rel_grouping_sets,
-#: rel_pricing_summary, rel_retention_cohorts,
-#: rel_rolling_revenue_window, rel_signup_burst,
-#: rel_small_quantity_revenue, rel_suppliers_with_shipments,
-#: rel_topk_per_brand, rel_unpivot_presence — the rel family is the
-#: repo's least-touched code (r16 changed 2 lines, copurchase only,
-#: which seats NOW; r17 touched only copurchase/scd2 barriers) and
-#: nineteen sibling rel rows went green in the r16 window; seven tx
-#: single-pass rows (tx_dsir_log, tx_fingerprint, tx_langid,
-#: tx_length_histogram, tx_pack, tx_pack_split, tx_quality — untouched
-#: projections/windows; tx_pack_sharded (r16 green) is the same
-#: packing kernel, tx_dsir_weights (r16 green) the same DSIR bucket
-#: machinery); four wt single-window rows (wt_delete_targets,
-#: wt_edit_wars, wt_protect_followups, wt_revert_chains — untouched
-#: one-scan plans; the whole wt metrics/classify family re-attests in
-#: THIS window). All 23 are named FIRST in the r18 promise
-#: (tests/test_registry_gate.py R18_DEFERRED).
-#:
-#: Rule-4 classification note for round 17: the corpus_barrier
-#: conversion (wikitrender_spark/barrier.py) rewrote ~40 call sites
-#: from `.localCheckpoint(eager=...)` to `corpus_barrier(df, eager=...)`
-#: whose DEFAULT mode executes the identical localCheckpoint call —
-#: mode-default-identity, verified by the post-change full-registry
-#: oracle sweep (159/159 at sf0.01). Those conversions alone do not
-#: re-seat a row; the rows seated under (c)/(d) are the ones whose
-#: round-17 change alters actual execution (streaming state
-#: partitions, the lifecycle cache -> barrier swap, the Bloom eval-
-#: shingle snapshot) or whose round-16 rewrite was never driver-
-#: attested (b).
-GATE_WINDOW: list[str] = [
-    # (a) the ten r16-displaced rows, r13 evidence — seated first
-    "ann_bruteforce_topk",
-    "dd_lsh_tuning",
-    "dd_simhash_tuning",
-    "dd_semantic_dedup",
-    "mm_image_neardup",
-    "mm_video_neardup",
-    "rel_percentiles",
-    "tx_bpe_merges",
-    "rel_hourly_autocorr",
-    "wt_coedit_pairs",
-    # (b) rule 4 — round-16 rewrites the r16 driver window never saw
-    "wt_state_diff",
-    "dd_bloom_decontaminate",
-    "dd_decontaminate",
-    "wt_purge_safe_list",
-    "tx_clean_corpus",
-    "dd_near_duplicates",
-    "dd_lsh_candidates",
-    "dd_minhash_signatures",
-    "wt_coedit_triangles",
-    "wt_graph_degrees",
-    "tx_ngram_ppl_buckets",
-    "tx_ngram_ppl_approx_classes",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "tx_bpe_encode",
-    # (c) rule 4 — round-17 streaming state-partition derivation
-    "wt_stream_replay",
-    "wt_stream_heavy_hitters",
-    "wt_ingest_dedup",
-    "wt_ingest_dedup_watermark",
-    "wt_stream_trending",
-    "dd_stream_band_buckets",
-    # (d) r14-evidence cohort, rule-4-overlap first
-    "wt_page_state_lifecycle",
-    "wt_page_state",
-    "wt_most_edited",
-    "wt_most_vibrant",
-    "wt_purge_survivors",
-    "wt_epm_variants",
-    "dd_simhash",
-    "tx_source_divergence",
-    "rel_copurchase_pairs",
-    "dd_exact_groups",
-    "dd_substring_runs",
-    "ann_kmeans_refine",
-    "ann_range_search",
-    "mm_audio_neardup",
-    "mm_video_motion",
-    "mm_audio_energy",
-    "wt_classify_counts",
-    "wt_windowed_activity",
-    "wt_session_activity",
-]
-GATE_SIZE = 50
-
 
 def _load() -> None:
     global _loaded
@@ -207,20 +50,3 @@ def _load() -> None:
     register(wikitrender_queries.QUERIES, wikitrender_queries.ORACLES)
     register(pipeline_queries.QUERIES, pipeline_queries.ORACLES)
     register(relational_queries.QUERIES, relational_queries.ORACLES)
-    register(pipeline_queries.QUERIES_ROTATED, pipeline_queries.ORACLES_ROTATED)
-
-    # Reorder so GATE_WINDOW occupies the first GATE_SIZE slots exactly.
-    # Fail loudly on drift: a GATE_WINDOW name that no module registered,
-    # or a window that isn't exactly GATE_SIZE long, is a bug here, not
-    # something to paper over at the driver.
-    if len(GATE_WINDOW) != GATE_SIZE:
-        raise ValueError(
-            f"GATE_WINDOW has {len(GATE_WINDOW)} names, expected {GATE_SIZE}"
-        )
-    missing = [n for n in GATE_WINDOW if n not in _QUERIES]
-    if missing:
-        raise ValueError(f"GATE_WINDOW names never registered: {missing}")
-    ordered = {n: _QUERIES[n] for n in GATE_WINDOW}
-    ordered.update({n: q for n, q in _QUERIES.items() if n not in ordered})
-    _QUERIES.clear()
-    _QUERIES.update(ordered)

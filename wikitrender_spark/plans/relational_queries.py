@@ -2300,9 +2300,6 @@ FROM top"""
 
 
 QUERIES = {
-    # NOTE: gating is governed solely by registry.GATE_WINDOW (which
-    # reorders registration); dict position here does NOT decide what
-    # the driver attests.
     "rel_pricing_summary": q_pricing_summary,
     "rel_asof_last_signup": q_asof_last_signup,
     "rel_customers_without_orders": q_customers_without_orders,

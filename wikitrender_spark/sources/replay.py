@@ -42,9 +42,10 @@ def _events_ts_is_legacy(sf_dir: str) -> bool:
     return str(ts_type) == "int64"
 
 
-def _derive(spark: SparkSession, raw: DataFrame, view: str) -> DataFrame:
-    raw.createOrReplaceTempView(view)
-    return spark.sql(rc_filtered_sql("spark", view))
+def _derive(spark: SparkSession, raw: DataFrame) -> DataFrame:
+    # a DataFrame argument is bound through a temp view that PySpark
+    # drops once the query is analyzed, so no view outlives the call
+    return spark.sql(rc_filtered_sql("spark", "{raw}"), raw=raw)
 
 
 def rc_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,7 +62,7 @@ def rc_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
            .parquet(sf_dir))
     if legacy:  # same nanos->micros truncation as the batch path
         raw = raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return _derive(spark, raw, "wtr_events_stream")
+    return _derive(spark, raw)
 
 
 def write_ordered_chunks(parts, chunk_dir: str) -> None:
@@ -124,4 +125,4 @@ def chunked_event_stream(spark: SparkSession, sf_dir: str, work_dir: str,
         chunk_dir,
     )
     raw = read_ordered_chunks(spark, EVENTS_SCHEMA, chunk_dir)
-    return _derive(spark, raw, "wtr_events_stream_chunked")
+    return _derive(spark, raw)

@@ -20,8 +20,6 @@ lacks. Both exchanges are on the window key with map-side partials.
 
 from __future__ import annotations
 
-import atexit
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -140,34 +138,6 @@ TRENDING_TOPK = 3
 TRENDING_SENTINEL_DAYS = 30
 
 
-#: process-lifetime cache of the trending replay's ordered chunk dirs,
-#: keyed by (sf_dir, n_chunks) -> (chunk_dir, sentinel_cut_us). The
-#: chunk relation is a PURE function of the input table, so rebuilding
-#: it per call (global row_number sort, count/max aggs, sentinel first(),
-#: parquet writes) only re-derives identical bytes — at ~9.5 s/call the
-#: harness cost was ~all chunk prep (VERDICT r8 ask #8). Checkpoints and
-#: memory sinks are NOT cached: every call still replays the stream
-#: through a fresh query, so the measured semantics are untouched.
-#: Caveats (r09 review): (a) the dirs are removed at interpreter exit
-#: (atexit below) so repeated processes don't leak /tmp parquet; (b) the
-#: key does not fingerprint the table's CONTENT — if the parquet at
-#: sf_dir were regenerated within one process the stale chunks would
-#: replay; no code path does that (testdata changes only between driver
-#: rounds, i.e. between processes).
-_CHUNK_CACHE: dict[tuple[str, int], tuple[str, int]] = {}
-
-
-def _purge_chunk_cache() -> None:
-    import shutil
-
-    for chunk_dir, _cut in _CHUNK_CACHE.values():
-        shutil.rmtree(chunk_dir, ignore_errors=True)
-    _CHUNK_CACHE.clear()
-
-
-atexit.register(_purge_chunk_cache)
-
-
 def trending_replay_to_memory(spark, sf_dir: str, n_chunks: int = 2):
     """Replay the events table as ordered micro-batches through the
     WATERMARKED per-(hour-window, page) streaming aggregation
@@ -179,8 +149,9 @@ def trending_replay_to_memory(spark, sf_dir: str, n_chunks: int = 2):
     boundary at which the jumped watermark actually sweeps). Returns (survivors DataFrame, sentinel_cut_us):
     survivors hold every REAL window exactly once; rows at or beyond
     sentinel_cut_us are the sentinels' own (never-finalized or
-    irrelevant) windows and must be filtered by the caller."""
-    import os
+    irrelevant) windows and must be filtered by the caller. The ordered
+    chunks live in a temp dir of this call only."""
+    import shutil
     import tempfile
 
     from pyspark.sql import Window as W
@@ -195,62 +166,46 @@ def trending_replay_to_memory(spark, sf_dir: str, n_chunks: int = 2):
     )
     from .sizing import drain
 
-    cached = _CHUNK_CACHE.get((sf_dir, n_chunks))
-    if cached is not None and os.path.isdir(cached[0]) and os.listdir(
-        cached[0]
-    ):
-        chunk_dir, cut_us = cached
-    else:
-        if cached is not None:
-            # stale entry (dir vanished or is empty): reclaim whatever
-            # remains before the fresh mkdtemp replaces the cache slot,
-            # or the old path leaks until reboot — atexit only purges
-            # dirs still referenced here (ADVICE r9)
-            import shutil
+    src = read_events_raw(spark, sf_dir).withColumn(
+        "_rn", F.row_number().over(W.orderBy("ts", "event_id")) - 1
+    )
+    n_rows = src.count()
+    max_us = src.agg(F.max(F.unix_micros("ts"))).first()[0]
+    cut_us = max_us + 24 * 3600 * 1_000_000
+    step = max(1, (n_rows + n_chunks - 1) // n_chunks)
+    shift_us = TRENDING_SENTINEL_DAYS * 24 * 3600 * 1_000_000
+    # the sentinel must SURVIVE the rc derivation filter or it never
+    # reaches the watermarked operator and the watermark never jumps
+    # (measured: the raw max-ts row passes the F1-F3 filters at
+    # sf0.001 but not sf0.01 — the last delay-window hours then
+    # silently never finalize). Pick the latest row the derivation
+    # provably keeps.
+    from ..operators.derive import rc_events
 
-            shutil.rmtree(cached[0], ignore_errors=True)
-        src = read_events_raw(spark, sf_dir).withColumn(
-            "_rn", F.row_number().over(W.orderBy("ts", "event_id")) - 1
+    # ... and the watermark operator sits downstream of
+    # classified_edit_events' log-branch filter too (ADVICE r8):
+    # rc_events still carries log rows, and if the latest rc row
+    # were a log row both sentinel batches would be dropped BEFORE
+    # the EventTimeWatermark node — the watermark would never jump
+    # and the trailing delay-window hours would silently never
+    # finalize. Pick the latest EDIT-branch row so the sentinel
+    # provably survives every filter upstream of the watermark.
+    keep_id = (
+        rc_events(spark, sf_dir)
+        .filter(F.col("log_type").isNull())
+        .orderBy(F.desc("ts"), F.desc("seq"))
+        .select("seq")
+        .first()[0]
+    )
+    sentinel = (
+        src.filter(F.col("event_id") == keep_id).drop("_rn")
+        .withColumn(
+            "ts",
+            F.timestamp_micros(F.unix_micros("ts") + F.lit(shift_us)),
         )
-        n_rows = src.count()
-        max_us = src.agg(F.max(F.unix_micros("ts"))).first()[0]
-        cut_us = max_us + 24 * 3600 * 1_000_000
-        step = max(1, (n_rows + n_chunks - 1) // n_chunks)
-        shift_us = TRENDING_SENTINEL_DAYS * 24 * 3600 * 1_000_000
-        # the sentinel must SURVIVE the rc derivation filter or it never
-        # reaches the watermarked operator and the watermark never jumps
-        # (measured: the raw max-ts row passes the F1-F3 filters at
-        # sf0.001 but not sf0.01 — the last delay-window hours then
-        # silently never finalize). Pick the latest row the derivation
-        # provably keeps.
-        from ..operators.derive import rc_events
-
-        # ... and the watermark operator sits downstream of
-        # classified_edit_events' log-branch filter too (ADVICE r8):
-        # rc_events still carries log rows, and if the latest rc row
-        # were a log row both sentinel batches would be dropped BEFORE
-        # the EventTimeWatermark node — the watermark would never jump
-        # and the trailing delay-window hours would silently never
-        # finalize. Pick the latest EDIT-branch row so the sentinel
-        # provably survives every filter upstream of the watermark.
-        keep_id = (
-            rc_events(spark, sf_dir)
-            .filter(F.col("log_type").isNull())
-            .orderBy(F.desc("ts"), F.desc("seq"))
-            .select("seq")
-            .first()[0]
-        )
-        sentinel = (
-            src.filter(F.col("event_id") == keep_id).drop("_rn")
-            .withColumn(
-                "ts",
-                F.timestamp_micros(F.unix_micros("ts") + F.lit(shift_us)),
-            )
-        )
-        # the cached dir lives outside the caller's work_dir (which is
-        # rmtree'd per call) for the life of the process — a few MB of
-        # parquet per (sf_dir, n_chunks) key
-        chunk_dir = tempfile.mkdtemp(prefix="wt_trend_chunks_")
+    )
+    chunk_dir = tempfile.mkdtemp(prefix="wt_trend_chunks_")
+    try:
         parts = [
             src.filter(
                 (F.col("_rn") >= i * step) & (F.col("_rn") < (i + 1) * step)
@@ -258,17 +213,20 @@ def trending_replay_to_memory(spark, sf_dir: str, n_chunks: int = 2):
             for i in range(n_chunks)
         ]
         write_ordered_chunks((*parts, sentinel, sentinel), chunk_dir)
-        _CHUNK_CACHE[(sf_dir, n_chunks)] = (chunk_dir, cut_us)
-    raw = read_ordered_chunks(spark, EVENTS_SCHEMA, chunk_dir)
-    rc = _derive(spark, raw, "wtr_trending_stream")
-    e = classified_edit_events(rc).withWatermark("ts", "2 hours")
-    counts = (
-        e.groupBy(F.window("ts", WINDOW_DURATION), "id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "id",
-            "n_events",
+        raw = read_ordered_chunks(spark, EVENTS_SCHEMA, chunk_dir)
+        e = classified_edit_events(_derive(spark, raw)).withWatermark(
+            "ts", "2 hours"
         )
-    )
-    return drain(counts, chunk_dir, "append"), cut_us
+        counts = (
+            e.groupBy(F.window("ts", WINDOW_DURATION), "id")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                F.unix_micros(F.col("window.start")).alias("window_start_us"),
+                "id",
+                "n_events",
+            )
+        )
+        # drain materializes its result, so the chunks can go now
+        return drain(counts, chunk_dir, "append"), cut_us
+    finally:
+        shutil.rmtree(chunk_dir, ignore_errors=True)
