@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
@@ -89,68 +88,3 @@ def test_sketch_sim_values_match_exact(planted):
     }
     for r in ann.embedding_near_duplicates(planted, threshold=0.9).collect():
         assert exact[(r["vec_a"], r["vec_b"])] == r["sim"]
-
-
-def test_pq_sql_forms_match_column_reference(spark):
-    """Round 16: the SQL-string PQ expressions (_pq_codes_sql,
-    _pq_query_dists_sql, _adc_distance_sql) must be value-identical to
-    the Column-built reference forms they replaced (pq_codes_column_folds
-    / _pq_subdist / _adc_distance) — bit-exact doubles included."""
-    from wikitrender_spark.functions import similarity as S
-    from wikitrender_spark.schemas import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = ann.ivf_centroids(emb).localCheckpoint()
-    packed = cents.agg(
-        F.array_sort(
-            F.collect_list(F.struct("cell", "centroid"))
-        ).alias("cs")
-    )
-    base = (
-        emb.select(
-            "vec_id", S.to_double(F.col("embedding")).alias("_emb_d")
-        )
-        .crossJoin(F.broadcast(packed))
-    )
-    diff = base.select(
-        "vec_id",
-        F.expr(ann._pq_codes_sql()).alias("sql_codes"),
-        ann.pq_codes_column_folds().alias("col_codes"),
-    ).filter(F.col("sql_codes") != F.col("col_codes"))
-    assert diff.count() == 0
-
-    # query-table subdists: SQL vs Column, every (m, cell) entry
-    qd = (
-        emb.limit(3)
-        .select(
-            "vec_id", S.to_double(F.col("embedding")).alias("_emb_d")
-        )
-        .crossJoin(F.broadcast(cents))
-    )
-    col_dists = F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("m"),
-                F.col("cell").alias("cell"),
-                ann._pq_subdist(
-                    F.col("_emb_d"), F.col("centroid"), m
-                ).alias("dist"),
-            )
-            for m in range(ann.PQ_M)
-        ]
-    )
-    qdiff = qd.select(
-        F.expr(ann._pq_query_dists_sql()).alias("s"),
-        col_dists.alias("c"),
-    ).filter(F.col("s") != F.col("c"))
-    assert qdiff.count() == 0
-
-    # ADC distance: SQL vs Column on real (codes, tab) rows
-    codes = ann.pq_codes(emb, cents)
-    qtab = ann._pq_query_tables(emb, [1, 2], cents)
-    cand = codes.crossJoin(F.broadcast(qtab)).limit(500)
-    adiff = cand.select(
-        F.expr(ann._adc_distance_sql()).alias("s"),
-        ann._adc_distance().alias("c"),
-    ).filter(~F.col("s").eqNullSafe(F.col("c")))
-    assert adiff.count() == 0

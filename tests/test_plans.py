@@ -730,54 +730,10 @@ def test_ngram_ppl_approx_classes_scores_once_behind_checkpoint(plans):
     assert "documents.parquet" not in plan
 
 
-def test_classified_sql_form_matches_column_reference(spark):
-    """Round 17 (the bpe_apply_sql precedent): classified_edit_events'
-    SQL-text rendering must be OPTIMIZED-PLAN-IDENTICAL to the pinned
-    Column reference form — sameResult over the Catalyst-canonicalized
-    plans, which is stronger than value equality (same expressions,
-    same filters, same output attributes up to ids)."""
-    from wikitrender_spark.operators.derive import rc_events
-    from wikitrender_spark.operators.page_state import (
-        classified_edit_events,
-        classified_edit_events_columns,
-    )
-
-    rc = rc_events(spark, "/root/testdata/sf0.001")
-    sql_form = classified_edit_events(rc)
-    col_form = classified_edit_events_columns(rc)
-    assert sql_form.schema == col_form.schema
-    pa = sql_form._jdf.queryExecution().optimizedPlan()
-    pb = col_form._jdf.queryExecution().optimizedPlan()
-    assert pa.sameResult(pb), (
-        "SQL-text classifier diverged from the Column reference:\n"
-        + pa.toString()[:2000] + "\n=====\n" + pb.toString()[:2000]
-    )
-
-
-def test_log_events_sql_form_matches_column_reference(spark):
-    """Round 17: log_events' SQL-text rendering pinned optimized-plan-
-    identical to its Column reference (see the classified pin above)."""
-    from wikitrender_spark.operators.derive import rc_events
-    from wikitrender_spark.operators.lifecycle import (
-        log_events,
-        log_events_columns,
-    )
-
-    rc = rc_events(spark, "/root/testdata/sf0.001")
-    sql_form = log_events(rc)
-    col_form = log_events_columns(rc)
-    assert sql_form.schema == col_form.schema
-    pa = sql_form._jdf.queryExecution().optimizedPlan()
-    pb = col_form._jdf.queryExecution().optimizedPlan()
-    assert pa.sameResult(pb), (
-        pa.toString()[:2000] + "\n=====\n" + pb.toString()[:2000]
-    )
-
-
 def test_classifier_sql_literals_are_escaped(spark, monkeypatch):
     """Classifier keywords and bot names holding a quote and a backslash
-    render as escaped literals in both SQL twins: Spark's and DuckDB's
-    matches equal Python's ``in`` / equality on the same rows."""
+    match as written: the Spark Columns and the DuckDB oracle's escaped
+    literals equal Python's ``in`` / equality on the same rows."""
     import duckdb
     import pandas as pd
     from pyspark.sql import functions as F
@@ -799,9 +755,9 @@ def test_classifier_sql_literals_are_escaped(spark, monkeypatch):
     assert any(exp_revert) and not all(exp_revert) and any(exp_bot)
 
     df = spark.createDataFrame(rows).withColumn("bot", F.lit(None).cast("boolean"))
-    got = df.orderBy("i").selectExpr(
-        f"{classify.is_revert_sql('comment')} AS r",
-        f"{classify.is_bot_edit_sql('bot', 'user')} AS b",
+    got = df.orderBy("i").select(
+        classify.is_revert(F.col("comment")).alias("r"),
+        classify.is_bot_edit(F.col("bot"), F.col("user")).alias("b"),
     ).collect()
     assert [r["r"] for r in got] == exp_revert
     assert [r["b"] for r in got] == exp_bot
@@ -816,25 +772,50 @@ def test_classifier_sql_literals_are_escaped(spark, monkeypatch):
     assert [b for _, b in duck] == exp_bot
 
 
-def test_classifier_projections_refuse_escaped_string_literals(spark):
-    """Under spark.sql.parser.escapedStringLiterals=true the classifier
-    SQL literals would keep their doubled backslashes, so every plan that
-    renders them fails loudly instead of matching the wrong regex."""
+def test_classifier_projections_ignore_escaped_string_literals(spark):
+    """The classifier projections build their regex and keyword literals
+    as Columns, which never pass the SQL parser: with
+    spark.sql.parser.escapedStringLiterals set either way, the edit, log
+    and fold projections return the same rows."""
     from pyspark.sql import functions as F
 
-    from wikitrender_spark.engine import RC_FLAT_SCHEMA
+    from wikitrender_spark.operators.derive import rc_events
     from wikitrender_spark.operators.lifecycle import fold_events, log_events
     from wikitrender_spark.operators.page_state import classified_edit_events
 
     key = "spark.sql.parser.escapedStringLiterals"
-    rc = spark.createDataFrame([], RC_FLAT_SCHEMA)
+    builds = (classified_edit_events, log_events,
+              lambda df: fold_events(df, F.lit("g")))
+    rc = rc_events(spark, SF_DIR.replace("sf0.01", "sf0.001"))
     prev = spark.conf.get(key)
-    spark.conf.set(key, "true")
+    rows = {}
     try:
-        for build in (classified_edit_events, log_events,
-                      lambda df: fold_events(df, F.lit("g"))):
-            with pytest.raises(ValueError, match=key):
-                build(rc)
+        for conf in ("false", "true"):
+            spark.conf.set(key, conf)
+            rows[conf] = [sorted(b(rc).collect(), key=repr) for b in builds]
     finally:
         spark.conf.set(key, prev)
-    classified_edit_events(rc)  # the default parser builds the plan
+    assert all(rows["false"]), "a projection returned no rows"
+    assert rows["true"] == rows["false"]
+
+
+def test_projection_builders_are_memoized(spark):
+    """The classifier select lists are built once per SparkContext:
+    building wt_page_state and wt_page_state_lifecycle a second time
+    reuses them (cache hits, no new misses). A per-build rebuild of the
+    Columns costs about 0.2 s of Python CPU each."""
+    from wikitrender_spark.operators import lifecycle, page_state
+
+    qs = registry.all_queries()
+    builders = (page_state._classified_select, lifecycle._log_select)
+
+    def build_both():
+        for name in ("wt_page_state", "wt_page_state_lifecycle"):
+            qs[name](spark, SF_DIR)
+
+    build_both()
+    before = [b.cache_info() for b in builders]
+    build_both()
+    after = [b.cache_info() for b in builders]
+    for b, a in zip(before, after):
+        assert a.hits > b.hits and a.misses == b.misses, (b, a)

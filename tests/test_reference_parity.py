@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from wikitrender_spark import engine
 from wikitrender_spark.functions import classify
 from wikitrender_spark.operators.page_state import page_state
 
@@ -27,11 +28,17 @@ def state_rows(spark, events):
         ("2A02:27B0:4400:33F0:E0FF:19DF:B401:9559", True),
         ("Jdlrobson", False),
         ("192.168.0.1", True),
+        ("10.0.0.1", True),
+        ("2001:DB8:85A3:8D3:1319:8A2E:370:7348", True),
+        ("Jon", False),
     ],
 )
 def test_is_ip(spark, user, expected):
+    """Both F9 renderings: the Spark Column and the engine facade's
+    Python regex."""
     df = spark.createDataFrame([(user,)], "user string")
     assert df.select(classify.is_ip(F.col("user")).alias("x")).head()["x"] is expected
+    assert engine.is_ip(user) is expected
 
 
 # test 2 — edit tracking (/root/reference/test/tests.js:38-51)

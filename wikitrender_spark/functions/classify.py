@@ -50,10 +50,14 @@ DELETE_TARGET_REGEX = r'&quot;\[\[(.*)\]\]&quot;|&quot;(.*)&quot;'
 
 
 def _contains_any(lower_col: Column, keywords: tuple[str, ...]) -> Column:
-    expr = F.lit(False)
-    for kw in keywords:
-        expr = expr | lower_col.contains(kw)
-    return expr
+    """One substring test per keyword, OR'ed as a balanced tree (the
+    shape Spark's SQL parser gives an OR chain: depth log n, not n)."""
+    if len(keywords) == 1:
+        return lower_col.contains(keywords[0])
+    half = (len(keywords) + 1) // 2
+    return _contains_any(lower_col, keywords[:half]) | _contains_any(
+        lower_col, keywords[half:]
+    )
 
 
 def is_ip(user: Column) -> Column:
@@ -101,91 +105,10 @@ def delete_target(log_action_comment: Column) -> Column:
     return F.when(g1 != "", g1).otherwise(g2)
 
 
-# --- SQL-text twins (round 17, VERDICT r16 next-round #5) -------------
-# The Column forms above are the REFERENCE; these render the identical
-# expressions as SQL strings so hot projections (classified_edit_events
-# — built by ~25 queries per bench pass) cost ~3 py4j round-trips
-# instead of ~60 Column-object constructions. Generated from the SAME
-# keyword constants, so keyword drift is impossible; equivalence is
-# pinned by optimized-plan sameResult in tests/test_plans.py (the
-# bpe_apply_sql / pq SQL-string precedent).
-
-
-def _contains_any_sql(lower_col: str, keywords: tuple[str, ...]) -> str:
-    return "(" + " OR ".join(
-        f"contains({lower_col}, {_sql_str_lit(kw)})" for kw in keywords
-    ) + ")"
-
-
-def _sql_str_lit(s: str) -> str:
-    """Escape a Python string into a Spark SQL single-quoted literal
-    (backslashes doubled — Spark's default parser processes escapes)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-_ESCAPED_LITERALS_CONF = "spark.sql.parser.escapedStringLiterals"
-
-
-def check_sql_literal_parser(spark) -> None:
-    """Refuse to build a classifier SQL projection under a parser that
-    keeps backslash escapes verbatim: _sql_str_lit escapes for the
-    default parser, so with the conf set every backslash in IP_REGEX and
-    DELETE_TARGET_REGEX would silently double and the regexes match
-    something else."""
-    if spark.conf.get(_ESCAPED_LITERALS_CONF, "false").lower() == "true":
-        raise ValueError(
-            f"{_ESCAPED_LITERALS_CONF}=true is not supported: the "
-            "classifier SQL literals are escaped for the default parser; "
-            "unset it or set it to false"
-        )
-
-
-def is_ip_sql(user: str) -> str:
-    return f"{user} RLIKE {_sql_str_lit(IP_REGEX)}"
-
-
-def is_bot_edit_sql(bot: str, user: str) -> str:
-    bots = ", ".join(_sql_str_lit(b) for b in KNOWN_BOTS)
-    return f"(coalesce({bot}, false) OR {user} IN ({bots}))"
-
-
-def is_revert_sql(comment: str) -> str:
-    return _contains_any_sql(f"lower({comment})", REVERT_KEYWORDS)
-
-
-def notability_hit_sql(comment: str) -> str:
-    return (
-        "CAST("
-        + _contains_any_sql(f"lower({comment})", NOTABILITY_KEYWORDS)
-        + " AS BIGINT)"
-    )
-
-
-def volatile_hit_sql(comment: str) -> str:
-    return (
-        "CAST("
-        + _contains_any_sql(f"lower({comment})", VOLATILE_KEYWORDS)
-        + " AS BIGINT)"
-    )
-
-
-def delete_target_sql(log_action_comment: str) -> str:
-    rx = _sql_str_lit(DELETE_TARGET_REGEX)
-    g1 = f"regexp_extract({log_action_comment}, {rx}, 1)"
-    g2 = f"regexp_extract({log_action_comment}, {rx}, 2)"
-    return f"CASE WHEN {g1} != '' THEN {g1} ELSE {g2} END"
-
-
-def wiki_norm_sql(wiki: str) -> str:
-    return f"CASE WHEN {wiki} = 'enwiki' THEN '' ELSE {wiki} END"
-
-
-def page_id_sql(wiki: str, title: str) -> str:
-    norm = wiki_norm_sql(wiki)
-    return (
-        f"CASE WHEN ({norm}) = '' THEN {title} "
-        f"ELSE concat({norm}, '/', {title}) END"
-    )
+def wiki_norm(wiki: Column) -> Column:
+    """A1 wiki normalization, page_id's first step: 'enwiki' is the
+    default wiki and normalizes to ''."""
+    return F.when(wiki == "enwiki", F.lit("")).otherwise(wiki)
 
 
 def page_id(wiki: Column, title: Column) -> Column:
@@ -195,7 +118,7 @@ def page_id(wiki: Column, title: Column) -> Column:
     Pin (SURVEY.md §2.9): the reference's protectPage builds the id WITHOUT
     this normalization (/root/reference/index.js:418) and therefore never
     matches enwiki pages; we use the normalized id everywhere."""
-    norm = F.when(wiki == "enwiki", F.lit("")).otherwise(wiki)
+    norm = wiki_norm(wiki)
     return F.when(norm == "", title).otherwise(F.concat(norm, F.lit("/"), title))
 
 

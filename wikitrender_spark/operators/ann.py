@@ -13,6 +13,8 @@
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1148,66 +1150,6 @@ def _pq_subdist(v, cent, m: int) -> "F.Column":
     return F.round(acc, 6)
 
 
-def _pq_subdist_sql(v: str, cent: str, m: int) -> str:
-    """SQL rendering of _pq_subdist: the same left-associative unrolled
-    8-term sum (acc starts 0.0 via the leading term's implicit 0.0 +),
-    rounded to 6 — `d` appearing once squared mirrors the Column form's
-    d*d (whose shared subexpression also inlines twice). Round 16
-    (guide §1 construction cost; the bpe_apply/rp_project precedent):
-    the Column form costs hundreds of py4j round-trips per query
-    construction, the string parses in ~1 ms."""
-    terms = []
-    for j in range(1, PQ_DSUB + 1):
-        d = f"(element_at({v}, {m * PQ_DSUB + j}) - element_at({cent}, {m * PQ_DSUB + j}))"
-        terms.append(f"{d} * {d}")
-    return f"round(0.0 + {' + '.join(terms)}, 6)"
-
-
-def _pq_codes_sql() -> str:
-    """One SQL expression for the full M-subspace argmin code array over
-    the packed centroid row `cs` (array<struct<cell,centroid>>) and the
-    double-cast embedding `_emb_d` — field-for-field the pq_codes
-    Column fold (init (1e300, -1), strict <, ties to the first == the
-    cell-sorted lowest)."""
-    folds = []
-    for m in range(PQ_M):
-        d = _pq_subdist_sql("_emb_d", "c.centroid", m)
-        folds.append(
-            "aggregate(cs, "
-            "named_struct('dist', cast(1e300 as double), 'cell', cast(-1 as int)), "
-            f"(acc, c) -> CASE WHEN {d} < acc.dist "
-            f"THEN named_struct('dist', {d}, 'cell', c.cell) "
-            "ELSE acc END).cell"
-        )
-    return f"array({', '.join(folds)})"
-
-
-def _pq_query_dists_sql() -> str:
-    """SQL rendering of _pq_query_tables' per-(query, centroid) struct
-    array: M structs (m, cell, subdist) over `_emb_d` and the joined
-    centroid row."""
-    entries = [
-        "named_struct('m', {m}, 'cell', cell, 'dist', {d})".format(
-            m=m, d=_pq_subdist_sql("_emb_d", "centroid", m)
-        )
-        for m in range(PQ_M)
-    ]
-    return f"array({', '.join(entries)})"
-
-
-def _adc_distance_sql() -> str:
-    """SQL rendering of _adc_distance: M filter+element_at table
-    lookups summed left-associatively from 0.0, rounded to 6."""
-    lookups = [
-        (
-            f"element_at(filter(tab, t -> t.m = {m} AND "
-            f"t.cell = element_at(codes, {m + 1})), 1).dist"
-        )
-        for m in range(PQ_M)
-    ]
-    return f"round(0.0 + {' + '.join(lookups)}, 6)"
-
-
 def pq_codes(
     emb: DataFrame, cents: DataFrame, extra_cols: list[str] | None = None
 ) -> DataFrame:
@@ -1231,12 +1173,7 @@ def pq_codes(
     packed = cents.agg(
         F.array_sort(F.collect_list(F.struct("cell", "centroid"))).alias("cs")
     )
-    # Round 16: the M argmin folds are rendered as ONE SQL string
-    # (_pq_codes_sql) parsed by F.expr — the Column-built form
-    # (pq_codes_column_folds, kept as the pinned reference) cost
-    # ~1.2-1.5 s of py4j round-trips per query construction (guide §1;
-    # the bpe_apply precedent). Values are identical: same fold, same
-    # init, same strict-< tie-break — pinned in tests/test_ann_recall.
+    codes = pq_codes_column_folds(emb.sparkSession.sparkContext)
     return (
         emb.select(
             "vec_id",
@@ -1244,16 +1181,17 @@ def pq_codes(
             S.to_double(F.col("embedding")).alias("_emb_d"),
         )
         .crossJoin(F.broadcast(packed))
-        .select(
-            "vec_id", *extra_cols, F.expr(_pq_codes_sql()).alias("codes")
-        )
+        .select("vec_id", *extra_cols, codes.alias("codes"))
     )
 
 
-def pq_codes_column_folds() -> "F.Column":
-    """The original Column-built M-fold code array — the REFERENCE form
-    _pq_codes_sql is pinned against (tests/test_ann_recall.py); not used
-    in any query path since round 16."""
+@functools.lru_cache(maxsize=1)
+def pq_codes_column_folds(sc) -> "F.Column":
+    """The M argmin folds over the packed centroid row `cs` and the
+    double-cast embedding `_emb_d` (init (1e300, -1), strict <, ties to
+    the first == the cell-sorted lowest), as one code array. Built once
+    per SparkContext (``sc`` is only the cache key): the M lambda folds
+    cost about a second of py4j round-trips per construction."""
     v = F.col("_emb_d")
 
     def mk_step(m: int):
@@ -1290,9 +1228,7 @@ def _pq_query_tables(
     """One row per query: (query_id, tab array<struct<m,cell,dist>>) —
     the query's squared-L2 distance to every codebook entry in every
     subspace (n_queries * M * K values total, broadcast-sized)."""
-    # Round 16: distance structs rendered as one SQL string (see
-    # _pq_codes_sql rationale); the embedding is double-cast in the
-    # same projection the Column form used.
+    dists = _pq_query_dists(emb.sparkSession.sparkContext)
     return (
         emb.filter(F.col("vec_id").isin(query_ids))
         .select(
@@ -1300,16 +1236,34 @@ def _pq_query_tables(
             S.to_double(F.col("embedding")).alias("_emb_d"),
         )
         .crossJoin(F.broadcast(cents))
-        .select("query_id", F.explode(F.expr(_pq_query_dists_sql())).alias("d"))
+        .select("query_id", F.explode(dists).alias("d"))
         .groupBy("query_id")
         .agg(F.collect_list("d").alias("tab"))
     )
 
 
-def _adc_distance() -> "F.Column":
+@functools.lru_cache(maxsize=1)
+def _pq_query_dists(sc) -> "F.Column":
+    """M structs (m, cell, subdist) of `_emb_d` against the joined
+    centroid row, built once per SparkContext."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(m).alias("m"),
+                F.col("cell").alias("cell"),
+                _pq_subdist(F.col("_emb_d"), F.col("centroid"), m).alias("dist"),
+            )
+            for m in range(PQ_M)
+        ]
+    )
+
+
+@functools.lru_cache(maxsize=1)
+def _adc_distance(sc) -> "F.Column":
     """ADC approximate distance for a row carrying `codes` and `tab`:
     M table lookups summed left-associatively in subspace order (the
-    oracle's list(dist ORDER BY m) sequential fold), rounded to 6."""
+    oracle's list(dist ORDER BY m) sequential fold), rounded to 6.
+    Built once per SparkContext."""
 
     def lookup(m: int) -> "F.Column":
         hit = F.filter(
@@ -1356,10 +1310,7 @@ def _adc_rank_and_rescore(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            # round 16: SQL-string form of _adc_distance (kept as the
-            # pinned reference) — same M lookups, same 0.0-seeded
-            # left-associative sum, round 6
-            F.expr(_adc_distance_sql()).alias("approx_dist"),
+            _adc_distance(cand.sparkSession.sparkContext).alias("approx_dist"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= keep)

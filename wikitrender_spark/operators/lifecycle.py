@@ -30,19 +30,26 @@ Two implementations:
    event-for-event. Arrow-batched, one group per pandas frame, fully
    parallel across groups — this is the batch twin of the streaming
    stateful processor and the semantics oracle for (1).
+
+Both read rows classified in the plan by the functions/classify Columns:
+(1) through classified_edit_events and log_events, (2) and the streaming
+processor through fold_events. The select lists are built once per
+SparkContext, so building a plan constructs no classifier Column.
 """
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..barrier import corpus_barrier
 from ..functions import classify
 from ..streaming import fold
 from .page_state import (
-    _CLASSIFIED_SELECT_SQL,
+    _classified_select,
     aggregate_classified,
     classified_edit_events,
 )
@@ -50,13 +57,12 @@ from .page_state import (
 _NEG_INF = -1  # sentinel: "no cut" (seq are non-negative)
 
 
-def log_events_columns(rc: DataFrame) -> DataFrame:
-    """REFERENCE Column form of the log-branch router — the pinned twin
-    of log_events' SQL-text rendering (round 17; optimized-plan
-    sameResult asserted in tests/test_plans.py). Not on any query
-    path."""
-    return rc.filter(F.col("log_type").isNotNull()).select(
-        classify.page_id(F.col("wiki"), F.col("title")).alias("id"),
+@functools.lru_cache(maxsize=1)
+def _log_targets(sc) -> tuple[Column, Column]:
+    """The move target and delete target ids of a log row, built once
+    per SparkContext (``sc`` is only the cache key; see
+    page_state._classified_select)."""
+    return (
         F.when(
             F.col("log_action") == "move",
             classify.page_id(F.col("wiki"), F.col("log_target")),
@@ -67,44 +73,27 @@ def log_events_columns(rc: DataFrame) -> DataFrame:
                 F.col("wiki"), classify.delete_target(F.col("log_action_comment"))
             ),
         ).alias("delete_id"),
-        F.col("log_action"),
-        F.col("log_target"),
-        F.col("wiki"),
-        F.col("ts"),
-        F.col("seq"),
     )
 
 
-#: log-branch router rendered once as SQL strings (round 17 — the
-#: classified_edit_events precedent; generated from the same classify
-#: constants, optimized-plan sameResult pinned in tests/test_plans.py).
-_MOVE_DST_SQL = (
-    "CASE WHEN log_action = 'move' THEN "
-    f"{classify.page_id_sql('wiki', 'log_target')} END AS move_dst"
-)
-_DELETE_ID_SQL = (
-    "CASE WHEN log_action = 'delete' THEN "
-    + classify.page_id_sql('wiki', f"({classify.delete_target_sql('log_action_comment')})")
-    + " END AS delete_id"
-)
-_LOG_SELECT_SQL: tuple[str, ...] = (
-    f"{classify.page_id_sql('wiki', 'title')} AS id",
-    _MOVE_DST_SQL,
-    _DELETE_ID_SQL,
-    "log_action",
-    "log_target",
-    "wiki",
-    "ts",
-    "seq",
-)
+@functools.lru_cache(maxsize=1)
+def _log_select(sc) -> tuple[Column | str, ...]:
+    """log_events' select list, built once per SparkContext."""
+    return (
+        classify.page_id(F.col("wiki"), F.col("title")).alias("id"),
+        *_log_targets(sc),
+        "log_action",
+        "log_target",
+        "wiki",
+        "ts",
+        "seq",
+    )
 
 
 def log_events(rc: DataFrame) -> DataFrame:
-    """The routed log branch (F4) with normalized ids (SQL-text
-    rendering; log_events_columns is the pinned Column reference)."""
-    classify.check_sql_literal_parser(rc.sparkSession)
-    return rc.filter(F.col("log_type").isNotNull()).selectExpr(
-        *_LOG_SELECT_SQL
+    """The routed log branch (F4) with normalized ids."""
+    return rc.filter(F.col("log_type").isNotNull()).select(
+        *_log_select(rc.sparkSession.sparkContext)
     )
 
 
@@ -257,9 +246,7 @@ def page_state_lifecycle(rc: DataFrame, with_collections: bool = False) -> DataF
         .join(F.broadcast(adopted_pr), "id", "left")
         .select(
             F.col("dst_id").alias("id"),
-            F.when(F.col("mv_wiki") == "enwiki", F.lit(""))
-            .otherwise(F.col("mv_wiki"))
-            .alias("wiki"),
+            classify.wiki_norm(F.col("mv_wiki")).alias("wiki"),
             F.col("dst_title").alias("title"),
             *[
                 F.coalesce(F.col(c), zero).alias(c)
@@ -313,23 +300,20 @@ def page_state_lifecycle(rc: DataFrame, with_collections: bool = False) -> DataF
 _REPLAY_SCHEMA = fold.STATE_SCHEMA
 
 
-#: the fold's input projection: every rc row (edits, log events, control
-#: commands) classified once in the plan, from the SAME strings the batch
-#: plans evaluate — the edit flags / id / normalized wiki of
-#: _CLASSIFIED_SELECT_SQL and the move/delete target ids of
-#: _LOG_SELECT_SQL. The Python fold only routes and accumulates.
-_FOLD_SELECT_SQL: tuple[str, ...] = (
-    "_grp", "log_type", "log_action", "log_target",
-    *_CLASSIFIED_SELECT_SQL, _MOVE_DST_SQL, _DELETE_ID_SQL,
-)
-
-
 def fold_events(rc: DataFrame, group_col) -> DataFrame:
     """rc rows -> the classified rows every stateful fold reads
-    (streaming/fold.py), keyed by ``_grp``. The group key is taken from
-    the RAW wiki/title before the projection normalizes them."""
-    classify.check_sql_literal_parser(rc.sparkSession)
-    return rc.withColumn("_grp", group_col).selectExpr(*_FOLD_SELECT_SQL)
+    (streaming/fold.py), keyed by ``_grp``: every rc row (edits, log
+    events, control commands) classified once in the plan, by the same
+    Columns the batch plans evaluate — the edit flags, id and normalized
+    wiki of classified_edit_events and the move/delete target ids of
+    log_events. The Python fold only routes and accumulates. The group
+    key is taken from the RAW wiki/title before the projection
+    normalizes them."""
+    sc = rc.sparkSession.sparkContext
+    return rc.withColumn("_grp", group_col).select(
+        "_grp", "log_type", "log_action", "log_target",
+        *_classified_select(sc), *_log_targets(sc),
+    )
 
 
 def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -29,34 +29,34 @@ Accumulation semantics (exact, from /root/reference/index.js:241-273):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import classify, metrics
 
 
-def _wiki_norm(wiki: Column) -> Column:
-    return F.when(wiki == "enwiki", F.lit("")).otherwise(wiki)
-
-
-def classified_edit_events_columns(rc: DataFrame) -> DataFrame:
-    """REFERENCE Column form of the classifier projection — the pinned
-    twin of classified_edit_events' SQL-text rendering (round 17;
-    optimized-plan sameResult asserted in tests/test_plans.py). Not on
-    any query path."""
-    eligible = ~classify.is_bot_edit(F.col("bot"), F.col("user")) & ~classify.is_revert(
-        F.col("comment")
-    )
-    return rc.filter(F.col("log_type").isNull()).select(
+@functools.lru_cache(maxsize=1)
+def _classified_select(sc) -> tuple[Column | str, ...]:
+    """The classifier projection's select list, built once per
+    SparkContext (``sc`` is only the cache key): rebuilding its Columns
+    on every call measured 0.5-1.1 s per classified_edit_events build
+    (sf0.01, 4 cores), built once 28-52 ms, and ~25 headline queries
+    build it. Columns are unresolved expressions, so one list serves
+    every plan of the context."""
+    bot = classify.is_bot_edit(F.col("bot"), F.col("user"))
+    revert = classify.is_revert(F.col("comment"))
+    return (
         classify.page_id(F.col("wiki"), F.col("title")).alias("id"),
-        _wiki_norm(F.col("wiki")).alias("wiki"),
-        F.col("title"),
-        F.col("user"),
-        F.col("ts"),
-        F.col("seq"),
-        classify.is_revert(F.col("comment")).alias("is_revert"),
-        classify.is_bot_edit(F.col("bot"), F.col("user")).alias("is_bot"),
-        eligible.alias("eligible"),
+        classify.wiki_norm(F.col("wiki")).alias("wiki"),
+        "title",
+        "user",
+        "ts",
+        "seq",
+        revert.alias("is_revert"),
+        bot.alias("is_bot"),
+        (~bot & ~revert).alias("eligible"),
         classify.is_ip(F.col("user")).alias("is_anon"),
         (F.col("type") == "new").alias("is_new"),
         classify.notability_hit(F.col("comment")).alias("notability_hit"),
@@ -67,41 +67,11 @@ def classified_edit_events_columns(rc: DataFrame) -> DataFrame:
     )
 
 
-#: the classifier projection rendered once as SQL strings (round 17,
-#: VERDICT r16 next-round #5 — the bpe_apply/pq construction-cost
-#: precedent): classified_edit_events is built by ~25 queries per
-#: bench pass and the Column form cost ~0.35 s of py4j per build;
-#: selectExpr over these pre-rendered strings is ~3 round-trips. The
-#: strings are GENERATED from the same classify constants as the
-#: Column twins (keyword drift impossible) and pinned
-#: optimized-plan-identical in tests/test_plans.py.
-_CLASSIFIED_SELECT_SQL: tuple[str, ...] = (
-    f"{classify.page_id_sql('wiki', 'title')} AS id",
-    f"{classify.wiki_norm_sql('wiki')} AS wiki",
-    "title",
-    "user",
-    "ts",
-    "seq",
-    f"{classify.is_revert_sql('comment')} AS is_revert",
-    f"{classify.is_bot_edit_sql('bot', 'user')} AS is_bot",
-    f"(NOT {classify.is_bot_edit_sql('bot', 'user')} AND NOT "
-    f"{classify.is_revert_sql('comment')}) AS eligible",
-    f"({classify.is_ip_sql('user')}) AS is_anon",
-    "(type = 'new') AS is_new",
-    f"{classify.notability_hit_sql('comment')} AS notability_hit",
-    f"{classify.volatile_hit_sql('comment')} AS volatile_hit",
-    "(length_new - length_old) AS delta",
-)
-
-
 def classified_edit_events(rc: DataFrame) -> DataFrame:
     """Edit-branch events (log_type IS NULL) with derived flag columns —
-    the F4 router plus F5-F10 classifiers as one narrow projection
-    (SQL-text rendering; classified_edit_events_columns is the pinned
-    Column reference)."""
-    classify.check_sql_literal_parser(rc.sparkSession)
-    return rc.filter(F.col("log_type").isNull()).selectExpr(
-        *_CLASSIFIED_SELECT_SQL
+    the F4 router plus F5-F10 classifiers as one narrow projection."""
+    return rc.filter(F.col("log_type").isNull()).select(
+        *_classified_select(rc.sparkSession.sparkContext)
     )
 
 

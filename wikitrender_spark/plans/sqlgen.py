@@ -47,6 +47,21 @@ def is_ip_sql(user: str = '"user"') -> str:
     return f"regexp_matches({user}, {duck_str_lit(classify.IP_REGEX)})"
 
 
+def wiki_norm_sql(wiki: str = "wiki") -> str:
+    return f"CASE WHEN {wiki} = 'enwiki' THEN '' ELSE {wiki} END"
+
+
+def page_id_sql(title: str = "title", wiki: str = "wiki") -> str:
+    norm = wiki_norm_sql(wiki)
+    return f"CASE WHEN ({norm}) = '' THEN {title} ELSE ({norm}) || '/' || {title} END"
+
+
+def delete_target_sql(comment: str = "log_action_comment") -> str:
+    rx = duck_str_lit(classify.DELETE_TARGET_REGEX)
+    g1 = f"regexp_extract({comment}, {rx}, 1)"
+    return f"CASE WHEN {g1} <> '' THEN {g1} ELSE regexp_extract({comment}, {rx}, 2) END"
+
+
 def classified_events_cte() -> str:
     """CTE chain: rc (derived+filtered) -> e2 (edit branch, classified).
     Mirrors operators/page_state.classified_edit_events."""
@@ -54,10 +69,8 @@ def classified_events_cte() -> str:
 rc AS ({duckdb_rc_cte()}),
 e2 AS (
   SELECT
-    CASE WHEN (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) = '' THEN title
-         ELSE (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) || '/' || title
-    END AS id,
-    CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END AS wiki,
+    {page_id_sql()} AS id,
+    {wiki_norm_sql()} AS wiki,
     title, "user", ts, seq,
     {is_revert_sql()} AS is_revert,
     {is_bot_sql()} AS is_bot,
@@ -316,13 +329,8 @@ GROUP BY is_revert, is_bot, is_anon"""
 
 def delete_targets_oracle() -> str:
     """F11 regexp extraction over delete log events."""
-    rx = duck_str_lit(classify.DELETE_TARGET_REGEX)
     return f"""WITH rc AS ({duckdb_rc_cte()})
-SELECT seq,
-  CASE WHEN regexp_extract(log_action_comment, {rx}, 1) <> ''
-       THEN regexp_extract(log_action_comment, {rx}, 1)
-       ELSE regexp_extract(log_action_comment, {rx}, 2)
-  END AS target
+SELECT seq, {delete_target_sql()} AS target
 FROM rc
 WHERE log_type = 'log' AND log_action = 'delete'"""
 
@@ -371,11 +379,7 @@ def protect_followups_oracle(window_hours: int) -> str:
     the following `window_hours` (streaming/joins.py batch twin)."""
     return f"""WITH {classified_events_cte()},
 pr AS (
-  SELECT
-    CASE WHEN (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) = '' THEN title
-         ELSE (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) || '/' || title
-    END AS id,
-    ts AS p_ts, seq AS p_seq
+  SELECT {page_id_sql()} AS id, ts AS p_ts, seq AS p_seq
   FROM rc WHERE log_type IS NOT NULL AND log_action = 'protect')
 SELECT e.id, e.seq AS e_seq, pr.p_seq,
   (epoch_us(pr.p_ts) - epoch_us(e.ts)) / 60000000.0 AS gap_min
@@ -390,28 +394,12 @@ def lifecycle_oracle() -> str:
     source) and protects, in replay order. Mirrors the DataFrame
     formulation CTE-for-CTE; same no-rename-chain restriction (guaranteed
     by the derivation: move targets live in a disjoint title namespace)."""
-    delete_re = duck_str_lit(classify.DELETE_TARGET_REGEX)
     return f"""WITH {classified_events_cte()},
 logs AS (
   SELECT
-    CASE WHEN (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) = '' THEN title
-         ELSE (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) || '/' || title
-    END AS id,
-    CASE WHEN log_action = 'move' THEN
-      CASE WHEN (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) = '' THEN log_target
-           ELSE (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) || '/' || log_target
-      END
-    END AS move_dst,
-    CASE WHEN log_action = 'delete' THEN
-      CASE WHEN (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) = ''
-           THEN CASE WHEN regexp_extract(log_action_comment, {delete_re}, 1) <> ''
-                     THEN regexp_extract(log_action_comment, {delete_re}, 1)
-                     ELSE regexp_extract(log_action_comment, {delete_re}, 2) END
-           ELSE (CASE WHEN wiki = 'enwiki' THEN '' ELSE wiki END) || '/' ||
-                CASE WHEN regexp_extract(log_action_comment, {delete_re}, 1) <> ''
-                     THEN regexp_extract(log_action_comment, {delete_re}, 1)
-                     ELSE regexp_extract(log_action_comment, {delete_re}, 2) END
-      END
+    {page_id_sql()} AS id,
+    CASE WHEN log_action = 'move' THEN {page_id_sql("log_target")} END AS move_dst,
+    CASE WHEN log_action = 'delete' THEN {page_id_sql(delete_target_sql())}
     END AS delete_id,
     log_action, log_target, wiki, ts, seq
   FROM rc WHERE log_type IS NOT NULL
@@ -471,7 +459,7 @@ adopted_pr AS (
 adopted AS (
   SELECT
     wb.dst_id AS id,
-    CASE WHEN wb.mv_wiki = 'enwiki' THEN '' ELSE wb.mv_wiki END AS wiki,
+    {wiki_norm_sql("wb.mv_wiki")} AS wiki,
     wb.dst_title AS title,
     coalesce(s.edits, 0) AS edits,
     coalesce(s.anonEdits, 0) AS anonEdits,

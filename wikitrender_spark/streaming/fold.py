@@ -5,9 +5,9 @@ loop (updateFromRCStream + log routing, reference index.js:174-273,
 Classification is not done here. Every rc row reaches the fold already
 classified by one plan projection (operators/lifecycle.fold_events): page
 ids, the normalized wiki, the F5-F10 edit flags and the move/delete target
-ids are the SAME SQL strings the batch plans evaluate
-(page_state._CLASSIFIED_SELECT_SQL, lifecycle._LOG_SELECT_SQL). This
-module owns what needs state: routing each classified row to its page,
+ids are the SAME Columns the batch plans evaluate
+(page_state._classified_select, lifecycle._log_targets). This module
+owns what needs state: routing each classified row to its page,
 accumulating, and the P2 purge.
 
 One micro-batch step, ``fold``, serves both stateful callers: the exact

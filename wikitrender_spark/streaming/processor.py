@@ -9,9 +9,9 @@ titles map carried in the state store between batches.
 
 Two layers, each with one owner:
 - classification is a plan projection (operators/lifecycle.fold_events):
-  ids, normalized wiki, edit flags and move/delete targets are rendered
-  from the same SQL strings the batch plans evaluate, and run in the JVM
-  before rows reach Python;
+  ids, normalized wiki, edit flags and move/delete targets are the same
+  Columns the batch plans evaluate, and run in the JVM before rows reach
+  Python;
 - the fold owns routing, accumulation and the batch-boundary purge: each
   group's micro-batch is one call to streaming/fold.fold, the same step
   the exact batch replay runs.
