@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -2410,36 +2411,105 @@ def _py_bpe_word(word: str, merges) -> list:
     return symbols
 
 
-def test_bpe_apply_matches_python_mirror(spark):
-    merges = (("t", "h"), ("th", "e"), ("a", "a"), ("i", "n"), ("in", "g"))
-    words = ["the", "theme", "aaa", "aaaa", "thinking", "x", "in",
-             "athe", "ththe"]
+def _py_bpe_encode(text: str, merges) -> list:
+    # the Java \s class tokens() splits on (ASCII whitespace only)
+    words = [w for w in re.split(r"[ \t\n\x0b\f\r]+", text) if w]
+    return [s for w in words for s in _py_bpe_word(w, merges)]
+
+
+_BPE_WORDS = ["", "a", "ab", "abc", "cab", "ababc", "aaa", "aaaa",
+              "aaaaa", "abab", "xya", "the", "theme", "theory", "ththe",
+              "athe", "thinking", "in", "x", "weather", "banana", "xyzzy"]
+
+
+@pytest.mark.parametrize(
+    "merges,pins",
+    [
+        # composed second-round merge, overlap rule, singleton
+        ((("t", "h"), ("th", "e"), ("a", "a"), ("i", "n"), ("in", "g")),
+         {"the": ["the"], "aaa": ["aa", "a"], "aaaa": ["aa", "aa"],
+          "thinking": ["th", "in", "k", "ing"], "x": ["x"]}),
+        # merged-symbol pairs ((aa, aa)) and suffix-sharing symbols
+        ((("a", "a"), ("a", "b"), ("t", "h"), ("th", "e"),
+          ("b", "a"), ("ba", "n"), ("e", "r"), ("aa", "aa")),
+         {"aaaa": ["aaaa"], "banana": ["ban", "a", "n", "a"]}),
+        # ill-formed: (ab, c) ranks before (a, b), so its pass ran before
+        # any "ab" symbol existed; a min-rank-repeat encoder gives [abc]
+        ((("ab", "c"), ("a", "b")), {"abc": ["ab", "c"]}),
+        # a duplicate pair is a distinct pass of its own
+        ((("a", "a"), ("x", "y"), ("a", "a")),
+         {"aaaaa": ["aa", "aa", "a"], "xya": ["xy", "a"]}),
+        ((), {"ab": ["a", "b"]}),
+    ],
+    ids=["composed", "merged_pairs", "ill_formed", "duplicate", "empty"],
+)
+def test_bpe_apply_matches_python_mirror(spark, merges, pins):
     rows = (
-        spark.createDataFrame([(w,) for w in words], "w string")
+        spark.createDataFrame([(w,) for w in _BPE_WORDS], "w string")
         .select("w", T.bpe_apply_word(F.col("w"), merges).alias("sym"))
         .collect()
     )
+    assert len(rows) == len(_BPE_WORDS)
     for r in rows:
         assert list(r["sym"]) == _py_bpe_word(r["w"], merges), r["w"]
         assert "".join(r["sym"]) == r["w"]  # symbols always rebuild the word
     got = {r["w"]: list(r["sym"]) for r in rows}
-    # hand pins: composed second-round merge, overlap rule, singleton
-    assert got["the"] == ["the"]
-    assert got["aaa"] == ["aa", "a"]
-    assert got["aaaa"] == ["aa", "aa"]
-    assert got["thinking"] == ["th", "in", "k", "ing"]
-    assert got["x"] == ["x"]
+    assert got[""] == []
+    for w, want in pins.items():
+        assert got[w] == want, w
 
 
-def test_bpe_encode_flattens_words(spark):
-    merges = (("t", "h"), ("th", "e"))
+@pytest.mark.parametrize("escaped", ["true", "false"])
+def test_bpe_apply_ignores_escaped_string_literals(spark, escaped):
+    """Merge strings with a backslash encode the same under either
+    setting of spark.sql.parser.escapedStringLiterals: the table reaches
+    Catalyst as literals, never through the SQL parser."""
+    merges = (("a", "\\"), ("\\", "b"))
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        row = (
+            spark.createDataFrame([("a\\b",)], "w string")
+            .select(T.bpe_apply_word("w", merges).alias("sym"))
+            .collect()[0]
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert list(row["sym"]) == ["a\\", "b"] == _py_bpe_word("a\\b", merges)
+
+
+@pytest.mark.parametrize(
+    "text,merges,want",
+    [
+        # merges never cross word boundaries; flatten keeps word order
+        ("the cat then", (("t", "h"), ("th", "e")),
+         ["the", "c", "a", "t", "the", "n"]),
+        ("one\ttab\nand newline", (("t", "h"), ("th", "e"), ("a", "b")),
+         ["o", "n", "e", "t", "ab", "a", "n", "d", "n", "e", "w", "l",
+          "i", "n", "e"]),
+        ("", (("a", "b"),), []),
+        ("   ", (("a", "b"),), []),
+        ("abc cab ababc", (("ab", "c"), ("a", "b")),
+         ["ab", "c", "c", "ab", "ab", "ab", "c"]),
+        ("aaa aaaaa xya", (("a", "a"), ("x", "y"), ("a", "a")),
+         ["aa", "a", "aa", "aa", "a", "xy", "a"]),
+        # NULL text propagates NULL (not a crash, not [])
+        (None, (("ab", "c"), ("a", "b")), None),
+    ],
+    ids=["words", "tab_newline", "empty", "blank", "ill_formed",
+         "duplicate", "null"],
+)
+def test_bpe_encode_flattens_words(spark, text, merges, want):
     row = (
-        docs_df(spark, ["the cat then"])
+        spark.createDataFrame([(text,)], "text string")
         .select(T.bpe_encode(F.col("text"), merges).alias("sym"))
         .collect()[0]
     )
-    # merges never cross word boundaries; flatten preserves word order
-    assert list(row["sym"]) == ["the", "c", "a", "t", "the", "n"]
+    got = None if row["sym"] is None else list(row["sym"])
+    assert got == want
+    if text is not None:
+        assert got == _py_bpe_encode(text, merges)
 
 
 def _py_luhn(digits: str) -> bool:
@@ -2694,117 +2764,6 @@ def test_bpe_apply_zero_merges_consistent_on_empty_word(spark):
     assert list(row["zero"]) == [] == list(row["one"])
 
 
-def test_bpe_apply_sql_form_matches_column_form(spark):
-    """The round-16 one-string construction path (bpe_apply_sql via
-    F.expr) must reproduce the Column-built fold chain symbol-for-symbol
-    — overlap rule ('aaa' under (a,a) -> ['aa','a']), composed
-    second-round merges ((t,h) then (th,e)), empty words, words with no
-    applicable merges, and merged-symbol pairs ((aa,aa))."""
-    words = ["", "a", "ab", "aaa", "aaaa", "abab", "the", "theory",
-             "weather", "banana", "xyzzy"]
-    merges = (("a", "a"), ("a", "b"), ("t", "h"), ("th", "e"),
-              ("b", "a"), ("ba", "n"), ("e", "r"), ("aa", "aa"))
-    rows = (
-        spark.createDataFrame([(w,) for w in words], "w string")
-        .select(
-            "w",
-            T.bpe_apply_word(F.col("w"), merges).alias("col_form"),
-            T.bpe_apply_word("w", merges).alias("sql_form"),
-            T.bpe_apply_word(F.col("w"), ()).alias("col_zero"),
-            T.bpe_apply_word("w", ()).alias("sql_zero"),
-        )
-        .collect()
-    )
-    for r in rows:
-        assert list(r["col_form"]) == list(r["sql_form"]), r["w"]
-        assert list(r["col_zero"]) == list(r["sql_zero"]), r["w"]
-
-
-def test_bpe_encode_fast_matches_hof(spark):
-    """The Pandas-UDF fast path must reproduce bpe_encode's pinned
-    rank-order single-pass semantics symbol-for-symbol — including the
-    overlap rule, composed second-round merges, multi-word flattening,
-    and whitespace handling."""
-    merges = (("t", "h"), ("th", "e"), ("a", "a"), ("i", "n"),
-              ("in", "g"))
-    texts = [
-        "the cat then",
-        "aaa aaaa thinking x in athe ththe",
-        "",
-        "   ",
-        "one\ttab\nand newline",
-    ]
-    df = docs_df(spark, texts).select(
-        "text",
-        T.bpe_encode(F.col("text"), merges).alias("hof"),
-        T.bpe_encode_fast(F.col("text"), merges).alias("fast"),
-    )
-    for r in df.collect():
-        assert list(r["hof"]) == list(r["fast"]), r["text"]
-
-
-def test_bpe_encode_fast_ill_formed_and_duplicate_tables(spark):
-    """The cursor rule's reason to exist: on an ILL-FORMED table a
-    later merge can create an occurrence of an EARLIER pair, which the
-    sequential-pass contract must NOT revisit — a bare min-rank-repeat
-    encoder (the common GPT-2 shape) would diverge here. Duplicate
-    pairs keep per-rank multiplicity."""
-    # (ab,c) ranks before (a,b): sequential passes yield [ab, c]
-    # because (ab,c)'s pass ran before any "ab" symbol existed
-    ill = (("ab", "c"), ("a", "b"))
-    # duplicate (a,a): the second occurrence is a distinct pass
-    dup = (("a", "a"), ("x", "y"), ("a", "a"))
-    for merges, text in [(ill, "abc cab ababc"), (dup, "aaa aaaaa xya")]:
-        df = docs_df(spark, [text]).select(
-            T.bpe_encode(F.col("text"), merges).alias("hof"),
-            T.bpe_encode_fast(F.col("text"), merges).alias("fast"),
-        )
-        r = df.collect()[0]
-        assert list(r["hof"]) == list(r["fast"]), (merges, text)
-    # the ill-formed pin, hand-computed: min-rank-repeat would give
-    # ["abc"]; the sequential contract gives ["ab", "c"]
-    r = (
-        spark.createDataFrame([("abc",)], "w string")
-        .select(T.bpe_encode_fast(F.col("w"), ill).alias("sym"))
-        .collect()[0]
-    )
-    assert list(r["sym"]) == ["ab", "c"]
-    # NULL text: both paths propagate null (not crash, not [])
-    rn = (
-        spark.createDataFrame([(None,)], "w string")
-        .select(
-            T.bpe_encode(F.col("w"), ill).alias("hof"),
-            T.bpe_encode_fast(F.col("w"), ill).alias("fast"),
-        )
-        .collect()[0]
-    )
-    assert rn["hof"] is None and rn["fast"] is None
-
-
-def test_bpe_encode_fast_matches_hof_on_trained_table(spark):
-    """VERDICT r12 ask #7 / r13 next-round #2, the equivalence leg: on
-    the REAL corpus with tx_bpe_merges' own trained 20-merge table —
-    the exact table the gated tx_bpe_encode applies — the fast encoder
-    reproduces the HOF path symbol-for-symbol on every document."""
-    from wikitrender_spark.plans import pipeline_queries as P
-
-    sf = "/root/testdata/sf0.001"
-    ranked = (
-        P.q_bpe_merges(spark, sf).orderBy("merge_rank").select("pair").collect()
-    )
-    merges = tuple((r.pair[0], r.pair[1]) for r in ranked)
-    assert len(merges) == P.BPE_TOP_PAIRS
-    d = spark.read.parquet(os.path.join(sf, "documents.parquet"))
-    rows = d.select(
-        "doc_id",
-        T.bpe_encode(F.col("text"), merges).alias("hof"),
-        T.bpe_encode_fast(F.col("text"), merges).alias("fast"),
-    ).collect()
-    assert len(rows) == 500
-    for r in rows:
-        assert list(r["hof"]) == list(r["fast"]), r["doc_id"]
-
-
 def test_bpe_encode_oracle_separator_precondition():
     """BPE_ENCODE_SQL's string encoding reserves '|' (symbol flank) and
     '@' (word boundary); the oracle is only sound while the corpus text
@@ -2834,7 +2793,7 @@ def test_bpe_encode_query_matches_flat_hof(spark):
     aggregation boundary closes the r9/r13 CollapseProject re-inlining
     class here). Pin that the string round-trip loses nothing: n_syms
     equals the HOF symbol count and encoded splits back to the HOF
-    symbols."""
+    symbols, which match the Python mirror on the trained table."""
     from wikitrender_spark.plans import pipeline_queries as P
 
     sf = "/root/testdata/sf0.001"
@@ -2842,14 +2801,19 @@ def test_bpe_encode_query_matches_flat_hof(spark):
         P.q_bpe_merges(spark, sf).orderBy("merge_rank").select("pair").collect()
     )
     merges = tuple((r.pair[0], r.pair[1]) for r in ranked)
+    assert len(merges) == P.BPE_TOP_PAIRS
     got = {r["doc_id"]: r for r in P.q_bpe_encode(spark, sf).collect()}
     ref = (
         spark.read.parquet(os.path.join(sf, "documents.parquet"))
-        .select("doc_id", T.bpe_encode(F.col("text"), merges).alias("sym"))
+        .select(
+            "doc_id", "text",
+            T.bpe_encode(F.col("text"), merges).alias("sym"),
+        )
         .collect()
     )
     assert len(got) == len(ref) == 500
     for r in ref:
+        assert list(r["sym"]) == _py_bpe_encode(r["text"], merges), r["doc_id"]
         g = got[r["doc_id"]]
         assert g["n_syms"] == len(r["sym"])
         assert (g["encoded"].split(" ") if g["encoded"] else []) == list(

@@ -859,205 +859,60 @@ def test_nll_udf_scores_survivors_once_after_gate(spark):
     assert gate and arrow[0] < gate[0], (arrow, gate)
 
 
-def test_nll_join_gate_bit_matches_udf(spark):
-    """The JVM join-form perplexity scorer (round 13, VERDICT r12 ask
-    #2) is BIT-compatible with the UDF scorer: on the full sf0.001
-    corpus plus a planted high-perplexity outlier, both forms admit the
-    same documents and produce bit-identical nll doubles — the sorted
-    run-length fold reproduces the scorer's exact addition order, and
-    portable pln keeps each term IEEE-identical."""
-    import os
-
-    from wikitrender_spark.plans.pipeline_queries import ngram_model
-    from wikitrender_spark.streaming import corpus
-
-    base = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    model = ngram_model(base)
-    udf = corpus.corpus_admission_stream(
-        base, nll_model=model, max_unit_nll=4.0
-    )
-    join = corpus.corpus_admission_stream(
-        base, nll_model=model, max_unit_nll=4.0, nll_gate="join"
-    )
-    # the documented output contract is shared verbatim
-    assert udf.columns == join.columns
-    u = {r["doc_id"]: r["nll"] for r in udf.collect()}
-    j = {r["doc_id"]: r["nll"] for r in join.collect()}
-    assert set(u) == set(j)
-    assert u, "ceiling rejected everything — degenerate"
-    for d, nll in u.items():
-        # exact float equality ON PURPOSE: the bit contract is the test
-        assert j[d] == nll, (d, j[d].hex(), nll.hex())
-
-
-def test_nll_join_gate_zero_bigram_and_backoff(spark):
-    """Unit pins on _nll_join_score's edge semantics, matched against
-    the UDF scorer on the same texts: a doc with < 2 tokens scores
-    (n_bigrams=0, nll=0.0) and trivially passes; unseen bigrams back
-    off through the left-unigram relation and unseen left words
-    through pln(v) — all three classes bit-equal to the scorer."""
+def test_nll_scorer_zero_bigram_and_backoff(spark):
+    """Unit pins on ngram_nll_scorer's edge semantics, against values
+    computed by hand from portable.pln_py: a doc with < 2 tokens (or
+    empty, or NULL) scores (n_bigrams=0, nll=0.0) and trivially passes;
+    an unseen bigram with a seen left word backs off to pln(u + v) -
+    pln(1), an unseen left word to pln(v) - pln(1); repeated bigrams
+    count occurrences and add xf * nl once per distinct bigram, in
+    (w1, w2) order from 0.0."""
+    from wikitrender_spark.functions.portable import pln_py as ln
     from wikitrender_spark.functions.text import ngram_nll_scorer
     from wikitrender_spark.plans.pipeline_queries import ngram_model
-    from wikitrender_spark.streaming import corpus
 
     train = spark.createDataFrame(
         [(0, "en", "aa bb aa bb cc"), (1, "en", "bb cc bb aa")],
         "doc_id long, lang string, text string",
     )
     model = ngram_model(train)
+    # B(aa,bb)=2 B(bb,aa)=2 B(bb,cc)=2 B(cc,bb)=1; U(w1) sums B; v=3
+    assert model == (
+        {("aa", "bb"): (2, 2), ("bb", "aa"): (4, 2),
+         ("bb", "cc"): (4, 2), ("cc", "bb"): (1, 1)},
+        {"aa": 2, "bb": 4, "cc": 1},
+        3,
+    )
     texts = [
         "solo",              # zero bigrams
         "",                  # empty
+        None,                # NULL
         "aa bb cc",          # all-seen bigrams
         "aa cc",             # unseen bigram, seen left word
         "zz qq aa",          # unseen left words
-        "aa bb aa bb aa bb", # repeated bigrams (the xf>1 fold path)
+        "aa bb aa bb aa bb", # repeated bigrams
     ]
     front = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, _text string"
+        list(enumerate(texts)), "doc_id long, text string"
     )
+    scorer = ngram_nll_scorer(*model)(F.col("text"))
     got = {
-        r["doc_id"]: (r["_n_bigrams"], r["nll"])
-        for r in corpus._nll_join_score(front, model).collect()
-    }
-    scorer = ngram_nll_scorer(*model)(F.col("_text"))
-    want = {
         r["doc_id"]: (r["s"]["n_bigrams"], r["s"]["nll"])
         for r in front.select("doc_id", scorer.alias("s")).collect()
     }
-    assert got == want
-    assert got[0] == (0, 0.0) and got[1] == (0, 0.0)
-    assert got[5][0] == 5  # occurrences, not distinct bigrams
-
-
-def test_nll_join_gate_streaming_watermark_replay(spark, tmp_path):
-    """The join form in the STREAMING deployment it is documented for:
-    the watermark moves before the scorer, the per-doc re-group
-    aggregates on (ingest_ts, doc_id), and the digest dedup chains
-    downstream as a second stateful operator. Pins: (a) admitted nll
-    values are bit-equal to the batch UDF form; (b) a cross-batch
-    duplicate COLLAPSES to one admission (representative arbitrary —
-    copies can emit from the agg in the same flush batch, so the
-    batch-dedup caveat applies, not first-arrival identity); (c) a
-    row whose ingest_ts the watermark never passes does NOT emit (the
-    documented append-mode aggregation latency trade)."""
-    import os
-
-    from wikitrender_spark.plans.pipeline_queries import ngram_model
-    from wikitrender_spark.sources.replay import write_ordered_chunks
-    from wikitrender_spark.streaming import corpus
-
-    sch = (
-        "doc_id long, text string, lang string, source string, "
-        "n_chars long, ingest_ts timestamp"
-    )
-    base = spark.read.parquet(
-        os.path.join(SF_DIR, "documents.parquet")
-    ).limit(30)
-    model = ngram_model(base)
-    t0 = dt.datetime(2026, 1, 1)
-    withts = base.withColumn("ingest_ts", F.lit(t0))
-    admitted_rows = (
-        base.join(
-            corpus.corpus_admission_stream(base).select("doc_id"), "doc_id"
-        )
-        .orderBy("doc_id")
-        .limit(2)
-        .collect()
-    )
-    assert len(admitted_rows) == 2
-    orig, flush_seed = admitted_rows
-    # batch 2: a copy of an admitted doc's content 30 s later; batch 3:
-    # a gate-passing row 700 s later whose event time advances the
-    # watermark past t0 (700 - 600 > 0), flushing every t0 group out of
-    # the append-mode aggregation — itself never emitted (nothing ever
-    # passes ITS timestamp)
-    dup = spark.createDataFrame(
-        [(777_777, orig["text"], orig["lang"], orig["source"],
-          orig["n_chars"], t0 + dt.timedelta(seconds=30))], sch)
-    flush = spark.createDataFrame(
-        [(888_888, flush_seed["text"], flush_seed["lang"],
-          flush_seed["source"], flush_seed["n_chars"],
-          t0 + dt.timedelta(seconds=700))], sch)
-    chunk_dir = str(tmp_path / "nll_join_chunks")
-    write_ordered_chunks((withts, dup, flush), chunk_dir)
-    stream = read_ordered_chunks(spark, sch, chunk_dir)
-    out = corpus.corpus_admission_stream_within_watermark(
-        stream, horizon="10 minutes",
-        nll_model=model, max_unit_nll=50.0, nll_gate="join",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("nll_join_wm")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("nll_join_wm").collect()
-    spark.catalog.dropTempView("nll_join_wm")
-    got_ids = {r["doc_id"] for r in got}
-    # (c) the flush row's own group never passes the watermark
-    assert 888_888 not in got_ids
-    # (b) digest collapse: exactly ONE of {original, copy} admitted
-    assert len({orig["doc_id"], 777_777} & got_ids) == 1
-    # (a) bit-equal nll against the batch UDF form, keyed by digest-
-    # equivalent doc (the copy carries the original's text)
     want = {
-        r["doc_id"]: r["nll"]
-        for r in corpus.corpus_admission_stream(
-            base, nll_model=model, max_unit_nll=50.0
-        ).collect()
+        0: (0, 0.0),
+        1: (0, 0.0),
+        2: (0, 0.0),
+        3: (2, 0.0 + 1.0 * (ln(5) - ln(3)) + 1.0 * (ln(7) - ln(3))),
+        4: (1, 0.0 + 1.0 * (ln(5) - ln(1))),
+        # (qq, aa) sorts before (zz, qq); both left words unseen
+        5: (2, 0.0 + 1.0 * (ln(3) - ln(1)) + 1.0 * (ln(3) - ln(1))),
+        # 5 occurrences: (aa, bb) x3 then (bb, aa) x2
+        6: (5, 0.0 + 3.0 * (ln(5) - ln(3)) + 2.0 * (ln(7) - ln(3))),
     }
-    got_nll = {
-        (r["doc_id"] if r["doc_id"] != 777_777 else orig["doc_id"]): r["nll"]
-        for r in got
-    }
-    assert set(got_nll) == set(want)
-    for d, nll in want.items():
-        assert got_nll[d] == nll, (d, got_nll[d].hex(), nll.hex())
-    # the documented column order (ts after lang) holds on the join path
-    assert out.columns[:6] == [
-        "doc_id", "lang", "ingest_ts", "n_tokens", "quality", "nll"
-    ]
-
-
-def test_nll_join_gate_composes_with_cards_and_extended_pii(spark):
-    """The join gate must compose with the other two admission options
-    exactly like the UDF gate: same columns in the same documented
-    order (nll after quality; card counts before the per-pattern
-    counts), same admitted set, bit-equal nll — the
-    _admission_column_order reorder is where a drift would hide."""
-    import os
-
-    from wikitrender_spark.functions.text import PII_PATTERNS_EXTENDED
-    from wikitrender_spark.plans.pipeline_queries import ngram_model
-    from wikitrender_spark.streaming import corpus
-
-    base = spark.read.parquet(
-        os.path.join(SF_DIR, "documents.parquet")
-    ).limit(120)
-    model = ngram_model(base)
-    kw = dict(
-        patterns=PII_PATTERNS_EXTENDED,
-        scrub_cards_first=True,
-        nll_model=model,
-        max_unit_nll=50.0,
-    )
-    udf = corpus.corpus_admission_stream(base, **kw)
-    join = corpus.corpus_admission_stream(base, **kw, nll_gate="join")
-    assert join.columns == udf.columns
-    cols = join.columns
-    assert cols.index("quality") < cols.index("nll")
-    assert cols.index("nll") < cols.index("n_card_candidates")
-    assert cols.index("n_cards") < cols.index("n_email")
-    u = {r["doc_id"]: r for r in udf.collect()}
-    j = {r["doc_id"]: r for r in join.collect()}
-    assert set(u) == set(j) and u
-    for d in u:
-        assert j[d]["nll"] == u[d]["nll"]
-        assert j[d]["redacted"] == u[d]["redacted"]
+    # exact float equality ON PURPOSE: the bit contract is the test
+    assert got == want
 
 
 def test_corpus_admission_neardup_chain(spark, tmp_path):
@@ -1161,30 +1016,6 @@ def test_corpus_admission_neardup_chain(spark, tmp_path):
     for d, (nf, checked) in got.items():
         if checked:
             assert nf == 4, (d, nf)
-
-
-def test_nll_join_gate_guards(spark):
-    """The unbounded streaming variant must REFUSE the join form (an
-    append-mode aggregation needs event time) with a pointer to the
-    watermark variant, and a typo'd nll_gate must error, not silently
-    run the UDF path."""
-    from wikitrender_spark.streaming import corpus
-
-    model = ({}, {}, 1)
-    stream = spark.readStream.format("rate").load()
-    with pytest.raises(ValueError, match="within_watermark"):
-        corpus.corpus_admission_stream(
-            stream, nll_model=model, nll_gate="join"
-        )
-    batch = spark.createDataFrame(
-        [(0, "en", "x")], "doc_id long, lang string, text string"
-    )
-    with pytest.raises(ValueError, match="nll_gate"):
-        corpus.corpus_admission_stream(batch, nll_model=model, nll_gate="jvm")
-    with pytest.raises(ValueError, match="nll_gate"):
-        corpus.corpus_admission_stream_within_watermark(
-            batch, nll_model=model, nll_gate="jvm"
-        )
 
 
 def test_corpus_admission_all_options_compose(spark, tmp_path):
@@ -1407,10 +1238,9 @@ def test_corpus_admission_watermark_readmits_expired_drops_live(spark, tmp_path)
 def test_corpus_admission_full_option_chain(spark, tmp_path):
     """The FULL-OPTION production configuration, correctness-pinned
     (round 14 — the configuration tools/corpus_throughput_probe.py
-    --full prices): cards-first scrub + EXTENDED PII + the JVM
-    join-form NLL gate + near-dup band admission + digest dedup —
-    FOUR engine-native stateful operators under one event-time
-    watermark. Pins, in stage order: (a) the NLL gate bites (a planted
+    --full prices): cards-first scrub + EXTENDED PII + the NLL gate +
+    near-dup band admission + digest dedup — THREE engine-native
+    stateful operators under one event-time watermark. Pins, in stage order: (a) the NLL gate bites (a planted
     word-salad doc with unseen transitions exceeds the training
     corpus's max unit NLL and is rejected); (b) near-dup admission
     runs over the REDACTED text — a copy of an admitted doc differing
@@ -1522,16 +1352,8 @@ def test_corpus_admission_full_option_chain(spark, tmp_path):
                 # the NLL outlier: unseen transitions around every token
                 row(603, salad, 30),
             ]),
-            # STAGGERED watermark advancement — the property this test
-            # DISCOVERED (now documented on the chain's docstring): in
-            # the join form the NLL re-group emits rows only at
-            # watermark release, so docs from different ingest batches
-            # whose timestamps fall in ONE release interval reach the
-            # band stage together and race same-batch (the first draft
-            # used a single flush and watched doc 604 arbitrarily beat
-            # 490). Advancing the watermark past t0+10 FIRST commits
-            # the originals' bands a batch before the blockers emit,
-            # restoring deterministic cross-batch blocking.
+            # two flush rows advance the watermark in steps past every
+            # earlier ingest time; neither passes its own timestamp
             mk([row(998, fseed["text"], 615)]),
             mk([row(999, fseed["text"], 700)]),
         ),
@@ -1545,7 +1367,6 @@ def test_corpus_admission_full_option_chain(spark, tmp_path):
         scrub_cards_first=True,
         nll_model=model,
         max_unit_nll=float(ceiling),
-        nll_gate="join",
         neardup=True,
     )
     assert out.columns[-2:] == ["n_fresh_bands", "neardup_checked"]
@@ -1574,7 +1395,7 @@ def test_corpus_admission_full_option_chain(spark, tmp_path):
     assert 604 not in got   # PII-only variant: band stage blocks (b)
     assert 601 not in got   # near-dup (+1 word): band stage blocks (c)
     assert 602 not in got   # exact raw copy: blocked (c)
-    assert 603 not in got   # word-salad: the join-form NLL gate bites (a)
+    assert 603 not in got   # word-salad: the NLL gate bites (a)
     assert 998 not in got and 999 not in got  # flush rows never pass (e)
     for r in got.values():
         if r["neardup_checked"]:

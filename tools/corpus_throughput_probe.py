@@ -146,87 +146,6 @@ def drain_once(spark, chunk_dir: str, ckpt: str) -> tuple[float, int]:
     return elapsed, state_rows
 
 
-def pad_model(
-    model: tuple[dict, dict, int], n_bigrams: int, fanout: int = 50
-) -> tuple[dict, dict, int]:
-    """Grow the corpus-trained add-one bigram model to >= n_bigrams
-    entries with deterministic synthetic vocabulary (round 15, VERDICT
-    r14 next-round #3: every prior UDF-vs-join pricing point used the
-    driver corpus's ~31-word model, where shipping the Python dict to
-    every worker is free — the 'join form is the large-model scale
-    path' claim needed a measured point at realistic model size).
-    Synthetic left words 'zsyml<i>' each carry `fanout` right
-    neighbors 'zsymr<j>' with small varied counts; left_u and the
-    per-entry (U, B) stay mutually consistent, and v grows by the
-    count of new distinct words, so the padded model is a VALID model
-    of a larger corpus — both scorer forms consume it through their
-    normal paths (the UDF pickles the full dict per executor; the join
-    form broadcasts the full relations). Real corpus bigrams are kept,
-    so documents still hit trained entries; absolute NLL values shift
-    with v (larger vocabulary = different smoothing), identically for
-    both forms — the bit-compat contract is unaffected."""
-    bigram_u_b, left_u, v = model
-    bigram_u_b, left_u = dict(bigram_u_b), dict(left_u)
-    new_words = set()
-    i = 0
-    while len(bigram_u_b) < n_bigrams:
-        w1 = f"zsyml{i}"
-        entries = [(f"zsymr{j}", 1 + (i + j) % 7) for j in range(fanout)]
-        u = sum(b for _w2, b in entries)
-        for w2, b in entries:
-            bigram_u_b[(w1, w2)] = (u, b)
-            new_words.add(w2)
-        left_u[w1] = u
-        new_words.add(w1)
-        i += 1
-    return bigram_u_b, left_u, int(v) + len(new_words)
-
-
-def nll_gate_compare(
-    spark, work: str, batch_size: int, model_bigrams: int = 0
-) -> dict:
-    """Round-13 measurement (VERDICT r12 ask #2's 'measured throughput
-    point beside the 4,046 docs/s UDF number'): the SAME replicated
-    corpus through the admission chain in BATCH mode — the join form's
-    declared deployment — under three gates: none, the Arrow UDF
-    scorer, and the JVM join form (_nll_join_score). Batch mode because
-    that is the stated trade (corpus.py: 'the join form for
-    batch-heavy ingest'); each configuration writes to a noop sink,
-    cold pass excluded, warm pass reported."""
-    from wikitrender_spark.plans.pipeline_queries import ngram_model
-
-    chunk_dir = build_chunks(spark, work, batch_size)
-    docs = spark.read.schema(DOCS_SCHEMA).option(
-        "recursiveFileLookup", "true"
-    ).parquet(chunk_dir)
-    total = N_CHUNKS * batch_size
-    model = ngram_model(load_table(spark, SF_DIR, "documents"))
-    if model_bigrams:
-        model = pad_model(model, model_bigrams)
-    out = {}
-    for gate, kwargs in (
-        ("none", {}),
-        ("udf", {"nll_model": model, "max_unit_nll": 50.0}),
-        ("join", {"nll_model": model, "max_unit_nll": 50.0,
-                  "nll_gate": "join"}),
-    ):
-        times = []
-        for _ in range(2):  # pass 0 cold (excluded), pass 1 warm
-            t0 = time.monotonic()
-            corpus_admission_stream(docs, **kwargs).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            times.append(time.monotonic() - t0)
-        out[gate] = {
-            "cold_s": round(times[0], 2),
-            "warm_s": round(times[1], 2),
-            "warm_docs_per_s": round(total / times[1], 0),
-        }
-    out["docs_total"] = total
-    out["model_bigrams"] = len(model[0])
-    return out
-
-
 #: drain cap (s): the 100k-doc near-dup/full-chain points legitimately
 #: run past 600 s at the measured ~1.3-1.5k docs/s front; a capped
 #: drain still fails LOUD, just later
@@ -347,21 +266,19 @@ def neardup_throughput(spark, work: str, batch_size: int) -> dict:
     return out
 
 
-def full_chain_throughput(
-    spark, work: str, batch_size: int, nll_gate: str
-) -> dict:
+def full_chain_throughput(spark, work: str, batch_size: int) -> dict:
     """Round-14 measurement (VERDICT r13 next-round #3, the r12 ask #6
     carryover sharpened): the FULL-OPTION production admission chain —
     Luhn card scrub FIRST, EXTENDED PII patterns, the n-gram NLL
-    perplexity gate (udf or join form), AND the MinHash/LSH near-dup
+    perplexity gate, AND the MinHash/LSH near-dup
     band admission — composed through
     corpus_admission_stream_within_watermark, i.e. every dial a
     production curation deployment turns on at once. Until this
     measurement the composed cost was only inferable by multiplying
     separately-measured factors; this records it directly, with the
     engine's own per-stage state telemetry (band-bucket dedup ->
-    per-doc re-group -> digest dedup, plus the NLL re-group when
-    nll_gate='join'). Cold pass excluded, warm pass is the number."""
+    per-doc re-group -> digest dedup). Cold pass excluded, warm pass
+    is the number."""
     from wikitrender_spark.functions.text import PII_PATTERNS_EXTENDED
     from wikitrender_spark.plans.pipeline_queries import ngram_model
     from wikitrender_spark.streaming.corpus import (
@@ -369,7 +286,7 @@ def full_chain_throughput(
     )
 
     model = ngram_model(load_table(spark, SF_DIR, "documents"))
-    ts_dir = build_ts_chunks(spark, work, batch_size, f"full_{nll_gate}")
+    ts_dir = build_ts_chunks(spark, work, batch_size, "full")
     total = N_CHUNKS * batch_size
     out = {}
     for tag in ("cold", "warm"):
@@ -382,11 +299,10 @@ def full_chain_throughput(
                 scrub_cards_first=True,
                 nll_model=model,
                 max_unit_nll=50.0,
-                nll_gate=nll_gate,
                 neardup=True,
             ),
             ts_dir,
-            os.path.join(work, f"full_{nll_gate}_{batch_size}_{tag}"),
+            os.path.join(work, f"full_{batch_size}_{tag}"),
         )
         out[tag] = {
             "s": round(elapsed, 2),
@@ -394,7 +310,6 @@ def full_chain_throughput(
             "stages": stages,
         }
     out["docs_total"] = total
-    out["nll_gate"] = nll_gate
     return out
 
 
@@ -504,7 +419,6 @@ def soak_state_bounded(
     n_batches: int = 12,
     horizon: str = "2 hours",
     spacing_s: int = 1800,
-    nll_gate: str = "udf",
     state_store: str = "default",
 ) -> dict:
     """Round-15 soak: the FULL-OPTION admission chain (cards-first
@@ -521,9 +435,7 @@ def soak_state_bounded(
     telemetry, with the plateau adjudicated by soak_plateau_summary.
     Replicated docs are globally UNIQUE (build_chunks' suffix-word
     construction), so nothing dedups away: any plateau is eviction,
-    never collapse. nll_gate="join" soaks the FOUR-stateful-operator
-    form (the NLL re-group joins the chain) — the large-model scale
-    path's state must bound the same way. state_store="rocksdb" runs
+    never collapse. state_store="rocksdb" runs
     the drain under the RocksDB provider — the store a real 100 TB
     deployment uses (spill-to-disk state instead of executor heap);
     the provider conf is set for the drain and restored after."""
@@ -557,11 +469,10 @@ def soak_state_bounded(
                 scrub_cards_first=True,
                 nll_model=model,
                 max_unit_nll=50.0,
-                nll_gate=nll_gate,
                 neardup=True,
             ),
             ts_dir,
-            os.path.join(work, f"soak_{batch_size}_{nll_gate}_{state_store}"),
+            os.path.join(work, f"soak_{batch_size}_{state_store}"),
         )
     finally:
         if state_store == "rocksdb":
@@ -576,7 +487,6 @@ def soak_state_bounded(
         "batch_size": batch_size,
         "horizon": horizon,
         "spacing_s": spacing_s,
-        "nll_gate": nll_gate,
         "s": round(elapsed, 2),
         "docs_per_s": round(total / elapsed, 0),
         "per_batch": batches,
@@ -591,7 +501,6 @@ def soak_restart_equivalence(
     n_batches: int = 12,
     horizon: str = "2 hours",
     spacing_s: int = 1800,
-    nll_gate: str = "udf",
     restart_after: int = 9,
 ) -> dict:
     """Soak x recovery composition (round 16, VERDICT r15 next-round
@@ -639,7 +548,6 @@ def soak_restart_equivalence(
             scrub_cards_first=True,
             nll_model=model,
             max_unit_nll=50.0,
-            nll_gate=nll_gate,
             neardup=True,
         )
         return (
@@ -704,7 +612,6 @@ def soak_restart_equivalence(
         "n_batches": n_batches,
         "horizon": horizon,
         "spacing_s": spacing_s,
-        "nll_gate": nll_gate,
         "restart_after_batches": killed_after,
         "phase1_batches": len([
             b for b in phase1 if b["input_rows"] > 0
@@ -727,9 +634,6 @@ def soak_restart_equivalence(
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sizes", default="1250,5000,20000")
-    ap.add_argument("--nll", action="store_true",
-                    help="compare NLL gate forms (none/udf/join) in "
-                    "batch mode at the first --sizes batch size")
     ap.add_argument("--neardup", action="store_true",
                     help="measure the streaming near-dup admission at "
                     "EVERY --sizes batch size (round 14: the curve, "
@@ -737,10 +641,7 @@ def main() -> None:
     ap.add_argument("--full", action="store_true",
                     help="measure the FULL-OPTION admission chain "
                     "(cards-first + extended PII + NLL gate + near-dup) "
-                    "at every --sizes batch size; --nll-gate picks the "
-                    "scorer form")
-    ap.add_argument("--nll-gate", default="udf", choices=("udf", "join"),
-                    help="NLL gate form for --full / --soak")
+                    "at every --sizes batch size")
     ap.add_argument("--soak", action="store_true",
                     help="drain the full-option chain over many "
                     "micro-batches whose ingest time spans several "
@@ -765,11 +666,6 @@ def main() -> None:
                     choices=("default", "rocksdb"),
                     help="state-store provider for --soak (rocksdb = "
                     "the 100 TB deployment's spill-to-disk store)")
-    ap.add_argument("--nll-model-bigrams", type=int, default=0,
-                    help="pad the corpus-trained model to this many "
-                    "bigram entries with synthetic vocabulary before "
-                    "the --nll comparison (0 = corpus model as-is) — "
-                    "the large-model pricing point")
     args = ap.parse_args()
     sizes = [int(s) for s in args.sizes.split(",")]
 
@@ -780,7 +676,7 @@ def main() -> None:
         try:
             res = soak_restart_equivalence(
                 spark, work, sizes[0], args.soak_batches,
-                args.soak_horizon, args.soak_spacing, args.nll_gate,
+                args.soak_horizon, args.soak_spacing,
                 args.soak_restart_after,
             )
         finally:
@@ -795,8 +691,7 @@ def main() -> None:
         try:
             res = soak_state_bounded(
                 spark, work, sizes[0], args.soak_batches,
-                args.soak_horizon, args.soak_spacing, args.nll_gate,
-                args.state_store,
+                args.soak_horizon, args.soak_spacing, args.state_store,
             )
         finally:
             shutil.rmtree(work, ignore_errors=True)
@@ -810,15 +705,12 @@ def main() -> None:
         for bs in sizes:
             work = tempfile.mkdtemp(prefix="corpus_full_")
             try:
-                results[str(bs)] = full_chain_throughput(
-                    spark, work, bs, args.nll_gate
-                )
+                results[str(bs)] = full_chain_throughput(spark, work, bs)
             finally:
                 shutil.rmtree(work, ignore_errors=True)
         print(json.dumps(
             {"metric": "full_chain_admission_throughput",
-             "sf_dir": SF_DIR, "nll_gate": args.nll_gate,
-             "results": results}
+             "sf_dir": SF_DIR, "results": results}
         ))
         return
     if args.neardup:
@@ -832,19 +724,6 @@ def main() -> None:
         print(json.dumps(
             {"metric": "neardup_admission_throughput", "sf_dir": SF_DIR,
              "results": results}
-        ))
-        return
-    if args.nll:
-        work = tempfile.mkdtemp(prefix="corpus_nll_")
-        try:
-            res = nll_gate_compare(
-                spark, work, sizes[0], args.nll_model_bigrams
-            )
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-        print(json.dumps(
-            {"metric": "nll_gate_throughput", "sf_dir": SF_DIR,
-             "batch_docs": sizes[0] * N_CHUNKS, "gates": res}
         ))
         return
     results = {}

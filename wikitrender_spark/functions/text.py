@@ -331,39 +331,6 @@ def scrub_pii(
     return redacted, counts
 
 
-def _bpe_sql_lit(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def bpe_apply_sql(word_sql: str, merges: tuple[tuple[str, str], ...]) -> str:
-    """SQL text of bpe_apply_word's merge chain over the SQL expression
-    `word_sql` — the same nested aggregate levels, built as ONE string
-    for F.expr (round 16; the embedding_band_keys py4j lesson): the
-    Column form pays hundreds of py4j round-trips building 20 levels of
-    struct/when/concat objects (~1.8-2.3 s of query CONSTRUCTION per
-    call at the trainer's 20 merges), the string form ~2. The expression
-    Catalyst sees is the same (when-chain == CASE WHEN, aliased struct
-    == named struct), so evaluation and results are bit-identical —
-    pinned against the Column form in tests/test_pipeline_ops.py."""
-    sym = f"array_remove(split({word_sql}, ''), '')"
-    for left, right in merges:
-        lt, rt = _bpe_sql_lit(left), _bpe_sql_lit(right)
-        both = _bpe_sql_lit(left + right)
-        sym = (
-            f"aggregate({sym}, "
-            "struct(CAST(array() AS ARRAY<STRING>) AS out, '' AS pend), "
-            "(acc, s) -> CASE "
-            "WHEN acc.pend = '' THEN struct(acc.out AS out, s AS pend) "
-            f"WHEN acc.pend = {lt} AND s = {rt} "
-            f"THEN struct(concat(acc.out, array({both})) AS out, '' AS pend) "
-            "ELSE struct(concat(acc.out, array(acc.pend)) AS out, s AS pend) "
-            "END, "
-            "acc -> CASE WHEN acc.pend = '' THEN acc.out "
-            "ELSE concat(acc.out, array(acc.pend)) END)"
-        )
-    return sym
-
-
 def bpe_apply_word(word: Column | str, merges: tuple[tuple[str, str], ...]) -> Column:
     """Apply an ordered BPE merge table to ONE word, entirely JVM-side:
     start from character symbols and, for each (left, right) merge in
@@ -374,43 +341,34 @@ def bpe_apply_word(word: Column | str, merges: tuple[tuple[str, str], ...]) -> C
     symbol never re-merges within the same pass). Later merges see the
     SYMBOLS earlier merges built, so second-round entries like
     ("th","e") compose as in a real tokenizer. Returns array<string> of
-    final symbols whose concatenation is always the original word.
+    final symbols whose concatenation is always the original word; NULL
+    in, NULL out. `word` is a Column or a column name.
 
-    Implementation: one struct fold (out array + pending symbol) per
-    merge, nested in rank order, with the pend flush in the fold's
-    FINISH lambda. The finish lambda matters more than it looks: the
-    first cut flushed pend outside the fold via
-    when(folded.pend=='', folded.out).otherwise(...), which references
-    the folded expression THREE times per level — the expression tree
-    tripled per merge and 3^20 nodes OOM'd the DRIVER during py4j
-    Column construction (the tx_winnowing/embedding_band_keys
-    inlining-blowup class, here exponential). Inside finish, acc is a
-    lambda VARIABLE, so each level references its input expression
-    exactly once and the tree grows linearly in merge count.
-    Evaluation is len(merges) interpreted passes per word — measured
-    23.6 s for the full sf0.1 corpus (5,000 docs, 1.22M chars, the
-    trainer's 20 merges; 0.785 symbols/char). Zero shuffle, so it
-    scales row-parallel, but a real vocabulary (tens of thousands of
-    merges) makes the per-merge-pass shape wrong — at that size use
-    bpe_encode_fast, the dict-backed Pandas-UDF encoder (equivalence-
-    pinned against this chain, measured ~1,250x past ~1k merges in
-    tools/bpe_probe.py). This HOF form stays the pinned small-table
-    contract. Completes the tokenizer story the tx_bpe_merges trainer
+    Implementation: the table is ONE array<struct<l, r>> literal and the
+    chain is ONE fold over it, aggregate(merges, symbols, (syms, m) ->
+    pass of m over syms), so the expression has the same size for every
+    table (build + analyze ~0.2 s at the trainer's 20 merges). Each
+    pass is a struct fold (out array + pending symbol) whose pend flush
+    sits in the FINISH lambda: acc is a lambda variable there, so the
+    pass references its input exactly once. The merge strings reach Catalyst as literals, never
+    through the SQL parser, so quotes and backslashes need no escaping
+    and `spark.sql.parser.escapedStringLiterals` cannot change the
+    result. Evaluation is len(merges) interpreted passes per word, so
+    callers run it over DISTINCT words (q_bpe_encode) rather than per
+    occurrence. Completes the tokenizer story the tx_bpe_merges trainer
     starts: train merges -> encode -> pack."""
-    # round 16: a str argument is a SQL expression — take the
-    # one-string construction path (bpe_apply_sql) that skips the
-    # per-level py4j tree building; the Column path below stays as the
-    # reference form the equivalence test compares against
-    if isinstance(word, str):
-        return F.expr(bpe_apply_sql(word, merges))
-    # array_remove('') normalizes split's empty-string artifacts so the
-    # zero-merge path agrees with the folded one (an empty word is []
-    # on both, never ['']) and neither depends on engine-version
-    # trailing-empty split semantics (self-review r11)
+    # array_remove('') drops split's empty-string artifacts: an empty
+    # word is [] (never ['']) whatever the engine's trailing-empty
+    # split semantics
     symbols = F.array_remove(F.split(word, ""), "")
-    for left, right in merges:
-        symbols = F.aggregate(
-            symbols,
+    table = F.array(
+        *(F.struct(F.lit(left).alias("l"), F.lit(right).alias("r"))
+          for left, right in merges)
+    ).cast("array<struct<l:string,r:string>>")
+
+    def one_pass(syms: Column, m: Column) -> Column:
+        return F.aggregate(
+            syms,
             F.struct(
                 F.array().cast("array<string>").alias("out"),
                 F.lit("").alias("pend"),
@@ -420,10 +378,10 @@ def bpe_apply_word(word: Column | str, merges: tuple[tuple[str, str], ...]) -> C
                 F.struct(acc["out"].alias("out"), s.alias("pend")),
             )
             .when(
-                (acc["pend"] == F.lit(left)) & (s == F.lit(right)),
+                (acc["pend"] == m["l"]) & (s == m["r"]),
                 F.struct(
                     F.concat(
-                        acc["out"], F.array(F.lit(left + right))
+                        acc["out"], F.array(F.concat(m["l"], m["r"]))
                     ).alias("out"),
                     F.lit("").alias("pend"),
                 ),
@@ -438,7 +396,8 @@ def bpe_apply_word(word: Column | str, merges: tuple[tuple[str, str], ...]) -> C
                 acc["pend"] == F.lit(""), acc["out"]
             ).otherwise(F.concat(acc["out"], F.array(acc["pend"]))),
         )
-    return symbols
+
+    return F.aggregate(table, symbols, one_pass)
 
 
 def bpe_encode(text: Column, merges: tuple[tuple[str, str], ...]) -> Column:
@@ -451,128 +410,6 @@ def bpe_encode(text: Column, merges: tuple[tuple[str, str], ...]) -> Column:
     return F.flatten(
         F.transform(tokens(text), lambda w: bpe_apply_word(w, merges))
     )
-
-
-def bpe_encode_fast(
-    text: Column, merges: tuple[tuple[str, str], ...]
-) -> Column:
-    """BPE-encode a document with a dict-backed Pandas UDF — the
-    production path for REAL vocabularies that bpe_apply_word's
-    docstring names (VERDICT r11 ask #2). The HOF chain evaluates
-    len(merges) interpreted passes per word (measured 23.6 s for the
-    sf0.1 corpus at the trainer's 20 merges — ~1.18 s/merge, linear in
-    table size, so a 50k-merge vocabulary is structurally wrong there);
-    this path is the ONE place heavy per-row Python work is the
-    documented right tool: per-word cost scales with the merges that
-    actually APPLY to that word (dict lookups against adjacent pairs),
-    not with the table size, and a per-batch word cache collapses
-    repeated words (the driver corpus draws from a 31-word vocabulary,
-    so the cache absorbs nearly everything; the probe therefore also
-    measures a seeded random-word corpus with distinct ratio 1.0 —
-    zero cache hits — as the honest worst case).
-
-    Semantics are EXACTLY bpe_apply_word's pinned contract — for each
-    merge in rank order, one left-to-right non-overlapping pass — via
-    cursor simulation: repeatedly find the smallest merge rank >= the
-    cursor among the word's adjacent symbol pairs, run that single
-    pass, and advance the cursor past it (ranks skipped had no
-    occurrence, so their passes are provably no-ops). The cursor (not
-    a bare min-rank-repeat loop a la the common GPT-2 encoder) keeps
-    equivalence on ILL-FORMED tables too, where a later merge can
-    create an occurrence of an EARLIER pair that the sequential pass
-    must NOT revisit (e.g. table ((ab,c),(a,b)) on "abc": sequential
-    yields [ab, c]; min-rank-repeat would wrongly produce [abc]); on
-    well-formed trained tables the two coincide. Duplicate pairs in
-    the table keep per-rank multiplicity (rank map holds sorted rank
-    lists). Tokenization mirrors tokens() with the JAVA \\s class
-    ([ \\t\\n\\x0b\\f\\r] — ASCII-only; Python's \\s would also split
-    on Unicode whitespace like \\xa0 and silently diverge from the
-    JVM path on non-ASCII corpora).
-
-    Arrow-batched via pandas_udf; zero shuffle, embarrassingly
-    parallel — the 100 TB shape is the same map-only pass as
-    bpe_encode, traded JVM codegen for per-row Python at the point
-    where table size, not row count, dominates. Equivalence against
-    bpe_apply_word is pinned in
-    tests/test_pipeline_ops.py::test_bpe_encode_fast_matches_hof
-    (plus the ill-formed/duplicate-table pins); measured
-    (tools/bpe_probe.py, local[32]): sf0.1 corpus at the trainer's 20
-    merges HOF 22.4 s vs fast 1.59 s (14x); on the cache-hostile
-    synthetic corpus (distinct ratio 1.0) a well-formed 1,176-merge
-    table encodes in 0.39 s vs the HOF chain's extrapolated ~490 s at
-    its measured 0.417 s/merge — the per-merge-pass cost is the
-    structural wall, not a constant factor. At the standard 50k-merge
-    vocabulary budget (layered well-formed table, same session as a
-    1,176-merge reference run): 2.25 s vs 1.71 s — cost is ~flat in
-    table size, the UDF closure pickles to 0.45 MB, and the HOF
-    extrapolation is ~27,000 s."""
-    import re
-
-    from pyspark.sql.functions import pandas_udf
-
-    merges = tuple(tuple(p) for p in merges)
-    rank_lists: dict[tuple[str, str], list[int]] = {}
-    for i, pair in enumerate(merges):
-        rank_lists.setdefault(pair, []).append(i)
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    def apply_word(word: str) -> list[str]:
-        symbols = list(word)
-        cursor = 0
-        while len(symbols) > 1:
-            best = None
-            for pair in zip(symbols, symbols[1:]):
-                ranks = rank_lists.get(pair)
-                if ranks is None:
-                    continue
-                for r in ranks:
-                    if r >= cursor:
-                        if best is None or r < best:
-                            best = r
-                        break
-            if best is None:
-                break
-            left, right = merges[best]
-            out: list[str] = []
-            i = 0
-            n = len(symbols)
-            while i < n:
-                if (
-                    i + 1 < n
-                    and symbols[i] == left
-                    and symbols[i + 1] == right
-                ):
-                    out.append(left + right)
-                    i += 2
-                else:
-                    out.append(symbols[i])
-                    i += 1
-            symbols = out
-            cursor = best + 1
-        return symbols
-
-    @pandas_udf("array<string>")
-    def enc(texts: pd.Series) -> pd.Series:
-        cache: dict[str, list[str]] = {}
-        out = []
-        for t in texts:
-            if t is None:
-                # NULL in, NULL out — the HOF path's behavior (its
-                # split/transform chain propagates null)
-                out.append(None)
-                continue
-            syms: list[str] = []
-            for w in ws.split(t):
-                if not w:
-                    continue
-                got = cache.get(w)
-                if got is None:
-                    got = cache[w] = apply_word(w)
-                syms.extend(got)
-            out.append(syms)
-        return pd.Series(out)
-
-    return enc(text)
 
 
 def ngram_nll_scorer(bigram_u_b: dict, left_u: dict, v: int):

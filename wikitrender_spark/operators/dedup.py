@@ -968,13 +968,6 @@ def _bloom_bit(shingle, j: int):
     return ((shingle * a + b) % T.HASH_MOD) % BLOOM_M
 
 
-def _bloom_bit_sql(shingle: str, j: int) -> str:
-    """SQL rendering of _bloom_bit over a column reference — same
-    integer arithmetic, term for term."""
-    a, b = BLOOM_ROWS[j]
-    return f"((({shingle} * {a} + {b}) % {T.HASH_MOD}) % {BLOOM_M})"
-
-
 def _bloom_masks(ev_sh: DataFrame) -> list[list[int]]:
     """Fold the eval shingle set into the BLOOM_K M-bit rows and return
     them as BLOOM_K lists of M/64 signed 64-bit words — the bounded
@@ -1000,23 +993,25 @@ def _bloom_masks(ev_sh: DataFrame) -> list[list[int]]:
     return masks
 
 
-def _bloom_test_sql(shingle: str, masks: list[list[int]]) -> str:
-    """One SQL predicate: shingle bloom-hits iff EVERY row j's bit is
-    set in that row's mask words. Rendered as a string (the
-    pq/bpe_apply construction-cost precedent): per row, index the
-    16-word literal array by bit DIV 64 and test bit % 64 via
-    shiftright — O(1) per row, whole-stage codegen'd."""
-    tests = []
+def _bloom_test(shingle: Column, masks: list[list[int]]) -> Column:
+    """One predicate: shingle bloom-hits iff EVERY row j's bit is set in
+    that row's mask words. Per row, index the M/64-word literal array by
+    bit >> 6 and test bit % 64 with getbit — O(1) per row, whole-stage
+    codegen'd. The masks are data (the eval set's Bloom rows), so this
+    is built per call."""
+    hit = None
     for j in range(BLOOM_K):
-        bit = _bloom_bit_sql(shingle, j)
-        arr = ", ".join(f"{w}L" for w in masks[j])
-        word = (
-            f"element_at(array({arr}), CAST({bit} DIV 64 AS INT) + 1)"
+        bit = _bloom_bit(shingle, j)
+        words = F.array(*(F.lit(w) for w in masks[j])).cast("array<bigint>")
+        row_hit = (
+            F.getbit(
+                F.element_at(words, F.shiftright(bit, 6).cast("int") + 1),
+                (bit % 64).cast("int"),
+            )
+            == 1
         )
-        tests.append(
-            f"((shiftright({word}, CAST({bit} % 64 AS INT)) & 1) = 1)"
-        )
-    return " AND ".join(tests)
+        hit = row_hit if hit is None else hit & row_hit
+    return hit
 
 
 def bloom_decontamination_flags(docs: DataFrame) -> DataFrame:
@@ -1082,7 +1077,7 @@ def bloom_decontamination_flags(docs: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("n_shingles"),
             F.count("_ev").alias("n_exact_hits"),
             F.sum(
-                F.when(F.expr(_bloom_test_sql("shingle", masks)), 1)
+                F.when(_bloom_test(F.col("shingle"), masks), 1)
                 .otherwise(0)
             ).alias("n_bloom_hits"),
         )

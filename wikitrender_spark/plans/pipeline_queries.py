@@ -455,31 +455,28 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 20-row merge table rides a driver collect — the documented
     vocab-bounded MODEL hand-off (the ngram_model precedent:
     {BPE_TOP_PAIRS} rows of 2-char pairs, never data), because
-    bpe_apply_word builds one Catalyst aggregate expression per merge
-    and therefore needs the table as literals.
+    bpe_apply_word takes the table as one array<struct<l, r>> literal
+    and folds its passes over it.
 
-    Plan shape — DICTIONARY ENCODING (the round-14 revision of this
-    query's own first cut): BPE is a pure per-WORD function, so the
-    20-pass interpreted HOF runs over the corpus's DISTINCT words
-    (posexplode -> distinct -> bpe_apply_word), and documents
+    Plan shape — DICTIONARY ENCODING: BPE is a pure per-WORD function,
+    so the 20-pass interpreted fold runs over the corpus's DISTINCT
+    words (posexplode -> distinct -> bpe_apply_word), and documents
     re-assemble by a join + per-doc positional re-group
-    (array_sort(collect_list(struct(pos, syms))) -> flatten). The
-    first cut ran the HOF per word OCCURRENCE — measured 7.8 s solo /
-    9.06 s banded at sf0.1 (~400k occurrences x 20 passes); the
-    dictionary form evaluates the same chain over the vocabulary only
-    and re-assembly is one narrow shuffle. This is the JVM-side twin
-    of bpe_encode_fast's per-batch word cache (corpus-wide instead of
-    per-batch), and the 100 TB shape outright: the word->symbols
+    (array_sort(collect_list(struct(pos, syms))) -> flatten). Running
+    the fold per word OCCURRENCE measured 7.8 s solo at sf0.1 (~400k
+    occurrences x 20 passes); the dictionary form evaluates the same
+    chain over the vocabulary only and re-assembly is one narrow
+    shuffle. This is the 100 TB shape outright: the word->symbols
     relation is vocabulary-bounded (AQE broadcasts it at bench scale;
     a web-scale vocabulary falls back to a shuffle join on the word
-    key Catalyst already has). At a real 50k-merge vocabulary the
-    per-word encoder swaps to bpe_encode_fast (bit-equivalence pinned
-    in tests/test_pipeline_ops.py on THIS trained table and on the
-    ill-formed corner tables) — cost scales with applying merges, not
-    table size (tools/bpe_probe.py). No checkpoint needed: both
-    output columns read the re-group's materialized attribute, so
-    nothing re-runs the HOF (the r9/r13 re-inlining class is closed
-    by the aggregation boundary).
+    key Catalyst already has). Evaluation stays len(merges) passes per
+    distinct word, so a real 50k-merge vocabulary would need an
+    encoder whose cost follows the merges that apply to a word rather
+    than the table size; no query here trains more than
+    {BPE_TOP_PAIRS} merges. No checkpoint needed: both output columns
+    read the re-group's materialized attribute, so nothing re-runs the
+    fold (the r9/r13 re-inlining class is closed by the aggregation
+    boundary).
 
     Oracle (BPE_ENCODE_SQL): recomputes the merge table with the
     trainer's own CTE, then replays the EXACT sequential semantics in

@@ -50,7 +50,6 @@ def _gate_and_scrub(
     scrub_cards_first: bool = False,
     nll_model: tuple[dict, dict, int] | None = None,
     max_unit_nll: float | None = None,
-    defer_nll: bool = False,
 ) -> DataFrame:
     """The stateless front of the admission chain: language-consistency
     gate (predicted == labeled) + quality floor, then PII redaction,
@@ -73,45 +72,19 @@ def _gate_and_scrub(
     docs pass, the batch operator's convention). The nll rides the
     output for downstream lineage.
 
-    Cost (r12's measurement, SUPERSEDED by the r13 numbers two
-    paragraphs down): 10,691 docs/s without the gate, 4,046 with it —
-    read at the time as the per-doc Python scorer dominating; the r13
-    plan audit showed most of that gap was the scorer running on
-    pre-gate docs AND twice per survivor. The structural trade the
-    paragraph described is still real, just smaller: the
-    UDF form keeps the stream STATELESS (model in the closure); the
-    JVM alternative (explode bigrams -> stream-static join against
-    the model relation -> re-group per doc, _nll_join_score below —
-    implemented round 13, VERDICT r12 ask #2) moves the cost to a
-    shuffle plus an aggregation state per in-flight doc. Pick the UDF
-    when statelessness matters (this chain's default), the join form
-    for batch-heavy ingest via nll_gate="join" (ngram_nll is exactly
-    that plan in its one-pass train+score form).
-
-    MEASURED r13 (tools/corpus_throughput_probe.py --nll, 20k
-    replicated sf0.1 docs, batch mode, warm), AFTER this round's two
-    UDF-path plan fixes (score survivors only — ADVICE r12 low #3 —
-    and exactly once — the CollapseProject double-eval found by this
-    round's plan audit): no gate 11,180 docs/s, UDF 10,601, join
-    5,175. The honest reading: the r12 4,046 number was 62% plan
-    defect, not scorer cost — the fixed UDF path is within 5% of
-    ungated on this corpus (37.68% gate admission x single eval
-    shrinks the Python work ~5x), and the join form's shuffle +
-    re-group overhead now exceeds the residual Python cost at this
-    model size. The join form is the SCALE path, and since round 15
-    that is a MEASURED crossover, not a structural assertion
-    (VERDICT r14 next-round #3; tools/corpus_throughput_probe.py
-    --nll --nll-model-bigrams, same 20k-doc batch configuration, the
-    corpus model padded with valid synthetic vocabulary): at 10^5
-    model bigrams the UDF still wins (7,390 vs 4,702 docs/s, join =
-    0.64x), at 10^6 the UDF collapses 9.6x to 769 docs/s — the task
-    closure ships the full pickled dict to every Python worker —
-    while the join form holds 2,082 (join = 2.71x the UDF). The
-    crossover sits between 10^5 and 10^6 bigrams at this batch size;
-    a web-scale bigram LM (10^7+ — the CCNet deployment this trade
-    describes) sits far past it, where the broadcast becomes a
-    shuffle join on the bigram key and the UDF form stops fitting a
-    worker at all. Full table in BASELINE.md round 15.
+    Cost, MEASURED in rounds 13 and 15 (20k replicated sf0.1 docs,
+    batch mode, warm, local[32]): no gate 11,180 docs/s, UDF gate 10,601 — within 5% of
+    ungated, because the scorer runs on gate survivors only (37.68%
+    admission) and exactly once per survivor (the two plan rules
+    below). The model rides the task closure to every Python worker, so
+    cost grows with model size: at 10^5 bigrams the UDF held 7,390
+    docs/s, at 10^6 it fell to 769. A JVM join form (explode bigrams ->
+    broadcast model join -> per-doc re-group) was measured against it
+    at 5,175 / 4,702 / 2,082 docs/s for the corpus model / 10^5 / 10^6
+    bigrams and has since been deleted: it won only past a crossover
+    between 10^5 and 10^6 model bigrams, a size no caller trains, and
+    on a stream it moved emission to watermark release. A model of that size is the point to bring a
+    second scorer back (full table in BASELINE.md round 15).
 
     The scorer projects in a SECOND select AFTER the lang/quality
     filter (ADVICE r12 low #3): Spark extracts Python UDFs into an
@@ -119,11 +92,6 @@ def _gate_and_scrub(
     select, so scoring in the gate projection paid the dominant
     per-doc Python cost for documents the cheap JVM gate rejects.
     Filter first, then score survivors only.
-
-    `defer_nll` (internal, the join-form path): skip UDF scoring and
-    thread the raw text through as `_text` so _nll_join_score can
-    tokenize the gated survivors; the caller owns the NLL filter and
-    the documented column order.
 
     `scrub_cards_first` applies the Luhn card scrub BEFORE the PII
     table, per micro-batch — the pinned composition order (round 11,
@@ -151,7 +119,7 @@ def _gate_and_scrub(
         & (F.col("quality") >= ADMIT_MIN_QUALITY)
     )
     out_nll_cols = []
-    if nll_model is not None and not defer_nll:
+    if nll_model is not None:
         # second select AFTER the filter: the ArrowEvalPython node the
         # scorer extracts into now sits above the JVM gate, so only
         # survivors pay the per-doc Python cost (ADVICE r12 low #3).
@@ -193,11 +161,6 @@ def _gate_and_scrub(
             n_valid.cast("int").alias("n_cards"),
         ]
     redacted, counts = T.scrub_pii(scrub_input, patterns)
-    text_cols = (
-        [F.col("text").alias("_text")]
-        if defer_nll and nll_model is not None
-        else []
-    )
     return gated.select(
         "doc_id",
         "lang",
@@ -210,201 +173,7 @@ def _gate_and_scrub(
         *(counts[kind].cast("int").alias(f"n_{kind}")
           for kind, _, _ in patterns),
         redacted.alias("redacted"),
-        *text_cols,
     )
-
-
-def _nll_model_relations(spark, nll_model: tuple[dict, dict, int]):
-    """Materialize ngram_model's driver-side dicts as the two
-    broadcastable model relations the join-form scorer needs, with the
-    per-bigram nl PRECOMPUTED on the model rows (the batch plan's
-    discipline — pln evaluates only on vocab-bounded relations, never
-    per-occurrence; pln_py is bit-identical to the pln_sql the batch
-    twin runs, the portable contract): (bw1, bw2, bnl) for trained
-    bigrams, (lw1, lnl) for unseen bigrams with a trained left word
-    (nl = pln(u + v) - pln(0 + 1)), and the scalar default for unseen
-    left words (nl = pln(0 + v) - pln(1)). Bounded by vocabulary — the
-    same broadcastability argument as the batch plan's model join."""
-    from ..functions.portable import pln_py
-
-    bigram_u_b, left_u, v = nll_model
-    v = int(v)
-    pln1 = pln_py(1)
-    bg = spark.createDataFrame(
-        [
-            (w1, w2, pln_py(int(u) + v) - pln_py(int(b) + 1))
-            for (w1, w2), (u, b) in bigram_u_b.items()
-        ],
-        "bw1 string, bw2 string, bnl double",
-    )
-    lf = spark.createDataFrame(
-        [(w1, pln_py(int(u) + v) - pln1) for w1, u in left_u.items()],
-        "lw1 string, lnl double",
-    )
-    return bg, lf, pln_py(v) - pln1
-
-
-def _nll_join_score(
-    front: DataFrame,
-    nll_model: tuple[dict, dict, int],
-    group_keys: tuple[str, ...] = ("doc_id",),
-    text_col: str = "_text",
-) -> DataFrame:
-    """The JVM join-form perplexity scorer (round 13, VERDICT r12 ask
-    #2 — the alternative corpus.py:78-84 named): explode each gated
-    document's bigram occurrences, stream-static LEFT join them against
-    the broadcast model relations, and re-group per document with ONE
-    aggregation. Replaces the per-doc Python of ngram_nll_scorer with
-    JVM codegen + a broadcast hash join + one shuffle on `group_keys`;
-    the trade is an aggregation state per in-flight document (bounded
-    by the watermark in streaming — which is why the streaming caller
-    must group on the watermarked event-time column too).
-
-    BIT-COMPATIBLE with the UDF scorer by construction (pinned in
-    test_streaming.test_nll_join_gate_bit_matches_udf): tokenization is
-    the same Java \\s split (T.tokens), nl is portable.pln_sql over the
-    same add-one counts (pln_sql and the scorer's pln_py are the same
-    IEEE op sequence by the portable contract), and the per-doc sum
-    reproduces the scorer's exact fold order — occurrences collect into
-    a sorted array and a run-length fold adds float(xf) * nl once per
-    DISTINCT bigram in (w1, w2) order, left-to-right from 0.0. Unseen
-    bigrams back off exactly as add-one smoothing dictates: seen w1
-    scores pln(u + v) - pln(0 + 1), unseen w1 scores pln(0 + v) -
-    pln(1) — the coalesce chain below, no special cases.
-
-    Input must carry `text_col` (the _gate_and_scrub defer_nll thread)
-    plus the group keys; output replaces `text_col` with (nll,
-    _n_bigrams) and keeps every other column via first() (constant per
-    document by construction). Scale shape: the model broadcasts
-    (vocab-bounded); the only shuffle is the per-doc re-group; no
-    Python anywhere. The collected per-doc array holds bigram
-    OCCURRENCES, not distinct bigrams (pre-aggregating per (doc, w1,
-    w2) would add a SECOND stateful operator in streaming) — bounded
-    by document length, the same per-doc bound tokenization itself
-    carries; the batch tx_ngram_nll plan, which can afford the extra
-    aggregation, folds distinct bigrams instead."""
-    from ..plans.pipeline_queries import _NGRAM_BIGRAM_EXPR
-
-    spark = front.sparkSession
-    bg, lf, default_nl = _nll_model_relations(spark, nll_model)
-    keys = list(group_keys)
-    passthrough = [
-        c for c in front.columns if c not in keys and c != text_col
-    ]
-    # _NGRAM_BIGRAM_EXPR references a `toks` column; bind it as a real
-    # column first (the ONE-home bigram derivation, shared with the
-    # batch operator so the bit contract has a single source of truth)
-    occ = (
-        front.select(
-            *keys, *passthrough, T.tokens(F.col(text_col)).alias("toks")
-        )
-        .select(
-            *keys,
-            *passthrough,
-            F.explode_outer(
-                F.when(
-                    F.size("toks") >= 2, F.expr(_NGRAM_BIGRAM_EXPR)
-                )
-            ).alias("_bg"),
-        )
-    )
-    j = (
-        occ.join(
-            F.broadcast(bg),
-            (F.col("_bg.w1") == F.col("bw1"))
-            & (F.col("_bg.w2") == F.col("bw2")),
-            "left",
-        )
-        .join(F.broadcast(lf), F.col("_bg.w1") == F.col("lw1"), "left")
-        .select(
-            *keys,
-            *passthrough,
-            "_bg",
-            F.coalesce("bnl", "lnl", F.lit(default_nl)).alias("_nl"),
-        )
-    )
-    agged = j.groupBy(*keys).agg(
-        *(F.first(c).alias(c) for c in passthrough),
-        F.count(F.col("_bg.w1")).cast("long").alias("_n_bigrams"),
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("_bg").isNotNull(),
-                    F.struct(
-                        F.col("_bg.w1").alias("w1"),
-                        F.col("_bg.w2").alias("w2"),
-                        F.col("_nl").alias("nl"),
-                    ),
-                )
-            )
-        ).alias("_terms"),
-    )
-    init = F.struct(
-        F.lit(None).cast("string").alias("w1"),
-        F.lit(None).cast("string").alias("w2"),
-        F.lit(0.0).alias("nl"),
-        F.lit(0).cast("long").alias("xf"),
-        F.lit(0.0).alias("s"),
-    )
-
-    def step(acc, e):
-        extend = F.struct(
-            acc["w1"].alias("w1"),
-            acc["w2"].alias("w2"),
-            acc["nl"].alias("nl"),
-            (acc["xf"] + F.lit(1).cast("long")).alias("xf"),
-            acc["s"].alias("s"),
-        )
-        start = F.struct(
-            e["w1"].alias("w1"),
-            e["w2"].alias("w2"),
-            e["nl"].alias("nl"),
-            F.lit(1).cast("long").alias("xf"),
-            acc["s"].alias("s"),
-        )
-        close_and_start = F.struct(
-            e["w1"].alias("w1"),
-            e["w2"].alias("w2"),
-            e["nl"].alias("nl"),
-            F.lit(1).cast("long").alias("xf"),
-            (acc["s"] + acc["xf"].cast("double") * acc["nl"]).alias("s"),
-        )
-        return (
-            F.when(acc["xf"] == 0, start)
-            .when(
-                (acc["w1"] == e["w1"]) & (acc["w2"] == e["w2"]), extend
-            )
-            .otherwise(close_and_start)
-        )
-
-    def finish(acc):
-        return F.when(acc["xf"] == 0, acc["s"]).otherwise(
-            acc["s"] + acc["xf"].cast("double") * acc["nl"]
-        )
-
-    return agged.select(
-        *keys,
-        *passthrough,
-        "_n_bigrams",
-        F.aggregate(F.col("_terms"), init, step, finish).alias("nll"),
-    )
-
-
-def _admission_column_order(
-    scored: DataFrame, carry: tuple[str, ...]
-) -> DataFrame:
-    """Re-establish the documented admission column order after the
-    join-form scorer's re-group: (doc_id, lang, *carry, n_tokens,
-    quality, nll, digest, card counts?, n_{kind}..., redacted) — the
-    same order _gate_and_scrub emits on the UDF path, pinned by
-    test_corpus_admission_all_options_compose."""
-    lead = ["doc_id", "lang", *carry, "n_tokens", "quality", "nll",
-            "digest"]
-    rest = [
-        c for c in scored.columns
-        if c not in lead and c not in ("_n_bigrams", "redacted")
-    ]
-    return scored.select(*lead, *rest, "redacted")
 
 
 def corpus_admission_stream(
@@ -413,7 +182,6 @@ def corpus_admission_stream(
     scrub_cards_first: bool = False,
     nll_model: tuple[dict, dict, int] | None = None,
     max_unit_nll: float | None = None,
-    nll_gate: str = "udf",
 ) -> DataFrame:
     """Compose the cleaning pipeline over a (possibly streaming)
     documents relation: language-consistency gate (predicted == labeled)
@@ -443,39 +211,13 @@ def corpus_admission_stream(
     (replay-pinned in
     test_corpus_admission_cards_first_dedups_card_variants).
 
-    `nll_gate` picks the perplexity scorer when `nll_model` is set:
-    "udf" (default — the stateless Arrow-batched scorer, model in the
-    closure) or "join" (the JVM join form, _nll_join_score — explode
-    bigrams, broadcast stream-static model join, one per-doc re-group;
-    bit-compatible with the UDF path, pytest-pinned). The join form is
-    the batch-heavy-ingest configuration: on a BATCH relation the
-    re-group is an ordinary aggregation; on a STREAMING relation an
-    aggregation needs event time for append-mode emission, so this
-    unbounded-state variant raises — use
-    corpus_admission_stream_within_watermark(nll_gate="join"), whose
-    watermarked ingest timestamp bounds the per-doc re-group state."""
-    if nll_gate not in ("udf", "join"):
-        raise ValueError(f"nll_gate must be 'udf' or 'join': {nll_gate!r}")
-    join_form = nll_gate == "join" and nll_model is not None
-    if join_form and docs.isStreaming:
-        raise ValueError(
-            "nll_gate='join' needs event time for a streaming re-group "
-            "(append-mode aggregation): use "
-            "corpus_admission_stream_within_watermark or nll_gate='udf'"
-        )
+    `nll_model` + `max_unit_nll` add the perplexity gate of
+    _gate_and_scrub: a stateless Arrow-batched scorer with the model in
+    its closure, so the chain's only state stays the digest store."""
     s = _gate_and_scrub(
         docs, patterns=patterns, scrub_cards_first=scrub_cards_first,
         nll_model=nll_model, max_unit_nll=max_unit_nll,
-        defer_nll=join_form,
     )
-    if join_form:
-        scored = _nll_join_score(s, nll_model)
-        if max_unit_nll is not None:
-            scored = scored.filter(
-                F.col("nll")
-                <= F.col("_n_bigrams").cast("double") * max_unit_nll
-            )
-        s = _admission_column_order(scored, ())
     return s.dropDuplicates(["digest"]).drop("digest")
 
 
@@ -487,7 +229,6 @@ def corpus_admission_stream_within_watermark(
     scrub_cards_first: bool = False,
     nll_model: tuple[dict, dict, int] | None = None,
     max_unit_nll: float | None = None,
-    nll_gate: str = "udf",
     neardup: bool = False,
 ) -> DataFrame:
     """Bounded-state admission for an unbounded document firehose: the
@@ -517,51 +258,15 @@ def corpus_admission_stream_within_watermark(
     every row inherits the append-mode emission latency (a doc emits
     once the watermark passes its ingest_ts).
 
-    `nll_gate="join"` (with `nll_model`) swaps the stateless UDF scorer
-    for the JVM join form: the watermark moves BEFORE the scorer so the
-    per-doc re-group aggregates on (ts_col, doc_id) with bounded,
-    watermark-evicted state, and the digest dedup chains downstream as
-    a second stateful operator (Spark propagates the event-time
-    watermark through the grouped keys). Emission caveat inherited from
-    append-mode aggregation: a document's row emits only once the
-    watermark passes its ingest timestamp, so the join form trades the
-    UDF path's same-trigger latency for JVM-side scoring throughput —
-    exactly the batch-heavy-ingest trade the docstring above
-    _gate_and_scrub measures.
-
-    RELEASE-COHORT caveat for `nll_gate="join"` + `neardup=True`
-    (round 14, discovered writing
-    test_corpus_admission_full_option_chain): because the NLL
-    re-group emits at watermark release, every document whose ingest
-    timestamp falls inside ONE watermark advancement interval reaches
-    the near-dup band stage in the SAME batch — the band stage's
-    first-arrival preference coarsens from ingest order to
-    watermark-release order, and band-sharing docs from different
-    ingest batches inside one release cohort race same-batch
-    (at-most-one-admits still holds; WHICH one is cohort-arbitrary,
-    the established batch-dedup caveat). The UDF form keeps per-batch
-    arrival order (its band stage is the first stateful operator).
-    Deployments that care which copy survives within the horizon
-    should use the UDF gate or accept watermark-granularity ordering —
-    the trade is stated here rather than discovered in production."""
-    if nll_gate not in ("udf", "join"):
-        raise ValueError(f"nll_gate must be 'udf' or 'join': {nll_gate!r}")
-    join_form = nll_gate == "join" and nll_model is not None
+    `nll_model` + `max_unit_nll` add the same stateless perplexity
+    gate as corpus_admission_stream, scored in the front before the
+    watermark, so it adds no state and no emission latency of its own."""
     s = _gate_and_scrub(
         docs, carry=(ts_col,), patterns=patterns,
         scrub_cards_first=scrub_cards_first,
         nll_model=nll_model, max_unit_nll=max_unit_nll,
-        defer_nll=join_form,
     )
     s = s.withWatermark(ts_col, horizon)
-    if join_form:
-        scored = _nll_join_score(s, nll_model, group_keys=(ts_col, "doc_id"))
-        if max_unit_nll is not None:
-            scored = scored.filter(
-                F.col("nll")
-                <= F.col("_n_bigrams").cast("double") * max_unit_nll
-            )
-        s = _admission_column_order(scored, (ts_col,))
     if neardup:
         from .dedup import neardup_admission_within_watermark
 

@@ -217,8 +217,8 @@ def lsh_band_keys_py(k: int = 16, bands: int = 4, rows: int = 4):
     for NULL text.
 
     Why a Pandas UDF and not the column expressions (the repo's
-    UDF-as-last-resort rule, satisfied the same way bpe_encode_fast
-    and ngram_nll_scorer satisfy it): the per-row array forms nest k+2
+    UDF-as-last-resort rule, satisfied the same way ngram_nll_scorer
+    satisfies it): the per-row array forms nest k+2
     lambda layers, and Catalyst's projection collapse re-inlines each
     layer's input expression into every reference — measured THIS
     round: a 1,000-doc streaming drain through the expression form did
@@ -231,9 +231,8 @@ def lsh_band_keys_py(k: int = 16, bands: int = 4, rows: int = 4):
     in streaming would cost a SECOND stateful operator; one
     Arrow-batched pass with a token-hash cache is the honest
     alternative. Cost scales with tokens per doc; the cache amortizes
-    repeated vocabulary exactly like bpe_encode_fast's word cache
-    (reset per batch by design — unbounded state on a hostile corpus
-    would be a leak)."""
+    repeated vocabulary within a batch (reset per batch by design —
+    unbounded state on a hostile corpus would be a leak)."""
     import re
 
     import numpy as np
