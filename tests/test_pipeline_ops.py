@@ -2422,41 +2422,51 @@ _BPE_WORDS = ["", "a", "ab", "abc", "cab", "ababc", "aaa", "aaaa",
               "athe", "thinking", "in", "x", "weather", "banana", "xyzzy"]
 
 
-@pytest.mark.parametrize(
-    "merges,pins",
-    [
-        # composed second-round merge, overlap rule, singleton
-        ((("t", "h"), ("th", "e"), ("a", "a"), ("i", "n"), ("in", "g")),
-         {"the": ["the"], "aaa": ["aa", "a"], "aaaa": ["aa", "aa"],
-          "thinking": ["th", "in", "k", "ing"], "x": ["x"]}),
-        # merged-symbol pairs ((aa, aa)) and suffix-sharing symbols
-        ((("a", "a"), ("a", "b"), ("t", "h"), ("th", "e"),
-          ("b", "a"), ("ba", "n"), ("e", "r"), ("aa", "aa")),
-         {"aaaa": ["aaaa"], "banana": ["ban", "a", "n", "a"]}),
-        # ill-formed: (ab, c) ranks before (a, b), so its pass ran before
-        # any "ab" symbol existed; a min-rank-repeat encoder gives [abc]
-        ((("ab", "c"), ("a", "b")), {"abc": ["ab", "c"]}),
-        # a duplicate pair is a distinct pass of its own
-        ((("a", "a"), ("x", "y"), ("a", "a")),
-         {"aaaaa": ["aa", "aa", "a"], "xya": ["xy", "a"]}),
-        ((), {"ab": ["a", "b"]}),
-    ],
-    ids=["composed", "merged_pairs", "ill_formed", "duplicate", "empty"],
-)
-def test_bpe_apply_matches_python_mirror(spark, merges, pins):
+# (name, merge table, hand pins) cases of the mirror test
+_BPE_APPLY_CASES = [
+    # composed second-round merge, overlap rule, singleton
+    ("composed",
+     (("t", "h"), ("th", "e"), ("a", "a"), ("i", "n"), ("in", "g")),
+     {"the": ["the"], "aaa": ["aa", "a"], "aaaa": ["aa", "aa"],
+      "thinking": ["th", "in", "k", "ing"], "x": ["x"]}),
+    # merged-symbol pairs ((aa, aa)) and suffix-sharing symbols
+    ("merged_pairs",
+     (("a", "a"), ("a", "b"), ("t", "h"), ("th", "e"),
+      ("b", "a"), ("ba", "n"), ("e", "r"), ("aa", "aa")),
+     {"aaaa": ["aaaa"], "banana": ["ban", "a", "n", "a"]}),
+    # ill-formed: (ab, c) ranks before (a, b), so its pass ran before
+    # any "ab" symbol existed; a min-rank-repeat encoder gives [abc]
+    ("ill_formed", (("ab", "c"), ("a", "b")), {"abc": ["ab", "c"]}),
+    # a duplicate pair is a distinct pass of its own
+    ("duplicate", (("a", "a"), ("x", "y"), ("a", "a")),
+     {"aaaaa": ["aa", "aa", "a"], "xya": ["xy", "a"]}),
+    ("empty", (), {"ab": ["a", "b"]}),
+]
+
+
+def test_bpe_apply_matches_python_mirror(spark):
     rows = (
         spark.createDataFrame([(w,) for w in _BPE_WORDS], "w string")
-        .select("w", T.bpe_apply_word(F.col("w"), merges).alias("sym"))
+        .select(
+            "w",
+            *[
+                T.bpe_apply_word(F.col("w"), merges).alias(name)
+                for name, merges, _ in _BPE_APPLY_CASES
+            ],
+        )
         .collect()
     )
     assert len(rows) == len(_BPE_WORDS)
-    for r in rows:
-        assert list(r["sym"]) == _py_bpe_word(r["w"], merges), r["w"]
-        assert "".join(r["sym"]) == r["w"]  # symbols always rebuild the word
-    got = {r["w"]: list(r["sym"]) for r in rows}
-    assert got[""] == []
-    for w, want in pins.items():
-        assert got[w] == want, w
+    for name, merges, pins in _BPE_APPLY_CASES:
+        for r in rows:
+            want = _py_bpe_word(r["w"], merges)
+            assert list(r[name]) == want, (name, r["w"])
+            # symbols always rebuild the word
+            assert "".join(r[name]) == r["w"], (name, r["w"])
+        got = {r["w"]: list(r[name]) for r in rows}
+        assert got[""] == [], name
+        for w, want in pins.items():
+            assert got[w] == want, (name, w)
 
 
 @pytest.mark.parametrize("escaped", ["true", "false"])
@@ -2479,37 +2489,37 @@ def test_bpe_apply_ignores_escaped_string_literals(spark, escaped):
     assert list(row["sym"]) == ["a\\", "b"] == _py_bpe_word("a\\b", merges)
 
 
-@pytest.mark.parametrize(
-    "text,merges,want",
-    [
-        # merges never cross word boundaries; flatten keeps word order
-        ("the cat then", (("t", "h"), ("th", "e")),
-         ["the", "c", "a", "t", "the", "n"]),
-        ("one\ttab\nand newline", (("t", "h"), ("th", "e"), ("a", "b")),
-         ["o", "n", "e", "t", "ab", "a", "n", "d", "n", "e", "w", "l",
-          "i", "n", "e"]),
-        ("", (("a", "b"),), []),
-        ("   ", (("a", "b"),), []),
-        ("abc cab ababc", (("ab", "c"), ("a", "b")),
-         ["ab", "c", "c", "ab", "ab", "ab", "c"]),
-        ("aaa aaaaa xya", (("a", "a"), ("x", "y"), ("a", "a")),
-         ["aa", "a", "aa", "aa", "a", "xy", "a"]),
-        # NULL text propagates NULL (not a crash, not [])
-        (None, (("ab", "c"), ("a", "b")), None),
-    ],
-    ids=["words", "tab_newline", "empty", "blank", "ill_formed",
-         "duplicate", "null"],
-)
-def test_bpe_encode_flattens_words(spark, text, merges, want):
-    row = (
-        spark.createDataFrame([(text,)], "text string")
-        .select(T.bpe_encode(F.col("text"), merges).alias("sym"))
-        .collect()[0]
-    )
-    got = None if row["sym"] is None else list(row["sym"])
-    assert got == want
-    if text is not None:
-        assert got == _py_bpe_encode(text, merges)
+# (name, text, merge table, expected symbols) cases of the flatten test
+_BPE_ENCODE_CASES = [
+    # merges never cross word boundaries; flatten keeps word order
+    ("words", "the cat then", (("t", "h"), ("th", "e")),
+     ["the", "c", "a", "t", "the", "n"]),
+    ("tab_newline", "one\ttab\nand newline",
+     (("t", "h"), ("th", "e"), ("a", "b")),
+     ["o", "n", "e", "t", "ab", "a", "n", "d", "n", "e", "w", "l",
+      "i", "n", "e"]),
+    ("empty", "", (("a", "b"),), []),
+    ("blank", "   ", (("a", "b"),), []),
+    ("ill_formed", "abc cab ababc", (("ab", "c"), ("a", "b")),
+     ["ab", "c", "c", "ab", "ab", "ab", "c"]),
+    ("duplicate", "aaa aaaaa xya", (("a", "a"), ("x", "y"), ("a", "a")),
+     ["aa", "a", "aa", "aa", "a", "xy", "a"]),
+    # NULL text propagates NULL (not a crash, not [])
+    ("null", None, (("ab", "c"), ("a", "b")), None),
+]
+
+
+def test_bpe_encode_flattens_words(spark):
+    for name, text, merges, want in _BPE_ENCODE_CASES:
+        row = (
+            spark.createDataFrame([(text,)], "text string")
+            .select(T.bpe_encode(F.col("text"), merges).alias("sym"))
+            .collect()[0]
+        )
+        got = None if row["sym"] is None else list(row["sym"])
+        assert got == want, name
+        if text is not None:
+            assert got == _py_bpe_encode(text, merges), name
 
 
 def _py_luhn(digits: str) -> bool:
