@@ -18,7 +18,7 @@ import functools
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..barrier import corpus_barrier
+from ..barrier import barrier
 
 from ..functions import similarity as S
 
@@ -128,7 +128,8 @@ def filtered_ivf_topk(
     under-fill (r08 review); the production extension is probe
     expansion until k filtered candidates accumulate (raise nprobe),
     which this fixed-nprobe form leaves to the caller."""
-    cents = ivf_centroids(emb).localCheckpoint(eager=False)
+    # 2 consumers: the corpus assignment and the query probes
+    cents = barrier(ivf_centroids(emb))
     cells = ivf_cells(emb.filter(predicate), cents)
     q = emb.filter(F.col("vec_id").isin(query_ids))
     probes = (
@@ -182,15 +183,13 @@ def filtered_ivf_expand_topk(
     adaptive behavior a serving stack wants (matches the "increase
     nprobe until the filtered candidate set fills" guidance in public
     IVF serving literature, e.g. FAISS's metadata-filtering discussion)."""
-    cents = ivf_centroids(emb).localCheckpoint(eager=False)
-    # multi-consumer barrier: pops (per-cell counts), own (the query's
-    # own cell) and the candidate join all consume the filtered
-    # assignment, and their exchanges differ so ReuseExchange cannot
-    # dedupe — without the checkpoint the corpus assignment fold runs
-    # once per consumer (r09 review: the fold appeared 5x in the plan)
-    cellsf = corpus_barrier(  # corpus-sized: filtered assignment rows
-        ivf_cells(emb.filter(predicate), cents), eager=False
-    )
+    # 2 consumers: the filtered assignment and the query ranks
+    cents = barrier(ivf_centroids(emb))
+    # 3 consumers: pops (per-cell counts), own (the query's own cell)
+    # and the candidate join, whose exchanges differ so ReuseExchange
+    # cannot dedupe — uncut, the corpus assignment fold runs once per
+    # consumer (r09 review: the fold appeared 5x in the plan)
+    cellsf = barrier(ivf_cells(emb.filter(predicate), cents))
     pops = cellsf.groupBy("cell").agg(F.count(F.lit(1)).alias("pop"))
     q = emb.filter(F.col("vec_id").isin(query_ids))
     ranks = _centroid_ranks(q, cents).select(
@@ -519,9 +518,7 @@ def embedding_near_duplicates(
     CacheManager entry for the session. At corpus scale you'd materialize
     band keys to a bucketed table once and join off that — same idea,
     durable form."""
-    banded = corpus_barrier(  # corpus-sized: band rows per vector
-        embedding_band_keys(emb), eager=False
-    )
+    banded = barrier(embedding_band_keys(emb))  # 2 consumers: self-join
     a = banded.alias("a")
     b = banded.alias("b")
     cands = (
@@ -615,9 +612,8 @@ def semantic_dedup(
     reasoning as embedding_near_duplicates' band relation — measured
     6 parquet scans -> 2, ~2x wall on the sf0.1 corpus)."""
     cents = ivf_centroids(emb)
-    assigned = corpus_barrier(  # corpus-sized: one row per vector
-        ivf_cells(emb, cents, keep_embedding=True, keep_norm=True),
-        eager=False,
+    assigned = barrier(  # 3 consumers: both join sides + projection
+        ivf_cells(emb, cents, keep_embedding=True, keep_norm=True)
     )
     a = assigned.select(
         "cell",
@@ -669,15 +665,13 @@ def kmeans_refine(emb: DataFrame) -> DataFrame:
     (nothing corpus-sized ever reaches the driver).
 
     cents and the assignment are each consumed twice (assignment + final
-    join; means + member counts), so both are localCheckpoint'd — one
+    join; means + member counts), so both are cut by barriers — one
     corpus scan for centroids, one for assignment, instead of re-deriving
     the whole subtree per consumer."""
-    # cents is BOUNDED (K centroid rows): raw localCheckpoint is
-    # scale-safe; the assignment is corpus-sized (one row per vector)
-    cents = ivf_centroids(emb).localCheckpoint(eager=False)
-    assigned = corpus_barrier(
-        ivf_cells(emb, cents, keep_embedding=True), eager=False
-    )
+    # 2 consumers each: cents feeds assignment + final join, assigned
+    # feeds the means + the member counts
+    cents = barrier(ivf_centroids(emb))
+    assigned = barrier(ivf_cells(emb, cents, keep_embedding=True))
     new = _cell_means(assigned, "cell").select(
         "cell", F.col("centroid").alias("new_centroid")
     )
@@ -719,10 +713,12 @@ def kmeans_fit(
     depth stays constant across iterations. Raises RuntimeError loudly
     if max_iters passes without convergence (silent partial convergence
     would poison every downstream cell-bucketed consumer)."""
-    cents = ivf_centroids(emb).localCheckpoint(eager=False)
+    # cents and new each feed the shift collect and the next round's
+    # assignment; the cut keeps plan depth constant across rounds
+    cents = barrier(ivf_centroids(emb))
     for it in range(1, max_iters + 1):
         assigned = ivf_cells(emb, cents, keep_embedding=True)
-        new = _cell_means(assigned, "cell").localCheckpoint(eager=False)
+        new = barrier(_cell_means(assigned, "cell"))
         shift = F.round(
             S.l2_norm(
                 F.zip_with(
@@ -1079,8 +1075,8 @@ def ivf_rp_topk(
     the standalone contract at the same recall). At 100 TB the projected
     candidate scan is the I/O win: 4x fewer bytes per candidate in the
     hot ranking pass, exact math only on R rows per query."""
-    # same two-consumer barrier as ivf_topk (r08 review)
-    cents = ivf_centroids(emb).localCheckpoint(eager=False)
+    # 2 consumers, as in filtered_ivf_topk (r08 review)
+    cents = barrier(ivf_centroids(emb))
     cells = ivf_cells(emb, cents)
     proj = rp_project(emb)
     q = emb.filter(F.col("vec_id").isin(query_ids))
@@ -1348,7 +1344,7 @@ def pq_topk(
     it is a trained artifact — exactly what production persists — and
     it feeds two consumers (corpus encode + per-query tables), so
     materializing its n_cells rows once halves the embeddings scans."""
-    cents = ivf_centroids(emb).localCheckpoint(eager=False)
+    cents = barrier(ivf_centroids(emb))  # 2 consumers: encode + tables
     codes = pq_codes(emb, cents)
     qtab = _pq_query_tables(emb, query_ids, cents)
     return _adc_rank_and_rescore(
@@ -1383,7 +1379,8 @@ def ivf_pq_topk(
     _adc_rank_and_rescore) to restore within-cell recall; measured
     contracts in tools/ann_recall_probe.py.
     Output: (query_id, neighbor_id, rank, approx_dist, sim)."""
-    cents = ivf_centroids(emb).localCheckpoint(eager=False)
+    # 3 consumers: assignment, the code fold and the query tables
+    cents = barrier(ivf_centroids(emb))
     assigned = ivf_cells(emb, cents, keep_embedding=True)
     index = pq_codes(assigned, cents, extra_cols=["cell"])
     probes = (

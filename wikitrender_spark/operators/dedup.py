@@ -7,7 +7,7 @@ Scale design (the point of each variant at 100 TB):
   the shuffle payload from document bytes to 16 bytes + ids.
 - all sketch variants share ONE materialization: ``doc_token_hashes``
   hashes every token exactly once in a per-row HOF projection and
-  localCheckpoints the result (round 16; previously an explode ->
+  cuts the result with ``barrier`` (round 16; previously an explode ->
   aggregate -> join-back whose shuffle was the materialization
   boundary). Downstream sketches are then pure array arithmetic over
   that stored column. The explicit checkpoint is deliberate:
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..barrier import corpus_barrier
+from ..barrier import barrier
 from ..functions import similarity as S
 from ..functions import text as T
 
@@ -58,8 +58,8 @@ def exact_dedup_groups(docs: DataFrame) -> DataFrame:
 def doc_token_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, ths array<long>): per-token portable hashes in token
     order, as ONE per-row HOF projection (transform over the token
-    array) — zero exchanges, zero joins — materialized by
-    localCheckpoint before it is returned.
+    array) — zero exchanges, zero joins — materialized by a barrier
+    before it is returned.
 
     Round 16 (guide §2.4): this replaced a posexplode -> groupBy ->
     collect_list(struct) -> join-back formulation that paid two
@@ -79,14 +79,9 @@ def doc_token_hashes(docs: DataFrame) -> DataFrame:
     (streaming/dedup.lsh_band_keys_py) for the same round-13 reason.
 
     Every doc keeps a row: docs with zero tokens (or NULL text) get an
-    empty array (they must still receive sentinel signatures).
-
-    Barrier class (round 17): CORPUS-SIZED — the per-token hash arrays
-    are comparable to the input, so the barrier rides corpus_barrier's
-    WTR_BARRIER_MODE switch (reliable checkpoints at cluster scale;
-    localCheckpoint locally). Both modes cut lineage, so the
-    nested-lambda protection above is mode-independent."""
-    return corpus_barrier(token_hash_projection(docs), eager=False)
+    empty array (they must still receive sentinel signatures)."""
+    # the round-13 nested-lambda cut (see above)
+    return barrier(token_hash_projection(docs))
 
 
 def token_hash_projection(docs: DataFrame) -> DataFrame:
@@ -222,14 +217,13 @@ def lsh_candidate_pairs(
     if sig is None:
         sig = minhash_signatures(docs, k, dth=dth)
     sig = sig.filter(F.element_at("signature", 1) != S.EMPTY_SIG)
-    banded = corpus_barrier(  # corpus-sized: one row per (doc, band)
+    banded = barrier(  # 2 consumers: the two self-join sides
         sig.select(
             "doc_id",
             F.posexplode(S.lsh_bands(F.col("signature"), bands, rows)).alias(
                 "band_idx", "band_key"
             ),
         ),
-        eager=False,
     )
     a = banded.alias("a")
     b = banded.alias("b")
@@ -358,9 +352,8 @@ def lsh_tuning_report(
     per config. Verification shares _verified_jaccard — the same
     arithmetic near_duplicates uses, one home."""
     dth = doc_token_hashes(docs)
-    sig = corpus_barrier(  # corpus-sized: one k-int row per doc
-        minhash_signatures(docs, dth=dth), eager=False
-    )
+    # every config's banding pass consumes the signatures
+    sig = barrier(minhash_signatures(docs, dth=dth))
     sets = dth.select(
         "doc_id", F.array_distinct(_shingles(F.col("ths"))).alias("sh")
     )
@@ -368,11 +361,10 @@ def lsh_tuning_report(
     b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     out = None
     for bands, rows in configs:
-        cands = corpus_barrier(  # corpus-sized: candidate pair rows
+        cands = barrier(  # 2 consumers: the count and the verify join
             lsh_candidate_pairs(
                 docs, bands=bands, rows=rows, dth=dth, sig=sig
-            ),
-            eager=False,
+            )
         )
         verified = _verified_jaccard(
             cands.join(a, "doc_a").join(b, "doc_b")
@@ -434,9 +426,8 @@ def minhash_estimate_pairs(docs: DataFrame) -> DataFrame:
     showed 4 documents scans here before this — same redundancy class
     the near_duplicates fix removed)."""
     dth = doc_token_hashes(docs)
-    sig = corpus_barrier(  # corpus-sized: one k-int row per doc
-        minhash_signatures(docs, dth=dth), eager=False
-    )
+    # 2 consumers: the sa and sb sides
+    sig = barrier(minhash_signatures(docs, dth=dth))
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b"))
     agree = F.aggregate(
@@ -487,9 +478,8 @@ def duplicate_clusters(
     # union executes both — checkpointing the pairs first makes the
     # swapped branch a re-read of tiny cached blocks (measured at
     # sf0.1: ~2 s saved per run)
-    pairs = corpus_barrier(  # corpus-sized: near-dup pair rows
-        near_duplicates(docs, threshold).select("doc_a", "doc_b"),
-        eager=False,
+    pairs = barrier(  # 2 consumers: the union's two branches
+        near_duplicates(docs, threshold).select("doc_a", "doc_b")
     )
     edges = pairs.unionByName(
         pairs.select(
@@ -503,10 +493,9 @@ def duplicate_clusters(
     # iteration 1 would have produced from identity labels, one shuffle
     # round cheaper. The loop below then only confirms/propagates
     # deeper chains (diameter >= 2 components).
-    labels = corpus_barrier(  # corpus-sized: one label row per paired doc
+    labels = barrier(  # 2 consumers: round 1's join and union
         edges.groupBy(F.col("doc_a").alias("doc_id"))
-        .agg(F.least(F.min("doc_a"), F.min("doc_b")).alias("label")),
-        eager=False,
+        .agg(F.least(F.min("doc_a"), F.min("doc_b")).alias("label"))
     )
     changed = -1
     for _ in range(max_iters):
@@ -523,7 +512,7 @@ def duplicate_clusters(
             F.col("label").alias("cand"),
             F.lit(False).alias("own"),
         )
-        joined = corpus_barrier(  # corpus-sized: per-round label relation
+        joined = barrier(  # the HashMin count, then the next round
             nbr.unionByName(
                 labels.select(
                     "doc_id",
@@ -535,8 +524,7 @@ def duplicate_clusters(
             .agg(
                 F.min(F.when(F.col("own"), F.col("cand"))).alias("old_label"),
                 F.min("cand").alias("label"),
-            ),
-            eager=False,
+            )
         )
         changed = joined.filter(F.col("label") != F.col("old_label")).count()
         labels = joined.select("doc_id", "label")
@@ -758,9 +746,8 @@ def simhash_hamming_pairs(
     verification joins the 4-long fingerprint arrays for candidate rows
     only. The Hamming-ball guarantee is what LSH banding (probabilistic)
     cannot give."""
-    fp = corpus_barrier(  # corpus-sized: one fingerprint row per doc
-        simhash64_blocks(docs), eager=False
-    )
+    # 3 consumers: the block explosion and both verification sides
+    fp = barrier(simhash64_blocks(docs))
     blocks = fp.select("doc_id", F.posexplode("fp").alias("b", "blk"))
     if max_bucket is not None:
         pops = blocks.groupBy("b", "blk").agg(
@@ -820,12 +807,11 @@ def simhash_tuning_report(
             "caps must include None (the uncapped baseline n_missed is "
             f"measured against); got {caps!r}"
         )
-    fp = corpus_barrier(  # corpus-sized: one fingerprint row per doc
-        simhash64_blocks(docs), eager=False
-    )
-    blocks_all = corpus_barrier(  # corpus-sized: 4 block rows per doc
-        fp.select("doc_id", F.posexplode("fp").alias("b", "blk")),
-        eager=False,
+    # 3 consumers: the block explosion and both verification sides
+    fp = barrier(simhash64_blocks(docs))
+    # consumers: the bucket populations and every cap's candidates
+    blocks_all = barrier(
+        fp.select("doc_id", F.posexplode("fp").alias("b", "blk"))
     )
     pops = blocks_all.groupBy("b", "blk").agg(F.count(F.lit(1)).alias("_n"))
     fa = fp.select(F.col("doc_id").alias("doc_a"), F.col("fp").alias("fp_a"))
@@ -838,9 +824,8 @@ def simhash_tuning_report(
             if cap is None
             else _cap_hot_buckets(blocks_all, pops, cap)
         )
-        cand = corpus_barrier(  # corpus-sized candidates; 2 consumers:
-            _manku_candidate_pairs(blocks), eager=False  # count + verify
-        )
+        # 2 consumers: the count and the verify join
+        cand = barrier(_manku_candidate_pairs(blocks))
         pairs = (
             cand.join(fa, "doc_a")
             .join(fb, "doc_b")
@@ -858,9 +843,7 @@ def simhash_tuning_report(
             )
         )
         out = row if out is None else out.unionByName(row)
-    # BOUNDED (one row per cap — len(caps) rows): raw localCheckpoint
-    # is scale-safe here; consumed by base + final
-    out = out.localCheckpoint(eager=False)
+    out = barrier(out)  # 2 consumers: base + final
     base = out.filter(F.col("max_bucket") == -1).select(
         F.col("n_pairs").alias("_base")
     )
@@ -1058,7 +1041,7 @@ def bloom_decontamination_flags(docs: DataFrame) -> DataFrame:
     (filter + tokenize + shingle + distinct) is computed once instead of
     twice."""
     is_eval = F.col("doc_id") % EVAL_MOD == 0
-    ev_sh = corpus_barrier(  # eval-corpus-sized: distinct eval shingles
+    ev_sh = barrier(  # the frozen Bloom snapshot (see above)
         doc_shingles(docs.filter(is_eval)).select("shingle").distinct(),
         eager=True,
     )
@@ -1185,9 +1168,7 @@ def _flagged_shingle_fraction(
     into (doc_id, flag 0/1) rows, then roll up count/sum per doc and
     left-join every document back in with 0/0/0.0 for the shingle-less.
     The fraction is one exact IEEE division of two ints, rounded to 6."""
-    ex = corpus_barrier(  # corpus-sized: the shingle inverted index
-        doc_shingles(docs), eager=False
-    )
+    ex = barrier(doc_shingles(docs))  # 2 consumers, see above
     per_doc = flag_join(ex).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles"),
         F.sum("flag").alias(n_name),

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..barrier import corpus_barrier
+from ..barrier import barrier
 
 #: fixed-point scale: initial score per node (1.0 == 1e6).
 SCALE = 1_000_000
@@ -126,17 +126,15 @@ def pagerank(
     # the K+2 serial materialization jobs collapse into the final
     # action's job graph (measured: eager checkpoint jobs dominated the
     # graph-family wall at bench scale).
-    edges = corpus_barrier(  # edge-set-sized (graph-proportional)
+    edges = barrier(  # consumers: nodes + every iteration's join
         trans.withColumn(
             "out_w", F.sum("w").over(Window.partitionBy("src"))
-        ).select("src", "dst", "w", "out_w"),
-        eager=False,
+        ).select("src", "dst", "w", "out_w")
     )
-    nodes = corpus_barrier(  # node-set-sized (graph-proportional)
+    nodes = barrier(  # consumers: the init + every iteration's join
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct(),
-        eager=False,
+        .distinct()
     )
     scores = nodes.select(
         "node", F.lit(SCALE).cast("bigint").alias("score")
@@ -165,7 +163,7 @@ def pagerank(
                 .alias("score"),
             )
         )
-        scores = corpus_barrier(scores, eager=False)  # node-set-sized
+        scores = barrier(scores)  # plan depth stays constant per round
     return scores
 
 
@@ -205,11 +203,10 @@ def coedit_pair_weights(
         .agg(F.count(F.lit(1)).alias("n_edits"))
     )
     w = Window.partitionBy("user").orderBy(F.desc("n_edits"), F.asc("id"))
-    top_pages = corpus_barrier(  # user-set-sized (<= cap rows/user)
+    top_pages = barrier(  # 2 consumers: the two self-join sides
         ue.withColumn("pr", F.row_number().over(w))
         .filter(F.col("pr") <= cap)
-        .select("user", "id"),
-        eager=False,
+        .select("user", "id")
     )
     return (
         top_pages.alias("a")
@@ -278,7 +275,7 @@ def degree_topk(trans: DataFrame, k: int = DEGREE_TOPK) -> DataFrame:
     localCheckpoint'd LAZILY before the two-branch fan-out (ADVICE r7;
     eager=False keeps the recomputation guard without a separate
     materialization job)."""
-    trans = corpus_barrier(trans, eager=False)  # edge-set-sized
+    trans = barrier(trans)  # 2 consumers: the union's two branches
     tagged = trans.select(
         F.col("src").alias("node"), F.lit(1).alias("is_out"), "w"
     ).unionByName(
@@ -353,7 +350,7 @@ def triangles_from_pairs(pairs: DataFrame, k: int = TRIANGLE_TOPK) -> DataFrame:
     the node-scaled measurement is recorded in BASELINE.md "Node-scaled
     graph probe"). Same plan, same checkpoints; coedit_triangles
     delegates here."""
-    pairs = corpus_barrier(pairs, eager=False)  # pair-set-sized
+    pairs = barrier(pairs)  # 3 consumers, see below
     # deg and oriented each fan out to two consumers but are NOT
     # checkpointed (round 16, measured): under AQE every checkpoint —
     # even lazy — executes its subtree's shuffle stages at toRdd time,

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..barrier import corpus_barrier
+from ..barrier import barrier
 from ..functions import classify
 from ..streaming import fold
 from .page_state import (
@@ -114,7 +114,7 @@ def page_state_lifecycle(rc: DataFrame, with_collections: bool = False) -> DataF
     Scan economics: log events are a sliver of the stream (~0.1% here; the
     same on the real firehose) but feed ~10 subtrees (cuts, last-cut,
     moves, protect windows). They are materialized once per plan (lazy
-    localCheckpoint — not .cache(), whose CacheManager entry would
+    barrier — not .cache(), whose CacheManager entry would
     outlive the query) — every later use is a broadcast off the
     materialized sliver instead of a fresh scan of the full event set. Edit events are scanned exactly ONCE (round 16; guide
     §2.4): each event is tagged with its lifetime branch (direct —
@@ -124,21 +124,17 @@ def page_state_lifecycle(rc: DataFrame, with_collections: bool = False) -> DataF
     and ONE branch-keyed two-level aggregation covers both lifetimes.
     The two tiny fan-out relations (window_bounds: one row per moved-out
     page; the branch aggregate: one row per (branch, page)) are
-    localCheckpoint'd — before round 16 the physical plan recomputed
+    cut by barriers — before round 16 the physical plan recomputed
     last_move's max_by aggregation five times and scanned/aggregated the
     edit set once per branch. `first_edit_seq` rides along inside the
     main aggregation (with_first_seq) rather than a third scan +
     groupBy + join."""
     e = classified_edit_events(rc)
-    # a BARRIER, not .cache() (round 17, VERDICT r16 #3): the cache
-    # entry lived in the session CacheManager forever (never
-    # unpersisted — at 100 TB that pins ~0.1% of the stream for the
-    # session lifetime, and cross-pass cache hits flatter any bench row
-    # sharing the subtree). corpus_barrier gives the same compute-once
-    # fan-out guarantee per plan, its blocks are released with the
-    # DataFrame, and the sliver is stream-proportional so it rides the
-    # reliable-checkpoint scale switch.
-    logs = corpus_barrier(log_events(rc), eager=False)
+    # ~10 consumers (see above). A barrier, not .cache(): a cache entry
+    # outlives the query in the session CacheManager, and cross-pass
+    # cache hits flatter any bench row sharing the subtree; the
+    # barrier's blocks are released with the DataFrame.
+    logs = barrier(log_events(rc))
     cuts = _cuts(logs)
 
     last_cut = cuts.groupBy("id").agg(F.max("seq").alias("cut_seq"))
@@ -168,14 +164,12 @@ def page_state_lifecycle(rc: DataFrame, with_collections: bool = False) -> DataF
         .groupBy("id")
         .agg(F.max("seq").alias("prev_cut_seq"))
     )
-    # one row per moved-out page; feeds three subtrees (branch bounds,
-    # protect window, final remap) — localCheckpoint so the max_by
-    # aggregation runs once, not once per consumer
-    window_bounds = corpus_barrier(  # one row per moved-out page
+    # 3 consumers (branch bounds, protect window, final remap): the
+    # max_by aggregation runs once, not once per consumer
+    window_bounds = barrier(
         last_move.join(F.broadcast(prev_cut), "id", "left").withColumn(
             "prev_cut_seq", F.coalesce(F.col("prev_cut_seq"), F.lit(_NEG_INF))
-        ),
-        eager=False,
+        )
     )
 
     # --- ONE pass over the edit set: tag each event's lifetime branch ------
@@ -200,13 +194,12 @@ def page_state_lifecycle(rc: DataFrame, with_collections: bool = False) -> DataF
         .filter(F.col("_branch").isNotNull())
         .select("_branch", *e.columns)
     )
-    # one row per (branch, page); read by both union branches below
-    states = corpus_barrier(  # one row per (branch, live page)
+    # 2 consumers: both union branches below
+    states = barrier(
         aggregate_classified(
             tagged, with_collections, with_first_seq=True,
             extra_keys=("_branch",),
-        ),
-        eager=False,
+        )
     )
     base = states.filter(F.col("_branch") == 0).drop("_branch")
     adopted_state = states.filter(F.col("_branch") == 1).drop("_branch")

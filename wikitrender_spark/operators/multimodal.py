@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..barrier import corpus_barrier
+from ..barrier import barrier
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -1182,15 +1182,14 @@ def dhash_hamming_pairs(
     completeness trade for degenerate corpora — e.g. mass-produced flat
     thumbnails, which all hash to 0; run exact payload dedup upstream).
 
-    Scale shape: `hashes` is localCheckpointed at its 3-consumer
+    Scale shape: `hashes` is cut at its 3-consumer
     barrier (block explode + both verification sides) so the decode
     stage runs once; the candidate join shuffles (media_id, block) keys
     only and its volume is sum over block buckets of C(bucket, 2) — a
     corpus property, never all-pairs; verification touches candidate
     rows only. Output: (media_a, media_b, hamming), exact integers."""
-    fp = corpus_barrier(  # corpus-sized: one fingerprint row per media
-        hashes.select("media_id", "fp"), eager=False
-    )
+    # 3 consumers: the block explosion and both verification sides
+    fp = barrier(hashes.select("media_id", "fp"))
     blocks = fp.select("media_id", F.posexplode("fp").alias("b", "blk"))
     if max_bucket is not None:
         pops = blocks.groupBy("b", "blk").agg(F.count(F.lit(1)).alias("_n"))
@@ -1278,12 +1277,11 @@ def dhash_tuning_report(
             "caps must include None (the uncapped baseline n_missed is "
             f"measured against); got {caps!r}"
         )
-    fp = corpus_barrier(  # corpus-sized: one fingerprint row per media
-        hashes.select("media_id", "fp"), eager=False
-    )
-    blocks_all = corpus_barrier(  # corpus-sized: block rows per media
-        fp.select("media_id", F.posexplode("fp").alias("b", "blk")),
-        eager=False,
+    # 3 consumers: the block explosion and both verification sides
+    fp = barrier(hashes.select("media_id", "fp"))
+    # consumers: the bucket populations and every cap's candidates
+    blocks_all = barrier(
+        fp.select("media_id", F.posexplode("fp").alias("b", "blk"))
     )
     pops = blocks_all.groupBy("b", "blk").agg(F.count(F.lit(1)).alias("_n"))
     fa = fp.select(F.col("media_id").alias("media_a"), F.col("fp").alias("fp_a"))
@@ -1323,8 +1321,8 @@ def dhash_tuning_report(
                 F.col("b.media_id").alias("media_b"),
             )
             .distinct()
-            # corpus-sized candidates; 2 consumers: count + verify
-            .transform(lambda d: corpus_barrier(d, eager=False))
+            # 2 consumers: the count and the verify join
+            .transform(barrier)
         )
         pairs = (
             cand.join(fa, "media_a").join(fb, "media_b").filter(ham <= ham_max)
@@ -1341,9 +1339,7 @@ def dhash_tuning_report(
             )
         )
         out = row if out is None else out.unionByName(row)
-    # BOUNDED (one row per cap): raw localCheckpoint is scale-safe;
-    # consumed by base + final
-    out = out.localCheckpoint(eager=False)
+    out = barrier(out)  # 2 consumers: base + final
     base = out.filter(F.col("max_bucket") == -1).select(
         F.col("n_pairs").alias("_base")
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..barrier import corpus_barrier
+from ..barrier import barrier
 
 from ..functions import portable
 from ..functions import text as T
@@ -293,9 +293,8 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("source", F.explode(T.tokens(F.col("text"))).alias("term"))
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("n_ts"))
-        # corpus-sized (source x vocab); three consumers: totals x2 +
-        # scoring
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        # 3 consumers: the two totals + the scoring join
+        .transform(barrier)
     )
     s_tot = st.groupBy("source").agg(F.sum("n_ts").alias("n_s"))
     t_tot = st.groupBy("term").agg(F.sum("n_ts").alias("n_t"))
@@ -309,8 +308,8 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_ts").cast(d38) * F.col("n_corpus").cast(d38)
             - F.col("n_t").cast(d38) * F.col("n_s").cast(d38),
         )
-        # corpus-sized; two consumers: L1 aggregate + top-K cut
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        # 2 consumers: the L1 aggregate + the top-K cut
+        .transform(barrier)
     )
     l1 = scored.groupBy("source").agg(
         (
@@ -1197,10 +1196,9 @@ def cdc_chunk_summary(d: DataFrame) -> DataFrame:
     # sets diverge) so ReuseExchange cannot kick in — without the
     # checkpoint the per-char token-hash fold runs twice over the
     # corpus (plan-pinned in tests/test_plans.py)
-    ch = corpus_barrier(  # corpus-sized: chunk rows per doc
+    ch = barrier(
         base.select("doc_id", "source", F.explode(chunks).alias("c"))
-        .select("doc_id", "source", "c.chunk_len", "c.chunk_hash"),
-        eager=False,
+        .select("doc_id", "source", "c.chunk_len", "c.chunk_hash")
     )
     dup = ch.groupBy("chunk_hash", "chunk_len").agg(
         F.count_distinct("doc_id").alias("n_docs")
@@ -2694,7 +2692,7 @@ def rarity_scores(d: DataFrame) -> DataFrame:
     deliberate trade: the alternative is materializing the per-OCCURRENCE
     (doc_id, token-string) stream, which is corpus-sized; re-scanning a
     two-column pruned projection is the safer default at 100 TB, and a
-    localCheckpoint on `toks` is the one-line swap where storage is
+    barrier on `toks` is the one-line swap where storage is
     cheaper than the scan."""
     from pyspark.sql import Window
 
@@ -2788,7 +2786,7 @@ def tfidf_terms(d: DataFrame) -> DataFrame:
     shuffles the (doc, token) relation once on doc_id — the same key the
     tf aggregation produced, so AQE coalesces rather than re-exchanges.
     `tf` feeds two consumers (the df aggregation and the scored join);
-    it is localCheckpoint'd so the corpus is tokenized ONCE — unlike the
+    it is cut by a barrier so the corpus is tokenized ONCE — unlike the
     raw occurrence stream (see rarity_scores), the post-agg tf relation
     is compact (distinct terms per doc), so materializing beats a second
     scan."""
@@ -2798,8 +2796,7 @@ def tfidf_terms(d: DataFrame) -> DataFrame:
     tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        # corpus-sized: (doc, distinct term) rows
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        .transform(barrier)  # 2 consumers: the df agg + the scored join
     )
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -2887,8 +2884,7 @@ def bm25_topk(d: DataFrame) -> DataFrame:
     tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        # corpus-sized: (doc, distinct term) rows
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        .transform(barrier)  # 4 consumers: dl, df_, scalars, the scoring
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -3007,15 +3003,12 @@ def collocations(d: DataFrame) -> DataFrame:
     # tk feeds BOTH the unigram and bigram branches: checkpoint so the
     # corpus is tokenized once (r05 review finding: repeated HOF
     # tokenization across plan branches)
-    tk = corpus_barrier(  # corpus-sized: the full token stream
-        d.select(T.tokens(F.col("text")).alias("ts")), eager=False
-    )
+    tk = barrier(d.select(T.tokens(F.col("text")).alias("ts")))
     uni = (
         tk.select(F.explode("ts").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        # vocab-proportional (grows with corpus content); 3 consumers
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        .transform(barrier)  # 3 consumers
     )
     bg = (
         tk.filter(F.size("ts") >= 2)
@@ -3032,8 +3025,7 @@ def collocations(d: DataFrame) -> DataFrame:
     bgc = (
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c_ab"))
-        # O(vocab^2) — corpus-content-proportional; scalars + scored
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        .transform(barrier)  # 2 consumers: scalars + scored
     )
     scalars = uni.agg(F.sum("c").alias("n_tokens")).crossJoin(
         bgc.agg(F.sum("c_ab").alias("n_bigrams"))
@@ -4166,7 +4158,7 @@ def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (the established triangle design): decode + hash fuse
     into one mapInPandas stage so payload bytes never shuffle; the
-    fingerprint relation localCheckpoints at its 3-consumer barrier;
+    fingerprint relation is cut at its 3-consumer barrier;
     candidates are block-bounded (sum over buckets of C(n,2)), never
     all-pairs — the all-pairs cost lives in the ORACLE by design."""
     media = multimodal.documents_as_y4m(_docs(spark, sf_dir))
@@ -4338,8 +4330,8 @@ def _dsir_occurrences(d: DataFrame) -> DataFrame:
 
 
 def _dsir_bucket_counts(big: DataFrame) -> DataFrame:
-    """The bounded (f, cr, ct) bucket relation (<= DSIR_BUCKETS rows),
-    localCheckpointed at its 2-consumer barrier (vocab + totals)."""
+    """The (f, cr, ct) bucket relation (<= DSIR_BUCKETS rows), cut at
+    its 2-consumer barrier (vocab + totals)."""
     return (
         big.groupBy("f")
         .agg(
@@ -4355,9 +4347,7 @@ def _dsir_bucket_counts(big: DataFrame) -> DataFrame:
                 .cast("long")
             ).alias("ct"),
         )
-        # BOUNDED (<= DSIR_BUCKETS rows): raw localCheckpoint is
-        # scale-safe; 2 consumers: vocab + totals
-        .localCheckpoint(eager=False)
+        .transform(barrier)  # 2 consumers: vocab + totals
     )
 
 
@@ -4400,7 +4390,7 @@ def dsir_weights(d: DataFrame) -> DataFrame:
 
     Scale shape: one token-hash fold -> bigram bucket explode -> ONE
     bounded (f, lang-flag) hash-agg (<= DSIR_BUCKETS rows,
-    localCheckpointed at its 2-consumer barrier: vocab broadcast +
+    cut at its 2-consumer barrier: vocab broadcast +
     corpus totals — S_t/S_r also come from this tiny relation, never
     from a second corpus pass) -> broadcast back onto the occurrence
     stream -> one per-doc hash-agg. Corpus scalars ride a 1-row
@@ -4533,7 +4523,7 @@ def dsir_log_weights(d: DataFrame) -> DataFrame:
     (the linear form reads 92% / ~17%).
 
     Scale shape: reuses the linear form's occurrence stream and the
-    SAME bounded (f, cr, ct) bucket agg (localCheckpointed, 2
+    SAME bounded (f, cr, ct) bucket agg (cut by a barrier, 2
     consumers: vocab + totals — T_t/T_r derive from the tiny bucket
     relation, never a second corpus pass). pln runs only on the
     <= DSIR_BUCKETS vocab rows and the 1-row totals, both broadcast
@@ -4648,7 +4638,7 @@ _NGRAM_BIGRAM_EXPR = (
 
 def _ngram_doc_bigrams(toks: DataFrame) -> DataFrame:
     """(doc_id, w1, w2, xf) per-doc bigram counts over a (doc_id,
-    toks) relation; localCheckpointed — the model aggregation and the
+    toks) relation; cut by a barrier — the model aggregation and the
     per-doc scoring both read it."""
     return (
         toks.filter(F.size("toks") >= 2)
@@ -4656,15 +4646,14 @@ def _ngram_doc_bigrams(toks: DataFrame) -> DataFrame:
         .select("doc_id", "bg.w1", "bg.w2")
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("xf"))
-        # corpus-sized: (doc, bigram) rows
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        .transform(barrier)  # 2 consumers, see above
     )
 
 
 def _ngram_model_relation(toks: DataFrame, pf: DataFrame) -> DataFrame:
     """The add-one model relation (w1, w2, b, nl) with
-    nl = pln(U(w1)+V) - pln(B+1); vocab-bounded, localCheckpointed
-    (the per-doc join and the corpus-total fold both read it)."""
+    nl = pln(U(w1)+V) - pln(B+1); cut by a barrier (the per-doc join
+    and the corpus-total fold both read it)."""
     bm = pf.groupBy("w1", "w2").agg(F.sum("xf").cast("long").alias("b"))
     um = bm.groupBy("w1").agg(F.sum("b").cast("long").alias("u"))
     vs = toks.select(F.explode("toks").alias("w")).agg(
@@ -4682,8 +4671,7 @@ def _ngram_model_relation(toks: DataFrame, pf: DataFrame) -> DataFrame:
                 - F.expr(portable.pln_sql("(b + 1)"))
             ).alias("nl"),
         )
-        # vocab^2-proportional model relation (grows with corpus)
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        .transform(barrier)  # 2 consumers, see above
     )
 
 
@@ -4716,8 +4704,8 @@ def ngram_nll(d: DataFrame) -> DataFrame:
     trivially (no evidence against them; a length filter owns that
     class, as in CCNet).
 
-    Scale shape: ONE tokenization pass (the token relation is
-    localCheckpointed; both the bigram stream and the vocabulary-size
+    Scale shape: ONE tokenization pass (the token relation is cut by
+    a barrier; both the bigram stream and the vocabulary-size
     agg read it), one (w1, w2) model agg with map-side combine, one
     (doc_id, w1, w2) count agg, one per-doc fold over its distinct
     bigrams. The scored model relation broadcasts — in the CCNet
@@ -4732,10 +4720,8 @@ def ngram_nll(d: DataFrame) -> DataFrame:
     1.8x wall for 10x rows. The pre-fix form read 3.8x at the same
     scale: the per-document corpus-total array was real measured cost,
     not just a theoretical driver hazard."""
-    toks = corpus_barrier(  # corpus-sized: the full token stream
-        d.select("doc_id", T.tokens(F.col("text")).alias("toks")),
-        eager=False,
-    )
+    # 2 consumers: the bigram stream and the vocabulary-size agg
+    toks = barrier(d.select("doc_id", T.tokens(F.col("text")).alias("toks")))
     pf = _ngram_doc_bigrams(toks)
     model = _ngram_model_relation(toks, pf)
     per = (
@@ -4858,7 +4844,7 @@ def ngram_ppl_buckets(d: DataFrame, n_buckets: int = NLL_BUCKETS) -> DataFrame:
     that form, built round 14).
 
     Round 15 (the declared r14 opener, VERDICT r14 next-round #2): the
-    3-column scored relation localCheckpoints ONCE before the branch —
+    3-column scored relation is cut ONCE before the branch —
     without the barrier both union branches (rated + shorts)
     re-evaluate the model join + per-doc sorted folds above
     ngram_nll's token checkpoint, so the scoring subplan ran 2x
@@ -4868,9 +4854,8 @@ def ngram_ppl_buckets(d: DataFrame, n_buckets: int = NLL_BUCKETS) -> DataFrame:
     projection keeps the barrier at ~24 bytes/doc — never the text."""
     from pyspark.sql import Window
 
-    scored = corpus_barrier(  # corpus-sized: 3 columns per doc
-        ngram_nll(d).select("doc_id", "n_bigrams", "nll"), eager=False
-    )
+    # 2 consumers: the rated and shorts branches (see above)
+    scored = barrier(ngram_nll(d).select("doc_id", "n_bigrams", "nll"))
     rated = scored.filter(F.col("n_bigrams") > 0).withColumn(
         "_r", F.col("nll") / F.col("n_bigrams").cast("double")
     )
@@ -4955,9 +4940,7 @@ def ngram_ppl_buckets_approx(
     # the shorts branch of the final union), and without the barrier
     # each re-runs the model join + per-doc sorted folds above
     # ngram_nll's token checkpoint (review r14 — the scoring ran 3x)
-    scored = corpus_barrier(  # corpus-sized: 3 columns per doc
-        ngram_nll(d).select("doc_id", "n_bigrams", "nll"), eager=False
-    )
+    scored = barrier(ngram_nll(d).select("doc_id", "n_bigrams", "nll"))
     rated = scored.filter(F.col("n_bigrams") > 0).withColumn(
         "_r", F.col("nll") / F.col("n_bigrams").cast("double")
     )
@@ -5057,10 +5040,8 @@ def ngram_model(d: DataFrame) -> tuple[dict, dict, int]:
     The collect here is the MODEL hand-off, bounded by vocabulary (the
     same broadcastability argument as ngram_nll's model join), not a
     data-path collect."""
-    toks = corpus_barrier(  # corpus-sized: the full token stream
-        d.select("doc_id", T.tokens(F.col("text")).alias("toks")),
-        eager=False,
-    )
+    # 2 consumers: the bigram stream and the vocabulary-size agg
+    toks = barrier(d.select("doc_id", T.tokens(F.col("text")).alias("toks")))
     pf = _ngram_doc_bigrams(toks)
     bm_rows = (
         pf.groupBy("w1", "w2")

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..barrier import corpus_barrier
+from ..barrier import barrier
 
 from ..schemas import load_table
 
@@ -1246,19 +1246,15 @@ def q_hourly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # multi-consumer barriers (ADVICE r9): cells feeds the median
     # window, the dev join, and (through dev) the final roll-up; dev
-    # feeds the MAD window and the verdict agg. Without the
-    # localCheckpoints the events scan + hourly hash-agg re-execute
-    # ~3-4x per run; with them the bounded types x hours relation
-    # materializes once (the repo's established barrier idiom —
-    # cdc_chunk_summary, filtered_ivf_expand_topk).
+    # feeds the MAD window and the verdict agg. Uncut, the events scan
+    # + hourly hash-agg re-execute ~3-4x per run; cut, the types x
+    # hours relation materializes once.
     cells = (
         ev.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
-        # BOUNDED (event types x hours): raw localCheckpoint is
-        # scale-safe
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     byv = W.partitionBy("event_type").orderBy("n_events", "hour")
     per = W.partitionBy("event_type")
@@ -1271,8 +1267,7 @@ def q_hourly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = (
         cells.join(F.broadcast(med), "event_type")
         .withColumn("dev", F.abs(F.col("n_events") - F.col("med_events")))
-        # BOUNDED (event types x hours)
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     bydev = W.partitionBy("event_type").orderBy("dev", "hour")
     mad = (
@@ -1369,8 +1364,7 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts",
             F.from_json("props", "k long").getField("k").alias("level"),
         )
-        # corpus-sized: one row per purchase event
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        .transform(barrier)
     )
     nxt = W.partitionBy("user_id").orderBy("ts", "version")
     intervals = ch.select(
@@ -1698,9 +1692,7 @@ def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        # corpus-sized (distinct lineitem keys); both self-join
-        # branches consume it
-        .transform(lambda df: corpus_barrier(df, eager=False))
+        .transform(barrier)  # 2 consumers: both self-join branches
     )
     pairs = (
         li.alias("a")

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..barrier import corpus_barrier
+from ..barrier import barrier
 
 from ..functions import classify, metrics
 from ..operators import graph, lifecycle, topk
@@ -150,9 +150,7 @@ def q_purge_safe_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the page_state aggregate; without the barrier each re-runs the
     # two-level aggregation over its own event scan (round 16, guide
     # §2.4 — AQE does not reuse the agg stages across the fan-out)
-    st = corpus_barrier(  # corpus-sized: one row per live page
-        page_state(rc, with_collections=False), eager=False
-    )
+    st = barrier(page_state(rc, with_collections=False))
     m = with_snapshot_metrics(
         st, rc_events(spark, sf_dir, spread=False),
         grace_minutes=sqlgen.GRACE_MINUTES,

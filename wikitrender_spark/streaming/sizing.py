@@ -52,6 +52,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
+from ..barrier import barrier
+
 #: target replay-input bytes per state partition.
 STATE_TARGET_BYTES = 64 << 20
 #: target for COMPUTE-HEAVY Python stateful folds
@@ -160,7 +162,7 @@ def drain(
     target), scopes both around the start, runs in ``mode``
     (``append`` or ``update``) under its own unique query name and temp
     checkpoint dir, and materializes the result off the sink with an
-    eager local checkpoint. The sink's temp view and the checkpoint dir
+    eager barrier. The sink's temp view and the checkpoint dir
     are released in a ``finally``, so a drain leaves nothing in the
     session catalog or on disk, and the returned relation stays valid
     for the caller's lifetime."""
@@ -183,7 +185,8 @@ def drain(
                 .start()
             )
             q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
+        # the sink detach: the rows must outlive the sink's temp view
+        return barrier(spark.table(name), eager=True)
     finally:
         spark.catalog.dropTempView(name)
         shutil.rmtree(ckpt, ignore_errors=True)
