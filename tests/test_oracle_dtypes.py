@@ -6,7 +6,8 @@ numeric kind — the classic case being DuckDB promoting integer window /
 aggregate sums to HUGEINT, which pandas surfaces as float64 while Spark
 emits int64 — produces a value-equal-but-hash-red driver row (the round-3
 `tx_pack` failure). This test catches that class WITHOUT a Spark session
-(~10 s): any new or edited oracle whose column kinds drift from the
+(~60 s on a 4-core host, nearly all of it the fixture running every DuckDB
+oracle): any new or edited oracle whose column kinds drift from the
 snapshot fails here with a message naming the column.
 
 If a drift is INTENTIONAL (new query, deliberate type change), regenerate

@@ -20,13 +20,24 @@ from wikitrender_spark.streaming import fold
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
+def _us(t: dt.datetime) -> int:
+    """unix micros, the fold's time unit"""
+    return (t - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+
+
 def _page(i: int, edits: int, age_min: float, idle_min: float, safe: bool,
           now: dt.datetime) -> dict:
     start = now - dt.timedelta(minutes=age_min)
     updated = now - dt.timedelta(minutes=min(idle_min, age_min))
     return dict(
-        id=f"P{i}", edits=edits, start=start, updated=updated, safe=safe
+        id=f"P{i}", edits=edits, start=_us(start), updated=_us(updated),
+        safe=safe,
     )
+
+
+def _minutes_since(now: dt.datetime, us: int) -> float:
+    return (now - dt.datetime(1970, 1, 1)
+            - dt.timedelta(microseconds=us)).total_seconds() / 60.0
 
 
 page_strategy = st.tuples(
@@ -51,10 +62,10 @@ def _reference_should_drop(page: dict, now: dt.datetime,
                            p: fold.PurgeParams) -> bool:
     """Independent re-statement of the reference cleaner
     (/root/reference/index.js:362-398), written fresh from the spec."""
-    age = (now - page["start"]).total_seconds() / 60.0
+    age = _minutes_since(now, page["start"])
     if age <= p.min_purge_time:
         return False
-    idle = (now - page["updated"]).total_seconds() / 60.0
+    idle = _minutes_since(now, page["updated"])
     count = page["edits"]
     epm = float(count) if (age < 1 or count == 0) else count / age
     if not page["safe"] and (epm < p.min_speed or idle > p.max_inactivity):
@@ -75,7 +86,7 @@ def test_purge_matches_reference_predicate(pages, params):
         if _reference_should_drop(pg, now, params)
     }
     survivors_expected = set(titles) - expected_drop
-    evicted = fold.purge_titles(titles, now, params)
+    evicted = fold.purge_titles(titles, _us(now), params)
     assert evicted == expected_drop
     assert set(titles) == survivors_expected
 
@@ -88,13 +99,13 @@ def test_purge_invariants(pages, params):
         f"P{i}": _page(i, e, a, u, s, now)
         for i, (e, a, u, s) in enumerate(pages)
     }
-    fold.purge_titles(titles, now, params)
+    fold.purge_titles(titles, _us(now), params)
     for pg in titles.values():
-        age = (now - pg["start"]).total_seconds() / 60.0
+        age = _minutes_since(now, pg["start"])
         # survivor invariants: within lifespan, or within the grace window
         assert age <= params.max_lifespan or age <= params.min_purge_time
         if not pg["safe"] and age > params.min_purge_time:
-            idle = (now - pg["updated"]).total_seconds() / 60.0
+            idle = _minutes_since(now, pg["updated"])
             assert (
                 fold.edits_per_minute(pg, age) >= params.min_speed
                 and idle <= params.max_inactivity

@@ -122,23 +122,24 @@ def test_stream_purge_matches_inprocess_fold(spark):
     step = (len(raw) + n_chunks - 1) // n_chunks
     chunk_of = {eid: i // step for i, eid in enumerate(raw["event_id"])}
 
+    # each group is folded alone, in a bucket of its own
     rc = lifecycle.fold_events(rc_events(spark, SF_DIR), _group())
     pdf = rc.toPandas().sort_values(["ts", "seq"]).reset_index(drop=True)
     state_by_grp: dict[str, dict] = {}
     for i in range(n_chunks):
         chunk = pdf[pdf["seq"].map(chunk_of) == i]
         for grp, gpdf in chunk.groupby("_grp"):
-            titles = state_by_grp.setdefault(grp, {})
-            fold.fold_pdf(titles, gpdf)
-            fold.purge_titles(titles, gpdf["ts"].max(), params)
+            fold.fold_bucket(state_by_grp.setdefault(grp, {}), [gpdf], params)
     exp_rows = []
-    for titles in state_by_grp.values():
-        for p in titles.values():
-            r = fold.page_record(p)
-            exp_rows.append(tuple(
-                pd.Timestamp(v).to_pydatetime() if k in ("start", "updated") else v
-                for k, v in r.items()
-            ))
+    for groups in state_by_grp.values():
+        for _clock, titles in groups.values():
+            for p in titles.values():
+                r = fold.page_record(p)
+                exp_rows.append(tuple(
+                    pd.Timestamp(v, unit="us").to_pydatetime()
+                    if k in ("start", "updated") else v
+                    for k, v in r.items()
+                ))
     assert tombstones > 0  # the thresholds actually evict something
     assert sorted(got) == sorted(exp_rows)
 
@@ -152,33 +153,41 @@ def test_control_stream_marksafe(spark):
         rows.append(dict(seq=2 * i, title=page, ts=t0, type="new"))
         rows.append(dict(seq=2 * i + 1, title=page,
                          ts=t0 + dt.timedelta(minutes=1), user="B"))
-    titles: dict = {}
-    fold.fold_pdf(titles, _classified(spark, rows))
+    groups: dict = {}
+    fold.fold_bucket(groups, [_classified(spark, rows)])
     # control event: markSafe Keep
     ctrl = dict(seq=99, ts=t0 + dt.timedelta(minutes=2), title="Keep",
                 user="ops", length_new=None, length_old=None,
                 log_type="control", log_action="markSafe")
-    fold.fold_pdf(titles, _classified(spark, [ctrl]))
+    fold.fold_bucket(groups, [_classified(spark, [ctrl])])
+    titles = groups["g"][1]
     assert titles["Keep"]["safe"] and not titles["Lose"]["safe"]
+
+    def us(minutes):
+        return pd.Timestamp(t0 + dt.timedelta(minutes=minutes)).value // 1000
 
     # speed purge at +30min: Lose evicted (0.066 epm < 3), Keep survives
     params = fold.PurgeParams()
-    evicted = fold.purge_titles(titles, t0 + dt.timedelta(minutes=30), params)
+    evicted = fold.purge_titles(titles, us(30), params)
     assert evicted == {"Lose"}
     # lifespan purge evicts even safe pages
-    evicted = fold.purge_titles(titles, t0 + dt.timedelta(minutes=2000), params)
+    evicted = fold.purge_titles(titles, us(2000), params)
     assert evicted == {"Keep"}
 
 
 def test_state_blob_roundtrip():
-    t0 = pd.Timestamp("2024-01-01 12:00:00.123456")
+    """The bucket state is its JSON groups map: pages (times as unix
+    micros) survive the state store's round trip exactly."""
+    import json
+
+    t0 = pd.Timestamp("2024-01-01 12:00:00.123456").value // 1000
     titles = {"X": fold.fresh_page("X", "dewiki", "X", t0)}
     titles["X"]["distribution"] = {"a": 2, "b": 1, "1.2.3.4": 1}
     titles["X"]["n_contributors"] = 2
     titles["X"]["n_anons"] = 1
     titles["X"]["edits"] = 4
-    back = fold.deserialize_titles(fold.serialize_titles(titles))
-    assert back == titles
+    groups = {"dewiki#1": [t0, titles]}
+    assert json.loads(json.dumps(groups)) == groups
 
 
 def test_epm_clamp():
@@ -340,7 +349,7 @@ def test_multi_chunk_groups_fold_in_order(spark, batch_state):
     assert got == batch_state
 
 
-# --- dead-group TTL state reclamation (the streaming state-leak fix) --------
+# --- emptied groups and the control inbox across checkpoint resumes ----------
 def _flat_rows(spark, rows):
     """Synthetic flat rc events: minimal overrides over a plain-edit base."""
     from wikitrender_spark.engine import RC_FLAT_SCHEMA
@@ -381,7 +390,7 @@ def _flat_stream(spark, chunk_dir):
 def _run_resumable(spark, cl, out_dir, ckpt):
     """Run a changelog stream to completion into an appended parquet dir.
     Unlike the memory sink, foreachBatch supports checkpoint RECOVERY, so
-    tests can stop and resume the same query (the TTL tests below need
+    tests can stop and resume the same query (the tests below need
     multiple sequential AvailableNow passes over one state store).
     Returns the batch's accumulated changelog as a pandas frame (only
     rows appended by THIS run), plus nothing else."""
@@ -403,21 +412,20 @@ def _run_resumable(spark, cl, out_dir, ckpt):
     if not new:
         import pandas as _pd
 
-        return _pd.DataFrame(columns=processor._CHANGELOG_COLUMNS)
+        return _pd.DataFrame(columns=fold.CHANGELOG_COLUMNS)
     return spark.read.parquet(*new).toPandas()
 
 
-def test_dead_group_ttl_reclaims_state_and_revival_orders(spark):
-    """dead_group_ttl_min: a group whose page set is purged/deleted empty
-    has its state row reclaimed once the watermark passes clock+ttl, and a
-    post-TTL revival (whose _ver restarts at 1) still resolves over the
-    old tombstone in final_state via the (_ts, _ver) ordering."""
+def test_emptied_group_leaves_bucket_and_revival_orders(spark):
+    """A group whose page set is deleted empty leaves its bucket's map
+    (the kernel tests in tests/test_fold_kernel.py pin the map), and a
+    revival after a checkpoint resume still resolves over the old
+    tombstone in final_state: the id's (_ts, _ver) rises."""
     t0 = dt.datetime(2024, 1, 1)
     M = dt.timedelta(minutes=1)
     with tempfile.TemporaryDirectory() as d:
         chunks = d + "/chunks"
-        # batch 0: Page_1 created+edited then deleted -> group empty,
-        # group clock = t0+2m, ttl deadline = t0+12m
+        # batch 0: Page_1 created+edited then deleted -> group empty
         _write_chunk(spark, chunks, 0, [
             dict(title="Page_1", type="new", ts=t0, seq=1),
             dict(title="Page_1", ts=t0 + M, seq=2),
@@ -427,49 +435,44 @@ def test_dead_group_ttl_reclaims_state_and_revival_orders(spark):
                  ts=t0 + 2 * M, seq=3),
             dict(title="Page_2", ts=t0 + 2 * M, seq=4),
         ])
-        # batch 1 advances the watermark past the deadline...
         _write_chunk(spark, chunks, 1,
                      [dict(title="Page_2", ts=t0 + 30 * M, seq=5)])
-        # ...and batch 2 (any later batch) delivers the fired timeout
         _write_chunk(spark, chunks, 2,
                      [dict(title="Page_2", ts=t0 + 31 * M, seq=6)])
-        cl = processor.page_state_changelog(
-            _flat_stream(spark, chunks), _group(), dead_group_ttl_min=10.0
-        )
+        cl = processor.page_state_changelog(_flat_stream(spark, chunks),
+                                            _group())
         ta = _run_resumable(spark, cl, d + "/out", d + "/ckpt")
-        assert ta[(ta["id"] == "Page_1") & ta["_deleted"]].shape[0] == 1
+        tomb = ta[(ta["id"] == "Page_1") & ta["_deleted"]]
+        assert tomb.shape[0] == 1
 
-        # phase B (checkpoint resume): revive the page after the reclaim
+        # phase B (checkpoint resume): revive the page
         _write_chunk(spark, chunks, 3, [
             dict(title="Page_1", type="new", ts=t0 + 40 * M, seq=7,
                  user="Revive"),
             dict(title="Page_1", ts=t0 + 41 * M, seq=8, user="Revive"),
         ])
-        cl2 = processor.page_state_changelog(
-            _flat_stream(spark, chunks), _group(), dead_group_ttl_min=10.0
-        )
+        cl2 = processor.page_state_changelog(_flat_stream(spark, chunks),
+                                             _group())
         tb = _run_resumable(spark, cl2, d + "/out", d + "/ckpt")
         revived = tb[(tb["id"] == "Page_1") & ~tb["_deleted"]]
         assert len(revived) == 1
-        # _ver restarted at 1 == the state row was actually removed (a
-        # surviving row would resume at its stored ver and emit 2)
-        assert revived["_ver"].iloc[0] == 1
+        # a fresh page, not the deleted one's counts
         assert revived["edits"].iloc[0] == 2 and revived["isNew"].iloc[0]
+        assert ((revived["_ts"].iloc[0], revived["_ver"].iloc[0])
+                > (tomb["_ts"].iloc[0], tomb["_ver"].iloc[0]))
 
-        # the union of both phases must resolve the revival over the old
-        # tombstone despite the smaller _ver (clock _ts dominates)
         both = spark.createDataFrame(pd.concat([ta, tb], ignore_index=True))
         final = {r["id"]: r for r in processor.final_state(both).collect()}
         assert "Page_1" in final and final["Page_1"]["edits"] == 2
         assert final["Page_2"]["edits"] == 3
 
 
-def test_ttl_control_commands_do_not_poison_watermark(spark):
-    """Engine-shape union (watermarked event leg ∪ unwatermarked control
-    leg): a control command stamped with the submitter's wall clock must
-    not advance the event-time watermark — replayed history arriving
-    after it still folds. Also drives the eager-reclaim branch (deadline
-    already <= watermark when the group empties) and post-TTL revival."""
+def test_control_commands_fold_without_watermark(spark):
+    """Engine-shape union (event leg ∪ control leg): a control command
+    stamped with the submitter's wall clock neither drops replayed
+    history arriving after it (the fold runs no watermark, so no row is
+    late) nor moves its group's clock; a drop empties the group and a
+    revival orders above its tombstone."""
     import os
 
     from wikitrender_spark.engine import RC_FLAT_SCHEMA
@@ -481,17 +484,12 @@ def test_ttl_control_commands_do_not_poison_watermark(spark):
         ev_dir, ctl_dir = d + "/ev", d + "/ctl"
         os.makedirs(ctl_dir)
 
-        def changelog():
-            ev = _flat_stream(spark, ev_dir).withWatermark("ts", "0 seconds")
+        def run():
+            ev = _flat_stream(spark, ev_dir)
             ctl = (spark.readStream.schema(RC_FLAT_SCHEMA)
                    .parquet(ctl_dir))
-            return processor.page_state_changelog(
-                ev.unionByName(ctl), _group(), dead_group_ttl_min=10.0,
-                watermark_delay=None,
-            )
-
-        def run(tag):
-            return _run_resumable(spark, changelog(), d + "/out", d + "/ckpt")
+            cl = processor.page_state_changelog(ev.unionByName(ctl), _group())
+            return _run_resumable(spark, cl, d + "/out", d + "/ckpt")
 
         def control(seq, action, ts):
             _flat_rows(spark, [dict(title="Page_1", user="ops",
@@ -503,36 +501,31 @@ def test_ttl_control_commands_do_not_poison_watermark(spark):
             dict(title="Page_1", type="new", ts=t0, seq=1),
             dict(title="Page_1", ts=t0 + M, seq=2),
         ])
-        run(1)                       # watermark -> t0+1m
+        t1 = run()
         control(99, "markSafe", wall)  # wall-clock control row
-        t2 = run(2)
-        assert t2[t2["id"] == "Page_1"]["safe"].iloc[0]
-        # the footgun pin: an event OLDER than the control's wall clock
-        # must still fold (a union-level watermark would drop it as late)
+        t2 = run()
+        p1 = t2[t2["id"] == "Page_1"]
+        assert p1["safe"].iloc[0]
+        # the group clock stays at the last event, not the wall clock
+        assert p1["_ts"].iloc[0] == t1["_ts"].iloc[0]
+        # an event OLDER than the control's wall clock still folds
         _write_chunk(spark, ev_dir, 1, [dict(title="Page_1", ts=t0 + 2 * M,
                                              seq=3)])
-        t3 = run(3)
+        t3 = run()
         p1 = t3[t3["id"] == "Page_1"]
         assert len(p1) == 1 and p1["edits"].iloc[0] == 3
 
-        # advance the watermark far past Page_1's clock+ttl
-        _write_chunk(spark, ev_dir, 2, [dict(title="Page_2", ts=t0 + 40 * M,
-                                             seq=4)])
-        run(4)
-        _write_chunk(spark, ev_dir, 3, [dict(title="Page_2", ts=t0 + 41 * M,
-                                             seq=5)])
-        run(5)                       # watermark -> t0+41m
-        # drop empties the group with deadline (t0+12m) already below the
-        # watermark: the state row must be reclaimed in the SAME batch
         control(100, "drop", wall + M)
-        t6 = run(6)
-        assert t6[(t6["id"] == "Page_1") & t6["_deleted"]].shape[0] == 1
-        # revival: _ver==1 proves the eager remove really dropped the row
-        _write_chunk(spark, ev_dir, 4, [dict(title="Page_1", type="new",
+        t4 = run()
+        tomb = t4[(t4["id"] == "Page_1") & t4["_deleted"]]
+        assert tomb.shape[0] == 1
+        _write_chunk(spark, ev_dir, 2, [dict(title="Page_1", type="new",
                                              ts=t0 + 50 * M, seq=6)])
-        t7 = run(7)
-        revived = t7[(t7["id"] == "Page_1") & ~t7["_deleted"]]
-        assert len(revived) == 1 and revived["_ver"].iloc[0] == 1
+        t5 = run()
+        revived = t5[(t5["id"] == "Page_1") & ~t5["_deleted"]]
+        assert len(revived) == 1 and revived["edits"].iloc[0] == 1
+        assert ((revived["_ts"].iloc[0], revived["_ver"].iloc[0])
+                > (tomb["_ts"].iloc[0], tomb["_ver"].iloc[0]))
 
 
 def test_telemetry_listener_captures_batches(spark):

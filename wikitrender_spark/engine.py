@@ -84,26 +84,12 @@ class WikiTrenderCollection:
         purge: fold.PurgeParams | None = None,
         group_col: F.Column | None = None,
         clear_cache: bool = False,
-        dead_group_ttl_min: float | None = None,
-        watermark_delay: str = "10 minutes",
     ):
-        """``dead_group_ttl_min`` reclaims state rows of groups whose page
-        set has been empty for that long in EVENT time (the streaming
-        state-leak fix — see processor.page_state_changelog). The
-        watermark is applied to the EVENT leg only, before the control
-        inbox is unioned in (_rc_stream): control commands carry the
-        submitter's wall clock, and watermarking the union would let one
-        command during replayed/backfilled history jump the watermark
-        years ahead and silently drop every older event as late.
-        ``watermark_delay`` should cover the live source's
-        out-of-orderness."""
         self.spark = spark
         self.work_dir = work_dir
         self.sf_dir = sf_dir
         self.project = project
         self.purge = purge
-        self.dead_group_ttl_min = dead_group_ttl_min
-        self.watermark_delay = watermark_delay
         self.group_col = default_group() if group_col is None else group_col
         if clear_cache and os.path.isdir(work_dir):
             shutil.rmtree(work_dir)
@@ -252,12 +238,6 @@ class WikiTrenderCollection:
         rc = rc_event_stream(self.spark, self.sf_dir)
         if self.project != "*":
             rc = rc.filter(F.col("server_name") == self.project)  # F2
-        if self.dead_group_ttl_min is not None:
-            # watermark the EVENT leg only (control rows carry wall-clock
-            # ts and must not advance the watermark over replayed history
-            # — the legs each track their own; the stateful operator sees
-            # the event leg's, and control rows are never late-filtered)
-            rc = rc.withWatermark("ts", self.watermark_delay)
         control = (
             self.spark.readStream.schema(RC_FLAT_SCHEMA)
             .parquet(self._control_dir)
@@ -266,7 +246,5 @@ class WikiTrenderCollection:
 
     def _changelog(self) -> DataFrame:
         return processor.page_state_changelog(
-            self._rc_stream(), self.group_col, self.purge,
-            dead_group_ttl_min=self.dead_group_ttl_min,
-            watermark_delay=None,  # event leg already watermarked
+            self._rc_stream(), self.group_col, self.purge
         )

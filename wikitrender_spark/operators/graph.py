@@ -117,8 +117,9 @@ def pagerank(
     rank ORDER is what the operator serves).
 
     The edges relation (trans + out-weights) is checkpointed once and
-    re-read every iteration; scores are checkpointed per iteration to
-    cut lineage (see module docstring for the full scale shape)."""
+    re-read every iteration; scores are checkpointed after every round
+    but the last to cut lineage (see module docstring for the full scale
+    shape)."""
     # Round 16 (guide §2.4): out_w as a window sum over src (one
     # exchange, no self-join — see markov_top_transitions), and every
     # checkpoint LAZY (eager=False): the persisted cut still protects
@@ -139,7 +140,7 @@ def pagerank(
     scores = nodes.select(
         "node", F.lit(SCALE).cast("bigint").alias("score")
     )
-    for _ in range(iters):
+    for rnd in range(1, iters + 1):
         mass = (
             edges.join(scores, edges.src == scores.node)
             .select(
@@ -163,7 +164,10 @@ def pagerank(
                 .alias("score"),
             )
         )
-        scores = barrier(scores)  # plan depth stays constant per round
+        if rnd < iters:
+            # plan depth stays constant per round; the last round's only
+            # consumer is the returned relation, so it is not cut
+            scores = barrier(scores)
     return scores
 
 

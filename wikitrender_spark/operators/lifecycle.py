@@ -25,11 +25,12 @@ Two implementations:
    edits (no rename chains). The general case is handled by (2).
 
 2. ``replay_lifecycle`` — exact ordered fold via applyInPandas over
-   *closed page groups* (each group contains every id reachable through
-   its move events), reproducing updateFromRCStream + log routing
-   event-for-event. Arrow-batched, one group per pandas frame, fully
-   parallel across groups — this is the batch twin of the streaming
-   stateful processor and the semantics oracle for (1).
+   buckets of *closed page groups* (each group contains every id
+   reachable through its move events), reproducing updateFromRCStream +
+   log routing event-for-event. One pandas frame per bucket, folded by
+   the streaming processor's kernel (streaming/fold.fold_bucket), fully
+   parallel across buckets — the batch twin of the streaming stateful
+   processor and the semantics oracle for (1).
 
 Both read rows classified in the plan by the functions/classify Columns:
 (1) through classified_edit_events and log_events, (2) and the streaming
@@ -290,47 +291,61 @@ def page_state_lifecycle(rc: DataFrame, with_collections: bool = False) -> DataF
 # exact ordered replay (authoritative semantics; general move graphs)
 # ---------------------------------------------------------------------------
 
-_REPLAY_SCHEMA = fold.STATE_SCHEMA
+#: buckets per state (shuffle) partition: the stateful folds key on
+#: ``pmod(xxhash64(_grp), B)`` with B this multiple of the partitions, so a
+#: partition's micro-batch makes a few Python calls, each over many groups
+BUCKETS_PER_PARTITION = 4
+
+
+def bucket_count(spark) -> int:
+    """B: the bucket count a fold plan built now keys on."""
+    return BUCKETS_PER_PARTITION * int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
 
 
 def fold_events(rc: DataFrame, group_col) -> DataFrame:
     """rc rows -> the classified rows every stateful fold reads
-    (streaming/fold.py), keyed by ``_grp``: every rc row (edits, log
-    events, control commands) classified once in the plan, by the same
-    Columns the batch plans evaluate — the edit flags, id and normalized
-    wiki of classified_edit_events and the move/delete target ids of
-    log_events. The Python fold only routes and accumulates. The group
-    key is taken from the RAW wiki/title before the projection
-    normalizes them."""
-    sc = rc.sparkSession.sparkContext
+    (streaming/fold.py), keyed by page group ``_grp`` and its bucket
+    ``_bkt``: every rc row (edits, log events, control commands)
+    classified once in the plan, by the same Columns the batch plans
+    evaluate — the edit flags, id and normalized wiki of
+    classified_edit_events and the move/delete target ids of log_events.
+    The Python fold only routes and accumulates. The group key is taken
+    from the RAW wiki/title before the projection normalizes them."""
+    spark = rc.sparkSession
+    sc = spark.sparkContext
     return rc.withColumn("_grp", group_col).select(
-        "_grp", "log_type", "log_action", "log_target",
+        "_grp",
+        F.pmod(F.xxhash64("_grp"), F.lit(bucket_count(spark))).alias("_bkt"),
+        "log_type", "log_action", "log_target",
         *_classified_select(sc), *_log_targets(sc),
     )
 
 
-def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Fold one closed page group in (ts, seq) order — the pandas twin of
-    the reference's event loop (updateFromRCStream + log routing), run
-    through the same micro-batch step as the streaming processor
-    (batch-stream equivalence by construction, SURVEY.md §5.2-5), with
-    no purge."""
-    titles: dict[str, dict] = {}
-    fold.fold(titles, [pdf])
-    return fold.titles_to_pdf(titles)
+def _replay_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Fold one bucket's closed page groups in (ts, seq) order — the
+    pandas twin of the reference's event loop (updateFromRCStream + log
+    routing), run through the streaming processor's kernel from empty
+    state (batch-stream equivalence by construction, SURVEY.md §5.2-5),
+    with no purge."""
+    out, _ = fold.fold_bucket({}, [pdf])
+    return out.loc[~out["_deleted"].astype(bool), fold.STATE_COLUMNS]
 
 
 def replay_lifecycle(rc: DataFrame, group_col) -> DataFrame:
-    """Exact ordered replay, parallel across closed page groups.
+    """Exact ordered replay, parallel across buckets of closed page
+    groups.
 
     ``group_col`` must assign every event of a move-connected component to
     the same group (for workloads without rename chains, wiki + base title
-    modulo the rename mapping). Shuffles once on the group key, then folds
-    each group in one Arrow batch — no driver collect, scales with the
-    number of groups.
+    modulo the rename mapping). Shuffles once on the bucket key, then folds
+    each bucket in one Arrow batch — nothing is collected, scales with the
+    number of buckets (fold_events sizes them from the shuffle
+    partitions).
     """
-    return fold_events(rc, group_col).groupBy("_grp").applyInPandas(
-        _replay_group, _REPLAY_SCHEMA
+    return fold_events(rc, group_col).groupBy("_bkt").applyInPandas(
+        _replay_bucket, fold.STATE_SCHEMA
     )
 
 

@@ -1,7 +1,7 @@
 """Streaming core: shared event fold, stateful changelog processor.
 
 SURVEY.md §7 step 5 — the incremental form of the engine. Modules:
-- fold: event-at-a-time semantics shared with the batch replay;
+- fold: the bucket fold kernel, shared with the batch replay;
 - processor: the one stateful changelog pipeline
   (applyInPandasWithState) + purge P2.
 """
