@@ -143,8 +143,7 @@ class WikiTrenderCollection:
         set as a DataFrame (parquet snapshot maintained per micro-batch)."""
         snap = sinks.read_snapshot(self._state_path, self.spark)
         if snap is None:  # no snapshot yet (first run)
-            schema = fold.STATE_SCHEMA + ", safe boolean"
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], fold.SNAPSHOT_SCHEMA)
         return snap
 
     # --- execution --------------------------------------------------------

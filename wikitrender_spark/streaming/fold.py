@@ -75,13 +75,15 @@ STATE_SCHEMA = (
     "total_user_edits long, isProtected boolean"
 )
 
-#: changelog row = page-state row + safe flag + (clock, version) + tombstone
-#: marker. ``_ts`` is the GROUP CLOCK (running max event time, unix
-#: micros) and ``_ver`` the bucket's call count: together they order every
-#: id's emissions, also across its group emptying and reviving.
-CHANGELOG_SCHEMA = (
-    STATE_SCHEMA + ", safe boolean, _ts long, _ver long, _deleted boolean"
-)
+#: live-state snapshot row (sinks.state_snapshot_sink, engine pages()):
+#: page-state row + safe flag.
+SNAPSHOT_SCHEMA = STATE_SCHEMA + ", safe boolean"
+
+#: changelog row = snapshot row + (clock, version) + tombstone marker.
+#: ``_ts`` is the GROUP CLOCK (running max event time, unix micros) and
+#: ``_ver`` the bucket's call count: together they order every id's
+#: emissions, also across its group emptying and reviving.
+CHANGELOG_SCHEMA = SNAPSHOT_SCHEMA + ", _ts long, _ver long, _deleted boolean"
 CHANGELOG_COLUMNS = STATE_COLUMNS + ["safe", "_ts", "_ver", "_deleted"]
 
 #: lifecycle.fold_events columns the walk reads, after ts and log_type
