@@ -147,28 +147,29 @@ def test_snapshot_sink_runs_four_jobs_per_batch(spark, tmp_path):
     assert len(jobs) <= 4, sorted(jobs)
 
 
-def test_stop_inside_batch_then_restart_equals_replay(spark, tmp_path):
-    """stop() lands while ``handle`` is inside a merging batch (its edit
-    callback is running); stop() returns, and a restart from the same
-    checkpoint converges to the batch replay. The batch re-runs against
-    whichever version the manifest names: the per-attempt version dirs
-    keep the replay from overwriting the merge's own input, and the
-    one-promote grace keeps the previous version readable."""
+def _stop_inside_batch_then_restart(spark, tmp_path, hold: str) -> None:
+    """stop() lands while ``handle`` is inside a merging batch, held open
+    by its ``hold`` callback (``edit_callback`` or ``report``); stop()
+    returns, and a restart from the same checkpoint converges to the
+    batch replay. The batch re-runs against whichever version the
+    manifest names: the per-attempt version dirs keep the replay from
+    overwriting the merge's own input, and the one-promote grace keeps the
+    previous version readable."""
     cl, release = _held_back_stream(spark, tmp_path, 3)
     snap, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
     inside = threading.Event()
     armed = threading.Event()
 
-    def on_edit(row) -> None:
+    def hold_open(*_) -> None:
         if armed.is_set() and not inside.is_set():
             inside.set()
             time.sleep(1.0)  # stop() is called while the batch is open
 
-    q = sinks.state_snapshot_sink(cl, snap, ckpt, edit_callback=on_edit)
+    q = sinks.state_snapshot_sink(cl, snap, ckpt, **{hold: hold_open})
     q.processAllAvailable()
     armed.set()
     release(1)
-    assert inside.wait(120), "the second batch never reached its callback"
+    assert inside.wait(120), f"the second batch never reached its {hold}"
     stopper = threading.Thread(target=q.stop, daemon=True)
     stopper.start()
     stopper.join(120)
@@ -187,3 +188,16 @@ def test_stop_inside_batch_then_restart_equals_replay(spark, tmp_path):
     exp = sorted(map(tuple, lifecycle.replay_lifecycle(
         rc_events(spark, SF_DIR), _group()).collect()))
     assert got == exp
+
+
+def test_stop_inside_batch_then_restart_equals_replay(spark, tmp_path):
+    """The edit callback holds the batch open: stop() lands after job 1,
+    so the interrupted calls are the merge's write and what follows."""
+    _stop_inside_batch_then_restart(spark, tmp_path, "edit_callback")
+
+
+def test_stop_inside_report_then_restart_equals_replay(spark, tmp_path):
+    """The report callback holds the batch open: stop() lands after job 4,
+    so the handler's next Py4J calls are the ``unpersist``s of its
+    ``finally``."""
+    _stop_inside_batch_then_restart(spark, tmp_path, "report")

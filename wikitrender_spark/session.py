@@ -5,6 +5,14 @@ Local runs use local[N]; the same config block is what we'd ship to a
 handling for hot pages, SURVEY.md §4.2), Arrow enabled for the few
 Pandas-UDF paths, UTC timezone pinned so timestamp arithmetic is
 deterministic across engines (the DuckDB oracle is naive-UTC).
+
+Python workers fork from ``pydaemon`` (``spark.python.daemon.module``),
+PySpark's daemon started warm: it removes two fixed costs every Python
+task pays under the stock daemon, the per-task re-read of
+``pyspark.zip``'s directory by ``importlib.invalidate_caches()`` and the
+post-task ``gc.collect()`` over the whole pandas/pyarrow heap. Results do
+not change; a session built elsewhere (the driver contract's vanilla one
+in ``__spark_entry__.py``) keeps the stock daemon and gets the same rows.
 """
 
 from __future__ import annotations
@@ -41,5 +49,6 @@ def get_spark(app_name: str = "wikitrender-spark", cpus: int | None = None,
         # reclaim WTR_BARRIER_MODE=reliable checkpoint files once their
         # DataFrame is released (barrier.py); core conf, build time only
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        .config("spark.python.daemon.module", "wikitrender_spark.pydaemon")
     )
     return builder.getOrCreate()
